@@ -2,16 +2,18 @@
 
 - ``entry(spark)``: flagship query (TPC-H Q1 shape, SURVEY §2.C Q17) on
   /root/testdata/sf0.001.
-- ``queries()``: every declared query from SURVEY.md §2.C, one callable
-  per entry, (spark, sf_dir) -> DataFrame.
+- ``queries()``: every registered query, one callable per entry,
+  (spark, sf_dir) -> DataFrame.
 - ``oracle_sql()``: the DuckDB-runnable ANSI SQL equivalent for each query
   (omitted for approx/non-SQL-expressible ops → rows-only check).
+
+Both maps are keyed by the registry names (``q<NN>[variant]_<slug>``) in
+sorted order; tests/test_oracle_parity.py checks every entry.
 """
 
 from __future__ import annotations
 
 import os
-import re
 import sys
 from collections.abc import Callable
 
@@ -21,94 +23,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from bucket_to_bigquery_spark.queries import all_queries  # noqa: E402
 
-# ---------------------------------------------------------------------------
-# Correctness-gate rotation.
-#
-# The driver records at most the FIRST 50 entries in name-sorted order; the
-# registry is larger (186 as of r15 — count it from ``all_queries()``, do
-# not trust a literal here). Entries named here are aliased (leading
-# ``q`` -> ``a``)
-# so they sort into the window. The set is chosen per round under the
-# invariant CHANGED CODE MUST BE IN-WINDOW (mechanized by
-# tools/check_gate_rotation.py, run as tests/test_gate_rotation.py):
-#
-#   1. every entry whose implementing files changed since the last driver
-#      round commit is aliased (a regression in changed code must be
-#      visible to THIS round's gate), and
-#   2. remaining slots rotate through the stalest previously-verified
-#      entries (round 8: the two r4-row UDF deferrals q44/q45 — the
-#      relational/ingest/streaming migration fills the other 48 slots).
-#
-# Out-of-window entries keep prior-round evidence: their implementing files
-# are untouched, so CORRECTNESS_r{3,4,5} rows still describe current code.
-# The original SURVEY §2.C name of an aliased row is recoverable by
-# replacing the leading ``a`` with ``q``. NOTE (r11): 50 aliases + 0
-# natural-fill slots — see GATE_r11.md's window accounting. When a
-# round's changed+stale set exceeds 50 the rotation check fails and
-# the round must split its changes across rounds via
-# tools/deferred_rotation.json (the r11 scratch split is the
-# precedent: 50 in-window + 38 deferred to r12).
-# ---------------------------------------------------------------------------
-GATE_PRIORITY = frozenset({
-    # Round 17 (optimization round 2 of 2; VERDICT r16 "Next round" #1):
-    # resolves the r16 deferral — tools/deferred_rotation.json is
-    # DELETED this round and all 19 listed entries rotate in-window.
-    # Their implementing files (pipeline_queries/substring, tokenstats,
-    # retrieval, overlap, sketch_overlap, graphs, novelty, bloom,
-    # splits, collocations, zipf, scorecard, entropy, shift) are exactly
-    # this round's optimization surface (q54 corpus-scan barrier,
-    # q67/q75 chain-filter fixes, q89 source-cardinality guard), so
-    # CHANGED CODE => IN-WINDOW holds with zero extra slots. Plus: the
-    # streaming family q36-q41c (9) — in the refresh tail anyway AND
-    # in-window cover for any streaming_queries.py optimization this
-    # round books (VERDICT r16 #7). Remaining slots: the r11 evidence
-    # tail finished (20 relational rows q15b-q29b) and the 2 oldest r12
-    # rows (q30/q31), per the standing freshness schedule
-    # (tools/r17_registration_plan.md's accounting, registrations
-    # themselves excluded — this is an optimization round, no new
-    # features). Exactly 50.
-    #
-    # the r16 deferral, resolved this round (19)
-    "q51_repeated_substrings", "q52_sequence_packing",
-    "q53_substring_scrub", "q54_full_pipeline",
-    "q57_bloom_decontamination", "q67_bpe_pair_merge",
-    "q72_leakage_safe_split", "q72b_split_leakage_audit",
-    "q75_bm25_topk", "q78_pagerank", "q78b_triangle_count",
-    "q83_js_divergence", "q89_source_overlap",
-    "q89b_source_overlap_minhash", "q93_pmi_collocations",
-    "q95_shingle_novelty", "q98_zipf_slope", "q102_source_scorecard",
-    "q105_unigram_entropy",
-    # the streaming family (9; refresh tail + r17 optimization cover)
-    "q36_tumbling_window", "q37_sliding_window", "q38_session_window",
-    "q38b_custom_stateful_sessions", "q39_watermark_append",
-    "q40_stream_dedup", "q41_exactly_once_file_ingest",
-    "q41b_stream_static_enrich", "q41c_stream_stream_join",
-    # the r11 evidence tail, finished (20)
-    "q15b_asof_join_tolerance", "q16_tpch_q3_shape",
-    "q17_tpch_q1_shape", "q18_count_distinct",
-    "q19_approx_count_distinct", "q20_rollup", "q20b_cube",
-    "q20c_pivot", "q20d_grouping_sets", "q21_filtered_agg",
-    "q22_having", "q23_ranking_windows", "q24_lag_lead",
-    "q25_window_frames", "q26_topk_per_group", "q27_global_sort_limit",
-    "q28_union_all", "q28b_union_distinct", "q29_intersect",
-    "q29b_except",
-    # the 2 oldest r12 evidence rows
-    "q30_string_funcs", "q31_datetime_funcs",
-})
-
-_NAME_RE = re.compile(r"^q\d+[a-z]?_")
-
-
-def _gate_name(name: str) -> str:
-    """Gate alias: ``q`` -> ``a`` for GATE_PRIORITY entries (sorts first).
-
-    Registry names must match ``q<digits>[variant]_...``; anything else
-    would alias/order unpredictably, so fail loudly instead.
-    """
-    if not _NAME_RE.match(name):
-        raise ValueError(f"registry name {name!r} does not match q<NN>[v]_*")
-    return "a" + name[1:] if name in GATE_PRIORITY else name
-
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
@@ -117,14 +31,12 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    items = sorted(
-        (_gate_name(name), q) for name, q in all_queries().items()
-    )
-    return {name: q.builder for name, q in items}
+    return {name: q.builder for name, q in sorted(all_queries().items())}
 
 
 def oracle_sql() -> dict[str, str]:
-    items = sorted(
-        (_gate_name(name), q) for name, q in all_queries().items()
-    )
-    return {name: q.oracle for name, q in items if q.oracle is not None}
+    return {
+        name: q.oracle
+        for name, q in sorted(all_queries().items())
+        if q.oracle is not None
+    }

@@ -1,5 +1,4 @@
-"""STAGED r12 surface (built r10, NOT registered — rides r12's free
-slots per GATE_r10.md's round-11/12 plan) — q91: A/B conversion lift —
+"""q91: A/B conversion lift —
 assign every user to a deterministic experiment arm, compare ATTRIBUTED
 conversion rates (a purchase within 24 h of the user's last click —
 the q77 attribution window turned into a per-user binary), and report
@@ -9,7 +8,7 @@ pipeline change by comparing corpus metrics across two ingest
 variants).
 
 Reference parity: n/a — no analytics surface in the reference; declared
-engine surface (SURVEY §2.C extension when registered).
+engine surface (SURVEY §2.C extension).
 
 Assignment is the house md5-permyriad uniform (the q56/q72 contract):
 ``md5('ab:' || user_id)`` first-8-hex as an integer, arm B iff
@@ -125,6 +124,8 @@ _Q91_DESCRIPTION = (
 )
 
 
+@query("q91_ab_lift", oracle=_Q91_ORACLE, description=_Q91_DESCRIPTION,
+       tags=("events", "analytics"))
 def q91(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = tables(spark, sf_dir)["events"]
     w = (
@@ -182,16 +183,4 @@ def q91(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED = {
-    "q91_ab_lift": (q91, _Q91_ORACLE, _Q91_DESCRIPTION,
-                    ("events", "analytics")),
-}
-
-
-def register() -> None:
-    """r12 registration seam — see joins_ext.register for the pattern."""
-    for name, (fn, oracle, desc, tags) in STAGED.items():
-        query(name, oracle=oracle, description=desc, tags=tags)(fn)
-
-
-__all__ = ["q91", "STAGED", "register"]
+__all__ = ["q91"]

@@ -1,5 +1,4 @@
-"""STAGED r14 surface (built r13, NOT registered — GATE_r13.md's
-round-14 plan budgets the slot) — q118: trailing-7-day active users
+"""q118: trailing-7-day active users
 per observed day — THE product/engagement rolling-distinct metric,
 and the shape every "rolling window distinct" request reduces to.
 Distinct-count windows don't compose (you cannot merge per-day
@@ -11,7 +10,7 @@ distinct users per target day — one bounded-fan-out map-side explode
 + one aggregation, no range join anywhere.
 
 Reference parity: n/a — no analytics surface in the reference;
-declared engine surface (SURVEY §2.C extension when registered).
+declared engine surface (SURVEY §2.C extension).
 
 Determinism: days are exact integer epoch-day indexes
 (unix_micros // 86 400 000 000 — the q84 integer-day convention, no
@@ -62,6 +61,8 @@ _Q118_DESCRIPTION = (
 )
 
 
+@query("q118_rolling_active_users", oracle=_Q118_ORACLE,
+       description=_Q118_DESCRIPTION, tags=("events", "windows"))
 def q118(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = tables(spark, sf_dir)["events"]
     # integer `div`, NOT double / + cast: the double quotient of a
@@ -88,16 +89,4 @@ def q118(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED = {
-    "q118_rolling_active_users": (q118, _Q118_ORACLE, _Q118_DESCRIPTION,
-                                  ("events", "windows")),
-}
-
-
-def register() -> None:
-    """r14 registration seam — see joins_ext.register for the pattern."""
-    for name, (fn, oracle, desc, tags) in STAGED.items():
-        query(name, oracle=oracle, description=desc, tags=tags)(fn)
-
-
-__all__ = ["q118", "STAGED", "register"]
+__all__ = ["q118"]

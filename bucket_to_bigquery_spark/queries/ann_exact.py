@@ -15,15 +15,11 @@ contract — so a plain-SQL oracle reproduces every output bit, including
 rank ties (cosine DESC, n_id ASC). After this entry, rows-only covers
 ONLY the Lloyd fit on the q48c/q48d default path.
 
-Lives in its own module (not operators/similarity.py) by the r13 window
-arithmetic: a behavioral similarity.py edit pulls its 34 dependent
-entries in-window (GATE_r13.md), so this round reuses the operator's
-primitives READ-ONLY (`_d2_e12_rows`, `dot_e12`, `norm_e12`,
+Lives in its own module (not operators/similarity.py) and reuses the
+operator's primitives READ-ONLY (`_d2_e12_rows`, `dot_e12`, `norm_e12`,
 `cosine_from_e12`, `ivf_operating_point`, `_MAX_EXACT_QUERIES`); the
 builder-local assignment generator mirrors
-``similarity.ivf_scan_stats_exact``'s and should fold into the operator
-when the llm-family rotation next opens that file (GATE_r13.md,
-"Round-14 plan").
+``similarity.ivf_scan_stats_exact``'s and could fold into the operator.
 
 Reference parity: n/a — no analytics surface in the reference; declared
 engine surface (SURVEY §2.C Q48 extension, registered r13).
@@ -51,8 +47,7 @@ _N_PROBE = 8
 _N_QUERIES = 10  # mirrors q48c/q48d's audited query slice (vec_id < 10)
 
 # SQL twins of the e12 contracts (same text shape as llm_queries' / the
-# q48g module's — re-derived here because importing llm_queries would
-# add a spurious MODULE_DEPS edge onto its 32-entry family).
+# q48g module's, re-derived here).
 _D2_E12_SQL = (
     "CAST(list_sum(list_transform(range(1, len({a}) + 1), i -> "
     "CAST(round((CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE)) * "

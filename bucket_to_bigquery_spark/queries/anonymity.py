@@ -1,12 +1,11 @@
-"""STAGED r13 surface (built r11, NOT registered — GATE_r11.md books
-the r12 window solid) — q101: k-anonymity audit — for each privacy
+"""q101: k-anonymity audit — for each privacy
 threshold k, how much of the table sits in quasi-identifier groups
 smaller than k (the privacy-governance gate run before any dataset
 release or cross-team share: a row in a small QI group is
 re-identifiable; k-anonymity requires every group ≥ k).
 
 Reference parity: n/a — no analytics surface in the reference; declared
-engine surface (SURVEY §2.C extension when registered).
+engine surface (SURVEY §2.C extension).
 
 Shape: the quasi-identifier is (c_nationkey, c_mktsegment) on customer
 — the classic demographic-combination QI stand-in. For each k in
@@ -63,6 +62,8 @@ _Q101_DESCRIPTION = (
 )
 
 
+@query("q101_k_anonymity", oracle=_Q101_ORACLE, description=_Q101_DESCRIPTION,
+       tags=("quality", "governance"))
 def q101(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = tables(spark, sf_dir)["customer"]
     g = (
@@ -93,16 +94,4 @@ def q101(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED = {
-    "q101_k_anonymity": (q101, _Q101_ORACLE, _Q101_DESCRIPTION,
-                         ("quality", "governance")),
-}
-
-
-def register() -> None:
-    """r13 registration seam — see joins_ext.register for the pattern."""
-    for name, (fn, oracle, desc, tags) in STAGED.items():
-        query(name, oracle=oracle, description=desc, tags=tags)(fn)
-
-
-__all__ = ["q101", "STAGED", "register"]
+__all__ = ["q101"]

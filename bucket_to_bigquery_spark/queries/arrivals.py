@@ -1,5 +1,4 @@
-"""STAGED r13 surface (built r11, NOT registered — GATE_r11.md books
-the r12 window solid) — q99: inter-arrival burstiness per event type —
+"""q99: inter-arrival burstiness per event type —
 gap statistics (mean, coefficient of variation, Goh–Barabási
 burstiness (σ−μ)/(σ+μ)) of consecutive same-type events (the stream-
 health primitive: a Poisson-looking feed has CV ≈ 1 and B ≈ 0; B → 1
@@ -8,7 +7,7 @@ metronome — read it before sizing streaming watermarks and batch
 windows).
 
 Reference parity: n/a — no analytics surface in the reference; declared
-engine surface (SURVEY §2.C extension when registered).
+engine surface (SURVEY §2.C extension).
 
 Determinism: time is exact integer microseconds (``unix_micros`` /
 ``epoch_us`` — the q84 convention, no engine date math); gaps order
@@ -78,6 +77,8 @@ _Q99_DESCRIPTION = (
 )
 
 
+@query("q99_interarrival_burstiness", oracle=_Q99_ORACLE,
+       description=_Q99_DESCRIPTION, tags=("events", "profiling"))
 def q99(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = tables(spark, sf_dir)["events"]
     us = F.expr("unix_micros(ts)")
@@ -111,16 +112,4 @@ def q99(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED = {
-    "q99_interarrival_burstiness": (q99, _Q99_ORACLE, _Q99_DESCRIPTION,
-                                    ("events", "profiling")),
-}
-
-
-def register() -> None:
-    """r13 registration seam — see joins_ext.register for the pattern."""
-    for name, (fn, oracle, desc, tags) in STAGED.items():
-        query(name, oracle=oracle, description=desc, tags=tags)(fn)
-
-
-__all__ = ["q99", "STAGED", "register"]
+__all__ = ["q99"]

@@ -1,4 +1,4 @@
-"""STAGED r13/r14 surface (built r11, NOT registered) — q104:
+"""q104:
 Benford first-digit audit — the observed leading-digit distribution of
 a monetary column against Benford's law, with a chi-square distance
 (the synthetic-data / fraud / unit-mixup smoke alarm: organically
@@ -7,7 +7,7 @@ rarely does — run it on every new source's numeric columns before
 trusting them).
 
 Reference parity: n/a — no analytics surface in the reference; declared
-engine surface (SURVEY §2.C extension when registered).
+engine surface (SURVEY §2.C extension).
 
 Per leading digit d ∈ 1..9 of |o_totalprice|: observed count, observed
 share, Benford expectation log10(1 + 1/d), and the per-digit
@@ -102,6 +102,8 @@ _Q104_DESCRIPTION = (
 )
 
 
+@query("q104_benford_audit", oracle=_Q104_ORACLE,
+       description=_Q104_DESCRIPTION, tags=("quality", "profiling"))
 def q104(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = tables(spark, sf_dir)["orders"]
     digits = (
@@ -130,16 +132,4 @@ def q104(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED = {
-    "q104_benford_audit": (q104, _Q104_ORACLE, _Q104_DESCRIPTION,
-                           ("quality", "profiling")),
-}
-
-
-def register() -> None:
-    """r13+ registration seam — see joins_ext.register for the pattern."""
-    for name, (fn, oracle, desc, tags) in STAGED.items():
-        query(name, oracle=oracle, description=desc, tags=tags)(fn)
-
-
-__all__ = ["q104", "STAGED", "register"]
+__all__ = ["q104"]

@@ -1,14 +1,4 @@
-"""Staged r10 surface — q57: Bloom-filter benchmark decontamination
-(tools/r10_surface_plan.md candidate #1).
-
-STAGING CONTRACT (the r8→r9 pattern, GATE_r09.md "Round-10 rotation
-plan"): this module is NOT imported by ``queries/__init__`` yet, so
-nothing registers and the r9 gate window is unaffected. Builders are
-complete and pytest-verified against their DuckDB oracles
-(tests/test_staged_r10.py); a later round wires them in by calling
-:func:`register` from ``queries/__init__`` (INFRA) — 1 slot per entry,
-no family pull, because this file lands in r9 and is unchanged at
-registration time.
+"""q57: Bloom-filter benchmark decontamination.
 
 The operation: q47d's any-overlap decontamination gate, re-based on a
 BLOOM FILTER of the benchmark's word-5-gram shingles instead of the raw
@@ -128,6 +118,8 @@ _Q57_DESCRIPTION = (
 )
 
 
+@query("q57_bloom_decontamination", oracle=_Q57_ORACLE,
+       description=_Q57_DESCRIPTION, tags=("llm",))
 def q57(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = tables(spark, sf_dir)["documents"]
     # r17 (guide §5): the old corpus-wide .persist() materialized every
@@ -232,15 +224,4 @@ def q57(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-STAGED = {
-    "q57_bloom_decontamination": (q57, _Q57_ORACLE, _Q57_DESCRIPTION, ("llm",)),
-}
-
-
-def register() -> None:
-    """r10 registration seam — see joins_ext.register for the pattern."""
-    for name, (fn, oracle, desc, tags) in STAGED.items():
-        query(name, oracle=oracle, description=desc, tags=tags)(fn)
-
-
-__all__ = ["q57", "STAGED", "register"]
+__all__ = ["q57"]

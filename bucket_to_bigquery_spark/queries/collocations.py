@@ -1,16 +1,13 @@
-"""STAGED r13 surface (built r11, NOT registered — GATE_r11.md books
-the r12 window solid with the deferred scratch rotation + the staged
-r12 quartet, so this batch waits for r13's free slots) — q93: PMI
+"""q93: PMI
 collocation mining — the top word bigrams by pointwise mutual
 information over the corpus (the vocabulary/tokenizer-design primitive:
 which adjacent pairs co-occur far more than chance — candidates for
 merged tokens, stop-phrase lists, and quality signatures).
 
 Reference parity: n/a — no analytics surface in the reference; declared
-engine surface (SURVEY §2.C extension when registered). Tokenization is
+engine surface (SURVEY §2.C extension). Tokenization is
 the shared q46-family contract (``operators.dedup.tokens`` /
-``llm_queries._TOKS_SQL``) — MODULE_DEPS pulls this entry when either
-side changes.
+``llm_queries._TOKS_SQL``).
 
     PMI(a,b) = ln( P(a,b) / (P(a)·P(b)) ),
     P(a,b) = c_ab / N_pairs over ADJACENT in-document pairs,
@@ -90,6 +87,8 @@ _Q93_DESCRIPTION = (
 )
 
 
+@query("q93_pmi_collocations", oracle=_Q93_ORACLE,
+       description=_Q93_DESCRIPTION, tags=("llm", "profiling"))
 def q93(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = tables(spark, sf_dir)["documents"]
     # ONE tokenization pass shared by the pair and unigram counts
@@ -137,16 +136,4 @@ def q93(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).limit(_TOP)
 
 
-STAGED = {
-    "q93_pmi_collocations": (q93, _Q93_ORACLE, _Q93_DESCRIPTION,
-                             ("llm", "profiling")),
-}
-
-
-def register() -> None:
-    """r13 registration seam — see joins_ext.register for the pattern."""
-    for name, (fn, oracle, desc, tags) in STAGED.items():
-        query(name, oracle=oracle, description=desc, tags=tags)(fn)
-
-
-__all__ = ["q93", "STAGED", "register"]
+__all__ = ["q93"]

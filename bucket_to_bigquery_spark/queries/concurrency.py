@@ -1,4 +1,4 @@
-"""STAGED r14+ surface (built late r13, NOT registered) — q131: peak
+"""q131: peak
 concurrent sessions per day — the classic interval/sweep-line
 operator (capacity planning: "how many sessions were open at once"),
 over the q63 sessionization contract (6 h gap, integer-micros
@@ -8,11 +8,9 @@ each end, with starts ordered before ends at equal instants (touching
 intervals overlap); the report is each observed day's maximum.
 
 Reference parity: n/a — no analytics surface in the reference;
-declared engine surface (SURVEY §2.C extension when registered).
+declared engine surface (SURVEY §2.C extension).
 Sessionization is the q63 contract restated (same 6 h gap, same
-(ts, event_id) tie order, same integer-micros arithmetic) —
-MODULE_DEPS records the sessions.py edge so a contract change pulls
-this entry in-window.
+(ts, event_id) tie order, same integer-micros arithmetic).
 
 Determinism: pure integer arithmetic end to end (unix_micros, the
 q118 `div` day convention, ±1 counts); at one instant the peak is
@@ -83,6 +81,8 @@ _Q131_DESCRIPTION = (
 )
 
 
+@query("q131_peak_concurrency", oracle=_Q131_ORACLE,
+       description=_Q131_DESCRIPTION, tags=("events", "windows"))
 def q131(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = tables(spark, sf_dir)["events"]
     us = F.expr("unix_micros(ts)")
@@ -146,16 +146,4 @@ def q131(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED = {
-    "q131_peak_concurrency": (q131, _Q131_ORACLE, _Q131_DESCRIPTION,
-                              ("events", "windows")),
-}
-
-
-def register() -> None:
-    """r14+ registration seam — see joins_ext.register for the pattern."""
-    for name, (fn, oracle, desc, tags) in STAGED.items():
-        query(name, oracle=oracle, description=desc, tags=tags)(fn)
-
-
-__all__ = ["q131", "STAGED", "register"]
+__all__ = ["q131"]

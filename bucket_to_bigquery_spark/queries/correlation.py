@@ -1,4 +1,4 @@
-"""STAGED r13/r14 surface (built r11, NOT registered) — q107: numeric
+"""q107: numeric
 correlation matrix — exact-moment Pearson correlation for every pair
 of lineitem's numeric measures (the profiling pass a feature platform
 runs before model training: near-±1 pairs are redundant features or
@@ -6,7 +6,7 @@ derived-column leaks, near-0 pairs justify independent treatment;
 q80's chi-square is the categorical sibling).
 
 Reference parity: n/a — no analytics surface in the reference; declared
-engine surface (SURVEY §2.C extension when registered).
+engine surface (SURVEY §2.C extension).
 
 Every measure scales per-row to an e6 BIGINT (ONE double each, the
 q99/q106 moment contract), then ONE aggregation pass collects every
@@ -109,6 +109,8 @@ _Q107_DESCRIPTION = (
 )
 
 
+@query("q107_correlation_matrix", oracle=_Q107_ORACLE,
+       description=_Q107_DESCRIPTION, tags=("quality", "profiling"))
 def q107(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = tables(spark, sf_dir)["lineitem"]
     scaled = li.select(*[
@@ -151,16 +153,4 @@ def q107(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("col_a", "col_b")
 
 
-STAGED = {
-    "q107_correlation_matrix": (q107, _Q107_ORACLE, _Q107_DESCRIPTION,
-                                ("quality", "profiling")),
-}
-
-
-def register() -> None:
-    """r13+ registration seam — see joins_ext.register for the pattern."""
-    for name, (fn, oracle, desc, tags) in STAGED.items():
-        query(name, oracle=oracle, description=desc, tags=tags)(fn)
-
-
-__all__ = ["q107", "STAGED", "register"]
+__all__ = ["q107"]

@@ -1,5 +1,4 @@
-"""STAGED r14 surface (built r13, NOT registered — GATE_r13.md's
-round-14 plan budgets the slot) — q117: vocabulary coverage curve —
+"""q117: vocabulary coverage curve —
 the share of ALL token occurrences covered by the top-K most frequent
 terms, for K ∈ {10, 100, 1000}. The tokenizer-design readout (how big
 must a vocabulary be before OOV mass is negligible) and the
@@ -8,10 +7,9 @@ mass is template-dominated) — the cumulative companion to q98's Zipf
 slope over the same term-frequency frame.
 
 Reference parity: n/a — no analytics surface in the reference;
-declared engine surface (SURVEY §2.C extension when registered).
+declared engine surface (SURVEY §2.C extension).
 Tokenization is the shared q46-family contract
-(``operators.dedup.tokens`` / ``llm_queries._TOKS_SQL``) —
-MODULE_DEPS pulls this entry when either side changes.
+(``operators.dedup.tokens`` / ``llm_queries._TOKS_SQL``).
 
 Determinism: ranks are exact row_numbers under the total
 (count DESC, term ASC) order (the q98 tie-break); covered and total
@@ -71,6 +69,8 @@ _Q117_DESCRIPTION = (
 )
 
 
+@query("q117_ngram_coverage", oracle=_Q117_ORACLE,
+       description=_Q117_DESCRIPTION, tags=("llm", "profiling"))
 def q117(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = tables(spark, sf_dir)["documents"]
     tc = (
@@ -110,16 +110,4 @@ def q117(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED = {
-    "q117_ngram_coverage": (q117, _Q117_ORACLE, _Q117_DESCRIPTION,
-                            ("llm", "profiling")),
-}
-
-
-def register() -> None:
-    """r14 registration seam — see joins_ext.register for the pattern."""
-    for name, (fn, oracle, desc, tags) in STAGED.items():
-        query(name, oracle=oracle, description=desc, tags=tags)(fn)
-
-
-__all__ = ["q117", "STAGED", "register"]
+__all__ = ["q117"]

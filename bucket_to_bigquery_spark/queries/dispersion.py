@@ -1,4 +1,4 @@
-"""STAGED r13/r14 surface (built r11, NOT registered) — q106:
+"""q106:
 unit-price consistency audit — per part: the dispersion (coefficient
 of variation) of its observed unit price across line items, top-20
 most inconsistent (the pricing/data-entry anomaly sweep: a part whose
@@ -7,7 +7,7 @@ genuine pricing event — either way the first thing a commerce
 warehouse owner wants ranked).
 
 Reference parity: n/a — no analytics surface in the reference; declared
-engine surface (SURVEY §2.C extension when registered).
+engine surface (SURVEY §2.C extension).
 
 Unit price = l_extendedprice / l_quantity, one double per row in
 identical operand order, immediately scaled to an e6 BIGINT (the q99
@@ -78,6 +78,8 @@ _Q106_DESCRIPTION = (
 )
 
 
+@query("q106_unit_price_dispersion", oracle=_Q106_ORACLE,
+       description=_Q106_DESCRIPTION, tags=("quality", "profiling"))
 def q106(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = tables(spark, sf_dir)["lineitem"]
     u = li.where(
@@ -110,16 +112,4 @@ def q106(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED = {
-    "q106_unit_price_dispersion": (q106, _Q106_ORACLE, _Q106_DESCRIPTION,
-                                   ("quality", "profiling")),
-}
-
-
-def register() -> None:
-    """r13+ registration seam — see joins_ext.register for the pattern."""
-    for name, (fn, oracle, desc, tags) in STAGED.items():
-        query(name, oracle=oracle, description=desc, tags=tags)(fn)
-
-
-__all__ = ["q106", "STAGED", "register"]
+__all__ = ["q106"]

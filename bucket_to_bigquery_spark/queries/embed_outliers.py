@@ -1,5 +1,4 @@
-"""STAGED r14 surface (built late r13, NOT registered — GATE_r13.md's
-round-14 plan budgets the slot) — q127: embedding outlier audit — for
+"""q127: embedding outlier audit — for
 each label, the top-5 vectors farthest from their label centroid
 (squared distance). THE mislabeled-sample / encoder-glitch detector a
 training pipeline runs before fitting a probe: a label whose farthest
@@ -9,7 +8,7 @@ and q48f (neighbor-vote label audit) with a neighbor-free, one-pass
 variant.
 
 Reference parity: n/a — no analytics surface in the reference;
-declared engine surface (SURVEY §2.C extension when registered).
+declared engine surface (SURVEY §2.C extension).
 
 Determinism (the q69/q62 scaled-int contract + the q98/q100 per-term
 rounding): components are round(x·1e6) BIGINTs; per-(label, dim)
@@ -80,6 +79,8 @@ _Q127_DESCRIPTION = (
 )
 
 
+@query("q127_embedding_outliers", oracle=_Q127_ORACLE,
+       description=_Q127_DESCRIPTION, tags=("embeddings", "quality"))
 def q127(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = tables(spark, sf_dir)["embeddings"]
     ex = emb.select(
@@ -134,16 +135,4 @@ def q127(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED = {
-    "q127_embedding_outliers": (q127, _Q127_ORACLE, _Q127_DESCRIPTION,
-                                ("embeddings", "quality")),
-}
-
-
-def register() -> None:
-    """r14 registration seam — see joins_ext.register for the pattern."""
-    for name, (fn, oracle, desc, tags) in STAGED.items():
-        query(name, oracle=oracle, description=desc, tags=tags)(fn)
-
-
-__all__ = ["q127", "STAGED", "register"]
+__all__ = ["q127"]

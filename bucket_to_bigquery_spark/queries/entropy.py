@@ -1,4 +1,4 @@
-"""STAGED r13/r14 surface (built r11, NOT registered) — q105:
+"""q105:
 per-source unigram entropy — Shannon entropy of each source's token
 distribution plus its normalized efficiency H/ln(V) (the text-
 diversity fingerprint beside q98's Zipf slope and q83's divergence:
@@ -7,10 +7,9 @@ pushes toward 1 — the pair (entropy, efficiency) separates "small
 vocabulary" from "skewed vocabulary").
 
 Reference parity: n/a — no analytics surface in the reference; declared
-engine surface (SURVEY §2.C extension when registered). Tokenization is
+engine surface (SURVEY §2.C extension). Tokenization is
 the shared q46-family contract (``operators.dedup.tokens`` /
-``llm_queries._TOKS_SQL``) — MODULE_DEPS pulls this entry when either
-side changes.
+``llm_queries._TOKS_SQL``).
 
 Determinism (the q98 per-term contract): float sums are order-
 dependent, so each term's −p·ln p is individually rounded to an e12
@@ -74,6 +73,8 @@ _Q105_DESCRIPTION = (
 )
 
 
+@query("q105_unigram_entropy", oracle=_Q105_ORACLE,
+       description=_Q105_DESCRIPTION, tags=("llm", "profiling"))
 def q105(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = tables(spark, sf_dir)["documents"]
     tc = (
@@ -105,16 +106,4 @@ def q105(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED = {
-    "q105_unigram_entropy": (q105, _Q105_ORACLE, _Q105_DESCRIPTION,
-                             ("llm", "profiling")),
-}
-
-
-def register() -> None:
-    """r13+ registration seam — see joins_ext.register for the pattern."""
-    for name, (fn, oracle, desc, tags) in STAGED.items():
-        query(name, oracle=oracle, description=desc, tags=tags)(fn)
-
-
-__all__ = ["q105", "STAGED", "register"]
+__all__ = ["q105"]

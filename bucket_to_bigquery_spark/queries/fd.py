@@ -1,12 +1,11 @@
-"""STAGED r13 surface (built r11, NOT registered — GATE_r11.md books
-the r12 window solid) — q94: approximate functional-dependency audit —
+"""q94: approximate functional-dependency audit —
 for each declared candidate FD ``lhs → rhs``, how close the data comes
 to satisfying it (the schema-inference / data-contract primitive: "is
 this column determined by that one", run before declaring constraints,
 after every backfill, and when picking dedup/merge keys).
 
 Reference parity: n/a — no analytics surface in the reference; declared
-engine surface (SURVEY §2.C extension when registered).
+engine surface (SURVEY §2.C extension).
 
 Per candidate: group rows by (lhs, rhs), then per lhs key take the
 count of its MODAL rhs value — the maximum number of rows that can
@@ -83,6 +82,8 @@ _Q94_DESCRIPTION = (
 )
 
 
+@query("q94_fd_audit", oracle=_Q94_ORACLE, description=_Q94_DESCRIPTION,
+       tags=("quality", "profiling"))
 def q94(spark: SparkSession, sf_dir: str) -> DataFrame:
     tbls = tables(spark, sf_dir)
     outs = []
@@ -118,16 +119,4 @@ def q94(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("table_name", "lhs", "rhs")
 
 
-STAGED = {
-    "q94_fd_audit": (q94, _Q94_ORACLE, _Q94_DESCRIPTION,
-                     ("quality", "profiling")),
-}
-
-
-def register() -> None:
-    """r13 registration seam — see joins_ext.register for the pattern."""
-    for name, (fn, oracle, desc, tags) in STAGED.items():
-        query(name, oracle=oracle, description=desc, tags=tags)(fn)
-
-
-__all__ = ["q94", "STAGED", "register"]
+__all__ = ["q94"]

@@ -19,11 +19,8 @@ substituting it — a corpus that needs those bytes belongs in
 parquet/ORC, not XML. Tab, newline, DEL and all higher Unicode are
 legal and round-trip exactly.
 
-The round-trip lives in its own module (not relational.py) so adding it
-does not pull the 35-entry relational block into the correctness-gate
-window (tools/check_gate_rotation.py file-level dep map; the scratch
-write goes through ``scratch.materialize_once`` — atomic publish, keyed
-by source-content fingerprint).
+The scratch write goes through ``scratch.materialize_once`` — atomic
+publish, keyed by source-content fingerprint.
 """
 
 from __future__ import annotations

@@ -1,5 +1,4 @@
-"""STAGED r14 surface (built late r13, NOT registered — GATE_r13.md's
-round-14 plan budgets the slot) — q134: funnel time-to-convert
+"""q134: funnel time-to-convert
 percentiles — for each q63b funnel transition (view→click,
 click→purchase, and the end-to-end view→purchase), the survivor count
 and the exact p25/p50/p75/max of the conversion delay in whole
@@ -9,10 +8,9 @@ campaign analysis), with the q129 count-compress percentile machinery
 over the q63b min-ts chaining contract.
 
 Reference parity: n/a — no analytics surface in the reference;
-declared engine surface (SURVEY §2.C extension when registered).
+declared engine surface (SURVEY §2.C extension).
 Stage semantics are the q63b contract restated (strictly-after min-ts
-chaining) — MODULE_DEPS records the sessions.py edge so a funnel
-contract change pulls this entry in-window.
+chaining).
 
 Determinism: stage times are exact integer microseconds; delays are
 strictly positive (strict > chaining), so whole-second truncation has
@@ -92,6 +90,8 @@ _Q134_DESCRIPTION = (
 )
 
 
+@query("q134_funnel_ttc_percentiles", oracle=_Q134_ORACLE,
+       description=_Q134_DESCRIPTION, tags=("events", "funnel"))
 def q134(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = tables(spark, sf_dir)["events"]
 
@@ -156,16 +156,4 @@ def q134(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED = {
-    "q134_funnel_ttc_percentiles": (q134, _Q134_ORACLE, _Q134_DESCRIPTION,
-                                    ("events", "funnel")),
-}
-
-
-def register() -> None:
-    """r14 registration seam — see joins_ext.register for the pattern."""
-    for name, (fn, oracle, desc, tags) in STAGED.items():
-        query(name, oracle=oracle, description=desc, tags=tags)(fn)
-
-
-__all__ = ["q134", "STAGED", "register"]
+__all__ = ["q134"]

@@ -3,9 +3,8 @@ part co-occurrence graph (parts co-ordered within an order, support
 >= 2): PageRank under an exact integer contract, and triangle counting
 with the degree-orientation trick. Complements the q46c connected
 components (operators/graph.py) with the other two canonical
-graph-at-scale shapes — deliberately implemented inline so this module
-stays dependency-free (operators/graph.py fan-in belongs to the llm
-family; see MODULE_DEPS).
+graph-at-scale shapes — implemented inline, independent of
+operators/graph.py.
 
 Reference parity: n/a — no analytics surface in the reference; declared
 engine surface (SURVEY §2.C extension, registered r10).

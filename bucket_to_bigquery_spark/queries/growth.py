@@ -1,12 +1,11 @@
-"""STAGED r13 surface (built r11, NOT registered — GATE_r11.md books
-the r12 window solid) — q103: weekly new-vs-returning customer mix —
+"""q103: weekly new-vs-returning customer mix —
 per order-week: order volume, distinct active customers, first-ever
 customers and the new-customer fraction (the growth-accounting readout
 behind every cohort chart: a mix that tilts returning means the base
 is compounding; tilting new with flat volume means churn).
 
 Reference parity: n/a — no analytics surface in the reference; declared
-engine surface (SURVEY §2.C extension when registered). Week indexes
+engine surface (SURVEY §2.C extension). Week indexes
 are exact integer day-diffs from a fixed epoch (the q64 contract —
 ``date_trunc('week')`` week-start conventions differ across engines).
 
@@ -70,6 +69,8 @@ _Q103_DESCRIPTION = (
 )
 
 
+@query("q103_new_vs_returning", oracle=_Q103_ORACLE,
+       description=_Q103_DESCRIPTION, tags=("analytics",))
 def q103(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = tables(spark, sf_dir)["orders"]
     week = F.floor(
@@ -102,16 +103,4 @@ def q103(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED = {
-    "q103_new_vs_returning": (q103, _Q103_ORACLE, _Q103_DESCRIPTION,
-                              ("analytics",)),
-}
-
-
-def register() -> None:
-    """r13 registration seam — see joins_ext.register for the pattern."""
-    for name, (fn, oracle, desc, tags) in STAGED.items():
-        query(name, oracle=oracle, description=desc, tags=tags)(fn)
-
-
-__all__ = ["q103", "STAGED", "register"]
+__all__ = ["q103"]

@@ -1,5 +1,4 @@
-"""STAGED r14 surface (built r13, NOT registered — GATE_r13.md's
-round-14 plan budgets the slot) — q115: SimHash near-duplicate
+"""q115: SimHash near-duplicate
 adjacency between DISTINCT fingerprint clusters. q46b computes the
 32-bit fingerprint; q116 reports the hamming-0 (identical-fingerprint)
 clusters; this entry completes the simhash dedup path with the
@@ -12,7 +11,7 @@ representatives (min doc_id), sizes, and the implied doc-pair mass
 sz_a·sz_b — the near-dup pair VOLUME is reported as a count, never
 materialized as rows.
 
-Why cluster granularity (r13 staging probe): at doc granularity the
+Why cluster granularity (measured at sf0.01/sf0.1): at doc granularity the
 corpus' hamming-0 cliques (sizes up to ~40) made both the banded join
 and the output quadratic — 15k pairs at sf0.01 became 1.57M at sf0.1
 (8.6× wall at 10× data). Collapsing identical fingerprints FIRST
@@ -21,7 +20,7 @@ turns each clique into one node: the join input drops from |docs| to
 (3,075 edges at sf0.01 / 58,212 at sf0.1).
 
 Reference parity: n/a — no analytics surface in the reference;
-declared engine surface (SURVEY §2.C extension when registered).
+declared engine surface (SURVEY §2.C extension).
 
 Determinism: the fingerprint is the q46b contract exactly
 (operators/dedup.simhash_col over md5 token hashes — ONE definition,
@@ -65,10 +64,8 @@ assert _MAX_HAMMING <= _N_BANDS - 1, "banding misses true pairs"
 assert _N_BANDS * _BAND_BITS == 32, "bands must tile the fingerprint"
 
 # q46b's fingerprint SQL: the token/normalize twins AND the 32-bit fold
-# are IMPORTED from llm_queries (one definition each, the r9 review
-# rule — a change there pulls this entry in-window via MODULE_DEPS).
-# The fold was hoisted there in the r15 rotation (GATE_r13 deferred #5);
-# the q46b oracle interpolates the same _SIMHASH_SQL object.
+# are IMPORTED from llm_queries (one definition each); the q46b oracle
+# interpolates the same _SIMHASH_SQL object.
 
 _Q115_ORACLE = (
     "WITH t AS (SELECT doc_id, "
@@ -184,21 +181,11 @@ def adjacency(cl: DataFrame) -> DataFrame:
     )
 
 
+@query("q115_simhash_hamming_pairs", oracle=_Q115_ORACLE,
+       description=_Q115_DESCRIPTION, tags=("llm", "dedup"))
 def q115(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = tables(spark, sf_dir)["documents"]
     return adjacency(cluster_frame(docs)).orderBy("rep_a", "rep_b")
 
 
-STAGED = {
-    "q115_simhash_hamming_pairs": (q115, _Q115_ORACLE, _Q115_DESCRIPTION,
-                                   ("llm", "dedup")),
-}
-
-
-def register() -> None:
-    """r14 registration seam — see joins_ext.register for the pattern."""
-    for name, (fn, oracle, desc, tags) in STAGED.items():
-        query(name, oracle=oracle, description=desc, tags=tags)(fn)
-
-
-__all__ = ["q115", "cluster_frame", "adjacency", "STAGED", "register"]
+__all__ = ["q115", "cluster_frame", "adjacency"]

@@ -1,10 +1,4 @@
-"""Staged r10 surface — q61: mergeable HyperLogLog sketch union
-(tools/r10_surface_plan.md candidate #5).
-
-STAGING CONTRACT: not imported by ``queries/__init__`` in r9 — nothing
-registers until a later round calls :func:`register` (see joins_ext.py
-for the pattern). Builders are pytest-verified against their DuckDB
-oracles in tests/test_staged_r10.py.
+"""q61: mergeable HyperLogLog sketch union.
 
 The operation: q19 estimates a distinct count in one pass; this is the
 pattern that matters past one pass — SKETCHES AS DATA. Each shard
@@ -60,6 +54,8 @@ _Q61_DESCRIPTION = (
 )
 
 
+@query("q61_hll_sketch_union", oracle=_Q61_ORACLE,
+       description=_Q61_DESCRIPTION, tags=("approx",))
 def q61(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = tables(spark, sf_dir)["events"]
     # phase 1 — the 'stored' per-shard sketches (binary, KB-sized)
@@ -89,15 +85,4 @@ def q61(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED = {
-    "q61_hll_sketch_union": (q61, _Q61_ORACLE, _Q61_DESCRIPTION, ("approx",)),
-}
-
-
-def register() -> None:
-    """r10 registration seam — see joins_ext.register for the pattern."""
-    for name, (fn, oracle, desc, tags) in STAGED.items():
-        query(name, oracle=oracle, description=desc, tags=tags)(fn)
-
-
-__all__ = ["q61", "STAGED", "register"]
+__all__ = ["q61"]

@@ -1,10 +1,5 @@
-"""Staged r9 surface — q55: incremental corpus dedup against a prebuilt
-index (tools/r9_surface_plan.md candidate #3).
-
-STAGING CONTRACT: not imported by ``queries/__init__`` in r8 — nothing
-registers until round 9 calls :func:`register` (see joins_ext.py for the
-window math). Builders are pytest-verified against their DuckDB oracles
-in tests/test_staged_r9.py.
+"""q55: incremental corpus dedup against a prebuilt
+index.
 
 The operation is the shape production dedup actually runs at 100 TB: a
 NEW batch arrives and must be deduped against the EXISTING corpus without
@@ -187,35 +182,6 @@ def _matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q55(spark: SparkSession, sf_dir: str) -> DataFrame:
-    m = _matches(spark, sf_dir)
-    return (
-        _new_batch(spark, sf_dir)
-        .select("doc_id")
-        .join(m, F.col("doc_id") == m["new_id"], "left")
-        .groupBy("doc_id")
-        .agg(
-            F.count("hist_id").alias("n_matches"),
-            F.max("jaccard").alias("max_jaccard"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-def q55b(spark: SparkSession, sf_dir: str) -> DataFrame:
-    m = _matches(spark, sf_dir).select("new_id")
-    survivors = (
-        _new_batch(spark, sf_dir)
-        .select("doc_id")
-        .join(m, F.col("doc_id") == m["new_id"], "left_anti")
-        .select("doc_id", F.lit("new").alias("origin"))
-    )
-    hist = _historical(spark, sf_dir).select(
-        "doc_id", F.lit("historical").alias("origin")
-    )
-    return hist.unionAll(survivors).orderBy("doc_id")
-
-
 # ---------------------------------------------------------------------------
 # Oracles (DuckDB recomputes both sides from first principles)
 # ---------------------------------------------------------------------------
@@ -296,16 +262,38 @@ _Q55B_DESCRIPTION = (
     "corpus a production pipeline would publish after each batch."
 )
 
-STAGED = {
-    "q55_incremental_dedup": (q55, _Q55_ORACLE, _Q55_DESCRIPTION, ("llm",)),
-    "q55b_incremental_dedup_apply": (q55b, _Q55B_ORACLE, _Q55B_DESCRIPTION, ("llm",)),
-}
+
+@query("q55_incremental_dedup", oracle=_Q55_ORACLE,
+       description=_Q55_DESCRIPTION, tags=("llm",))
+def q55(spark: SparkSession, sf_dir: str) -> DataFrame:
+    m = _matches(spark, sf_dir)
+    return (
+        _new_batch(spark, sf_dir)
+        .select("doc_id")
+        .join(m, F.col("doc_id") == m["new_id"], "left")
+        .groupBy("doc_id")
+        .agg(
+            F.count("hist_id").alias("n_matches"),
+            F.max("jaccard").alias("max_jaccard"),
+        )
+        .orderBy("doc_id")
+    )
 
 
-def register() -> None:
-    """r9 registration seam — see joins_ext.register for the window math."""
-    for name, (fn, oracle, desc, tags) in STAGED.items():
-        query(name, oracle=oracle, description=desc, tags=tags)(fn)
+@query("q55b_incremental_dedup_apply", oracle=_Q55B_ORACLE,
+       description=_Q55B_DESCRIPTION, tags=("llm",))
+def q55b(spark: SparkSession, sf_dir: str) -> DataFrame:
+    m = _matches(spark, sf_dir).select("new_id")
+    survivors = (
+        _new_batch(spark, sf_dir)
+        .select("doc_id")
+        .join(m, F.col("doc_id") == m["new_id"], "left_anti")
+        .select("doc_id", F.lit("new").alias("origin"))
+    )
+    hist = _historical(spark, sf_dir).select(
+        "doc_id", F.lit("historical").alias("origin")
+    )
+    return hist.unionAll(survivors).orderBy("doc_id")
 
 
-__all__ = ["q55", "q55b", "STAGED", "register"]
+__all__ = ["q55", "q55b"]

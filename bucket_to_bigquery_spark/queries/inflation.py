@@ -1,5 +1,4 @@
-"""STAGED r14 surface (built r13, NOT registered — GATE_r13.md's
-round-14 plan budgets the slot) — q116: corpus duplication-inflation
+"""q116: corpus duplication-inflation
 report, the governance readout a dedup pipeline publishes: the
 histogram of near-duplicate cluster sizes (size → how many clusters,
 how many documents) plus each size's share of the corpus and of the
@@ -13,7 +12,7 @@ governance-relevant choice: it reports the mass a near-dedup pass
 would reclaim.
 
 Reference parity: n/a — no analytics surface in the reference;
-declared engine surface (SURVEY §2.C extension when registered).
+declared engine surface (SURVEY §2.C extension).
 
 Determinism: the fingerprint is the q46b contract exactly
 (operators/dedup.simhash_col over md5 token hashes; the DuckDB twin is
@@ -24,7 +23,7 @@ e6-rounded. The removable-share guard (NULL when docs == clusters)
 exists for the degenerate all-unique corpus; at both test SFs the
 simhash key has real multiplicity so every output cell is non-NULL
 (the driver's pandas hash path needs a non-all-NULL column to agree
-on dtype — found staging this entry against the exact-text key, where
+on dtype — found while building this entry against the exact-text key, where
 500/500 unique docs made the column all-NULL and ∅/NaN-diverged).
 Ordered by cluster size.
 
@@ -83,6 +82,8 @@ _Q116_DESCRIPTION = (
 )
 
 
+@query("q116_dup_inflation", oracle=_Q116_ORACLE,
+       description=_Q116_DESCRIPTION, tags=("llm", "dedup", "governance"))
 def q116(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = tables(spark, sf_dir)["documents"]
     cl = (
@@ -130,16 +131,4 @@ def q116(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED = {
-    "q116_dup_inflation": (q116, _Q116_ORACLE, _Q116_DESCRIPTION,
-                           ("llm", "dedup", "governance")),
-}
-
-
-def register() -> None:
-    """r14 registration seam — see joins_ext.register for the pattern."""
-    for name, (fn, oracle, desc, tags) in STAGED.items():
-        query(name, oracle=oracle, description=desc, tags=tags)(fn)
-
-
-__all__ = ["q116", "STAGED", "register"]
+__all__ = ["q116"]

@@ -1,14 +1,5 @@
-"""Staged r9 surface — q11b: FULL OUTER JOIN (the one classic join type
-§2.C lacked; tools/r9_surface_plan.md candidate #2).
-
-STAGING CONTRACT (GATE_r08.md "Round-9 rotation plan"): this module is
-NOT imported by ``queries/__init__`` yet, so nothing here is registered
-and the r8 gate window is unaffected. The builders are complete and
-pytest-verified against their DuckDB oracles (tests/test_staged_r9.py);
-round 9 wires them in by calling :func:`register` from
-``queries/__init__`` (INFRA) and giving each entry a GATE_PRIORITY slot —
-1 slot per entry, no family pull, because this file lands in r8 and is
-unchanged at r9 registration time.
+"""q11b: FULL OUTER JOIN (the one classic join type
+§2.C lacked).
 
 Scale notes (100 TB): a full outer join cannot broadcast either side by
 definition (unmatched rows of BOTH sides survive), so this is a plain
@@ -48,6 +39,8 @@ _Q11B_DESCRIPTION = (
 )
 
 
+@query("q11b_full_outer_join", oracle=_Q11B_ORACLE,
+       description=_Q11B_DESCRIPTION, tags=("relational",))
 def q11b(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = tables(spark, sf_dir)
     cust = t["customer"].where(F.col("c_mktsegment") == "BUILDING")
@@ -72,22 +65,4 @@ def q11b(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# name -> (builder, oracle_sql, description, tags); the single source the
-# r9 registration and the staged pytest gate both read.
-STAGED = {
-    "q11b_full_outer_join": (q11b, _Q11B_ORACLE, _Q11B_DESCRIPTION, ("relational",)),
-}
-
-
-def register() -> None:
-    """Apply the house ``@query`` registration to every staged builder.
-
-    Idempotent (re-registering overwrites the same entries). Round 9 calls
-    this from ``queries/__init__`` — keeping THIS file unchanged at
-    registration time, so the new entries cost exactly their own
-    GATE_PRIORITY slots and pull no family."""
-    for name, (fn, oracle, desc, tags) in STAGED.items():
-        query(name, oracle=oracle, description=desc, tags=tags)(fn)
-
-
-__all__ = ["q11b", "STAGED", "register"]
+__all__ = ["q11b"]

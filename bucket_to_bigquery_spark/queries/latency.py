@@ -1,5 +1,4 @@
-"""STAGED r14 surface (built late r13, NOT registered — GATE_r13.md's
-round-14 plan budgets the slot) — q129: order→ship latency
+"""q129: order→ship latency
 percentiles per order priority — the fulfilment-SLA readout: for each
 priority class, the exact p25/p50/p75/p90 of the whole-day latency
 between order date and line ship date, plus n and max. The
@@ -9,7 +8,7 @@ bounded), cumulate over the tiny compressed frame, never sort the
 fact table.
 
 Reference parity: n/a — no analytics surface in the reference;
-declared engine surface (SURVEY §2.C extension when registered).
+declared engine surface (SURVEY §2.C extension).
 
 Determinism: latency is pure integer arithmetic
 ((unix_micros(ship) − unix_micros(order)) div 86 400 000 000 — whole
@@ -73,6 +72,8 @@ _Q129_DESCRIPTION = (
 )
 
 
+@query("q129_ship_latency_percentiles", oracle=_Q129_ORACLE,
+       description=_Q129_DESCRIPTION, tags=("relational", "profiling"))
 def q129(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = tables(spark, sf_dir)
     lat = (
@@ -116,17 +117,4 @@ def q129(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED = {
-    "q129_ship_latency_percentiles": (q129, _Q129_ORACLE,
-                                      _Q129_DESCRIPTION,
-                                      ("relational", "profiling")),
-}
-
-
-def register() -> None:
-    """r14 registration seam — see joins_ext.register for the pattern."""
-    for name, (fn, oracle, desc, tags) in STAGED.items():
-        query(name, oracle=oracle, description=desc, tags=tags)(fn)
-
-
-__all__ = ["q129", "STAGED", "register"]
+__all__ = ["q129"]

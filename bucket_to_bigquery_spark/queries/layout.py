@@ -1,10 +1,4 @@
-"""Staged r10 surface — q60: Z-order (Morton-curve) layout clustering
-(tools/r10_surface_plan.md candidate #4).
-
-STAGING CONTRACT: not imported by ``queries/__init__`` in r9 — nothing
-registers until a later round calls :func:`register` (see joins_ext.py
-for the pattern). Builders are pytest-verified against their DuckDB
-oracles in tests/test_staged_r10.py.
+"""q60: Z-order (Morton-curve) layout clustering.
 
 The operation: the data-layout maintenance job behind multi-dimensional
 partition pruning. A table sorted on ONE column prunes only predicates
@@ -94,6 +88,8 @@ _Q60_DESCRIPTION = (
 )
 
 
+@query("q60_zorder_layout", oracle=_Q60_ORACLE, description=_Q60_DESCRIPTION,
+       tags=("relational",))
 def q60(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = tables(spark, sf_dir)["events"]
     d1, d2 = _dims()
@@ -117,15 +113,4 @@ def q60(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED = {
-    "q60_zorder_layout": (q60, _Q60_ORACLE, _Q60_DESCRIPTION, ("relational",)),
-}
-
-
-def register() -> None:
-    """r10 registration seam — see joins_ext.register for the pattern."""
-    for name, (fn, oracle, desc, tags) in STAGED.items():
-        query(name, oracle=oracle, description=desc, tags=tags)(fn)
-
-
-__all__ = ["q60", "STAGED", "register"]
+__all__ = ["q60"]

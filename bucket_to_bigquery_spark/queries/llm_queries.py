@@ -45,9 +45,8 @@ _NORM_SQL = "lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))"
 _TOKS_SQL = f"string_split({_NORM_SQL}, ' ')"
 _TOKHASH_SQL = "CAST(('0x' || substr(md5({t}), 1, 8)) AS BIGINT)"
 # The 32-bit SimHash fold over a token-hash list column ``hs`` — the
-# oracle twin of operators/dedup.simhash_col(bits=32). ONE definition
-# (hoisted here from queries/hamming.py in the r15 rotation, GATE_r13
-# deferred #5): q46b interpolates it and hamming/neardup_cc import it,
+# oracle twin of operators/dedup.simhash_col(bits=32). ONE definition:
+# q46b interpolates it and hamming/neardup_cc import it,
 # so the fingerprint contract cannot desync across consumers.
 _SIMHASH_SQL = (
     "CAST(list_sum(list_transform(range(0, 32), j -> "

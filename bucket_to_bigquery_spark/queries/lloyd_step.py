@@ -1,5 +1,4 @@
-"""STAGED r14 surface (built late r13, NOT registered — GATE_r13.md's
-round-14 plan budgets the slot) — q130: Lloyd-update step audit, the
+"""q130: Lloyd-update step audit, the
 last shrink of the q48b/c/d rows-only exemption. q48g hash-verifies
 the IVF assignment/probe stats and q48h the whole probe+rank QUERY
 plan, both under injected centroids; the one remaining unoracled
@@ -12,7 +11,7 @@ convergence loop (a bounded repetition of exactly the step verified
 here, plus the seeded sample draw).
 
 Reference parity: n/a — no analytics surface in the reference;
-declared engine surface (SURVEY §2.C Q48 extension when registered).
+declared engine surface (SURVEY §2.C Q48 extension).
 
 Determinism: centroids are the q48g/q48h injection (the n_lists
 lowest-vec_id corpus vectors at ivf_operating_point(N)); assignment
@@ -26,11 +25,9 @@ attract no vectors keep their centroid (shift 0, n 0 — mirroring
 operators/similarity._lloyd's nonzero-count guard). Ordered by
 list_id.
 
-Window arithmetic (the q48h precedent): lives in its own module —
-operators/similarity.py primitives (`_d2_e12_rows`,
-`ivf_operating_point`) are reused READ-ONLY, so staging/registration
-never touches that file's 35-entry family; MODULE_DEPS records the
-read edge so an r16 similarity.py rotation pulls this entry in.
+Lives in its own module (the q48h precedent): operators/similarity.py
+primitives (`_d2_e12_rows`, `ivf_operating_point`) are reused
+READ-ONLY.
 
 Scale design (100 TB): the fit auditor mirrors the fit's own shape —
 ONE Arrow-batched corpus assignment pass against the broadcast
@@ -52,8 +49,7 @@ from .registry import query, tables
 
 _DIM = 64
 
-# SQL twin of the e12 d² contract — q48h's restatement (importing
-# llm_queries would add a spurious MODULE_DEPS edge onto its family)
+# SQL twin of the e12 d² contract — q48h's restatement
 _D2_E12_SQL = (
     "CAST(list_sum(list_transform(range(1, len({a}) + 1), i -> "
     "CAST(round((CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE)) * "
@@ -111,6 +107,8 @@ _Q130_DESCRIPTION = (
 )
 
 
+@query("q130_lloyd_step_audit", oracle=_Q130_ORACLE,
+       description=_Q130_DESCRIPTION, tags=("llm", "governance"))
 def q130(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
@@ -211,16 +209,4 @@ def q130(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED = {
-    "q130_lloyd_step_audit": (q130, _Q130_ORACLE, _Q130_DESCRIPTION,
-                              ("llm", "governance")),
-}
-
-
-def register() -> None:
-    """r14 registration seam — see joins_ext.register for the pattern."""
-    for name, (fn, oracle, desc, tags) in STAGED.items():
-        query(name, oracle=oracle, description=desc, tags=tags)(fn)
-
-
-__all__ = ["q130", "STAGED", "register"]
+__all__ = ["q130"]

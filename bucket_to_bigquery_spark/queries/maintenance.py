@@ -1,10 +1,4 @@
-"""Staged r9 surface — q04e: warehouse compaction as a declared query
-(tools/r9_surface_plan.md candidate #1).
-
-STAGING CONTRACT: not imported by ``queries/__init__`` in r8 — nothing
-registers until round 9 calls :func:`register` (see joins_ext.py for the
-window math). Builders are pytest-verified against their DuckDB oracles
-in tests/test_staged_r9.py.
+"""q04e: warehouse compaction as a declared query.
 
 The operation: ``BatchLoader.compact`` — the small-files remediation job
 every append-per-batch warehouse needs (each batch leaves one file per
@@ -16,7 +10,7 @@ makes compaction safe to run anywhere: **content is invariant** (bit-equal
 rows before/after). The file-count reduction itself is asserted at build
 time and re-checked by pytest via the stats the build records.
 
-Scratch isolation (r9_surface_plan caution): this materialization uses
+Scratch isolation: this materialization uses
 its OWN scratch key (``q04e_compact_v2``, bumped alongside the q04
 family's audit-rebase layout change), never the shared
 ``q04_ingest_v2`` tree — compact rewrites the data directory in place,
@@ -41,8 +35,8 @@ from .registry import query, tables
 _Q04E_IMPORT_TS = "2000-01-01 00:00:00"
 
 # Manifest field spec: the q04 positional-CSV schema (ingest_queries
-# declares the same shape for the shared warehouse; restated here so the
-# staged module does not import a sibling query module).
+# declares the same shape for the shared warehouse; restated here so
+# this module does not import a sibling query module).
 _FIELDS = [
     {"name": "o_orderkey", "type": "integer"},
     {"name": "o_custkey", "type": "integer"},
@@ -143,6 +137,8 @@ _Q04E_DESCRIPTION = (
 )
 
 
+@query("q04e_compaction", oracle=_Q04E_ORACLE, description=_Q04E_DESCRIPTION,
+       tags=("ingest",))
 def q04e(spark: SparkSession, sf_dir: str) -> DataFrame:
     loader, task = _compacted_loader(spark, sf_dir)
     return (
@@ -152,15 +148,4 @@ def q04e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED = {
-    "q04e_compaction": (q04e, _Q04E_ORACLE, _Q04E_DESCRIPTION, ("ingest",)),
-}
-
-
-def register() -> None:
-    """r9 registration seam — see joins_ext.register for the window math."""
-    for name, (fn, oracle, desc, tags) in STAGED.items():
-        query(name, oracle=oracle, description=desc, tags=tags)(fn)
-
-
-__all__ = ["q04e", "compact_stats", "STAGED", "register"]
+__all__ = ["q04e", "compact_stats"]

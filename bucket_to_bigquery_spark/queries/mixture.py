@@ -1,10 +1,4 @@
-"""Staged r9 surface — q56: deterministic training-mixture sampling
-(tools/r9_surface_plan.md candidate #4).
-
-STAGING CONTRACT: not imported by ``queries/__init__`` in r8 — nothing
-registers until round 9 calls :func:`register` (see joins_ext.py for the
-window math). Builders are pytest-verified against their DuckDB oracles
-in tests/test_staged_r9.py.
+"""q56: deterministic training-mixture sampling.
 
 The operation: compose a training mixture from per-language target rates
 by DETERMINISTIC hash sampling — include a document iff
@@ -101,6 +95,8 @@ _Q56B_DESCRIPTION = (
 )
 
 
+@query("q56_mixture_sampling", oracle=_Q56_ORACLE,
+       description=_Q56_DESCRIPTION, tags=("llm",))
 def q56(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = tables(spark, sf_dir)["documents"]
     b = _bucket(F.col("doc_id"))
@@ -111,6 +107,8 @@ def q56(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("q56b_mixture_composition", oracle=_Q56B_ORACLE,
+       description=_Q56B_DESCRIPTION, tags=("llm",))
 def q56b(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = tables(spark, sf_dir)["documents"]
     sampled = (_bucket(F.col("doc_id")) < _rate(F.col("lang"))).cast("long")
@@ -125,16 +123,4 @@ def q56b(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED = {
-    "q56_mixture_sampling": (q56, _Q56_ORACLE, _Q56_DESCRIPTION, ("llm",)),
-    "q56b_mixture_composition": (q56b, _Q56B_ORACLE, _Q56B_DESCRIPTION, ("llm",)),
-}
-
-
-def register() -> None:
-    """r9 registration seam — see joins_ext.register for the window math."""
-    for name, (fn, oracle, desc, tags) in STAGED.items():
-        query(name, oracle=oracle, description=desc, tags=tags)(fn)
-
-
-__all__ = ["q56", "q56b", "MIXTURE_PERMYRIAD", "STAGED", "register"]
+__all__ = ["q56", "q56b", "MIXTURE_PERMYRIAD"]

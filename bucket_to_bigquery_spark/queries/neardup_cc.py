@@ -1,4 +1,4 @@
-"""STAGED r14+ surface (built late r13, NOT registered) — q132:
+"""q132:
 near-duplicate components — connected components over the q115
 fingerprint-cluster adjacency (hamming ≤ 3 edges between distinct
 32-bit SimHash clusters), reported per component: representative
@@ -19,7 +19,7 @@ fixpoint — the strongest oracle shape the CC family has had (q46c's
 oracle keys on exact-text groups, where components are single-hop).
 
 Reference parity: n/a — no analytics surface in the reference;
-declared engine surface (SURVEY §2.C extension when registered).
+declared engine surface (SURVEY §2.C extension).
 
 Determinism: fingerprints/banding/hamming are the q115 contract —
 the cluster frame and banded adjacency are IMPORTED builders
@@ -39,10 +39,7 @@ log-diameter pointer-jumping operator with the skew-safe
 star-contraction seam and block-released checkpoints (the r7 leak
 fix). The recursive-CTE closure is ORACLE-side only (DuckDB, test
 scale) — its worst case is Σ|component|² rows, fine at gate scale and
-irrelevant to the engine plan. Registration note (GATE_r13 rotation
-math): MODULE_DEPS chains to llm_queries via hamming, so these
-entries register with q115/q116/q117 in r16, after the r15 llm
-rotation.
+irrelevant to the engine plan.
 """
 
 from __future__ import annotations
@@ -128,6 +125,8 @@ def _labeled_clusters(cl: DataFrame) -> DataFrame:
         "sh", "rep", "sz", F.col("cluster_id").alias("c"))
 
 
+@query("q132_neardup_components", oracle=_Q132_ORACLE,
+       description=_Q132_DESCRIPTION, tags=("llm", "dedup", "graph"))
 def q132(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = tables(spark, sf_dir)["documents"]
     cl = cluster_frame(docs).cache()  # three consumers (nodes, edges,
@@ -171,6 +170,8 @@ _Q133_DESCRIPTION = (
 )
 
 
+@query("q133_neardup_apply", oracle=_Q133_ORACLE,
+       description=_Q133_DESCRIPTION, tags=("llm", "dedup", "graph"))
 def q133(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = tables(spark, sf_dir)["documents"]
     # one fold for the whole query: fp feeds the cluster aggregation
@@ -208,18 +209,4 @@ def q133(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED = {
-    "q132_neardup_components": (q132, _Q132_ORACLE, _Q132_DESCRIPTION,
-                                ("llm", "dedup", "graph")),
-    "q133_neardup_apply": (q133, _Q133_ORACLE, _Q133_DESCRIPTION,
-                           ("llm", "dedup", "graph")),
-}
-
-
-def register() -> None:
-    """r16 registration seam — see joins_ext.register for the pattern."""
-    for name, (fn, oracle, desc, tags) in STAGED.items():
-        query(name, oracle=oracle, description=desc, tags=tags)(fn)
-
-
-__all__ = ["q132", "q133", "STAGED", "register"]
+__all__ = ["q132", "q133"]

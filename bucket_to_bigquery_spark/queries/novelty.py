@@ -1,5 +1,4 @@
-"""STAGED r13 surface (built r11, NOT registered — GATE_r11.md books
-the r12 window solid) — q95: document novelty scoring — per document,
+"""q95: document novelty scoring — per document,
 the fraction of its distinct 5-gram shingles that appear in NO earlier
 document (ingest order = doc_id; any monotone timestamp works the same
 way). The curriculum / crawl-frontier primitive: a feed whose novelty
@@ -7,10 +6,9 @@ collapses is re-crawling what the corpus already has, and
 high-novelty-first ordering is the classic data-curriculum heuristic.
 
 Reference parity: n/a — no analytics surface in the reference; declared
-engine surface (SURVEY §2.C extension when registered). Shingling is
+engine surface (SURVEY §2.C extension). Shingling is
 the shared q47 contract (``operators.dedup.shingles(tokens, 5)`` /
-``llm_queries._SH5_SQL``) — MODULE_DEPS pulls this entry when either
-side changes.
+``llm_queries._SH5_SQL``).
 
 A shingle is novel FOR its first document only: novelty(d) =
 |{s ∈ shingles(d) : min_corpus_doc(s) = d}| / |shingles(d)| — so the
@@ -74,6 +72,8 @@ _Q95_DESCRIPTION = (
 )
 
 
+@query("q95_shingle_novelty", oracle=_Q95_ORACLE, description=_Q95_DESCRIPTION,
+       tags=("llm", "profiling"))
 def q95(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = tables(spark, sf_dir)["documents"]
     # r16: the documents parquet is a single row-group at test scale, so
@@ -144,16 +144,4 @@ def q95(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED = {
-    "q95_shingle_novelty": (q95, _Q95_ORACLE, _Q95_DESCRIPTION,
-                            ("llm", "profiling")),
-}
-
-
-def register() -> None:
-    """r13 registration seam — see joins_ext.register for the pattern."""
-    for name, (fn, oracle, desc, tags) in STAGED.items():
-        query(name, oracle=oracle, description=desc, tags=tags)(fn)
-
-
-__all__ = ["q95", "STAGED", "register"]
+__all__ = ["q95"]

@@ -14,8 +14,7 @@ Reference parity: n/a — no analytics surface in the reference; declared
 engine surface (SURVEY §2.C extension, registered r10). Shingling is
 the q47-family contract — ``operators.dedup.shingles(tokens, 5)`` on
 the Spark side and ``llm_queries._SH5_SQL`` in the oracle, the same
-shared definition q47d's decontamination gate keys on; MODULE_DEPS
-pulls this entry when either side changes.
+shared definition q47d's decontamination gate keys on.
 
     J(a,b) = |Sₐ ∩ S_b| / (|Sₐ| + |S_b| − |Sₐ ∩ S_b|)
 
@@ -69,11 +68,8 @@ _J_FMT = (
 _SHKEY_SQL = "CAST(('0x' || substr(md5(sh), 1, 15)) AS BIGINT)"
 
 # ONE definition of the per-source distinct-shingle pipeline (tok → raw
-# shingles → folded DISTINCT (source, key) sets → set sizes), shared by
-# q89's symmetric Jaccard and the staged q153 directional containment
-# (GATE_r13 deferred #7, hoisted in r15 — srccontain.py previously
-# copy-adapted these CTEs and the builder frame; the byte-identity pin in
-# tests/test_staged_r18.py now asserts the shared objects instead).
+# shingles → folded DISTINCT (source, key) sets → set sizes) behind
+# q89's symmetric Jaccard.
 _SRC_SHINGLE_CTES = (
     f"tok AS (SELECT source, {_TOKS_SQL} AS t FROM documents), "
     f"raw AS (SELECT source, unnest({_SH5_SQL}) AS sh FROM tok), "

@@ -1,12 +1,11 @@
-"""STAGED r12 surface (built r10, NOT registered — rides r12's free
-slots per GATE_r10.md's round-11/12 plan) — q92: top event paths —
+"""q92: top event paths —
 the 10 most frequent length-3 event-type sequences across per-user
 streams (the path-mining primitive behind "how do users actually reach
 purchase"; q85's transition matrix is the order-1 summary, this is the
 order-2 evidence it compresses).
 
 Reference parity: n/a — no analytics surface in the reference; declared
-engine surface (SURVEY §2.C extension when registered).
+engine surface (SURVEY §2.C extension).
 
 A path is three CONSECUTIVE events of one user under the total order
 (ts, event_id) — never crossing users. Counts are exact; the top-10
@@ -17,7 +16,7 @@ Scale design (100 TB): one user_id hash exchange for the two lead
 windows (O(1) running state each), one map-side-combined aggregation
 to the |types|³-bounded path-count frame, and TakeOrdered for the
 top-10 (partial top-k per partition, never a global sort —
-plan-pinned when registered). The event stream never re-partitions
+plan-pinned). The event stream never re-partitions
 after the user exchange.
 """
 
@@ -50,6 +49,8 @@ _Q92_DESCRIPTION = (
 )
 
 
+@query("q92_top_event_paths", oracle=_Q92_ORACLE, description=_Q92_DESCRIPTION,
+       tags=("events", "analytics"))
 def q92(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = tables(spark, sf_dir)["events"]
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -67,16 +68,4 @@ def q92(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED = {
-    "q92_top_event_paths": (q92, _Q92_ORACLE, _Q92_DESCRIPTION,
-                            ("events", "analytics")),
-}
-
-
-def register() -> None:
-    """r12 registration seam — see joins_ext.register for the pattern."""
-    for name, (fn, oracle, desc, tags) in STAGED.items():
-        query(name, oracle=oracle, description=desc, tags=tags)(fn)
-
-
-__all__ = ["q92", "STAGED", "register"]
+__all__ = ["q92"]

@@ -1,13 +1,11 @@
-"""STAGED r12 surface (built r10, NOT registered — see GATE_r10.md's
-round-11/12 plan: r11's window is booked solid by the scratch.py
-rotation, r12 has ~12 free slots) — q90: point-in-time dimension
+"""q90: point-in-time dimension
 enrichment — join each fact row to the dimension VERSION in effect at
 the fact's timestamp (the feature-store "PIT join": label events must
 see the feature value as of event time, never a later one — the
 temporal-correctness primitive of every training-data join).
 
 Reference parity: n/a — no analytics surface in the reference; declared
-engine surface (SURVEY §2.C extension when registered).
+engine surface (SURVEY §2.C extension).
 
 Shape: facts = ``purchase`` events; the versioned dimension = each
 user's ``signup`` events (version k = the k-th signup, carrying its
@@ -85,6 +83,8 @@ _Q90_DESCRIPTION = (
 )
 
 
+@query("q90_pit_enrichment", oracle=_Q90_ORACLE, description=_Q90_DESCRIPTION,
+       tags=("events", "analytics"))
 def q90(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = tables(spark, sf_dir)["events"]
     dim = ev.where(F.col("event_type") == _DIM).select(
@@ -129,16 +129,4 @@ def q90(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED = {
-    "q90_pit_enrichment": (q90, _Q90_ORACLE, _Q90_DESCRIPTION,
-                           ("events", "analytics")),
-}
-
-
-def register() -> None:
-    """r12 registration seam — see joins_ext.register for the pattern."""
-    for name, (fn, oracle, desc, tags) in STAGED.items():
-        query(name, oracle=oracle, description=desc, tags=tags)(fn)
-
-
-__all__ = ["q90", "STAGED", "register"]
+__all__ = ["q90"]

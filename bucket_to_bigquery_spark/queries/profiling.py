@@ -1,5 +1,4 @@
-"""STAGED r14 surface (built r13, NOT registered — GATE_r13.md's
-round-14 plan budgets the slot) — q113: single-pass column profile of
+"""q113: single-pass column profile of
 the ``orders`` table: per column, the null count, exact distinct
 count, and canonical min/max renderings. The data-engineering
 "describe this table I've never seen" primitive a warehouse engine is
@@ -7,7 +6,7 @@ expected to ship; also the input to schema-drift monitoring (A11's
 float-suffix expansion decides FROM a profile like this).
 
 Reference parity: n/a — no analytics surface in the reference;
-declared engine surface (SURVEY §2.C extension when registered).
+declared engine surface (SURVEY §2.C extension).
 
 Determinism: min/max render through one canonical per-type formatter
 replicated in both engines — BIGINTs via plain decimal text, DOUBLEs
@@ -95,6 +94,8 @@ def _spark_render(agg, col: str, typ: str):
     return c
 
 
+@query("q113_column_profile", oracle=_q113_oracle(),
+       description=_Q113_DESCRIPTION, tags=("profiling",))
 def q113(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = tables(spark, sf_dir)["orders"]
     aggs = []
@@ -123,16 +124,4 @@ def q113(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED = {
-    "q113_column_profile": (q113, _q113_oracle(), _Q113_DESCRIPTION,
-                            ("profiling",)),
-}
-
-
-def register() -> None:
-    """r14 registration seam — see joins_ext.register for the pattern."""
-    for name, (fn, oracle, desc, tags) in STAGED.items():
-        query(name, oracle=oracle, description=desc, tags=tags)(fn)
-
-
-__all__ = ["q113", "STAGED", "register"]
+__all__ = ["q113"]

@@ -1,10 +1,5 @@
-"""Staged r10 surface — q62: Johnson–Lindenstrauss sign projection of the
-embedding column (tools/r10_surface_plan.md candidate #6).
-
-STAGING CONTRACT: not imported by ``queries/__init__`` in r9 — nothing
-registers until a later round calls :func:`register` (see joins_ext.py
-for the pattern). Builders are pytest-verified against their DuckDB
-oracles in tests/test_staged_r10.py.
+"""q62: Johnson–Lindenstrauss sign projection of the
+embedding column.
 
 The operation: project 64-dim embeddings to 16 dims with a Rademacher
 (±1) matrix — the standard cheap dimensionality reduction run BEFORE
@@ -130,20 +125,11 @@ def jl_project(
     return feats.mapInPandas(project, "vec_id long, proj string")
 
 
+@query("q62_jl_sign_projection", oracle=_Q62_ORACLE,
+       description=_Q62_DESCRIPTION, tags=("llm",))
 def q62(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = tables(spark, sf_dir)["embeddings"]
     return jl_project(emb).orderBy("vec_id")
 
 
-STAGED = {
-    "q62_jl_sign_projection": (q62, _Q62_ORACLE, _Q62_DESCRIPTION, ("llm",)),
-}
-
-
-def register() -> None:
-    """r10 registration seam — see joins_ext.register for the pattern."""
-    for name, (fn, oracle, desc, tags) in STAGED.items():
-        query(name, oracle=oracle, description=desc, tags=tags)(fn)
-
-
-__all__ = ["jl_project", "q62", "STAGED", "register"]
+__all__ = ["jl_project", "q62"]

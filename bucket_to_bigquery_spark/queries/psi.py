@@ -1,11 +1,10 @@
-"""STAGED r13 surface (built r11, NOT registered — GATE_r11.md books
-the r12 window solid) — q96: population-stability-index drift between
+"""q96: population-stability-index drift between
 two snapshots of a numeric column (the standard tabular drift monitor:
 PSI < 0.1 stable, 0.1–0.25 moderate shift, > 0.25 investigate — run on
 every feature between training snapshot and serving traffic).
 
 Reference parity: n/a — no analytics surface in the reference; declared
-engine surface (SURVEY §2.C extension when registered). Complements q83
+engine surface (SURVEY §2.C extension). Complements q83
 (JSD over text unigrams) and q58 (row-level snapshot diff): PSI is the
 per-numeric-column DISTRIBUTION diff.
 
@@ -99,6 +98,8 @@ _Q96_DESCRIPTION = (
 )
 
 
+@query("q96_psi_drift", oracle=_Q96_ORACLE, description=_Q96_DESCRIPTION,
+       tags=("quality", "profiling"))
 def q96(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = tables(spark, sf_dir)["orders"]
     ref = orders.where(F.expr("o_orderkey % 2 = 0")).select(
@@ -145,16 +146,4 @@ def q96(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED = {
-    "q96_psi_drift": (q96, _Q96_ORACLE, _Q96_DESCRIPTION,
-                      ("quality", "profiling")),
-}
-
-
-def register() -> None:
-    """r13 registration seam — see joins_ext.register for the pattern."""
-    for name, (fn, oracle, desc, tags) in STAGED.items():
-        query(name, oracle=oracle, description=desc, tags=tags)(fn)
-
-
-__all__ = ["q96", "STAGED", "register"]
+__all__ = ["q96"]

@@ -14,6 +14,7 @@ Determinism discipline (SURVEY §2.C preamble / §7 hard part 4):
 
 from __future__ import annotations
 
+import re
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -35,10 +36,19 @@ class Query:
 
 REGISTRY: dict[str, Query] = {}
 
+# bench.py and perfbench key entries by the ``q<NN>[variant]`` prefix
+_NAME_RE = re.compile(r"^q\d+[a-z]?_")
+
 
 def query(name: str, oracle: str | None = None, description: str = "",
           tags: tuple[str, ...] = ()):  # noqa: D401
-    """Decorator registering a (spark, sf_dir) -> DataFrame builder."""
+    """Decorator registering a (spark, sf_dir) -> DataFrame builder.
+
+    ``name`` must match ``q<digits>[variant]_...``; anything else raises
+    ``ValueError`` at registration.
+    """
+    if not _NAME_RE.match(name):
+        raise ValueError(f"registry name {name!r} does not match q<NN>[v]_*")
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         wrapped = _with_tuning(fn)

@@ -7,8 +7,7 @@ recall checks all reduce to "rank the corpus for these terms").
 Reference parity: n/a — the reference has no text surface; declared
 engine surface (SURVEY §2.C extension, registered r10). Tokenization is
 the ONE shared definition: ``operators.dedup.tokens`` on the Spark side
-and ``llm_queries._TOKS_SQL`` in the oracle (the q46/q49/q67 contract —
-a change to either must pull this entry in-window via MODULE_DEPS).
+and ``llm_queries._TOKS_SQL`` in the oracle (the q46/q49/q67 contract).
 
 BM25 (k1=1.2, b=0.75, the Robertson/Sparck-Jones idf with +1 flooring):
 

@@ -1,5 +1,4 @@
-"""STAGED r13 surface (built r11, NOT registered — GATE_r11.md books
-the r12 window solid) — q97: directed association rules over user
+"""q97: directed association rules over user
 behavior — for every ordered pair of event types (a → b), the support,
 confidence P(b|a), and lift across user baskets (the recommendation /
 behavioral-cohort primitive; q76 mines undirected item pairs on the
@@ -7,7 +6,7 @@ order stream — this is the DIRECTED rule readout with per-rule
 conditional probability, on the event stream).
 
 Reference parity: n/a — no analytics surface in the reference; declared
-engine surface (SURVEY §2.C extension when registered).
+engine surface (SURVEY §2.C extension).
 
 Baskets are users; items the DISTINCT event types a user ever fired.
 Rules below an absolute pair-support floor are dropped. NULL-user
@@ -76,6 +75,8 @@ _Q97_DESCRIPTION = (
 )
 
 
+@query("q97_association_rules", oracle=_Q97_ORACLE,
+       description=_Q97_DESCRIPTION, tags=("events", "analytics"))
 def q97(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = tables(spark, sf_dir)["events"]
     items = (
@@ -119,16 +120,4 @@ def q97(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED = {
-    "q97_association_rules": (q97, _Q97_ORACLE, _Q97_DESCRIPTION,
-                              ("events", "analytics")),
-}
-
-
-def register() -> None:
-    """r13 registration seam — see joins_ext.register for the pattern."""
-    for name, (fn, oracle, desc, tags) in STAGED.items():
-        query(name, oracle=oracle, description=desc, tags=tags)(fn)
-
-
-__all__ = ["q97", "STAGED", "register"]
+__all__ = ["q97"]

@@ -1,10 +1,5 @@
-"""Staged r10 surface — q59: weighted sampling without replacement via
-deterministic exponential keys (tools/r10_surface_plan.md candidate #3).
-
-STAGING CONTRACT: not imported by ``queries/__init__`` in r9 — nothing
-registers until a later round calls :func:`register` (see joins_ext.py
-for the pattern). Builders are pytest-verified against their DuckDB
-oracles in tests/test_staged_r10.py.
+"""q59: weighted sampling without replacement via
+deterministic exponential keys.
 
 The operation: draw the top-k WEIGHTED sample per language stratum —
 the Efraimidis–Spirakis 'A-ES' scheme: each row gets key = −ln(u)/w
@@ -107,6 +102,8 @@ def _keyed(docs: DataFrame) -> DataFrame:
     )
 
 
+@query("q59_weighted_sample", oracle=_Q59_ORACLE, description=_Q59_DESCRIPTION,
+       tags=("llm",))
 def q59(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed = _keyed(tables(spark, sf_dir)["documents"])
     w1 = Window.partitionBy("lang", "salt").orderBy(
@@ -129,15 +126,4 @@ def q59(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED = {
-    "q59_weighted_sample": (q59, _Q59_ORACLE, _Q59_DESCRIPTION, ("llm",)),
-}
-
-
-def register() -> None:
-    """r10 registration seam — see joins_ext.register for the pattern."""
-    for name, (fn, oracle, desc, tags) in STAGED.items():
-        query(name, oracle=oracle, description=desc, tags=tags)(fn)
-
-
-__all__ = ["q59", "STAGED", "register"]
+__all__ = ["q59"]

@@ -1,15 +1,13 @@
-"""STAGED r13 surface (built r11, NOT registered — GATE_r11.md books
-the r12 window solid) — q102: per-source quality scorecard — the
+"""q102: per-source quality scorecard — the
 one-table ingest-governance readout a corpus owner checks before
 admitting a source into a training mix: volume, exact-duplicate load
 (the q46 normalize contract), length profile, and language
 concentration, one row per source.
 
 Reference parity: n/a — no analytics surface in the reference; declared
-engine surface (SURVEY §2.C extension when registered). Normalization
+engine surface (SURVEY §2.C extension). Normalization
 is the q46-family contract (``operators.dedup.normalize_text`` /
-``llm_queries._NORM_SQL``) — MODULE_DEPS pulls this entry when either
-side changes.
+``llm_queries._NORM_SQL``).
 
 Columns: n_docs; n_distinct_texts (distinct normalized text);
 dup_excess = n_docs − n_distinct_texts (copies beyond each group's
@@ -72,6 +70,8 @@ _Q102_DESCRIPTION = (
 )
 
 
+@query("q102_source_scorecard", oracle=_Q102_ORACLE,
+       description=_Q102_DESCRIPTION, tags=("llm", "governance"))
 def q102(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = tables(spark, sf_dir)["documents"]
     # r17 (guide §5, the q89/q95 cache lesson): the corpus-sized cache
@@ -119,16 +119,4 @@ def q102(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED = {
-    "q102_source_scorecard": (q102, _Q102_ORACLE, _Q102_DESCRIPTION,
-                              ("llm", "governance")),
-}
-
-
-def register() -> None:
-    """r13 registration seam — see joins_ext.register for the pattern."""
-    for name, (fn, oracle, desc, tags) in STAGED.items():
-        query(name, oracle=oracle, description=desc, tags=tags)(fn)
-
-
-__all__ = ["q102", "STAGED", "register"]
+__all__ = ["q102"]

@@ -1,5 +1,4 @@
-"""STAGED r14 surface (built late r13, NOT registered — GATE_r13.md's
-round-14 plan budgets the slot) — q128: hourly seasonality profile of
+"""q128: hourly seasonality profile of
 the event stream — events per (day-of-week, hour-of-day) cell with
 each hour's share of its weekday, plus a per-weekday chi-square
 statistic against the uniform-over-24-hours null. The capacity-
@@ -8,7 +7,7 @@ curve; a weekday whose chi-square collapses toward 0 is machine
 traffic) and the input a trigger-scheduling policy reads.
 
 Reference parity: n/a — no analytics surface in the reference;
-declared engine surface (SURVEY §2.C extension when registered).
+declared engine surface (SURVEY §2.C extension).
 
 Determinism: weekday and hour are PURE INTEGER arithmetic on
 unix_micros (dow = (epoch_day + 3) mod 7, 0 = Monday — 1970-01-01 was
@@ -74,6 +73,8 @@ _Q128_DESCRIPTION = (
 )
 
 
+@query("q128_hourly_seasonality", oracle=_Q128_ORACLE,
+       description=_Q128_DESCRIPTION, tags=("events", "profiling"))
 def q128(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = tables(spark, sf_dir)["events"]
     cell = (
@@ -124,16 +125,4 @@ def q128(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED = {
-    "q128_hourly_seasonality": (q128, _Q128_ORACLE, _Q128_DESCRIPTION,
-                                ("events", "profiling")),
-}
-
-
-def register() -> None:
-    """r14 registration seam — see joins_ext.register for the pattern."""
-    for name, (fn, oracle, desc, tags) in STAGED.items():
-        query(name, oracle=oracle, description=desc, tags=tags)(fn)
-
-
-__all__ = ["q128", "STAGED", "register"]
+__all__ = ["q128"]

@@ -1,5 +1,4 @@
-"""STAGED r13 surface (built r11, NOT registered — GATE_r11.md books
-the r12 window solid) — q100: embedding class-separation audit — per
+"""q100: embedding class-separation audit — per
 label: within-class scatter (mean squared distance to the class
 centroid), between-class scatter (squared distance from the class
 centroid to the global centroid) and their Fisher-style ratio (the
@@ -8,7 +7,7 @@ in this embedding space — read it before training a probe, after every
 encoder swap, and on each mixture re-balance).
 
 Reference parity: n/a — no analytics surface in the reference; declared
-engine surface (SURVEY §2.C extension when registered). Components use
+engine surface (SURVEY §2.C extension). Components use
 the q69/q62 scaled-int contract (``round(x·1e6)`` BIGINTs).
 
 Exactness: the within-scatter reduces to EXACT integer sums — per-label
@@ -108,6 +107,8 @@ _Q100_DESCRIPTION = (
 )
 
 
+@query("q100_class_separation", oracle=_Q100_ORACLE,
+       description=_Q100_DESCRIPTION, tags=("llm",))
 def q100(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = tables(spark, sf_dir)["embeddings"]
     scaled = emb.select(
@@ -166,16 +167,4 @@ def q100(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("label")
 
 
-STAGED = {
-    "q100_class_separation": (q100, _Q100_ORACLE, _Q100_DESCRIPTION,
-                              ("llm",)),
-}
-
-
-def register() -> None:
-    """r13 registration seam — see joins_ext.register for the pattern."""
-    for name, (fn, oracle, desc, tags) in STAGED.items():
-        query(name, oracle=oracle, description=desc, tags=tags)(fn)
-
-
-__all__ = ["q100", "STAGED", "register"]
+__all__ = ["q100"]

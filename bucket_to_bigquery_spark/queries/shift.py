@@ -7,8 +7,7 @@ before mixing, after every backfill, and between snapshot versions).
 Reference parity: n/a — no analytics surface in the reference; declared
 engine surface (SURVEY §2.C extension, registered r10). Tokenization is
 the shared q46-family contract (``operators.dedup.tokens`` /
-``llm_queries._TOKS_SQL``) — MODULE_DEPS pulls this entry when either
-side changes.
+``llm_queries._TOKS_SQL``).
 
     JSD(p‖q) = ½ Σ_t p(t)·ln(p(t)/m(t)) + ½ Σ_t q(t)·ln(q(t)/m(t)),
     m = (p+q)/2;  p = source unigram dist, q = corpus dist.

@@ -1,5 +1,4 @@
-"""STAGED r12 surface (built r10, NOT registered — rides r12's free
-slots per GATE_r10.md's round-11/12 plan) — q89b: MinHash-estimated
+"""q89b: MinHash-estimated
 source content overlap — the ESCALATION PATH q89's design note
 promises: when exact pairwise shingle overlap gets hot (shared-
 vocabulary corpora make the per-shingle pair fan-out approach
@@ -10,7 +9,7 @@ size. The q48/q65 exact-vs-sketch pairing applied to set overlap: q89
 stays the exact gate, this is the scale instrument.
 
 Reference parity: n/a — no analytics surface in the reference; declared
-engine surface (SURVEY §2.C extension when registered). Shingling is
+engine surface (SURVEY §2.C extension). Shingling is
 the q47-family contract (``shingles(tokens, 5)`` / ``_SH5_SQL``).
 
     h_i(sh) = ((2i+1)·b₁ + (i+3)·b₂ + (i+1)·1000003) mod p,
@@ -104,6 +103,8 @@ _Q89B_DESCRIPTION = (
 )
 
 
+@query("q89b_source_overlap_minhash", oracle=_Q89B_ORACLE,
+       description=_Q89B_DESCRIPTION, tags=("llm", "governance"))
 def q89b(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = tables(spark, sf_dir)["documents"]
     # shingles explode straight into the aggregate: min is idempotent,
@@ -172,16 +173,4 @@ def q89b(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("source_a", "source_b")
 
 
-STAGED = {
-    "q89b_source_overlap_minhash": (q89b, _Q89B_ORACLE, _Q89B_DESCRIPTION,
-                                    ("llm", "governance")),
-}
-
-
-def register() -> None:
-    """r12 registration seam — see joins_ext.register for the pattern."""
-    for name, (fn, oracle, desc, tags) in STAGED.items():
-        query(name, oracle=oracle, description=desc, tags=tags)(fn)
-
-
-__all__ = ["q89b", "STAGED", "register"]
+__all__ = ["q89b"]

@@ -1,10 +1,4 @@
-"""Staged r9 surface — q49n: count-min-sketch heavy hitters
-(tools/r9_surface_plan.md candidate #5).
-
-STAGING CONTRACT: not imported by ``queries/__init__`` in r8 — nothing
-registers until round 9 calls :func:`register` (see joins_ext.py for the
-window math). Builders are pytest-verified against their DuckDB oracles
-in tests/test_staged_r9.py.
+"""q49n: count-min-sketch heavy hitters.
 
 The operation: a d×w count-min sketch over the corpus token stream — the
 "novel sketch as a composition of built-ins" path (brief option (a)):
@@ -83,6 +77,39 @@ def _cms_grid(stream: DataFrame) -> DataFrame:
     )
 
 
+_TOKS_SQL = "string_split(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), ' ')"
+_CELL_SQL = (
+    f"CAST(('0x' || substr(md5(term), r * 8 + 1, 7)) AS BIGINT) % {CMS_WIDTH}"
+)
+
+_Q49N_ORACLE = (
+    f"WITH tok AS (SELECT doc_id, unnest({_TOKS_SQL}) AS term FROM documents), "
+    "stream AS (SELECT doc_id, term FROM tok WHERE term <> ''), "
+    f"rows_ AS (SELECT unnest(range(0, {CMS_DEPTH})) AS r), "
+    f"grid AS (SELECT r, {_CELL_SQL} AS c, COUNT(*) AS cnt "
+    "FROM stream CROSS JOIN rows_ GROUP BY 1, 2), "
+    f"cand AS (SELECT DISTINCT term FROM stream WHERE doc_id % {_CAND_MOD} = 7), "
+    f"cand_cells AS (SELECT term, r, {_CELL_SQL} AS c FROM cand CROSS JOIN rows_), "
+    "est AS (SELECT term, MIN(cnt) AS est_count "
+    "FROM cand_cells JOIN grid USING (r, c) GROUP BY term), "
+    "exact AS (SELECT term, COUNT(*) AS exact_count FROM stream "
+    "WHERE term IN (SELECT term FROM cand) GROUP BY term) "
+    "SELECT est.term, est_count, exact_count FROM est JOIN exact USING (term) "
+    f"ORDER BY est_count DESC, term LIMIT {_TOP_K}"
+)
+
+_Q49N_DESCRIPTION = (
+    "Q49n: count-min-sketch heavy hitters — a deterministic d=4 × w=16384 "
+    "CMS over the corpus token stream (md5-windowed row hashes, no RNG), "
+    "built with one bounded-key aggregation and broadcast to estimate "
+    "candidate-term frequencies; top-20 by estimate with the exact count "
+    "as the audit column (est ≥ exact always; equality whenever the term's "
+    "4 cells are collision-free)."
+)
+
+
+@query("q49n_heavy_hitters_cms", oracle=_Q49N_ORACLE,
+       description=_Q49N_DESCRIPTION, tags=("llm",))
 def q49n(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _token_stream(spark, sf_dir)
     grid = _cms_grid(stream)
@@ -123,47 +150,4 @@ def q49n(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TOKS_SQL = "string_split(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), ' ')"
-_CELL_SQL = (
-    f"CAST(('0x' || substr(md5(term), r * 8 + 1, 7)) AS BIGINT) % {CMS_WIDTH}"
-)
-
-_Q49N_ORACLE = (
-    f"WITH tok AS (SELECT doc_id, unnest({_TOKS_SQL}) AS term FROM documents), "
-    "stream AS (SELECT doc_id, term FROM tok WHERE term <> ''), "
-    f"rows_ AS (SELECT unnest(range(0, {CMS_DEPTH})) AS r), "
-    f"grid AS (SELECT r, {_CELL_SQL} AS c, COUNT(*) AS cnt "
-    "FROM stream CROSS JOIN rows_ GROUP BY 1, 2), "
-    f"cand AS (SELECT DISTINCT term FROM stream WHERE doc_id % {_CAND_MOD} = 7), "
-    f"cand_cells AS (SELECT term, r, {_CELL_SQL} AS c FROM cand CROSS JOIN rows_), "
-    "est AS (SELECT term, MIN(cnt) AS est_count "
-    "FROM cand_cells JOIN grid USING (r, c) GROUP BY term), "
-    "exact AS (SELECT term, COUNT(*) AS exact_count FROM stream "
-    "WHERE term IN (SELECT term FROM cand) GROUP BY term) "
-    "SELECT est.term, est_count, exact_count FROM est JOIN exact USING (term) "
-    f"ORDER BY est_count DESC, term LIMIT {_TOP_K}"
-)
-
-_Q49N_DESCRIPTION = (
-    "Q49n: count-min-sketch heavy hitters — a deterministic d=4 × w=16384 "
-    "CMS over the corpus token stream (md5-windowed row hashes, no RNG), "
-    "built with one bounded-key aggregation and broadcast to estimate "
-    "candidate-term frequencies; top-20 by estimate with the exact count "
-    "as the audit column (est ≥ exact always; equality whenever the term's "
-    "4 cells are collision-free)."
-)
-
-STAGED = {
-    "q49n_heavy_hitters_cms": (q49n, _Q49N_ORACLE, _Q49N_DESCRIPTION, ("llm",)),
-}
-
-
-def register() -> None:
-    """r9 registration seam — see joins_ext.register for the window math."""
-    for name, (fn, oracle, desc, tags) in STAGED.items():
-        query(name, oracle=oracle, description=desc, tags=tags)(fn)
-
-
-__all__ = [
-    "q49n", "CMS_DEPTH", "CMS_WIDTH", "STAGED", "register",
-]
+__all__ = ["q49n", "CMS_DEPTH", "CMS_WIDTH"]

@@ -1,10 +1,5 @@
-"""Staged r10 surface — q58: snapshot diff / change-data-capture between
-two corpus versions (tools/r10_surface_plan.md candidate #2).
-
-STAGING CONTRACT: not imported by ``queries/__init__`` in r9 — nothing
-registers until a later round calls :func:`register` (see joins_ext.py
-for the pattern). Builders are pytest-verified against their DuckDB
-oracles in tests/test_staged_r10.py.
+"""q58: snapshot diff / change-data-capture between
+two corpus versions.
 
 The operation: given two snapshots of a keyed corpus, emit the change
 set — ``added`` / ``removed`` / ``changed`` rows with content
@@ -88,6 +83,8 @@ def _new_snapshot(docs: DataFrame) -> DataFrame:
     return kept.unionAll(inserted)
 
 
+@query("q58_snapshot_diff", oracle=_Q58_ORACLE, description=_Q58_DESCRIPTION,
+       tags=("ingest",))
 def q58(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = tables(spark, sf_dir)["documents"]
     old_fp = docs.select("doc_id", F.md5("text").alias("fp"))
@@ -113,15 +110,4 @@ def q58(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED = {
-    "q58_snapshot_diff": (q58, _Q58_ORACLE, _Q58_DESCRIPTION, ("ingest",)),
-}
-
-
-def register() -> None:
-    """r10 registration seam — see joins_ext.register for the pattern."""
-    for name, (fn, oracle, desc, tags) in STAGED.items():
-        query(name, oracle=oracle, description=desc, tags=tags)(fn)
-
-
-__all__ = ["q58", "STAGED", "register"]
+__all__ = ["q58"]

@@ -1,5 +1,4 @@
-"""STAGED r14 surface (built r13, NOT registered — GATE_r13.md's
-round-14 plan budgets the slot) — q114: temperature-scaled source
+"""q114: temperature-scaled source
 sampling weights, the multilingual/multi-source LM training-mixture
 primitive: raw source proportions p_s (by character mass, the token
 proxy the corpus carries) are flattened to w_s = p_s^α / Σ p_t^α with
@@ -9,7 +8,7 @@ source: docs, char mass, raw share, flattened weight, and the
 effective upsampling factor w/p.
 
 Reference parity: n/a — no analytics surface in the reference;
-declared engine surface (SURVEY §2.C extension when registered).
+declared engine surface (SURVEY §2.C extension).
 
 Determinism (the q98/q105 transcendental contract): p_s is one
 identical-operand-order double over exact BIGINT char sums; the
@@ -66,6 +65,8 @@ _Q114_DESCRIPTION = (
 )
 
 
+@query("q114_alpha_sampling", oracle=_Q114_ORACLE,
+       description=_Q114_DESCRIPTION, tags=("llm", "mixture"))
 def q114(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = tables(spark, sf_dir)["documents"]
     s = docs.groupBy("source").agg(
@@ -101,16 +102,4 @@ def q114(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED = {
-    "q114_alpha_sampling": (q114, _Q114_ORACLE, _Q114_DESCRIPTION,
-                            ("llm", "mixture")),
-}
-
-
-def register() -> None:
-    """r14 registration seam — see joins_ext.register for the pattern."""
-    for name, (fn, oracle, desc, tags) in STAGED.items():
-        query(name, oracle=oracle, description=desc, tags=tags)(fn)
-
-
-__all__ = ["q114", "STAGED", "register"]
+__all__ = ["q114"]

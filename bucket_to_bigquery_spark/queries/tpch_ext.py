@@ -1,5 +1,4 @@
-"""STAGED r14 surface (built r13, NOT registered — GATE_r13.md's
-round-14 plan budgets the slots) — the classic TPC-H decision-support
+"""the classic TPC-H decision-support
 shapes the relational family doesn't cover yet: q109 local-supplier
 volume (Q5 shape), q110 returned-item customer report (Q10 shape),
 q111 promo revenue share by month (Q14 shape), q112 nation market
@@ -7,7 +6,7 @@ share within a region by year (Q8 shape). All four on the driver's
 TPC-H-ish tables (TESTDATA.md) with the repo's exact-sum contracts.
 
 Reference parity: n/a — no analytics surface in the reference; declared
-engine surface (SURVEY §2.C extension when registered). The shapes are
+engine surface (SURVEY §2.C extension). The shapes are
 the public TPC-H specification's, re-expressed over the testdata
 schema (no spec text or generator code is used).
 
@@ -76,6 +75,8 @@ _Q109_DESCRIPTION = (
 )
 
 
+@query("q109_tpch_q5_shape", oracle=_Q109_ORACLE,
+       description=_Q109_DESCRIPTION, tags=("relational", "tpch"))
 def q109(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = tables(spark, sf_dir)
     orders = t["orders"].where(
@@ -125,6 +126,8 @@ _Q110_DESCRIPTION = (
 )
 
 
+@query("q110_tpch_q10_shape", oracle=_Q110_ORACLE,
+       description=_Q110_DESCRIPTION, tags=("relational", "tpch"))
 def q110(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = tables(spark, sf_dir)
     orders = t["orders"].where(
@@ -174,6 +177,8 @@ _Q111_DESCRIPTION = (
 )
 
 
+@query("q111_promo_share", oracle=_Q111_ORACLE, description=_Q111_DESCRIPTION,
+       tags=("relational", "tpch"))
 def q111(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = tables(spark, sf_dir)
     orders = t["orders"].where(
@@ -237,6 +242,8 @@ _Q112_DESCRIPTION = (
 )
 
 
+@query("q112_market_share", oracle=_Q112_ORACLE, description=_Q112_DESCRIPTION,
+       tags=("relational", "tpch"))
 def q112(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = tables(spark, sf_dir)
     n1 = t["nation"].alias("n1")
@@ -276,22 +283,4 @@ def q112(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED = {
-    "q109_tpch_q5_shape": (q109, _Q109_ORACLE, _Q109_DESCRIPTION,
-                           ("relational", "tpch")),
-    "q110_tpch_q10_shape": (q110, _Q110_ORACLE, _Q110_DESCRIPTION,
-                            ("relational", "tpch")),
-    "q111_promo_share": (q111, _Q111_ORACLE, _Q111_DESCRIPTION,
-                         ("relational", "tpch")),
-    "q112_market_share": (q112, _Q112_ORACLE, _Q112_DESCRIPTION,
-                          ("relational", "tpch")),
-}
-
-
-def register() -> None:
-    """r14 registration seam — see joins_ext.register for the pattern."""
-    for name, (fn, oracle, desc, tags) in STAGED.items():
-        query(name, oracle=oracle, description=desc, tags=tags)(fn)
-
-
-__all__ = ["q109", "q110", "q111", "q112", "STAGED", "register"]
+__all__ = ["q109", "q110", "q111", "q112"]

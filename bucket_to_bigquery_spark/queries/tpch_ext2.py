@@ -1,5 +1,4 @@
-"""STAGED r14 surface (built late r13, NOT registered — GATE_r13.md's
-round-14 plan budgets the slots) — the second TPC-H batch: the
+"""the second TPC-H batch: the
 decision-support shapes whose POINT is subquery/semi-join machinery
 rather than plain star joins. q119 priority-lateness count (Q4 shape:
 EXISTS semi-join against a correlated predicate), q120 nation-pair
@@ -24,7 +23,7 @@ specification's, re-expressed over the testdata schema (no spec text
 or generator code is used).
 
 Reference parity: n/a — no analytics surface in the reference;
-declared engine surface (SURVEY §2.C extension when registered).
+declared engine surface (SURVEY §2.C extension).
 
 Determinism: every DOUBLE revenue/balance/quantity sum goes through
 the dsum/dsum_sql DECIMAL(30,6) contract; every average is the exact
@@ -82,6 +81,8 @@ _Q119_DESCRIPTION = (
 )
 
 
+@query("q119_tpch_q4_shape", oracle=_Q119_ORACLE,
+       description=_Q119_DESCRIPTION, tags=("relational", "tpch"))
 def q119(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = tables(spark, sf_dir)
     orders = t["orders"].where(
@@ -134,6 +135,8 @@ _Q120_DESCRIPTION = (
 )
 
 
+@query("q120_tpch_q7_shape", oracle=_Q120_ORACLE,
+       description=_Q120_DESCRIPTION, tags=("relational", "tpch"))
 def q120(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = tables(spark, sf_dir)
     pair = t["nation"].where(F.col("n_name").isin(_NAT_A, _NAT_B))
@@ -181,6 +184,8 @@ _Q121_DESCRIPTION = (
 )
 
 
+@query("q121_tpch_q13_shape", oracle=_Q121_ORACLE,
+       description=_Q121_DESCRIPTION, tags=("relational", "tpch"))
 def q121(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = tables(spark, sf_dir)
     oc = (
@@ -232,6 +237,8 @@ _Q122_DESCRIPTION = (
 )
 
 
+@query("q122_tpch_q17_shape", oracle=_Q122_ORACLE,
+       description=_Q122_DESCRIPTION, tags=("relational", "tpch"))
 def q122(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = tables(spark, sf_dir)
     bp = t["part"].where(F.col("p_brand") == _BRAND).select("p_partkey")
@@ -287,6 +294,8 @@ _Q123_DESCRIPTION = (
 )
 
 
+@query("q123_tpch_q18_shape", oracle=_Q123_ORACLE,
+       description=_Q123_DESCRIPTION, tags=("relational", "tpch"))
 def q123(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = tables(spark, sf_dir)
     qty_dec = F.sum(F.col("l_quantity").cast(_DEC))
@@ -344,6 +353,8 @@ _Q124_DESCRIPTION = (
 )
 
 
+@query("q124_tpch_q19_shape", oracle=_Q124_ORACLE,
+       description=_Q124_DESCRIPTION, tags=("relational", "tpch"))
 def q124(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = tables(spark, sf_dir)
     pred = None
@@ -394,6 +405,8 @@ _Q125_DESCRIPTION = (
 )
 
 
+@query("q125_tpch_q15_shape", oracle=_Q125_ORACLE,
+       description=_Q125_DESCRIPTION, tags=("relational", "tpch"))
 def q125(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = tables(spark, sf_dir)
     sr = (
@@ -453,6 +466,8 @@ _Q126_DESCRIPTION = (
 )
 
 
+@query("q126_tpch_q22_shape", oracle=_Q126_ORACLE,
+       description=_Q126_DESCRIPTION, tags=("relational", "tpch"))
 def q126(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = tables(spark, sf_dir)
     m = (
@@ -476,31 +491,4 @@ def q126(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED = {
-    "q119_tpch_q4_shape": (q119, _Q119_ORACLE, _Q119_DESCRIPTION,
-                           ("relational", "tpch")),
-    "q120_tpch_q7_shape": (q120, _Q120_ORACLE, _Q120_DESCRIPTION,
-                           ("relational", "tpch")),
-    "q121_tpch_q13_shape": (q121, _Q121_ORACLE, _Q121_DESCRIPTION,
-                            ("relational", "tpch")),
-    "q122_tpch_q17_shape": (q122, _Q122_ORACLE, _Q122_DESCRIPTION,
-                            ("relational", "tpch")),
-    "q123_tpch_q18_shape": (q123, _Q123_ORACLE, _Q123_DESCRIPTION,
-                            ("relational", "tpch")),
-    "q124_tpch_q19_shape": (q124, _Q124_ORACLE, _Q124_DESCRIPTION,
-                            ("relational", "tpch")),
-    "q125_tpch_q15_shape": (q125, _Q125_ORACLE, _Q125_DESCRIPTION,
-                            ("relational", "tpch")),
-    "q126_tpch_q22_shape": (q126, _Q126_ORACLE, _Q126_DESCRIPTION,
-                            ("relational", "tpch")),
-}
-
-
-def register() -> None:
-    """r14 registration seam — see joins_ext.register for the pattern."""
-    for name, (fn, oracle, desc, tags) in STAGED.items():
-        query(name, oracle=oracle, description=desc, tags=tags)(fn)
-
-
-__all__ = ["q119", "q120", "q121", "q122", "q123", "q124", "q125", "q126",
-           "STAGED", "register"]
+__all__ = ["q119", "q120", "q121", "q122", "q123", "q124", "q125", "q126"]

@@ -1,15 +1,13 @@
-"""STAGED r13 surface (built r11, NOT registered — GATE_r11.md books
-the r12 window solid) — q98: per-source Zipf slope — the ordinary-
+"""q98: per-source Zipf slope — the ordinary-
 least-squares slope of ln(frequency) vs ln(rank) over each source's
 top-50 terms (the corpus-health fingerprint: natural language sits
 near −1; template/boilerplate feeds flatten, spam and OCR noise
 steepen — a one-number companion to q83's divergence monitor).
 
 Reference parity: n/a — no analytics surface in the reference; declared
-engine surface (SURVEY §2.C extension when registered). Tokenization is
+engine surface (SURVEY §2.C extension). Tokenization is
 the shared q46-family contract (``operators.dedup.tokens`` /
-``llm_queries._TOKS_SQL``) — MODULE_DEPS pulls this entry when either
-side changes.
+``llm_queries._TOKS_SQL``).
 
 Determinism (the q49k contract, extended to OLS): float SUMS are
 order-dependent, so each rank's four regression terms — ln r, ln f,
@@ -88,6 +86,8 @@ _Q98_DESCRIPTION = (
 )
 
 
+@query("q98_zipf_slope", oracle=_Q98_ORACLE, description=_Q98_DESCRIPTION,
+       tags=("llm", "profiling"))
 def q98(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = tables(spark, sf_dir)["documents"]
     tc = (
@@ -127,16 +127,4 @@ def q98(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED = {
-    "q98_zipf_slope": (q98, _Q98_ORACLE, _Q98_DESCRIPTION,
-                       ("llm", "profiling")),
-}
-
-
-def register() -> None:
-    """r13 registration seam — see joins_ext.register for the pattern."""
-    for name, (fn, oracle, desc, tags) in STAGED.items():
-        query(name, oracle=oracle, description=desc, tags=tags)(fn)
-
-
-__all__ = ["q98", "STAGED", "register"]
+__all__ = ["q98"]

@@ -9,14 +9,7 @@ streaming source, and q41's staged ingest tree. Data is written to a
 process-private temp directory and published with one ``os.rename`` —
 a reader can never observe a half-written directory, even if two
 processes race to be first writer (the loser's rename fails and its
-temp dir is discarded). Note the dep-map consequence: this module is an
-implementing file of EIGHT query modules (88 registry entries as of
-r11 — tools/check_gate_rotation.py MODULE_DEPS is the authoritative
-list), so a behavior change here cannot fit one 50-slot gate window —
-it needs a deliberate multi-round rotation plan in GATE_r{N}.md,
-mechanized since r11 by tools/deferred_rotation.json
-(tools/check_gate_rotation.py exempts comment/docstring-only edits via
-AST comparison).
+temp dir is discarded).
 
 The key fingerprints SOURCE content only, not builder layout: the
 ``name`` argument doubles as the layout version — rename the key when a

@@ -35,6 +35,18 @@ def toks_replay(text: str) -> list[str]:
     return " ".join(text.lower().split()).split(" ") if text else [""]
 
 
+def module_entries(*modules) -> dict:
+    """The registered entries whose builders are defined in ``modules``,
+    in registration order."""
+    from bucket_to_bigquery_spark.queries import all_queries
+
+    names = {m.__name__ for m in modules}
+    return {
+        name: q for name, q in all_queries().items()
+        if q.builder.__module__ in names
+    }
+
+
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     for t in TABLE_NAMES:

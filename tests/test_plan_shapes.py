@@ -396,18 +396,11 @@ def test_q49n_cms_grid_aggregates_map_side(spark, sf_dir):
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
 
 
-# --- staged r10 surface (builders invoked directly; unregistered) ----------
-
-
-def _staged_plan(spark, sf_dir, mod, name: str) -> str:
-    fn = mod.STAGED[name][0]
-    return fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+# --- r10 surface (bloom / sampling_ext / layout) ----------------------------
 
 
 def test_q57_bloom_corpus_never_shuffles_before_doc_agg(spark, sf_dir):
-    from bucket_to_bigquery_spark.queries import bloom
-
-    plan = _staged_plan(spark, sf_dir, bloom, "q57_bloom_decontamination")
+    plan = _plan(spark, sf_dir, "q57_bloom_decontamination")
     # every join is against a broadcast side (bit-set positions, bench
     # shingles) — the only SMJ-class shuffle allowed is none at all
     assert "BroadcastHashJoin" in plan
@@ -416,9 +409,7 @@ def test_q57_bloom_corpus_never_shuffles_before_doc_agg(spark, sf_dir):
 
 
 def test_q59_sample_shuffle_carries_no_text(spark, sf_dir):
-    from bucket_to_bigquery_spark.queries import sampling_ext
-
-    plan = _staged_plan(spark, sf_dir, sampling_ext, "q59_weighted_sample")
+    plan = _plan(spark, sf_dir, "q59_weighted_sample")
     # column pruning: the two-phase top-k windows rank (lang, key,
     # doc_id, weight) — document text must never enter the plan
     read = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
@@ -427,9 +418,7 @@ def test_q59_sample_shuffle_carries_no_text(spark, sf_dir):
 
 
 def test_q60_zorder_map_is_partial_aggregated(spark, sf_dir):
-    from bucket_to_bigquery_spark.queries import layout
-
-    plan = _staged_plan(spark, sf_dir, layout, "q60_zorder_layout")
+    plan = _plan(spark, sf_dir, "q60_zorder_layout")
     # map-side combine into <= 64 buckets before the exchange
     assert "HashAggregate" in plan
     assert "CartesianProduct" not in plan

@@ -1,6 +1,5 @@
-"""Adversarial edge-corpus parity for the ENTIRE staged surface
-(q109–q134 + the r17/r18 batches q135–q153): every staged builder and its
-DuckDB oracle run over a
+"""Adversarial edge-corpus parity for the registered q109–q134 surface:
+every builder of the modules below and its DuckDB oracle run over a
 crafted tiny warehouse whose rows hit the paths the generated
 testdata never does —
 
@@ -17,16 +16,15 @@ testdata never does —
   q115/q116/q132);
 - two IDENTICAL embedding vectors under one label (q127 distance
   ties broken by vec_id; q130 assignment ties to the lowest list)
-  and an all-zero vector (distances fine — no norm division in the
-  staged entries);
+  and an all-zero vector (distances fine — no norm division in these
+  entries);
 - filters that match NOTHING (q123's 300-quantity HAVING, q109's
   ASIA/1996 window on the one non-ASIA order) — empty-result parity.
 
 Parity needs no referential integrity or statistical realism: both
-engines read the same parquet, so every staged entry can be checked
-on data chosen purely for its degeneracy. A failure here is a real
-builder/oracle contract divergence caught while the modules are
-still free to change.
+engines read the same parquet, so every entry can be checked on data
+chosen purely for its degeneracy. A failure here is a real
+builder/oracle contract divergence.
 """
 
 from __future__ import annotations
@@ -39,159 +37,29 @@ import pytest
 
 from bucket_to_bigquery_spark.queries import (
     actives,
-    apportion,
-    boilerplate,
-    bursts,
-    checksums,
-    consample,
-    datacard,
-    embedhealth,
-    histogram,
-    langeval,
-    layout_advisor,
-    lift,
-    markov_eval,
-    negatives,
-    outer_join_stream,
-    packstats,
-    postings,
-    pq_recall,
-    profile_drift,
-    qq,
-    rankchurn,
-    rendezvous,
-    saltadvisor,
-    tpch_ext3,
-    bfs,
-    bpe2,
-    cohits,
-    cooccur,
-    coverage,
     concurrency,
-    funnel_ttc,
-    fuzzy,
+    coverage,
     embed_outliers,
+    funnel_ttc,
     hamming,
     inflation,
-    ivfpq,
-    ks,
     latency,
-    lloyd2,
     lloyd_step,
-    multitouch,
     neardup_cc,
-    pq_ann,
     profiling,
-    recon,
-    receval,
-    regression,
-    robust,
     seasonality,
-    sq,
-    srccontain,
-    survival,
     temperature,
     tpch_ext,
     tpch_ext2,
-    triples,
 )
-from bucket_to_bigquery_spark.queries.registry import Query, _with_tuning
 
-from .oracle import compare, duck_connection
+from .oracle import compare, duck_connection, module_entries
 
-_STAGED_MODULES = (
+ENTRIES = module_entries(
     tpch_ext, tpch_ext2, profiling, temperature, hamming, inflation,
     coverage, actives, embed_outliers, seasonality, latency, lloyd_step,
     concurrency, neardup_cc, funnel_ttc,
-    # staged r17 batch (q135–q148): recon's all-clean audit, ks with a
-    # 3-vs-1 split, robust's tiny segments, cooccur's single-item
-    # baskets, pq_ann's sub-16-vector codebook with identical/zero
-    # vector ties (encode AND ADC scan), fuzzy's zero-candidate
-    # single-token names, regression's zero-x-variance NULL branch
-    # (Brand#2's constant quantities), multitouch's same-timestamp
-    # view-before-purchase tie and purchase-less users, sq's
-    # constant-dimension (mn == mx) branch on the shared-zero dims,
-    # triples' zero-triple two-item baskets (empty-result parity),
-    # ivfpq's degenerate 4-vector corpus: every vector is a coarse
-    # centroid, the identical pair both assign (tie) to the FIRST
-    # twin's list — leaving the second twin's inverted list EMPTY —
-    # and the matched vectors' residuals are all-zero,
-    # bfs' edgeless graph (support < 2 everywhere -> seeds only),
-    # srccontain's sub-5-token docs (no shingles from most edge docs
-    # -> the sparse/absent-pair convention),
-    # bpe2's ""/whitespace docs (both collapse to the [""] token
-    # list, size-filtered out) and the duplicate pair winning merge,
-    # lloyd2's all-vectors-are-centroids corpus (step-1 ties, then
-    # the identical pair's shared list averages the twins' residual-
-    # free coordinates — the two-step chain on maximal degeneracy),
-    # cohits' star-degenerate bipartite graph (customer 2 buys only
-    # part 2/3 via orders 3-4; authority ties resolved by partkey),
-    # receval's single-eval-case warehouse (order 1 = {1,2}: context
-    # item 1 predicts its only neighbor 2 = the held-out max -> 1/1),
-    # survival's zero-duration sessions + the exhaustion NULL branch
-    # (the censored dur-0 sessions leave the risk set first, so the
-    # one remaining dur-90 session exhausts it: d = n, survival 0)
-    recon, ks, robust, cooccur, pq_ann, fuzzy, regression, multitouch,
-    sq, triples, bfs, survival, ivfpq, receval, cohits, lloyd2,
-    bpe2, srccontain,
-    # staged r19 batch (q154-q160, GATE_r14.md): q154's one-line Q6
-    # band (only the 0.05-discount line qualifies), q155's sparse
-    # month sequence (gap months produce no pair group; single-sided
-    # pairs are all-dropped/all-entered), q156's all-train corpus
-    # (every edge event predates the pivot -> empty-result parity),
-    # q157 packing the ""/whitespace docs (first edge run of the q52
-    # packer twins on empty token lists), q158's 3-key domain, q159's
-    # 4-vector corpus (every vector is a query AND a codeword; the
-    # identical pair ties by id; top-5 truncates to 3 candidates),
-    # q160's train-cents TIE (both customers spend 30000 cents ->
-    # custkey order) with a zero-test-spend decile
-    tpch_ext3, rankchurn, markov_eval, packstats, saltadvisor,
-    pq_recall, lift,
-    # staged r20 batch (q161-q164, GATE_r14.md): q161's empty-string /
-    # whitespace / exact-duplicate docs (the duplicate pair makes
-    # n_rows != n_distinct and checksum_all != checksum_distinct for
-    # 'book'), q162's 4-order cents domain (every edge is one of four
-    # values; ceiling targets hit ties), q163's identical-pair /
-    # all-zero vectors (pos distance 0 with id ties; label sets {0,1}
-    # both present for every query), q164's all-pre-pivot orders...
-    # three of four edge orders predate 1998 -> late side nearly empty
-    checksums, histogram, negatives, profile_drift,
-    # second r20 batch (q165-q169, GATE_r14.md): q165 on the
-    # ""/whitespace docs (no shingles) + the duplicate pair (df=2
-    # boilerplate shingles), q166's two-source exact-sum split,
-    # q167's tiny two-term vocabulary, q168's one-late-order QQ
-    # table (late deciles all equal the single order's cents),
-    # q169's sub-64MiB sources (is_small fires everywhere)
-    boilerplate, apportion, postings, qq, layout_advisor,
-    # third r20 batch: q171's 5-doc corpus (every shard population is
-    # 0 or 1; the movement law holds trivially), q172's ""/whitespace
-    # docs (band 0, token count 1 under the [""]-token convention)
-    rendezvous, datacard,
-    # fifth r20 batch: q174 on the all-zero edge vector (one dimension
-    # set is fully shared-zero -> zero_share and dead-dim arithmetic
-    # live) and the identical pair; q175 on the SAME-timestamp event
-    # pairs (user 10's two views and user 30's view+purchase share a
-    # bucket -> max_burst 2 fires the flag on a 6-event corpus)
-    embedhealth, bursts,
-    # q176 on the 5-doc edge corpus: sample counts are 0-or-1 per
-    # cell and the nesting-violation column is live at zero
-    consample,
-    # q173 on the edge docs: ""/whitespace/english words score 0 on
-    # every profile -> predicted 'und' for all five docs, one
-    # ('en','und') row per the corpus's single lang value
-    langeval,
-    # staged r19 streaming entry: the edge corpus's one click sits
-    # INSIDE the final watermark horizon (click_ts + 1h > wm) and has
-    # no same-user purchase -> withheld, empty-result parity on the
-    # encoded eviction rule
-    outer_join_stream,
 )
-
-STAGED: dict[str, Query] = {
-    name: Query(name, _with_tuning(fn), oracle, desc, tags)
-    for mod in _STAGED_MODULES
-    for name, (fn, oracle, desc, tags) in mod.STAGED.items()
-}
 
 
 def _ts(s: str) -> dt.datetime:
@@ -308,9 +176,9 @@ def test_every_staged_entry_matches_oracle_on_edges(spark, edge_dir):
     duck = duck_connection(edge_dir)
     problems_all = []
     try:
-        for name in sorted(STAGED):
+        for name in sorted(ENTRIES):
             try:
-                problems = compare(name, spark, duck, edge_dir, STAGED)
+                problems = compare(name, spark, duck, edge_dir, ENTRIES)
             except Exception as e:  # noqa: BLE001
                 problems = [f"EXCEPTION {type(e).__name__}: {e}"]
             if problems:
@@ -326,19 +194,19 @@ def test_edge_corpus_exercises_the_degenerate_paths(spark, edge_dir):
     intra-day latency bucketed as day 0 (trunc, not floor), the
     ""/whitespace docs collapsing into one simhash cluster, and the
     identical-vector tie ranked by vec_id."""
-    q121 = STAGED["q121_tpch_q13_shape"].builder(spark, edge_dir).collect()
+    q121 = ENTRIES["q121_tpch_q13_shape"].builder(spark, edge_dir).collect()
     assert any(r.n_orders == 0 and r.n_customers == 1 for r in q121)
 
     q129 = {r.priority: r for r in
-            STAGED["q129_ship_latency_percentiles"]
+            ENTRIES["q129_ship_latency_percentiles"]
             .builder(spark, edge_dir).collect()}
     assert q129["5-LOW"].p50_days == 0  # shipped 6h BEFORE the order
     assert q129["5-LOW"].max_days == 0
 
-    q116 = STAGED["q116_dup_inflation"].builder(spark, edge_dir).collect()
+    q116 = ENTRIES["q116_dup_inflation"].builder(spark, edge_dir).collect()
     assert [(r.cluster_size, r.n_clusters) for r in q116] == [(1, 1), (2, 2)]
 
-    q127 = STAGED["q127_embedding_outliers"].builder(
+    q127 = ENTRIES["q127_embedding_outliers"].builder(
         spark, edge_dir).collect()
     lbl0 = [r for r in q127 if r.label == 0]
     assert [r.vec_id for r in lbl0] == [1, 2]  # tie → vec_id order

@@ -1,25 +1,21 @@
-"""The r9-staged / r10-registered surface (GATE_r09.md "Round-10 rotation
-plan" #0): builders landed in r9 fully oracle-verified; round 10
-registered them via ``queries/__init__`` (only q59's rank surrogate and
-bloom comments changed before registration — both budgeted in-window).
+"""q57 Bloom decontamination, q58 snapshot diff, q59 weighted sample,
+q60 Z-order layout, q61 HLL union and q62 JL projection (bloom,
+snapshot, sampling_ext, layout, hll, projections).
 
 Checked here:
 
-1. **Registration** — every formerly-staged entry is now in
-   ``all_queries()`` with its oracle intact, and ``register()`` stays
-   idempotent (queries/__init__ already called it once at import).
+1. **Registration** — the modules register exactly these entries, each
+   with its oracle and description.
 2. **Per-family semantics** beyond the hash oracle (Bloom has no false
    negatives, the CDC diff hits every planted branch, the weighted
    sample actually upweights, the z-layout shows locality, the HLL union
    lands in bounds, the JL projection preserves norms). Driver-faithful
-   oracle parity is covered by test_oracle_parity.py now that the
-   entries are registered.
+   oracle parity is covered by test_oracle_parity.py.
 """
 
 from __future__ import annotations
 
-from bucket_to_bigquery_spark.queries import all_queries
-from bucket_to_bigquery_spark.queries import (  # noqa: F401
+from bucket_to_bigquery_spark.queries import (
     bloom,
     hll,
     layout,
@@ -27,19 +23,13 @@ from bucket_to_bigquery_spark.queries import (  # noqa: F401
     sampling_ext,
     snapshot,
 )
-from bucket_to_bigquery_spark.queries.registry import (
-    REGISTRY,
-    Query,
-    _with_tuning,
+
+from .oracle import module_entries
+
+
+ENTRIES = module_entries(
+    bloom, snapshot, sampling_ext, layout, hll, projections,
 )
-
-_STAGED_MODULES = (bloom, snapshot, sampling_ext, layout, hll, projections)
-
-STAGED: dict[str, Query] = {
-    name: Query(name, _with_tuning(fn), oracle, desc, tags)
-    for mod in _STAGED_MODULES
-    for name, (fn, oracle, desc, tags) in mod.STAGED.items()
-}
 
 
 # ---------------------------------------------------------------------------
@@ -48,24 +38,18 @@ STAGED: dict[str, Query] = {
 
 
 def test_staged_entries_are_registered():
-    """Round 10 wiring: every formerly-staged entry is in the registry
-    with its oracle and description (queries/__init__ calls register())."""
-    reg = all_queries()
-    for name, q in STAGED.items():
-        assert name in reg, f"{name} not registered — queries/__init__ wiring lost"
-        assert reg[name].oracle == q.oracle
-        assert reg[name].description
-
-
-def test_register_is_idempotent():
-    """Re-calling register() (already run once at package import) must not
-    duplicate or mutate entries."""
-    before = dict(REGISTRY)
-    for mod in _STAGED_MODULES:
-        mod.register()
-    assert set(REGISTRY) == set(before)
-    for name in STAGED:
-        assert REGISTRY[name].oracle == before[name].oracle
+    """Importing the package registers exactly these entries from
+    the modules above, each with an oracle and a description."""
+    assert sorted(ENTRIES) == [
+        "q57_bloom_decontamination",
+        "q58_snapshot_diff",
+        "q59_weighted_sample",
+        "q60_zorder_layout",
+        "q61_hll_sketch_union",
+        "q62_jl_sign_projection",
+    ]
+    for q in ENTRIES.values():
+        assert q.oracle and q.description, q.name
 
 
 # ---------------------------------------------------------------------------
@@ -74,7 +58,7 @@ def test_register_is_idempotent():
 
 
 def test_q57_bloom_has_no_false_negatives(spark, sf_dir):
-    rows = STAGED["q57_bloom_decontamination"].builder(spark, sf_dir).collect()
+    rows = ENTRIES["q57_bloom_decontamination"].builder(spark, sf_dir).collect()
     assert rows
     contaminated = [r for r in rows if r["n_exact_contaminated"] > 0]
     assert contaminated, "no exact contamination — the benchmark split is wrong"
@@ -89,7 +73,7 @@ def test_q57_bloom_has_no_false_negatives(spark, sf_dir):
 
 
 def test_q58_diff_hits_every_planted_branch(spark, sf_dir):
-    rows = STAGED["q58_snapshot_diff"].builder(spark, sf_dir).collect()
+    rows = ENTRIES["q58_snapshot_diff"].builder(spark, sf_dir).collect()
     by_status: dict = {}
     for r in rows:
         by_status.setdefault(r["status"], []).append(r)
@@ -107,7 +91,7 @@ def test_q59_sample_upweights_and_ranks_contiguously(spark, sf_dir):
 
     from bucket_to_bigquery_spark.queries.registry import tables
 
-    rows = STAGED["q59_weighted_sample"].builder(spark, sf_dir).collect()
+    rows = ENTRIES["q59_weighted_sample"].builder(spark, sf_dir).collect()
     by_lang: dict = {}
     for r in rows:
         by_lang.setdefault(r["lang"], []).append(r["rank"])
@@ -131,7 +115,7 @@ def test_q59_sample_upweights_and_ranks_contiguously(spark, sf_dir):
 def test_q60_zorder_buckets_show_two_dim_locality(spark, sf_dir):
     from bucket_to_bigquery_spark.queries.registry import tables
 
-    rows = STAGED["q60_zorder_layout"].builder(spark, sf_dir).collect()
+    rows = ENTRIES["q60_zorder_layout"].builder(spark, sf_dir).collect()
     assert 1 < len(rows) <= 64
     total = sum(r["n_rows"] for r in rows)
     assert total == tables(spark, sf_dir)["events"].count()
@@ -153,7 +137,7 @@ def test_q62_projection_preserves_norms(spark, sf_dir):
 
     from bucket_to_bigquery_spark.queries.registry import tables
 
-    rows = STAGED["q62_jl_sign_projection"].builder(spark, sf_dir).collect()
+    rows = ENTRIES["q62_jl_sign_projection"].builder(spark, sf_dir).collect()
     src = {
         r["vec_id"]: np.asarray(r["embedding"], dtype="float64")
         for r in tables(spark, sf_dir)["embeddings"].collect()
@@ -171,7 +155,7 @@ def test_q62_projection_preserves_norms(spark, sf_dir):
 
 
 def test_q61_union_estimates_in_bounds(spark, sf_dir):
-    rows = STAGED["q61_hll_sketch_union"].builder(spark, sf_dir).collect()
+    rows = ENTRIES["q61_hll_sketch_union"].builder(spark, sf_dir).collect()
     assert rows
     for r in rows:
         assert r["union_ok"], r

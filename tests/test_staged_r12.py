@@ -1,13 +1,11 @@
-"""The r10-staged / r12-REGISTERED surface (GATE_r10.md "Round-11/12
-plan" → GATE_r12.md): q90 point-in-time enrichment (pit.py), q91 A/B
-conversion lift (ab.py), q92 top event paths (paths.py), q89b MinHash
-source overlap (sketch_overlap.py — closing the q89 ``weak`` mark).
+"""q90 point-in-time enrichment (pit.py), q91 A/B conversion lift
+(ab.py), q92 top event paths (paths.py), q89b MinHash source overlap
+(sketch_overlap.py — closing the q89 ``weak`` mark).
 
-Checked here, post-registration:
+Checked here:
 
-1. **Registration wiring** — every formerly-staged entry is in the
-   driver registry with its oracle/description, and register() is
-   idempotent.
+1. **Registration** — the modules register exactly these entries, each
+   with its oracle and description.
 2. **Oracle parity** — each builder matches its DuckDB oracle through
    the same compare harness the driver mirrors.
 3. **Per-entry semantics** beyond the hash: PIT version lookup replays
@@ -23,56 +21,33 @@ import math
 from collections import defaultdict
 
 from bucket_to_bigquery_spark.queries import ab, paths, pit, sketch_overlap
-from bucket_to_bigquery_spark.queries import all_queries
-from bucket_to_bigquery_spark.queries.registry import (
-    Query,
-    _with_tuning,
-    tables,
-)
+from bucket_to_bigquery_spark.queries.registry import tables
 
-from .oracle import compare, duck_connection
+from .oracle import compare, duck_connection, module_entries
 
-_STAGED_MODULES = (pit, ab, paths, sketch_overlap)
-
-STAGED: dict[str, Query] = {
-    name: Query(name, _with_tuning(fn), oracle, desc, tags)
-    for mod in _STAGED_MODULES
-    for name, (fn, oracle, desc, tags) in mod.STAGED.items()
-}
+ENTRIES = module_entries(pit, ab, paths, sketch_overlap)
 
 
 def _run(name, spark, sf_dir):
-    return STAGED[name].builder(spark, sf_dir)
+    return ENTRIES[name].builder(spark, sf_dir)
 
 
 # ---------------------------------------------------------------------------
-# 1. Staging containment
+# 1. Registration
 # ---------------------------------------------------------------------------
 
 
 def test_staged_entries_are_registered():
-    """Round 12 wiring: every formerly-staged entry is in the registry
-    with its oracle and description (queries/__init__ calls register());
-    the r12 window budgets one GATE_PRIORITY slot per entry."""
-    reg = all_queries()
-    assert STAGED
-    for name, q in STAGED.items():
-        assert name in reg, f"{name} not registered — queries/__init__ wiring lost"
-        assert reg[name].oracle == q.oracle
-        assert reg[name].description
-
-
-def test_register_is_idempotent():
-    """Re-calling register() (already run once at package import) must
-    not duplicate or mutate entries."""
-    from bucket_to_bigquery_spark.queries.registry import REGISTRY
-
-    before = dict(REGISTRY)
-    for mod in _STAGED_MODULES:
-        mod.register()
-    assert set(REGISTRY) == set(before)
-    for name in STAGED:
-        assert REGISTRY[name].oracle == before[name].oracle
+    """Importing the package registers exactly these entries from
+    the modules above, each with an oracle and a description."""
+    assert sorted(ENTRIES) == [
+        "q89b_source_overlap_minhash",
+        "q90_pit_enrichment",
+        "q91_ab_lift",
+        "q92_top_event_paths",
+    ]
+    for q in ENTRIES.values():
+        assert q.oracle and q.description, q.name
 
 
 # ---------------------------------------------------------------------------
@@ -83,8 +58,8 @@ def test_register_is_idempotent():
 def test_staged_oracle_parity(spark, sf_dir):
     duck = duck_connection(sf_dir)
     try:
-        for name in sorted(STAGED):
-            problems = compare(name, spark, duck, sf_dir, STAGED)
+        for name in sorted(ENTRIES):
+            problems = compare(name, spark, duck, sf_dir, ENTRIES)
             assert not problems, f"{name}: " + "; ".join(problems)
     finally:
         duck.close()

@@ -1,17 +1,12 @@
-"""The r11-staged surface for ROUND-13 registration (GATE_r11.md books
-the r12 window solid with the deferred scratch rotation + the staged
-r12 quartet, so this batch registers in r13): q93 PMI collocations
-(collocations.py), q94 FD audit (fd.py), q95 shingle novelty
-(novelty.py), q96 PSI drift (psi.py).
+"""q93 PMI collocations (collocations.py), q94 FD audit (fd.py), q95
+shingle novelty (novelty.py), q96 PSI drift (psi.py).
 
-Checked here, pre-registration (the staged-surface discipline):
+Checked here:
 
-1. **Staging containment** — the modules are NOT imported by
-   ``queries/__init__`` and register() has NOT run, so the driver
-   registry keeps the r11 gate-window arithmetic (exactly 50 aliases).
-2. **Oracle parity NOW** — each staged builder matches its DuckDB
-   oracle through the same compare harness the driver mirrors, so the
-   eventual registration is a wiring change, not a correctness event.
+1. **Registration** — the modules register exactly these entries, each
+   with its oracle and description.
+2. **Oracle parity** — each builder matches its DuckDB oracle through
+   the same compare harness the driver mirrors.
 3. **Per-entry semantics** beyond the hash: full Python replays (PMI
    ranking, modal-FD compliance, first-seen novelty, smoothed PSI) and
    plan-shape pins (cached single tokenization, no cartesian products,
@@ -24,35 +19,24 @@ import math
 from collections import defaultdict
 
 from bucket_to_bigquery_spark.queries import (
-    all_queries,
     collocations,
     fd,
     novelty,
     psi,
 )
-from bucket_to_bigquery_spark.queries.registry import (
-    Query,
-    _with_tuning,
-    tables,
-)
+from bucket_to_bigquery_spark.queries.registry import tables
 
-from .oracle import compare, duck_connection
+from .oracle import compare, duck_connection, module_entries
 
-_STAGED_MODULES = (collocations, fd, novelty, psi)
-
-STAGED: dict[str, Query] = {
-    name: Query(name, _with_tuning(fn), oracle, desc, tags)
-    for mod in _STAGED_MODULES
-    for name, (fn, oracle, desc, tags) in mod.STAGED.items()
-}
+ENTRIES = module_entries(collocations, fd, novelty, psi)
 
 
 def _run(name, spark, sf_dir):
-    return STAGED[name].builder(spark, sf_dir)
+    return ENTRIES[name].builder(spark, sf_dir)
 
 
 def _plan(spark, sf_dir, name: str) -> str:
-    df = STAGED[name].builder(spark, sf_dir)
+    df = ENTRIES[name].builder(spark, sf_dir)
     return df._jdf.queryExecution().executedPlan().toString()
 
 
@@ -66,28 +50,17 @@ def _toks(text: str) -> list[str]:
 
 
 def test_staged_entries_are_registered():
-    """Round-13 wiring (GATE_r13.md): every formerly-staged entry is in
-    the registry with its oracle and description (queries/__init__ calls
-    register()); the r13 window budgets one GATE_PRIORITY slot each."""
-    reg = all_queries()
-    assert STAGED
-    for name, q in STAGED.items():
-        assert name in reg, f"{name} not registered — queries/__init__ wiring lost"
-        assert reg[name].oracle == q.oracle
-        assert reg[name].description
+    """Importing the package registers exactly these entries from
+    the modules above, each with an oracle and a description."""
+    assert sorted(ENTRIES) == [
+        "q93_pmi_collocations",
+        "q94_fd_audit",
+        "q95_shingle_novelty",
+        "q96_psi_drift",
+    ]
+    for q in ENTRIES.values():
+        assert q.oracle and q.description, q.name
 
-
-def test_register_is_idempotent():
-    """Re-calling register() (already run once at package import) must
-    not duplicate or mutate entries."""
-    from bucket_to_bigquery_spark.queries.registry import REGISTRY
-
-    before = dict(REGISTRY)
-    for mod in _STAGED_MODULES:
-        mod.register()
-    assert set(REGISTRY) == set(before)
-    for name in STAGED:
-        assert REGISTRY[name].oracle == before[name].oracle
 
 # ---------------------------------------------------------------------------
 # 2. Oracle parity
@@ -97,8 +70,8 @@ def test_register_is_idempotent():
 def test_staged_oracle_parity(spark, sf_dir):
     duck = duck_connection(sf_dir)
     try:
-        for name in sorted(STAGED):
-            problems = compare(name, spark, duck, sf_dir, STAGED)
+        for name in sorted(ENTRIES):
+            problems = compare(name, spark, duck, sf_dir, ENTRIES)
             assert not problems, f"{name}: " + "; ".join(problems)
     finally:
         duck.close()

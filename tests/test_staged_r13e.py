@@ -1,10 +1,9 @@
-"""Fifth r11-staged batch (see tests/test_staged_r13.py for the
-discipline): q106 unit-price consistency audit (dispersion.py), q107
-numeric correlation matrix (correlation.py).
+"""q106 unit-price consistency audit (dispersion.py), q107 numeric
+correlation matrix (correlation.py).
 
-Same three checks: staging containment, oracle parity through the
-driver-mirror harness, and full Python brute-force replays + plan
-pins per entry.
+Same three checks as tests/test_staged_r13.py: registration, oracle
+parity through the driver-mirror harness, and full Python brute-force
+replays + plan pins per entry.
 """
 
 from __future__ import annotations
@@ -14,33 +13,22 @@ from collections import defaultdict
 from itertools import combinations
 
 from bucket_to_bigquery_spark.queries import (
-    all_queries,
     correlation,
     dispersion,
 )
-from bucket_to_bigquery_spark.queries.registry import (
-    Query,
-    _with_tuning,
-    tables,
-)
+from bucket_to_bigquery_spark.queries.registry import tables
 
-from .oracle import compare, duck_connection
+from .oracle import compare, duck_connection, module_entries
 
-_STAGED_MODULES = (dispersion, correlation)
-
-STAGED: dict[str, Query] = {
-    name: Query(name, _with_tuning(fn), oracle, desc, tags)
-    for mod in _STAGED_MODULES
-    for name, (fn, oracle, desc, tags) in mod.STAGED.items()
-}
+ENTRIES = module_entries(dispersion, correlation)
 
 
 def _run(name, spark, sf_dir):
-    return STAGED[name].builder(spark, sf_dir)
+    return ENTRIES[name].builder(spark, sf_dir)
 
 
 def _plan(spark, sf_dir, name: str) -> str:
-    df = STAGED[name].builder(spark, sf_dir)
+    df = ENTRIES[name].builder(spark, sf_dir)
     return df._jdf.queryExecution().executedPlan().toString()
 
 
@@ -49,34 +37,21 @@ def _round_half_away(x: float) -> int:
 
 
 def test_staged_entries_are_registered():
-    """Round-13 wiring (GATE_r13.md): every formerly-staged entry is in
-    the registry with its oracle and description (queries/__init__ calls
-    register()); the r13 window budgets one GATE_PRIORITY slot each."""
-    reg = all_queries()
-    assert STAGED
-    for name, q in STAGED.items():
-        assert name in reg, f"{name} not registered — queries/__init__ wiring lost"
-        assert reg[name].oracle == q.oracle
-        assert reg[name].description
+    """Importing the package registers exactly these entries from
+    the modules above, each with an oracle and a description."""
+    assert sorted(ENTRIES) == [
+        "q106_unit_price_dispersion",
+        "q107_correlation_matrix",
+    ]
+    for q in ENTRIES.values():
+        assert q.oracle and q.description, q.name
 
-
-def test_register_is_idempotent():
-    """Re-calling register() (already run once at package import) must
-    not duplicate or mutate entries."""
-    from bucket_to_bigquery_spark.queries.registry import REGISTRY
-
-    before = dict(REGISTRY)
-    for mod in _STAGED_MODULES:
-        mod.register()
-    assert set(REGISTRY) == set(before)
-    for name in STAGED:
-        assert REGISTRY[name].oracle == before[name].oracle
 
 def test_staged_oracle_parity(spark, sf_dir):
     duck = duck_connection(sf_dir)
     try:
-        for name in sorted(STAGED):
-            problems = compare(name, spark, duck, sf_dir, STAGED)
+        for name in sorted(ENTRIES):
+            problems = compare(name, spark, duck, sf_dir, ENTRIES)
             assert not problems, f"{name}: " + "; ".join(problems)
     finally:
         duck.close()

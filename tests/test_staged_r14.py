@@ -1,18 +1,14 @@
-"""First r13-staged batch for ROUND-14 registration (GATE_r13.md's
-round-14 plan budgets the slots): the four TPC-H decision-support
-shapes q109 local-supplier volume / q110 returned-item report / q111
-promo share / q112 market share (tpch_ext.py), the q113 column
-profile (profiling.py), and the q114 temperature-scaled mixture
-weights (temperature.py).
+"""The four TPC-H decision-support shapes q109 local-supplier volume /
+q110 returned-item report / q111 promo share / q112 market share
+(tpch_ext.py), the q113 column profile (profiling.py), and the q114
+temperature-scaled mixture weights (temperature.py).
 
-Checked here, pre-registration (the staged-surface discipline):
+Checked here:
 
-1. **Staging containment** — the modules are NOT imported by
-   ``queries/__init__`` and register() has NOT run, so the driver
-   registry keeps the r13 gate-window arithmetic.
-2. **Oracle parity NOW** — each staged builder matches its DuckDB
-   oracle through the same compare harness the driver mirrors, so the
-   eventual registration is a wiring change, not a correctness event.
+1. **Registration** — the modules register exactly these entries, each
+   with its oracle and description.
+2. **Oracle parity** — each builder matches its DuckDB oracle through
+   the same compare harness the driver mirrors.
 3. **Per-entry semantics** beyond the hash: full Python replays
    (decimal-exact revenue folds, the profile formatter, the α-mixture
    math) and plan-shape pins (dim broadcasts, TakeOrdered top-k, no
@@ -26,36 +22,25 @@ from collections import defaultdict
 from decimal import ROUND_HALF_UP, Decimal
 
 from bucket_to_bigquery_spark.queries import (
-    all_queries,
     profiling,
     temperature,
     tpch_ext,
 )
-from bucket_to_bigquery_spark.queries.registry import (
-    Query,
-    _with_tuning,
-    tables,
-)
+from bucket_to_bigquery_spark.queries.registry import tables
 
-from .oracle import compare, duck_connection
+from .oracle import compare, duck_connection, module_entries
 
-_STAGED_MODULES = (tpch_ext, profiling, temperature)
-
-STAGED: dict[str, Query] = {
-    name: Query(name, _with_tuning(fn), oracle, desc, tags)
-    for mod in _STAGED_MODULES
-    for name, (fn, oracle, desc, tags) in mod.STAGED.items()
-}
+ENTRIES = module_entries(tpch_ext, profiling, temperature)
 
 _Q6 = Decimal("0.000001")
 
 
 def _run(name, spark, sf_dir):
-    return STAGED[name].builder(spark, sf_dir)
+    return ENTRIES[name].builder(spark, sf_dir)
 
 
 def _plan(spark, sf_dir, name: str) -> str:
-    df = STAGED[name].builder(spark, sf_dir)
+    df = ENTRIES[name].builder(spark, sf_dir)
     return df._jdf.queryExecution().executedPlan().toString()
 
 
@@ -74,33 +59,23 @@ def _rev(r) -> Decimal:
 
 
 # ---------------------------------------------------------------------------
-# 1. Staging containment
+# 1. Registration
 # ---------------------------------------------------------------------------
 
 
 def test_staged_entries_are_registered():
-    """Round-14 wiring (GATE_r14.md): every formerly-staged entry is in
-    the registry with its oracle and description (queries/__init__ calls
-    register()); the r14 window budgets one GATE_PRIORITY slot each."""
-    reg = all_queries()
-    assert STAGED
-    for name, q in STAGED.items():
-        assert name in reg, f"{name} not registered — queries/__init__ wiring lost"
-        assert reg[name].oracle == q.oracle
-        assert reg[name].description
-
-
-def test_register_is_idempotent():
-    """Re-calling register() (already run once at package import) must
-    not duplicate or mutate entries."""
-    from bucket_to_bigquery_spark.queries.registry import REGISTRY
-
-    before = dict(REGISTRY)
-    for mod in _STAGED_MODULES:
-        mod.register()
-    assert set(REGISTRY) == set(before)
-    for name in STAGED:
-        assert REGISTRY[name].oracle == before[name].oracle
+    """Importing the package registers exactly these entries from
+    the modules above, each with an oracle and a description."""
+    assert sorted(ENTRIES) == [
+        "q109_tpch_q5_shape",
+        "q110_tpch_q10_shape",
+        "q111_promo_share",
+        "q112_market_share",
+        "q113_column_profile",
+        "q114_alpha_sampling",
+    ]
+    for q in ENTRIES.values():
+        assert q.oracle and q.description, q.name
 
 
 # ---------------------------------------------------------------------------
@@ -111,8 +86,8 @@ def test_register_is_idempotent():
 def test_staged_oracle_parity(spark, sf_dir):
     duck = duck_connection(sf_dir)
     try:
-        for name in sorted(STAGED):
-            problems = compare(name, spark, duck, sf_dir, STAGED)
+        for name in sorted(ENTRIES):
+            problems = compare(name, spark, duck, sf_dir, ENTRIES)
             assert not problems, f"{name}: " + "; ".join(problems)
     finally:
         duck.close()

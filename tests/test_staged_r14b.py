@@ -1,14 +1,12 @@
-"""Second r13-staged batch for ROUND-14 registration (GATE_r13.md's
-round-14 plan budgets the slots): q115 simhash near-dup pairs
-(hamming.py), q116 duplication-inflation report (inflation.py), q117
-vocabulary coverage curve (coverage.py), q118 trailing-7-day active
-users (actives.py).
+"""q115 simhash near-dup pairs (hamming.py), q116 duplication-inflation
+report (inflation.py), q117 vocabulary coverage curve (coverage.py),
+q118 trailing-7-day active users (actives.py).
 
-Same three checks as tests/test_staged_r14.py: staging containment,
-oracle parity through the driver-mirror harness, and full Python
-brute-force replays + plan pins per entry. The simhash replays here
-recompute the q46b fingerprint from raw md5 — an independent pin of
-the shared contract, not a call into operators/dedup.
+Same three checks as tests/test_staged_r14.py: registration, oracle
+parity through the driver-mirror harness, and full Python brute-force
+replays + plan pins per entry. The simhash replays here recompute the
+q46b fingerprint from raw md5 — an independent pin of the shared
+contract, not a call into operators/dedup.
 """
 
 from __future__ import annotations
@@ -24,29 +22,19 @@ from bucket_to_bigquery_spark.queries import (
     hamming,
     inflation,
 )
-from bucket_to_bigquery_spark.queries.registry import (
-    Query,
-    _with_tuning,
-    tables,
-)
+from bucket_to_bigquery_spark.queries.registry import tables
 
-from .oracle import compare, duck_connection
+from .oracle import compare, duck_connection, module_entries
 
-_STAGED_MODULES = (hamming, inflation, coverage, actives)
-
-STAGED: dict[str, Query] = {
-    name: Query(name, _with_tuning(fn), oracle, desc, tags)
-    for mod in _STAGED_MODULES
-    for name, (fn, oracle, desc, tags) in mod.STAGED.items()
-}
+ENTRIES = module_entries(hamming, inflation, coverage, actives)
 
 
 def _run(name, spark, sf_dir):
-    return STAGED[name].builder(spark, sf_dir)
+    return ENTRIES[name].builder(spark, sf_dir)
 
 
 def _plan(spark, sf_dir, name: str) -> str:
-    df = STAGED[name].builder(spark, sf_dir)
+    df = ENTRIES[name].builder(spark, sf_dir)
     return df._jdf.queryExecution().executedPlan().toString()
 
 
@@ -74,31 +62,21 @@ def _simhash32(text: str) -> int:
 
 
 # ---------------------------------------------------------------------------
-# 1. Staging containment
+# 1. Registration
 # ---------------------------------------------------------------------------
 
 
-_REGISTERED_NOW = {'q118_rolling_active_users', 'q115_simhash_hamming_pairs',
-                   'q116_dup_inflation', 'q117_ngram_coverage'}
-
-
 def test_registration_split_matches_gate_accounting():
-    """Round-14 wiring registered q118 (actives); round 16 registered
-    q115/q116/q117 (hamming/inflation/coverage) per the GATE_r15.md
-    held-back plan, after the r15 llm_queries rotation freed the window
-    their tokenizer/fold MODULE_DEPS edges would have overgrown."""
-    reg = all_queries()
-    assert STAGED
-    for name, q in STAGED.items():
-        if name in _REGISTERED_NOW:
-            assert name in reg, f"{name} not registered — wiring lost"
-            assert reg[name].oracle == q.oracle
-            assert reg[name].description
-        else:
-            assert name not in reg, (
-                f"{name} is registered — the GATE_r13.md r15/r16 "
-                "slot math no longer holds"
-            )
+    """Importing the package registers exactly these entries from
+    the modules above, each with an oracle and a description."""
+    assert sorted(ENTRIES) == [
+        "q115_simhash_hamming_pairs",
+        "q116_dup_inflation",
+        "q117_ngram_coverage",
+        "q118_rolling_active_users",
+    ]
+    for q in ENTRIES.values():
+        assert q.oracle and q.description, q.name
 
 
 # ---------------------------------------------------------------------------
@@ -109,8 +87,8 @@ def test_registration_split_matches_gate_accounting():
 def test_staged_oracle_parity(spark, sf_dir):
     duck = duck_connection(sf_dir)
     try:
-        for name in sorted(STAGED):
-            problems = compare(name, spark, duck, sf_dir, STAGED)
+        for name in sorted(ENTRIES):
+            problems = compare(name, spark, duck, sf_dir, ENTRIES)
             assert not problems, f"{name}: " + "; ".join(problems)
     finally:
         duck.close()

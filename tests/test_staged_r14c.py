@@ -1,14 +1,12 @@
-"""Third r13-staged batch for ROUND-14 registration (GATE_r13.md's
-round-14 plan budgets the slots): the subquery-machinery TPC-H shapes
-q119 Q4-lateness / q120 Q7-nation-pair / q121 Q13-distribution / q122
-Q17-correlated-average / q123 Q18-having / q124 Q19-disjunction /
-q125 Q15-equality-with-max / q126 Q22-anti-join (tpch_ext2.py).
+"""The subquery-machinery TPC-H shapes q119 Q4-lateness / q120
+Q7-nation-pair / q121 Q13-distribution / q122 Q17-correlated-average /
+q123 Q18-having / q124 Q19-disjunction / q125 Q15-equality-with-max /
+q126 Q22-anti-join (tpch_ext2.py).
 
-Same three checks as tests/test_staged_r14.py: staging containment,
-oracle parity through the driver-mirror harness, and full Python
-brute-force replays + plan pins per entry (semi/anti joins must stay
-equi-joins, the Q18 top-k must be TakeOrdered, no cartesian products
-anywhere).
+Same three checks as tests/test_staged_r14.py: registration, oracle
+parity through the driver-mirror harness, and full Python brute-force
+replays + plan pins per entry (semi/anti joins must stay equi-joins,
+the Q18 top-k must be TakeOrdered, no cartesian products anywhere).
 """
 
 from __future__ import annotations
@@ -17,29 +15,22 @@ import math
 from collections import defaultdict
 from decimal import ROUND_HALF_UP, Decimal
 
-from bucket_to_bigquery_spark.queries import all_queries, tpch_ext2
-from bucket_to_bigquery_spark.queries.registry import (
-    Query,
-    _with_tuning,
-    tables,
-)
+from bucket_to_bigquery_spark.queries import tpch_ext2
+from bucket_to_bigquery_spark.queries.registry import tables
 
-from .oracle import compare, duck_connection
+from .oracle import compare, duck_connection, module_entries
 
-STAGED: dict[str, Query] = {
-    name: Query(name, _with_tuning(fn), oracle, desc, tags)
-    for name, (fn, oracle, desc, tags) in tpch_ext2.STAGED.items()
-}
+ENTRIES = module_entries(tpch_ext2)
 
 _Q6 = Decimal("0.000001")
 
 
 def _run(name, spark, sf_dir):
-    return STAGED[name].builder(spark, sf_dir)
+    return ENTRIES[name].builder(spark, sf_dir)
 
 
 def _plan(spark, sf_dir, name: str) -> str:
-    df = STAGED[name].builder(spark, sf_dir)
+    df = ENTRIES[name].builder(spark, sf_dir)
     return df._jdf.queryExecution().executedPlan().toString()
 
 
@@ -63,32 +54,25 @@ def _collect(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# 1. Staging containment
+# 1. Registration
 # ---------------------------------------------------------------------------
 
 
 def test_staged_entries_are_registered():
-    """Round-14 wiring (GATE_r14.md): every formerly-staged entry is in
-    the registry with its oracle and description (queries/__init__ calls
-    register()); the r14 window budgets one GATE_PRIORITY slot each."""
-    reg = all_queries()
-    assert STAGED
-    for name, q in STAGED.items():
-        assert name in reg, f"{name} not registered — queries/__init__ wiring lost"
-        assert reg[name].oracle == q.oracle
-        assert reg[name].description
-
-
-def test_register_is_idempotent():
-    """Re-calling register() (already run once at package import) must
-    not duplicate or mutate entries."""
-    from bucket_to_bigquery_spark.queries.registry import REGISTRY
-
-    before = dict(REGISTRY)
-    tpch_ext2.register()
-    assert set(REGISTRY) == set(before)
-    for name in STAGED:
-        assert REGISTRY[name].oracle == before[name].oracle
+    """Importing the package registers exactly these entries from
+    the modules above, each with an oracle and a description."""
+    assert sorted(ENTRIES) == [
+        "q119_tpch_q4_shape",
+        "q120_tpch_q7_shape",
+        "q121_tpch_q13_shape",
+        "q122_tpch_q17_shape",
+        "q123_tpch_q18_shape",
+        "q124_tpch_q19_shape",
+        "q125_tpch_q15_shape",
+        "q126_tpch_q22_shape",
+    ]
+    for q in ENTRIES.values():
+        assert q.oracle and q.description, q.name
 
 
 # ---------------------------------------------------------------------------
@@ -99,8 +83,8 @@ def test_register_is_idempotent():
 def test_staged_oracle_parity(spark, sf_dir):
     duck = duck_connection(sf_dir)
     try:
-        for name in sorted(STAGED):
-            problems = compare(name, spark, duck, sf_dir, STAGED)
+        for name in sorted(ENTRIES):
+            problems = compare(name, spark, duck, sf_dir, ENTRIES)
             assert not problems, f"{name}: " + "; ".join(problems)
     finally:
         duck.close()

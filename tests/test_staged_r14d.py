@@ -1,14 +1,13 @@
-"""Fourth r13-staged batch for ROUND-14 registration (GATE_r13.md's
-round-14 plan budgets the slots): q127 embedding outlier audit
-(embed_outliers.py), q128 hourly seasonality profile (seasonality.py),
-q129 ship-latency percentiles (latency.py).
+"""q127 embedding outlier audit (embed_outliers.py), q128 hourly
+seasonality profile (seasonality.py), q129 ship-latency percentiles
+(latency.py).
 
-Same three checks as tests/test_staged_r14.py: staging containment,
-oracle parity through the driver-mirror harness, and full Python
-brute-force replays + plan pins per entry. The q127 replay recomputes
-the scaled-int centroid/distance math from raw floats — an
-independent pin of the q69/q62 + q98 contracts, not a call into the
-builder's expressions.
+Same three checks as tests/test_staged_r14.py: registration, oracle
+parity through the driver-mirror harness, and full Python brute-force
+replays + plan pins per entry. The q127 replay recomputes the
+scaled-int centroid/distance math from raw floats — an independent pin
+of the q69/q62 + q98 contracts, not a call into the builder's
+expressions.
 """
 
 from __future__ import annotations
@@ -17,37 +16,26 @@ import math
 from collections import Counter, defaultdict
 
 from bucket_to_bigquery_spark.queries import (
-    all_queries,
     embed_outliers,
     latency,
     seasonality,
 )
-from bucket_to_bigquery_spark.queries.registry import (
-    Query,
-    _with_tuning,
-    tables,
-)
+from bucket_to_bigquery_spark.queries.registry import tables
 
-from .oracle import compare, duck_connection
+from .oracle import compare, duck_connection, module_entries
 
-_STAGED_MODULES = (embed_outliers, seasonality, latency)
-
-STAGED: dict[str, Query] = {
-    name: Query(name, _with_tuning(fn), oracle, desc, tags)
-    for mod in _STAGED_MODULES
-    for name, (fn, oracle, desc, tags) in mod.STAGED.items()
-}
+ENTRIES = module_entries(embed_outliers, seasonality, latency)
 
 _US_PER_HOUR = 3_600_000_000
 _US_PER_DAY = 86_400_000_000
 
 
 def _run(name, spark, sf_dir):
-    return STAGED[name].builder(spark, sf_dir)
+    return ENTRIES[name].builder(spark, sf_dir)
 
 
 def _plan(spark, sf_dir, name: str) -> str:
-    df = STAGED[name].builder(spark, sf_dir)
+    df = ENTRIES[name].builder(spark, sf_dir)
     return df._jdf.queryExecution().executedPlan().toString()
 
 
@@ -64,33 +52,20 @@ def _micros(ts) -> int:
 
 
 # ---------------------------------------------------------------------------
-# 1. Staging containment
+# 1. Registration
 # ---------------------------------------------------------------------------
 
 
 def test_staged_entries_are_registered():
-    """Round-14 wiring (GATE_r14.md): every formerly-staged entry is in
-    the registry with its oracle and description (queries/__init__ calls
-    register()); the r14 window budgets one GATE_PRIORITY slot each."""
-    reg = all_queries()
-    assert STAGED
-    for name, q in STAGED.items():
-        assert name in reg, f"{name} not registered — queries/__init__ wiring lost"
-        assert reg[name].oracle == q.oracle
-        assert reg[name].description
-
-
-def test_register_is_idempotent():
-    """Re-calling register() (already run once at package import) must
-    not duplicate or mutate entries."""
-    from bucket_to_bigquery_spark.queries.registry import REGISTRY
-
-    before = dict(REGISTRY)
-    for mod in _STAGED_MODULES:
-        mod.register()
-    assert set(REGISTRY) == set(before)
-    for name in STAGED:
-        assert REGISTRY[name].oracle == before[name].oracle
+    """Importing the package registers exactly these entries from
+    the modules above, each with an oracle and a description."""
+    assert sorted(ENTRIES) == [
+        "q127_embedding_outliers",
+        "q128_hourly_seasonality",
+        "q129_ship_latency_percentiles",
+    ]
+    for q in ENTRIES.values():
+        assert q.oracle and q.description, q.name
 
 
 # ---------------------------------------------------------------------------
@@ -101,8 +76,8 @@ def test_register_is_idempotent():
 def test_staged_oracle_parity(spark, sf_dir):
     duck = duck_connection(sf_dir)
     try:
-        for name in sorted(STAGED):
-            problems = compare(name, spark, duck, sf_dir, STAGED)
+        for name in sorted(ENTRIES):
+            problems = compare(name, spark, duck, sf_dir, ENTRIES)
             assert not problems, f"{name}: " + "; ".join(problems)
     finally:
         duck.close()

@@ -1,18 +1,16 @@
-"""Sixth r13-staged batch for ROUND-14+ registration: q131 peak
-concurrent sessions per day (concurrency.py) — the sweep-line interval
-operator over the q63 sessionization contract, built as the two-level
-segmented scan (within-day prefix peaks + cross-day carry) — and q132
-near-duplicate components (neardup_cc.py) — the iterative
-pointer-jumping CC operator hash-pinned against a recursive-CTE
-min-label closure.
+"""q131 peak concurrent sessions per day (concurrency.py) — the
+sweep-line interval operator over the q63 sessionization contract,
+built as the two-level segmented scan (within-day prefix peaks +
+cross-day carry) — and q132/q133 near-duplicate components
+(neardup_cc.py) — the iterative pointer-jumping CC operator hash-pinned
+against a recursive-CTE min-label closure.
 
-Same three checks as tests/test_staged_r14.py: staging containment,
-oracle parity through the driver-mirror harness, and full Python
-brute-force replays + plan pins. The q131 replay runs the NAIVE
-global sweep (sort every boundary, running sum, per-day max); the
-q132 replay runs union-find over an independently recomputed simhash
-adjacency — the decomposed/iterative builders must equal both
-exactly.
+Same three checks as tests/test_staged_r14.py: registration, oracle
+parity through the driver-mirror harness, and full Python brute-force
+replays + plan pins. The q131 replay runs the NAIVE global sweep (sort
+every boundary, running sum, per-day max); the q132 replay runs
+union-find over an independently recomputed simhash adjacency — the
+decomposed/iterative builders must equal both exactly.
 """
 
 from __future__ import annotations
@@ -22,34 +20,23 @@ import hashlib
 from collections import defaultdict
 
 from bucket_to_bigquery_spark.queries import (
-    all_queries,
     concurrency,
     hamming,
     neardup_cc,
 )
-from bucket_to_bigquery_spark.queries.registry import (
-    Query,
-    _with_tuning,
-    tables,
-)
+from bucket_to_bigquery_spark.queries.registry import tables
 
-from .oracle import compare, duck_connection
+from .oracle import compare, duck_connection, module_entries
 
-_STAGED_MODULES = (concurrency, neardup_cc)
-
-STAGED: dict[str, Query] = {
-    name: Query(name, _with_tuning(fn), oracle, desc, tags)
-    for mod in _STAGED_MODULES
-    for name, (fn, oracle, desc, tags) in mod.STAGED.items()
-}
+ENTRIES = module_entries(concurrency, neardup_cc)
 
 
 def _run(name, spark, sf_dir):
-    return STAGED[name].builder(spark, sf_dir)
+    return ENTRIES[name].builder(spark, sf_dir)
 
 
 def _plan(spark, sf_dir, name: str) -> str:
-    df = STAGED[name].builder(spark, sf_dir)
+    df = ENTRIES[name].builder(spark, sf_dir)
     return df._jdf.queryExecution().executedPlan().toString()
 
 
@@ -99,34 +86,23 @@ def _brute_peaks(rows):
     return day_peak, day_starts, len(intervals)
 
 
-_REGISTERED_NOW = {'q131_peak_concurrency', 'q132_neardup_components',
-                   'q133_neardup_apply'}
-
-
 def test_registration_split_matches_gate_accounting():
-    """Round-14 wiring (GATE_r14.md) registered q131 (concurrency);
-    round 16 registered q132/q133 (neardup_cc) per the GATE_r15.md
-    held-back plan, after the r15 llm_queries rotation freed the window
-    their tokenizer/fold MODULE_DEPS edges would have overgrown."""
-    reg = all_queries()
-    assert STAGED
-    for name, q in STAGED.items():
-        if name in _REGISTERED_NOW:
-            assert name in reg, f"{name} not registered — wiring lost"
-            assert reg[name].oracle == q.oracle
-            assert reg[name].description
-        else:
-            assert name not in reg, (
-                f"{name} is registered — the GATE_r13.md r15/r16 "
-                "slot math no longer holds"
-            )
+    """Importing the package registers exactly these entries from
+    the modules above, each with an oracle and a description."""
+    assert sorted(ENTRIES) == [
+        "q131_peak_concurrency",
+        "q132_neardup_components",
+        "q133_neardup_apply",
+    ]
+    for q in ENTRIES.values():
+        assert q.oracle and q.description, q.name
 
 
 def test_staged_oracle_parity(spark, sf_dir):
     duck = duck_connection(sf_dir)
     try:
-        for name in sorted(STAGED):
-            problems = compare(name, spark, duck, sf_dir, STAGED)
+        for name in sorted(ENTRIES):
+            problems = compare(name, spark, duck, sf_dir, ENTRIES)
             assert not problems, f"{name}: " + "; ".join(problems)
     finally:
         duck.close()

@@ -1,12 +1,11 @@
-"""Seventh r13-staged batch for ROUND-14 registration: q134 funnel
-time-to-convert percentiles (funnel_ttc.py) — the q63b strict min-ts
-chaining carried to conversion-delay percentiles via the q129
-count-compress plan.
+"""q134 funnel time-to-convert percentiles (funnel_ttc.py) — the q63b
+strict min-ts chaining carried to conversion-delay percentiles via the
+q129 count-compress plan.
 
-Same three checks as tests/test_staged_r14.py: staging containment,
-oracle parity through the driver-mirror harness, and a full Python
-replay (funnel chaining + explicit disc percentile rule from raw
-events) + plan pins.
+Same three checks as tests/test_staged_r14.py: registration, oracle
+parity through the driver-mirror harness, and a full Python replay
+(funnel chaining + explicit disc percentile rule from raw events) +
+plan pins.
 """
 
 from __future__ import annotations
@@ -15,27 +14,20 @@ import calendar
 import math
 from collections import defaultdict
 
-from bucket_to_bigquery_spark.queries import all_queries, funnel_ttc
-from bucket_to_bigquery_spark.queries.registry import (
-    Query,
-    _with_tuning,
-    tables,
-)
+from bucket_to_bigquery_spark.queries import funnel_ttc
+from bucket_to_bigquery_spark.queries.registry import tables
 
-from .oracle import compare, duck_connection
+from .oracle import compare, duck_connection, module_entries
 
-STAGED: dict[str, Query] = {
-    name: Query(name, _with_tuning(fn), oracle, desc, tags)
-    for name, (fn, oracle, desc, tags) in funnel_ttc.STAGED.items()
-}
+ENTRIES = module_entries(funnel_ttc)
 
 
 def _run(name, spark, sf_dir):
-    return STAGED[name].builder(spark, sf_dir)
+    return ENTRIES[name].builder(spark, sf_dir)
 
 
 def _plan(spark, sf_dir, name: str) -> str:
-    df = STAGED[name].builder(spark, sf_dir)
+    df = ENTRIES[name].builder(spark, sf_dir)
     return df._jdf.queryExecution().executedPlan().toString()
 
 
@@ -44,34 +36,20 @@ def _micros(ts) -> int:
 
 
 def test_staged_entries_are_registered():
-    """Round-14 wiring (GATE_r14.md): every formerly-staged entry is in
-    the registry with its oracle and description (queries/__init__ calls
-    register()); the r14 window budgets one GATE_PRIORITY slot each."""
-    reg = all_queries()
-    assert STAGED
-    for name, q in STAGED.items():
-        assert name in reg, f"{name} not registered — queries/__init__ wiring lost"
-        assert reg[name].oracle == q.oracle
-        assert reg[name].description
-
-
-def test_register_is_idempotent():
-    """Re-calling register() (already run once at package import) must
-    not duplicate or mutate entries."""
-    from bucket_to_bigquery_spark.queries.registry import REGISTRY
-
-    before = dict(REGISTRY)
-    funnel_ttc.register()
-    assert set(REGISTRY) == set(before)
-    for name in STAGED:
-        assert REGISTRY[name].oracle == before[name].oracle
+    """Importing the package registers exactly these entries from
+    the modules above, each with an oracle and a description."""
+    assert sorted(ENTRIES) == [
+        "q134_funnel_ttc_percentiles",
+    ]
+    for q in ENTRIES.values():
+        assert q.oracle and q.description, q.name
 
 
 def test_staged_oracle_parity(spark, sf_dir):
     duck = duck_connection(sf_dir)
     try:
-        for name in sorted(STAGED):
-            problems = compare(name, spark, duck, sf_dir, STAGED)
+        for name in sorted(ENTRIES):
+            problems = compare(name, spark, duck, sf_dir, ENTRIES)
             assert not problems, f"{name}: " + "; ".join(problems)
     finally:
         duck.close()

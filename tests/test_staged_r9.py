@@ -1,68 +1,54 @@
-"""The r8-staged / r9-registered surface (GATE_r08.md "Round-9 rotation
-plan"): builders landed in r8 fully oracle-verified; round 9 registered
-them via ``queries/__init__`` (the modules themselves unchanged).
+"""q04e compaction, q11b full outer join, q49n count-min heavy hitters,
+q55/q55b incremental dedup and q56/q56b mixture sampling (joins_ext,
+maintenance, sketches, incremental, mixture).
 
 Checked here:
 
-1. **Registration** — every formerly-staged entry is now in
-   ``all_queries()`` with its oracle intact, and ``register()`` stays
-   idempotent (queries/__init__ already called it once at import).
+1. **Registration** — the modules register exactly these entries, each
+   with its oracle and description.
 2. **Per-family semantics** beyond the hash oracle (compaction shrinks
    files, CMS never underestimates, planted dup bands get the expected
    verdicts). Driver-faithful oracle parity is covered by
-   test_oracle_parity.py now that the entries are registered.
+   test_oracle_parity.py.
 """
 
 from __future__ import annotations
 
-from bucket_to_bigquery_spark.queries import all_queries
-from bucket_to_bigquery_spark.queries import (  # noqa: F401 (import = staging test)
+from bucket_to_bigquery_spark.queries import (
     incremental,
     joins_ext,
     maintenance,
     mixture,
     sketches,
 )
-from bucket_to_bigquery_spark.queries.registry import (
-    REGISTRY,
-    Query,
-    _with_tuning,
+
+from .oracle import module_entries
+
+
+ENTRIES = module_entries(
+    joins_ext, mixture, sketches, maintenance, incremental,
 )
 
 
-_STAGED_MODULES = (joins_ext, mixture, sketches, maintenance, incremental)
-
-STAGED: dict[str, Query] = {
-    name: Query(name, _with_tuning(fn), oracle, desc, tags)
-    for mod in _STAGED_MODULES
-    for name, (fn, oracle, desc, tags) in mod.STAGED.items()
-}
-
-
 # ---------------------------------------------------------------------------
-# 1. Staging containment
+# 1. Registration
 # ---------------------------------------------------------------------------
 
 
 def test_staged_entries_are_registered():
-    """Round 9 wiring: every formerly-staged entry is in the registry with
-    its oracle and description (queries/__init__ calls register())."""
-    reg = all_queries()
-    for name, q in STAGED.items():
-        assert name in reg, f"{name} not registered — queries/__init__ wiring lost"
-        assert reg[name].oracle == q.oracle
-        assert reg[name].description
-
-
-def test_register_is_idempotent():
-    """Re-calling register() (already run once at package import) must not
-    duplicate or mutate entries."""
-    before = dict(REGISTRY)
-    for mod in _STAGED_MODULES:
-        mod.register()
-    assert set(REGISTRY) == set(before)
-    for name in STAGED:
-        assert REGISTRY[name].oracle == before[name].oracle
+    """Importing the package registers exactly these entries from
+    the modules above, each with an oracle and a description."""
+    assert sorted(ENTRIES) == [
+        "q04e_compaction",
+        "q11b_full_outer_join",
+        "q49n_heavy_hitters_cms",
+        "q55_incremental_dedup",
+        "q55b_incremental_dedup_apply",
+        "q56_mixture_sampling",
+        "q56b_mixture_composition",
+    ]
+    for q in ENTRIES.values():
+        assert q.oracle and q.description, q.name
 
 
 # ---------------------------------------------------------------------------
@@ -77,7 +63,7 @@ def test_q04e_compaction_shrinks_files(spark, sf_dir):
 
 
 def test_q11b_produces_both_unmatched_sides(spark, sf_dir):
-    rows = STAGED["q11b_full_outer_join"].builder(spark, sf_dir).collect()
+    rows = ENTRIES["q11b_full_outer_join"].builder(spark, sf_dir).collect()
     sides = {r["side"] for r in rows}
     assert "both" in sides, "no matched rows — the join key or filters are wrong"
     assert sides <= {"both", "customer_only", "order_only"}
@@ -91,7 +77,7 @@ def test_q11b_produces_both_unmatched_sides(spark, sf_dir):
 
 
 def test_q49n_cms_never_underestimates(spark, sf_dir):
-    rows = STAGED["q49n_heavy_hitters_cms"].builder(spark, sf_dir).collect()
+    rows = ENTRIES["q49n_heavy_hitters_cms"].builder(spark, sf_dir).collect()
     assert 0 < len(rows) <= sketches._TOP_K
     for r in rows:
         assert r["est_count"] >= r["exact_count"] >= 1, r
@@ -100,7 +86,7 @@ def test_q49n_cms_never_underestimates(spark, sf_dir):
 def test_q55_planted_bands_get_expected_verdicts(spark, sf_dir):
     rows = {
         r["doc_id"]: r
-        for r in STAGED["q55_incremental_dedup"].builder(spark, sf_dir).collect()
+        for r in ENTRIES["q55_incremental_dedup"].builder(spark, sf_dir).collect()
     }
     exact = [r for i, r in rows.items() if 500000 <= i < 600000]
     near = [r for i, r in rows.items() if 600000 <= i < 700000]
@@ -119,8 +105,8 @@ def test_q55_planted_bands_get_expected_verdicts(spark, sf_dir):
 
 
 def test_q55b_apply_is_consistent_with_q55(spark, sf_dir):
-    verdicts = STAGED["q55_incremental_dedup"].builder(spark, sf_dir).collect()
-    merged = STAGED["q55b_incremental_dedup_apply"].builder(spark, sf_dir).collect()
+    verdicts = ENTRIES["q55_incremental_dedup"].builder(spark, sf_dir).collect()
+    merged = ENTRIES["q55b_incremental_dedup_apply"].builder(spark, sf_dir).collect()
     survivors = {r["doc_id"] for r in verdicts if r["n_matches"] == 0}
     new_in_merged = {r["doc_id"] for r in merged if r["origin"] == "new"}
     assert new_in_merged == survivors
@@ -129,8 +115,8 @@ def test_q55b_apply_is_consistent_with_q55(spark, sf_dir):
 
 
 def test_q56_sample_respects_rates_and_composition(spark, sf_dir):
-    sample = STAGED["q56_mixture_sampling"].builder(spark, sf_dir).collect()
-    comp = STAGED["q56b_mixture_composition"].builder(spark, sf_dir).collect()
+    sample = ENTRIES["q56_mixture_sampling"].builder(spark, sf_dir).collect()
+    comp = ENTRIES["q56b_mixture_composition"].builder(spark, sf_dir).collect()
     for r in sample:
         assert r["bucket"] < mixture.MIXTURE_PERMYRIAD[r["lang"]], r
     assert sum(r["n_sampled"] for r in comp) == len(sample)

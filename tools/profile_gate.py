@@ -34,19 +34,9 @@ def main() -> None:
     b2b_session.tune(spark)
     con = duck_connection(sf_dir)
     registry = all_queries()
-    # mirror the driver's iteration: it sees the GATE names from
-    # __spark_entry__ (GATE_PRIORITY entries aliased aNN_* to sort first,
-    # since the gate records only the first 50) — profile in that order
-    import __spark_entry__ as entry
-
-    gate_order = sorted(registry, key=lambda n: entry._gate_name(n))
-    names = gate_order
-    if only:  # prefix may be the registry name OR the aliased gate name
-        names = [
-            n for n in names
-            if any(n.startswith(p) or entry._gate_name(n).startswith(p)
-                   for p in only)
-        ]
+    names = sorted(registry)
+    if only:
+        names = [n for n in names if any(n.startswith(p) for p in only)]
     out = []
     total0 = time.monotonic()
     for name in names:
