@@ -15,8 +15,8 @@ import math
 from collections import defaultdict
 from itertools import combinations
 
-from bucket_to_bigquery_spark.queries import (
-    all_queries,
+from bucket_to_bigquery_spark.queries import all_queries
+from bucket_to_bigquery_spark.staged import (
     cooccur,
     fuzzy,
     ks,

@@ -13,12 +13,8 @@ from __future__ import annotations
 import calendar
 from collections import defaultdict
 
-from bucket_to_bigquery_spark.queries import (
-    all_queries,
-    multitouch,
-    pq_ann,
-    regression,
-)
+from bucket_to_bigquery_spark.queries import all_queries
+from bucket_to_bigquery_spark.staged import multitouch, pq_ann, regression
 from bucket_to_bigquery_spark.queries.registry import (
     Query,
     _with_tuning,
@@ -136,7 +132,7 @@ def test_pq_m_sub_parameter_slices_whole_vector(spark):
     """Regression pin for the _sub_slices refactor: a non-default
     m_sub must still cover EVERY dimension (the hardcoded-_M bug
     sliced only the first m_sub·(D div 8) dims, silently)."""
-    from bucket_to_bigquery_spark.queries.pq_ann import pq_encode
+    from bucket_to_bigquery_spark.staged.pq_ann import pq_encode
 
     # 8-dim vectors, m_sub=2 -> two 4-dim subspaces; vectors 0/1 are
     # the codebook. vector 2 differs from vector 0 ONLY in the LAST

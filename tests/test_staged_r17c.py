@@ -12,7 +12,8 @@ from __future__ import annotations
 from collections import defaultdict
 from itertools import combinations
 
-from bucket_to_bigquery_spark.queries import all_queries, sq, triples
+from bucket_to_bigquery_spark.queries import all_queries
+from bucket_to_bigquery_spark.staged import sq, triples
 from bucket_to_bigquery_spark.queries.registry import (
     Query,
     _with_tuning,

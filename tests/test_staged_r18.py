@@ -16,8 +16,8 @@ import math
 from collections import defaultdict
 from itertools import combinations
 
-from bucket_to_bigquery_spark.queries import (
-    all_queries,
+from bucket_to_bigquery_spark.queries import all_queries
+from bucket_to_bigquery_spark.staged import (
     bpe2,
     cohits,
     lloyd2,
@@ -246,7 +246,7 @@ def test_q149_neighbor_definition_is_q138s(spark, sf_dir):
     """One-definition pin: the eval's prediction pool is exactly the
     registered-to-be q138 frame (builder call + oracle subquery), so
     a q138 change cannot silently diverge the eval."""
-    from bucket_to_bigquery_spark.queries.cooccur import (
+    from bucket_to_bigquery_spark.staged.cooccur import (
         _Q138_ORACLE,
         q138,
     )
@@ -431,14 +431,14 @@ def test_q153_fold_is_q89s(spark, sf_dir):
     recipe change cannot desync q153."""
     import inspect
 
-    from bucket_to_bigquery_spark.queries import srccontain
+    from bucket_to_bigquery_spark.staged import srccontain
     from bucket_to_bigquery_spark.queries.overlap import (
         _Q89_ORACLE,
         _SHKEY_SQL,
         _SRC_SHINGLE_CTES,
         source_shingle_sets,
     )
-    from bucket_to_bigquery_spark.queries.srccontain import _Q153_ORACLE
+    from bucket_to_bigquery_spark.staged.srccontain import _Q153_ORACLE
 
     assert _SHKEY_SQL in _SRC_SHINGLE_CTES
     assert _SRC_SHINGLE_CTES in _Q89_ORACLE

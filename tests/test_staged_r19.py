@@ -17,8 +17,8 @@ from __future__ import annotations
 from collections import defaultdict
 from decimal import Decimal
 
-from bucket_to_bigquery_spark.queries import (
-    all_queries,
+from bucket_to_bigquery_spark.queries import all_queries
+from bucket_to_bigquery_spark.staged import (
     lift,
     markov_eval,
     packstats,
@@ -103,14 +103,14 @@ def test_q157_oracle_embeds_q52s_verbatim():
 def test_q157_builder_calls_q52s_packer():
     import inspect
 
-    from bucket_to_bigquery_spark.queries import packstats as m
+    from bucket_to_bigquery_spark.staged import packstats as m
 
     src = inspect.getsource(m.q157)
     assert "pack_chunks(" in src  # the ONE packing definition
 
 
 def test_q159_oracle_embeds_q141s_verbatim():
-    from bucket_to_bigquery_spark.queries.pq_ann import _Q141_ORACLE
+    from bucket_to_bigquery_spark.staged.pq_ann import _Q141_ORACLE
 
     oracle = STAGED["q159_pq_recall_audit"].oracle
     assert oracle.startswith(f"WITH adc AS (SELECT * FROM ({_Q141_ORACLE})), ")
@@ -119,7 +119,7 @@ def test_q159_oracle_embeds_q141s_verbatim():
 def test_q159_builder_calls_q141s_scan():
     import inspect
 
-    from bucket_to_bigquery_spark.queries import pq_recall as m
+    from bucket_to_bigquery_spark.staged import pq_recall as m
 
     src = inspect.getsource(m.q159)
     assert "pq_adc_topk(" in src  # the ONE ADC scan definition
@@ -287,7 +287,7 @@ def test_q159_exact_leg_and_composition(spark, sf_dir):
     intersections."""
     from pyspark.sql import functions as F
 
-    from bucket_to_bigquery_spark.queries.pq_ann import pq_adc_topk
+    from bucket_to_bigquery_spark.staged.pq_ann import pq_adc_topk
 
     emb = tables(spark, sf_dir)["embeddings"]
     vecs = {r.vec_id: r.embedding

@@ -18,7 +18,8 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from bucket_to_bigquery_spark.queries import all_queries, outer_join_stream
+from bucket_to_bigquery_spark.queries import all_queries
+from bucket_to_bigquery_spark.staged import outer_join_stream
 from bucket_to_bigquery_spark.queries.registry import (
     Query,
     _with_tuning,

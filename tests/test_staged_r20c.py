@@ -14,11 +14,8 @@ from __future__ import annotations
 import hashlib
 from collections import defaultdict
 
-from bucket_to_bigquery_spark.queries import (
-    all_queries,
-    datacard,
-    rendezvous,
-)
+from bucket_to_bigquery_spark.queries import all_queries
+from bucket_to_bigquery_spark.staged import datacard, rendezvous
 from bucket_to_bigquery_spark.queries.registry import (
     Query,
     _with_tuning,

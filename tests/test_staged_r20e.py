@@ -11,7 +11,8 @@ from __future__ import annotations
 
 from collections import defaultdict
 
-from bucket_to_bigquery_spark.queries import all_queries, bursts, embedhealth
+from bucket_to_bigquery_spark.queries import all_queries
+from bucket_to_bigquery_spark.staged import bursts, embedhealth
 from bucket_to_bigquery_spark.queries.registry import (
     Query,
     _with_tuning,
