@@ -67,17 +67,24 @@ def shingles(tokens_col: Column, n: int = 3) -> Column:
 # ---------------------------------------------------------------------------
 
 
+def exact_dedup_key(col) -> Column:
+    """The exact-dedup key: sha256 of the normalized text. Two documents
+    are exact duplicates iff their keys match, so any per-document
+    function of ``normalize_text`` is constant within a duplicate group."""
+    return F.sha2(normalize_text(col), 256)
+
+
 def exact_dedup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Hash-group exact duplicates: → (text_hash, n_copies, keep_id).
 
     ``keep_id = min(id)`` is the deterministic survivor rule. One hash
-    shuffle on sha256(normalized text); survivors come from a semi-join of
+    shuffle on :func:`exact_dedup_key`; survivors come from a semi-join of
     the input against this frame (never a window over raw text).
     """
     return (
         df.select(
             F.col(id_col).alias("doc_id"),
-            F.sha2(normalize_text(text_col), 256).alias("text_hash"),
+            exact_dedup_key(text_col).alias("text_hash"),
         )
         .groupBy("text_hash")
         .agg(

@@ -200,9 +200,9 @@ def q78(spark: SparkSession, sf_dir: str) -> DataFrame:
     # expressions as a literal — dropping the per-iteration 1-row
     # crossJoin broadcasts (the "6 BNLJs" of the r15 plan audit).
     # Intermediate checkpoint blocks are freed as soon as the next round
-    # materializes; the final round's blocks back the returned frame
-    # (the CC operator's retain="checkpoint" mode — bench sweeps and
-    # session clearCache/unpersist reclaim them).
+    # materializes; the final round's blocks back the returned frame and
+    # stay until an sc-level sweep (the bench's) frees them — they are
+    # invisible to clearCache/unpersist.
     sc = spark.sparkContext
 
     def _ckpt(df: DataFrame) -> tuple[DataFrame, list[int]]:

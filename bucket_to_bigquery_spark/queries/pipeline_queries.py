@@ -18,16 +18,20 @@ pure integer arithmetic (`div` in Spark ≡ `//` in DuckDB).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators.dedup import exact_dedup_key, ngram_jaccard_pairs
+from ..operators.graph import _checkpoint, _free, connected_components
 from ..operators.substring import (
     repeated_substring_spans,
     substring_scrub,
     substring_scrub_counts,
 )
-from .llm_queries import CORPUS_SQL, _TOKS_SQL, _dedup_corpus
+from .llm_queries import CORPUS_SQL, _TOKS_SQL, _dedup_corpus, quality_gates
 from .registry import query, tables
 
 # ---------------------------------------------------------------------------
@@ -329,6 +333,83 @@ _Q54_SQL = (
 )
 
 
+def preprocess(
+    docs: DataFrame,
+    *,
+    gates: bool = True,
+    n: int = 3,
+    threshold: float = 0.6,
+    max_shingle_df: int = 100,
+) -> tuple[DataFrame, Callable[[], None]]:
+    """The preprocessing front end shared by q54 and ``run pipeline``:
+    exact dedup → quality gates → n-gram-Jaccard near-dup pairs →
+    connected-components min-id survivors, over a (doc_id, text) frame.
+
+    Returns the near-dup survivor frame ``(doc_id, text)`` (each
+    survivor's raw text) and a ``release()`` that frees the blocks the
+    frame reads: its checkpoint and the CC publish cache. Call it only
+    after every consumer of the frame has been materialized — a
+    localCheckpoint has no lineage to rebuild from.
+
+    Exact dedup runs BEFORE the gates although the q54 oracle gates
+    first: every gate is a pure function of the normalized text
+    (quality_gates derives toks/nc from normalize_text) and the dedup
+    key is sha256 of that same normalized text (exact_dedup_key), so the
+    gate verdict is constant within a hash group, a group either
+    survives gating whole or vanishes whole, and min(doc_id) over the
+    gated group equals min(doc_id) over the full group. Gating after
+    dedup therefore keeps exactly the gates-first survivor set (oracle
+    parity + the hypothesis differential suite). Dedup-first is ONE
+    corpus scan into ONE map-side-combined aggregate — min_by carries
+    the keeper's raw text through the exchange, so no survivor join
+    back against the corpus — and the tokenize-heavy gate chain runs
+    once over survivors only (the gates-first shape scanned the corpus
+    8 times, plans/r17/q54_exact_surv_subtree_before.txt).
+
+    The survivor frame feeds five subtrees — the pair miner, the CC node
+    set, the survivor join, and the scrub's window-index and token-count
+    branches — and as one lazy lineage each consumer would re-run the
+    dedup chain from the corpus scan. The dedup aggregate is checkpointed
+    once; with gates on, the gated survivors are checkpointed in turn
+    (both join inputs read the first checkpoint, so the gate chain runs
+    exactly once) and the first checkpoint is freed.
+    """
+    survivors, ids = _checkpoint(
+        docs.select("doc_id", "text", exact_dedup_key("text").alias("h"))
+        .groupBy("h")
+        .agg(
+            F.min("doc_id").alias("doc_id"),
+            F.min_by("text", "doc_id").alias("text"),
+        )
+        .select("doc_id", "text")
+    )
+    if gates:
+        kept = quality_gates(survivors).where("kept").select("doc_id")
+        gated, gated_ids = _checkpoint(survivors.join(kept, "doc_id"))
+        _free(survivors, ids)  # gated is materialized; nothing else reads it
+        survivors, ids = gated, gated_ids
+    pairs = ngram_jaccard_pairs(
+        survivors, "doc_id", "text",
+        n=n, threshold=threshold, max_shingle_df=max_shingle_df,
+    )
+    comp = connected_components(
+        pairs, src="id_a", dst="id_b",
+        nodes=survivors.select("doc_id"), node_col="doc_id",
+        nodes_unique=True,  # doc_id is the dedup group's min id
+        edges_unique=True,  # pair miner emits each pair once, id_a < id_b
+    )
+    roots = (
+        comp.where(F.col("node") == F.col("cluster_id"))
+        .select(F.col("node").alias("doc_id"))
+    )
+
+    def release() -> None:
+        comp.unpersist()
+        _free(survivors, ids)
+
+    return survivors.join(roots, "doc_id"), release
+
+
 @query(
     "q54_full_pipeline",
     oracle=_Q54_SQL,
@@ -357,69 +438,9 @@ _Q54_SQL = (
     tags=("llm",),
 )
 def q54(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import ngram_jaccard_pairs, normalize_text
-    from ..operators.graph import connected_components
-    from .llm_queries import quality_gates
-
-    corpus = _dedup_corpus(spark, sf_dir)
-    # r17 (guide §2.2/§2.3; the oracle stays gates→dedup): exact dedup
-    # COMMUTES ahead of the quality gates here, because every gate is a
-    # pure function of the NORMALIZED text (quality_gates derives
-    # toks/nc from normalize_text) and the dedup key is sha256 of that
-    # SAME normalized text (the exact_dedup_groups key, verbatim) — so
-    # the gate verdict is constant within a hash group, a group either
-    # survives gating whole or vanishes whole, and min(doc_id) over the
-    # gated group equals min(doc_id) over the full group. Gating after
-    # dedup therefore keeps exactly the oracle's survivor set, proven by
-    # oracle parity at both SFs + the hypothesis differential suite.
-    # Why bother: the old gates-first shape evaluated the tokenize-heavy
-    # gate chain over the FULL corpus on two join sides and scanned the
-    # corpus parquet 8 times below the barrier (plans/r17/
-    # q54_exact_surv_subtree_before.txt). Dedup-first is ONE corpus
-    # scan into ONE map-side-combined aggregate — min_by carries the
-    # keeper's raw text through the exchange, so no survivor join back
-    # against the corpus — and the gate chain runs ONCE over survivors
-    # only.
-    keepers = (
-        corpus.select(
-            "doc_id", "text",
-            F.sha2(normalize_text("text"), 256).alias("h"),
-        )
-        .groupBy("h")
-        .agg(
-            F.min("doc_id").alias("doc_id"),
-            F.min_by("text", "doc_id").alias("text"),
-        )
-        .select("doc_id", "text")
-    )
-    # r16/r17 (guide §3.3 plan truncation / §5 lineage): the
-    # exact-survivor frame feeds FIVE subtrees — the pair miner, the CC
-    # node set, the survivor join, and the scrub's window-index and
-    # token-count branches — and as one lazy lineage each consumer
-    # re-ran the dedup chain from the corpus scan. Checkpoint 1
-    # materializes the dedup aggregate once; checkpoint 2 materializes
-    # the gated survivors (its two join inputs both read checkpoint-1
-    # blocks, so the gate chain executes exactly once). Row content is
-    # unchanged (both frames are deterministic), so the oracle is
-    # untouched. Block cleanup is the bench's documented sweep contract
-    # (same as connected_components' iteration blocks).
-    keepers = keepers.localCheckpoint(eager=True)
-    kept = quality_gates(keepers).where("kept").select("doc_id")
-    exact_surv = keepers.join(kept, "doc_id").localCheckpoint(eager=True)
-    pairs = ngram_jaccard_pairs(
-        exact_surv, "doc_id", "text", n=3, threshold=0.6, max_shingle_df=100
-    )
-    comp = connected_components(
-        pairs, src="id_a", dst="id_b",
-        nodes=exact_surv.select("doc_id"), node_col="doc_id",
-        nodes_unique=True,  # doc_id unique after exact-survivor semi-join
-        edges_unique=True,  # pair miner emits each pair once, id_a < id_b
-    )
-    surv = (
-        comp.where(F.col("node") == F.col("cluster_id"))
-        .select(F.col("node").alias("doc_id"))
-    )
-    final = exact_surv.join(surv, "doc_id")
+    # the returned plan reads preprocess()'s blocks lazily, so q54 leaves
+    # them to the session sweep instead of calling release()
+    final, _release = preprocess(_dedup_corpus(spark, sf_dir))
     # scrub stage, counts projection: packing needs n_kept, not rebuilt
     # text, and substring_scrub_counts derives it as per-doc span
     # arithmetic (removed = Σ span_tokens, exact by span disjointness —

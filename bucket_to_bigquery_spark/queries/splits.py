@@ -45,7 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.dedup import normalize_text
+from ..operators.dedup import exact_dedup_key
 from .llm_queries import _NORM_SQL
 from .registry import query, tables
 
@@ -119,7 +119,7 @@ def _assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select((F.col("doc_id") + 100000).alias("doc_id"), "text")
     )
     keyed = corpus.select(
-        "doc_id", F.sha2(normalize_text("text"), 256).alias("text_hash")
+        "doc_id", exact_dedup_key("text").alias("text_hash")
     )
     bucket = (
         F.conv(

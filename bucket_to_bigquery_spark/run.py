@@ -32,7 +32,7 @@ readme.md:38-41, assumes well-sized partitions)::
         --warehouse /data/wh
 
 ``pipeline`` runs the q54 training-data preprocessing composition
-(quality gates → exact dedup → near-dup clustering → ExactSubstr scrub
+(exact dedup → quality gates → near-dup clustering → ExactSubstr scrub
 → sequence packing; beyond-reference surface, SURVEY §2.C Q54) over any
 (id, text) parquet and writes the scrubbed corpus plus the packed-chunk
 manifest::
@@ -189,27 +189,29 @@ def compact_main(argv: list[str]) -> int:
 def pipeline_main(argv: list[str]) -> int:
     """Run the q54 preprocessing composition over a documents parquet.
 
-    Stages (each the registry-audited operator, composed as ONE
-    declarative plan): C4-style quality gates → exact dedup (min-id
-    survivor per normalized text) → n-gram-Jaccard near-dup pair mining
-    + connected-components min-id cluster survivors → ExactSubstr scrub
-    (every cross-document duplicated token span excised; fully-scrubbed
+    Stages: exact dedup (min-id survivor per normalized text) → C4-style
+    quality gates → n-gram-Jaccard near-dup pair mining +
+    connected-components min-id cluster survivors (these three are
+    ``preprocess``, the front end q54 runs) → ExactSubstr scrub (every
+    cross-document duplicated token span excised; fully-scrubbed
     documents dropped) → sharded concat-and-chunk packing.
 
     Writes ``<output>/corpus`` (id, text = the scrubbed NORMALIZED
     token stream, n_tokens) and ``<output>/chunks`` (the per-chunk
     training manifest: shard_id, chunk_id, n_docs, n_tokens, first/last
     doc id), then prints a JSON summary. The scrubbed frame is
-    persisted across the two writes so the expensive dedup stages run
-    once; outputs are written mode=overwrite for idempotent re-runs.
+    persisted across the two writes so the scrub runs once; every block
+    is released before the summary. Outputs are written mode=overwrite
+    for idempotent re-runs.
     """
     from pyspark.sql import functions as F  # noqa: PLC0415
 
-    from .operators.dedup import exact_dedup_groups, ngram_jaccard_pairs
-    from .operators.graph import connected_components
     from .operators.substring import substring_scrub
-    from .queries.llm_queries import quality_gates
-    from .queries.pipeline_queries import pack_chunks_counts
+    from .queries.pipeline_queries import (
+        _Q51_WINDOW,
+        pack_chunks_counts,
+        preprocess,
+    )
 
     ap = argparse.ArgumentParser(prog="bucket_to_bigquery_spark.run pipeline")
     ap.add_argument("--documents", required=True,
@@ -222,7 +224,7 @@ def pipeline_main(argv: list[str]) -> int:
     ap.add_argument("--jaccard-threshold", type=float, default=0.6)
     ap.add_argument("--max-shingle-df", type=int, default=100,
                     help="document-frequency cap bounding hot-shingle fan-out")
-    ap.add_argument("--scrub-window", type=int, default=8,
+    ap.add_argument("--scrub-window", type=int, default=_Q51_WINDOW,
                     help="token window for ExactSubstr span mining")
     ap.add_argument("--no-gates", action="store_true",
                     help="skip the quality-gate stage")
@@ -247,32 +249,13 @@ def pipeline_main(argv: list[str]) -> int:
     )
     n_input = docs.count()
 
-    clean = docs
-    if not args.no_gates:
-        kept = quality_gates(docs).where("kept").select("doc_id")
-        clean = docs.join(kept, "doc_id")
-    groups = exact_dedup_groups(clean, "doc_id", "text")
-    exact_surv = clean.join(
-        groups.select(F.col("keep_id").alias("doc_id")), "doc_id"
-    )
-    pairs = ngram_jaccard_pairs(
-        exact_surv, "doc_id", "text",
-        n=args.ngram, threshold=args.jaccard_threshold,
-        max_shingle_df=args.max_shingle_df,
-    )
-    comp = connected_components(
-        pairs, src="id_a", dst="id_b",
-        nodes=exact_surv.select("doc_id"), node_col="doc_id",
-        nodes_unique=True, edges_unique=True,
-    )
-    surv = (
-        comp.where(F.col("node") == F.col("cluster_id"))
-        .select(F.col("node").alias("doc_id"))
+    final, release = preprocess(
+        docs, gates=not args.no_gates, n=args.ngram,
+        threshold=args.jaccard_threshold, max_shingle_df=args.max_shingle_df,
     )
     scrubbed = (
         substring_scrub(
-            exact_surv.join(surv, "doc_id"), "doc_id", "text",
-            window=args.scrub_window, min_doc_freq=2,
+            final, "doc_id", "text", window=args.scrub_window, min_doc_freq=2,
         )
         .where(F.col("n_kept") > 0)
         .select(
@@ -283,18 +266,19 @@ def pipeline_main(argv: list[str]) -> int:
         .persist()
     )
     out = args.output.rstrip("/")
-    scrubbed.write.mode("overwrite").parquet(f"{out}/corpus")
-    chunks = pack_chunks_counts(
-        scrubbed.select("doc_id", F.col("n_tokens").alias("n_tok"))
-    )
-    chunks.write.mode("overwrite").parquet(f"{out}/chunks")
+    try:
+        scrubbed.write.mode("overwrite").parquet(f"{out}/corpus")
+        pack_chunks_counts(
+            scrubbed.select("doc_id", F.col("n_tokens").alias("n_tok"))
+        ).write.mode("overwrite").parquet(f"{out}/chunks")
+    finally:
+        scrubbed.unpersist()
+        release()
     stats = spark.read.parquet(f"{out}/chunks").agg(
         F.count(F.lit(1)).alias("chunks"),
         F.sum("n_docs").alias("docs"),
         F.sum("n_tokens").alias("tokens"),
     ).collect()[0]
-    comp.unpersist()  # the CC publish cache (retain='cache' default)
-    scrubbed.unpersist()
     print(json.dumps({
         "ok": True,
         "documentsIn": n_input,

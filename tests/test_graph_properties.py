@@ -59,7 +59,7 @@ def _persistent_rdd_ids(spark) -> set[int]:
 
 
 def test_cc_default_retain_is_fully_reclaimable(spark):
-    """retain='cache' (default): after the result is consumed, one
+    """After the published result is consumed, one
     clearCache() reclaims EVERYTHING the call persisted — no checkpoint
     blocks survive it (VERDICT r6 'wrong' #2: pre-r7 each CC call leaked
     one clearCache-immune localCheckpoint RDD for the session's life)."""
@@ -91,24 +91,3 @@ def test_cc_default_retain_is_fully_reclaimable(spark):
             assert "CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND" in str(ex), kwargs
         else:
             assert again == got, kwargs
-
-
-def test_cc_retain_checkpoint_keeps_blocks(spark):
-    """retain='checkpoint' preserves the pre-r7 contract: the final
-    labels stay materialized as localCheckpoint blocks (executor-loss
-    safe), re-collectable after clearCache, reclaimed only by an
-    sc-level sweep."""
-    spark.catalog.clearCache()
-    e = spark.createDataFrame([(1, 2)], ["src", "dst"])
-    labels = connected_components(e, retain="checkpoint")
-    got = {r["node"]: r["cluster_id"] for r in labels.collect()}
-    assert got == {1: 1, 2: 1}
-    spark.catalog.clearCache()
-    # blocks survive the SQL-cache clear and the frame stays live
-    assert {r["node"] for r in labels.collect()} == {1, 2}
-    leftover = _persistent_rdd_ids(spark)
-    assert leftover, "checkpoint mode should retain final-label blocks"
-    for rid in leftover:  # sc-level sweep (what bench.py does)
-        rdd = spark.sparkContext._jsc.getPersistentRDDs().get(rid)
-        if rdd is not None:
-            rdd.unpersist(False)

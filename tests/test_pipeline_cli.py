@@ -46,14 +46,21 @@ def workdir(tmp_path, spark):
     shutil.rmtree(tmp_path, ignore_errors=True)
 
 
+def _persistent_rdd_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+
 def test_pipeline_cli_end_to_end(spark, workdir, capsys):
     out = workdir / "out"
+    before = _persistent_rdd_ids(spark)
     rc = run_main([
         "pipeline",
         "--documents", str(workdir / "docs.parquet"),
         "--output", str(out),
     ])
     assert rc == 0
+    # every checkpoint and cache block the run made is released
+    assert _persistent_rdd_ids(spark) == before
     report = json.loads(capsys.readouterr().out)
     assert report["ok"] is True
     assert report["documentsIn"] == 6
@@ -99,6 +106,27 @@ def test_pipeline_cli_no_gates(spark, workdir, capsys):
     # dropping it (it is no one's duplicate)
     assert report["documentsOut"] == 3
     assert report["tokensOut"] == 22 + 1
+
+
+def test_pipeline_cli_chunks_equal_q54(spark, sf_dir, tmp_path):
+    # the CLI and q54 share one preprocessing definition: over q54's own
+    # planted-duplicate corpus the CLI's chunk manifest is q54's result
+    from bucket_to_bigquery_spark.queries import all_queries
+    from bucket_to_bigquery_spark.queries.llm_queries import _dedup_corpus
+
+    src = tmp_path / "corpus.parquet"
+    _dedup_corpus(spark, sf_dir).write.parquet(str(src))
+    out = tmp_path / "out"
+    rc = run_main(["pipeline", "--documents", str(src), "--output", str(out)])
+    assert rc == 0
+    cols = ["shard_id", "chunk_id", "n_docs", "n_tokens", "first_doc", "last_doc"]
+    got = spark.read.parquet(str(out / "chunks")).select(*cols).collect()
+    want = (
+        all_queries()["q54_full_pipeline"].builder(spark, sf_dir)
+        .select(*cols).collect()
+    )
+    assert want
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
 
 
 def test_pipeline_cli_rejects_non_integral_id_upfront(spark, tmp_path, capsys):

@@ -1,7 +1,8 @@
 """Randomized end-to-end differential test for the q54 full pipeline:
-gates -> exact dedup -> near-dup clusters -> substring scrub -> packing,
-compared against a pure-Python reference composition on hypothesis
-corpora. The oracle parity test covers the one planted corpus; this
+``preprocess()`` (exact dedup -> gates -> near-dup clusters) -> substring
+scrub -> packing, compared against a pure-Python gates-first reference
+composition on hypothesis corpora, so the dedup-first reordering is
+checked too. The oracle parity test covers the one planted corpus; this
 covers the edge cases random corpora produce (everything filtered, no
 duplicates, all duplicates, single-token docs, megatokens,
 stopword-free docs) plus a planted shared-prefix pair that exercises
@@ -17,7 +18,6 @@ from hypothesis import strategies as st
 from bucket_to_bigquery_spark.queries.llm_queries import (
     _LANG_PROFILES,
     _STOPWORDS,
-    quality_gates,
 )
 from bucket_to_bigquery_spark.queries.pipeline_queries import (
     _Q52_SEQ_LEN,
@@ -146,14 +146,10 @@ def _ref_pipeline(docs: dict[int, str]):
 @settings(max_examples=5, deadline=None)
 @given(docs_strategy)
 def test_full_pipeline_matches_reference(spark, texts):
-    from bucket_to_bigquery_spark.operators.dedup import (
-        exact_dedup_groups,
-        ngram_jaccard_pairs,
-    )
-    from bucket_to_bigquery_spark.operators.graph import connected_components
     from bucket_to_bigquery_spark.operators.substring import substring_scrub
     from bucket_to_bigquery_spark.queries.pipeline_queries import (
         pack_chunks_counts,
+        preprocess,
     )
     from pyspark.sql import functions as F
 
@@ -168,28 +164,8 @@ def test_full_pipeline_matches_reference(spark, texts):
     rows += [(201, run8 + " aa bb cc dd ee"), (202, run8 + " ff gg hh ii jj")]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
 
-    kept = quality_gates(df).where("kept").select("doc_id")
-    clean = df.join(kept, "doc_id")
-    groups = exact_dedup_groups(clean, "doc_id", "text")
-    exact_surv = clean.join(
-        groups.select(F.col("keep_id").alias("doc_id")), "doc_id"
-    )
-    pairs = ngram_jaccard_pairs(
-        exact_surv, "doc_id", "text", n=3, threshold=0.6, max_shingle_df=100
-    )
-    comp = connected_components(
-        pairs, src="id_a", dst="id_b",
-        nodes=exact_surv.select("doc_id"), node_col="doc_id",
-        nodes_unique=True, edges_unique=True,
-    )
-    surv = (
-        comp.where(F.col("node") == F.col("cluster_id"))
-        .select(F.col("node").alias("doc_id"))
-    )
-    scrubbed = substring_scrub(
-        exact_surv.join(surv, "doc_id").select("doc_id", "text"),
-        "doc_id", "text", window=8, min_doc_freq=2,
-    )
+    final, release = preprocess(df)
+    scrubbed = substring_scrub(final, "doc_id", "text", window=8, min_doc_freq=2)
     got = {
         (r["shard_id"], r["chunk_id"]): (
             r["n_docs"], r["n_tokens"], r["first_doc"], r["last_doc"]
@@ -199,5 +175,6 @@ def test_full_pipeline_matches_reference(spark, texts):
             .select("doc_id", F.col("n_kept").alias("n_tok"))
         ).collect()
     }
+    release()
     expect = _ref_pipeline(dict(rows))
     assert got == expect
