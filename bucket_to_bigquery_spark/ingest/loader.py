@@ -25,9 +25,12 @@ explicit schema          widest sniffed headers, manifest-typed prefix +
 Scale notes (100 TB target): the driver only touches file *names* and 4 KB
 header sniffs; all row data moves executor-side through one
 ``spark.read.csv`` over the whole batch (the reference likewise builds ONE
-load job per task, SURVEY §4 "Batching"). The ``_imported`` anti-join is a
-predicate-pushed scan of the audit table filtered to the batch's URIs —
-never a full-table collect.
+load job per task, SURVEY §4 "Batching"). A load scans its CSV once: the
+``maxBadRecords`` validation is observed (``pyspark.sql.Observation``)
+during the staging write and checked before publish, the way a BigQuery
+load job checks it while it loads (BucketToBigQuery.js:334-365). The
+``_imported`` anti-join is a predicate-pushed scan of the audit table
+filtered to the batch's URIs — never a full-table collect.
 """
 
 from __future__ import annotations
@@ -41,7 +44,8 @@ import time
 import uuid
 from dataclasses import dataclass, field as dc_field
 
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType, TimestampType
 
@@ -310,12 +314,13 @@ class BatchLoader:
             spellings = canon.setdefault(self._canon_uri(f), [])
             if f not in spellings:  # DISTINCT per spelling (reference
                 spellings.append(f)  # semantics: one report per uri)
-        hit = (
+        hit = {
+            r["uri"] for r in
             self.spark.read.schema(AUDIT_SCHEMA).parquet(path)
             .where(F.col("uri").isin(list(canon)))
-            .select("uri").distinct().collect()
-        )
-        return sorted(s for r in hit for s in canon[r["uri"]])
+            .select("uri").collect()
+        }  # de-duplicated here: a DISTINCT would add a shuffle stage
+        return sorted(s for u in hit for s in canon[u])
 
     def store_as_imported(self, task: Task, files: list[str]) -> None:
         """``storeAsImported`` (BucketToBigQuery.js:390-397). Timestamps are
@@ -417,29 +422,22 @@ class BatchLoader:
 
         raw = self._read_csv(to_load, fields)
         # A cell is BAD iff its raw text is present but fails the typed cast
-        # (try_cast → NULL). One aggregate pass yields both the row count and
-        # the maxBadRecords=0 validation, before anything is written.
-        from .schema_registry import spark_type
-
-        typed_cols = [F.col(f.name).try_cast(spark_type(f.type)).alias(f.name)
+        # (try_cast → NULL). The row count and the bad-row count are
+        # observed on the raw frame while the staging write scans it, so the
+        # batch is read once; maxBadRecords=0 is checked after that write,
+        # before anything is published.
+        typed_cols = [F.col(f.name).try_cast(spark_type_of(f.type)).alias(f.name)
                       for f in fields]
         bad_row = F.lit(False)
         for f in fields:
             bad_row = bad_row | (
                 F.col(f.name).isNotNull()
-                & F.col(f.name).try_cast(spark_type(f.type)).isNull()
+                & F.col(f.name).try_cast(spark_type_of(f.type)).isNull()
             )
-        n_rows, n_bad = raw.select(
-            F.count(F.lit(1)), F.count(F.when(bad_row, 1))
-        ).first()
-        mark("validate")
-        if n_bad:
-            sample = raw.where(bad_row).first()
-            raise ValueError(
-                f"maxBadRecords=0 exceeded: {n_bad} unparseable row(s); "
-                f"first: {sample.asDict()!r}"
-            )
-        data = raw.select(*typed_cols)
+        count_exprs = (F.count(F.lit(1)).alias("rows"),
+                       F.count(F.when(bad_row, 1)).alias("bad"))
+        counts = Observation()
+        data = raw.observe(counts, *count_exprs).select(*typed_cols)
 
         # Idempotent staged commit: the batch is written to a staging dir
         # keyed by a DETERMINISTIC hash of the file set, then published
@@ -467,6 +465,21 @@ class BatchLoader:
         else:
             data.write.mode("overwrite").parquet(staging)
         mark("stage_write")
+        try:
+            n_rows, n_bad = counts.get["rows"], counts.get["bad"]
+        except Py4JJavaError:
+            # No metrics: AQE replaced the plan of an empty shuffle, and the
+            # observation with it (a 0-row partitioned batch). Count rather
+            # than assume 0; only such batches are read twice.
+            n_rows, n_bad = raw.select(*count_exprs).first()
+        if n_bad:
+            self._fs_of(staging).delete(staging)
+            sample = raw.where(bad_row).first()
+            raise ValueError(
+                f"maxBadRecords=0 exceeded: {n_bad} unparseable row(s); "
+                f"first: {sample.asDict()!r}"
+            )
+        mark("validate")
         self._commit_staged(staging, data_dir, batch_key)
         mark("publish")
         report.rows_loaded = n_rows

@@ -34,18 +34,21 @@ from .registry import dsum, dsum_sql, query
 # process-tree cpu 51.8 → 9.0 s, identical 371 output rows. Partition
 # count cannot change any query's RESULT (all sinks are re-sorted, and
 # the sf0.001/sf0.01 oracle parity suite pins the values).
-# Scale contract: this is a state-VOLUME-derived setting, not a core
-# count — rows-per-state-partition should stay near ~1M before adding
-# partitions pays for its commit overhead. B2BQS_STREAM_STATE_PARTITIONS
-# overrides for big-state production topologies; the default stays
-# comparable across the driver's SPARK_GRAFT_CPUS settings.
+# The count is min(defaultParallelism, 8): the cores, capped at 8. It is
+# not derived from state volume; the cap fits these small-state streams,
+# where rows-per-state-partition stays far below the ~1M at which another
+# partition pays for its commit overhead. B2BQS_STREAM_STATE_PARTITIONS
+# overrides it for big-state production topologies.
 _STATE_PARTITIONS_ENV = "B2BQS_STREAM_STATE_PARTITIONS"
 
 
 def _sized_stream_to_memory(sdf: DataFrame, output_mode: str) -> DataFrame:
-    """run_stream_to_memory with the stream's state partition count sized
-    to its state volume (see the module note above) — set for the
-    lifetime of the (synchronous, AvailableNow) run, restored after."""
+    """run_stream_to_memory with the stream's state partition count set to
+    ``min(defaultParallelism, 8)`` (or the env override; see the module
+    note above) for the lifetime of the (synchronous, AvailableNow) run,
+    restored after. It sets the session-global
+    ``spark.sql.shuffle.partitions``, so it assumes single-threaded
+    callers: a query planned on another thread meanwhile sees the count."""
     import os as _os
 
     spark = sdf.sparkSession

@@ -8,9 +8,10 @@ Design notes (100 TB target):
   arithmetic deterministic on any cluster.
 - AQE on: runtime re-planning (coalesce post-shuffle partitions, skew-join
   splitting, dynamic broadcast) is the first line of defense at scale.
-- shuffle.partitions defaults to cores locally; on a real cluster this is
-  overridden to ~2-3× total cores by the submitter — queries never hardcode
-  partition counts.
+- shuffle.partitions defaults to the session's cores (``SPARK_GRAFT_CPUS``
+  when it is a count, else every core of the host); on a real cluster this
+  is overridden to ~2-3× total cores by the submitter — queries never
+  hardcode partition counts.
 """
 
 from __future__ import annotations
@@ -19,17 +20,28 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def shuffle_partitions() -> int:
+    """One shuffle partition per core the session runs on:
+    ``SPARK_GRAFT_CPUS`` when it is an integer (the ``local[N]`` the
+    session is built with), else every core of the host (``local[*]``)."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
+    if cpus.isdigit() and int(cpus) > 0:
+        return int(cpus)
+    return os.cpu_count() or 32
+
+
 # Runtime-settable confs applied to ANY session handed to us (including the
 # driver's): these are safe to set post-startup and are required for
-# deterministic results.
+# deterministic results. ``tune`` adds spark.sql.shuffle.partitions, read
+# from the environment when it runs. It is runtime-set so it reaches
+# sessions a host built with default confs: without it
+# stateful streaming runs 200 state-store partitions — AQE can coalesce
+# batch shuffles but is DISABLED in stateful streaming, so the default
+# dominated the streaming queries' wall clock (measured 78s -> ~25s for
+# q36-q41 at sf0.01 on 32 cores).
 RUNTIME_CONFS = {
     "spark.sql.session.timeZone": "UTC",
-    # Runtime-settable so it reaches host-built default-conf sessions (the
-    # verify driver's): without it stateful streaming runs 200 state-store
-    # partitions — AQE can coalesce batch shuffles but is DISABLED in
-    # stateful streaming, so the default dominated the streaming queries'
-    # wall clock (measured 78s -> ~25s for q36-q41 at sf0.01 on 32 cores).
-    "spark.sql.shuffle.partitions": str(os.cpu_count() or 32),
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
@@ -52,7 +64,9 @@ def tune(spark: SparkSession) -> SparkSession:
     Every public query entry point calls this so results are deterministic
     even when the caller (e.g. the verify driver) built the session.
     """
-    for k, v in RUNTIME_CONFS.items():
+    confs = {**RUNTIME_CONFS,
+             "spark.sql.shuffle.partitions": str(shuffle_partitions())}
+    for k, v in confs.items():
         try:
             spark.conf.set(k, v)
         except Exception:
@@ -70,7 +84,7 @@ def get_spark(app_name: str = "bucket-to-bigquery-spark") -> SparkSession:
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(os.cpu_count() or 32))
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions()))
         .config("spark.driver.memory", os.environ.get("B2BQS_DRIVER_MEM", "16g"))
         .config("spark.driver.maxResultSize", "4g")
         .config("spark.ui.enabled", "false")

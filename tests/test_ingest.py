@@ -303,7 +303,8 @@ def test_jagged_short_rows_null_fill(spark, workdir):
 
 
 def test_max_bad_records_zero_fails_load(spark, workdir):
-    # maxBadRecords: 0 — an unparseable cell fails the load BEFORE any write
+    # maxBadRecords: 0 — an unparseable cell fails the load before
+    # anything is published
     _write_csv(
         f"{workdir}/src/x.csv",
         ["timestamp", "utc_offset", "location"],
@@ -313,9 +314,57 @@ def test_max_bad_records_zero_fails_load(spark, workdir):
     with pytest.raises(ValueError, match="maxBadRecords"):
         loader.run(_manifest(workdir))
     assert not os.path.exists(f"{workdir}/warehouse/d.readings/data")
+    # the staged write the counts were observed on is gone too
+    staging = f"{workdir}/warehouse/d.readings/data.staging"
+    assert not os.path.isdir(staging) or os.listdir(staging) == []
     # and nothing was audited → the batch is retryable (the upgrade over
     # the reference's mark-after-launch hazard, SURVEY §3 step 8)
     assert not os.path.exists(f"{workdir}/warehouse/d.readings/_imported")
+
+    _write_csv(
+        f"{workdir}/src/x.csv",
+        ["timestamp", "utc_offset", "location"],
+        [["2024-01-01 00:00:00", "1.5", "syd"]],
+    )
+    (r,) = loader.run(_manifest(workdir))
+    assert r.rows_loaded == 1 and r.files_loaded == [f"{workdir}/src/x.csv"]
+    assert loader.read_table(_manifest(workdir).tasks[0]).count() == 1
+
+
+def test_header_only_batch_loads_zero_rows(spark, workdir):
+    # a 0-row batch into a DAY-partitioned table: AQE drops the empty
+    # shuffle's plan, and with it the observed counts; the load still
+    # validates, publishes nothing and audits the file
+    _write_csv(f"{workdir}/src/h.csv",
+               ["timestamp", "utc_offset", "location"], [])
+    loader = BatchLoader(spark, f"{workdir}/warehouse")
+    (r,) = loader.run(_manifest(workdir))
+    assert r.partition_field == "timestamp"
+    assert r.rows_loaded == 0 and r.files_loaded == [f"{workdir}/src/h.csv"]
+    assert loader.read_audit(_manifest(workdir).tasks[0]).count() == 1
+
+
+def test_first_load_scans_its_csv_once(spark, workdir):
+    # the maxBadRecords counts are observed during the staging write, so
+    # a load reads its CSV bytes once (a separate validate pass read ~2x)
+    from perfbench.stages import group_counters
+
+    rows = [[f"2024-01-{d:02d} 00:00:00", f"{d}.5", f"loc{d}"]
+            for d in range(1, 29)]
+    for name in ("a", "b"):
+        _write_csv(f"{workdir}/src/{name}.csv",
+                   ["timestamp", "utc_offset", "location"], rows * 40)
+    csv_bytes = sum(os.path.getsize(f"{workdir}/src/{n}.csv") for n in "ab")
+    loader = BatchLoader(spark, f"{workdir}/warehouse")
+    sc = spark.sparkContext
+    sc.setJobGroup("test-first-load-scan", "first load")
+    try:
+        (r,) = loader.run(_manifest(workdir))
+    finally:
+        sc._jsc.clearJobGroup()
+    assert r.rows_loaded == 2 * 28 * 40
+    read = group_counters(sc, "test-first-load-scan")["input_bytes"]
+    assert csv_bytes <= read <= 1.1 * csv_bytes
 
 
 def test_incompatible_headers_raise(spark, workdir):
@@ -482,21 +531,84 @@ def test_files_already_imported_reports_every_spelling(spark, workdir):
     assert got == sorted([f"{build}/a.csv", f"{pub}/a.csv"])
 
 
+_EDGE_EVENTS = [
+    _envelope("OBJECT_FINALIZE", "storage#object", "sl1", "bkt", "drop/a.csv"),
+    _envelope("OBJECT_FINALIZE", "storage#object", "sl1", "bkt", "drop/a.csv"),  # redelivered: dedup by selfLink
+    _envelope("OBJECT_DELETE", "storage#object", "sl2", "bkt", "drop/b.csv"),    # wrong eventType
+    _envelope("OBJECT_FINALIZE", "storage#notobject", "sl3", "bkt", "drop/c.csv"),  # wrong kind
+    {"message": {"attributes": {"eventType": "OBJECT_FINALIZE"}, "data": None}},  # no payload -> fails kind filter
+    _envelope("OBJECT_FINALIZE", "storage#object", "sl4", "bkt2", "x/y.csv"),
+]
+
+
 def test_event_envelope_decode_semantics(spark):
     from bucket_to_bigquery_spark.ingest import events_to_candidates
 
-    evs = [
-        _envelope("OBJECT_FINALIZE", "storage#object", "sl1", "bkt", "drop/a.csv"),
-        _envelope("OBJECT_FINALIZE", "storage#object", "sl1", "bkt", "drop/a.csv"),  # redelivered: dedup by selfLink
-        _envelope("OBJECT_DELETE", "storage#object", "sl2", "bkt", "drop/b.csv"),    # wrong eventType
-        _envelope("OBJECT_FINALIZE", "storage#notobject", "sl3", "bkt", "drop/c.csv"),  # wrong kind
-        {"message": {"attributes": {"eventType": "OBJECT_FINALIZE"}, "data": None}},  # no payload -> fails kind filter
-        _envelope("OBJECT_FINALIZE", "storage#object", "sl4", "bkt2", "x/y.csv"),
-    ]
-    assert events_to_candidates(spark, evs) == [
+    assert events_to_candidates(spark, _EDGE_EVENTS) == [
         "gs://bkt/drop/a.csv", "gs://bkt2/x/y.csv"
     ]
     assert events_to_candidates(spark, []) == []
+
+
+def _dataframe_decode(spark, lines, **kw):
+    from bucket_to_bigquery_spark.ingest import finalize_object_uris
+
+    df = spark.createDataFrame([(ln,) for ln in lines], ["envelope"])
+    return sorted(r["uri"] for r in finalize_object_uris(df, **kw).collect())
+
+
+def test_event_decode_drops_objects_without_bucket_or_name(spark):
+    # a finalized storage#object with no bucket or no name names no file:
+    # both decoders drop it, alone or mixed with good notifications
+    from bucket_to_bigquery_spark.ingest import events_to_candidates
+
+    def partial(self_link, **obj):
+        data = base64.b64encode(json.dumps(
+            {"kind": "storage#object", "selfLink": self_link, **obj}
+        ).encode()).decode()
+        return {"message": {"attributes": {"eventType": "OBJECT_FINALIZE"},
+                            "data": data}}
+
+    no_bucket = partial("sl8", name="drop/z.csv")
+    no_name = partial("sl9", bucket="bkt")
+    assert events_to_candidates(spark, [no_bucket]) == []
+    mixed = [no_bucket, *_EDGE_EVENTS, no_name]
+    want = ["gs://bkt/drop/a.csv", "gs://bkt2/x/y.csv"]
+    assert events_to_candidates(spark, mixed) == want
+    assert _dataframe_decode(spark, [json.dumps(e) for e in mixed]) == want
+    assert events_to_candidates(spark, mixed, uri_format="/{name}") == [
+        "/drop/a.csv", "/x/y.csv"]
+
+
+def test_driver_decode_matches_dataframe_decode(spark):
+    # the two decoders share no code; they must agree on every corpus
+    from bucket_to_bigquery_spark.ingest import events_to_candidates
+    from bucket_to_bigquery_spark.queries.notify import _envelope_lines
+
+    lines = _envelope_lines(list(range(0, 1300, 20)))
+    events = []
+    for ln in lines:
+        try:
+            events.append(json.loads(ln))
+        except ValueError:  # the corpus's non-JSON line never reaches a list
+            pass
+    assert events_to_candidates(spark, events) == _dataframe_decode(spark, lines)
+    edge = [json.dumps(e) for e in _EDGE_EVENTS]
+    for fmt in ("gs://{bucket}/{name}", "/{name}"):
+        assert events_to_candidates(spark, _EDGE_EVENTS, uri_format=fmt) \
+            == _dataframe_decode(spark, edge, uri_format=fmt)
+
+
+def test_driver_decode_runs_no_spark_job(spark):
+    from bucket_to_bigquery_spark.ingest import events_to_candidates
+
+    sc = spark.sparkContext
+    sc.setJobGroup("test-driver-decode", "driver-side envelope decode")
+    try:
+        assert events_to_candidates(spark, _EDGE_EVENTS)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert list(sc.statusTracker().getJobIdsForGroup("test-driver-decode")) == []
 
 
 def test_cli_mock_events_dry_run(spark, workdir, capsys):
