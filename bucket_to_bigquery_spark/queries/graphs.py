@@ -24,13 +24,10 @@ unrolled CTEs. The floor leaks < 1 unit per division (bounded by
 edges + nodes per round ≪ S); mass conservation within that bound is
 pinned in pytest.
 
-Scale design (100 TB): the edge list is built once (the q76 a-priori
-shape: distinct → per-basket self-join → support filter) and CACHED —
-the registry's deliberate-cache policy (q31c's stacked views, the
-bounded cell/day frames of q80/q83/q84, and this): a multi-consumer
-derived frame whose re-derivation would replay an expensive pipeline —
-here an iterative algorithm re-reads its invariant edge set 5×, and
-re-deriving it would re-run the self-join per iteration. Per iteration
+Scale design (100 TB): the edge list is mined once (basket pair
+enumeration → support filter) and materialized with
+``materialize.compact`` — the iteration re-reads its invariant edge set
+5×, and re-deriving it would re-run the mining per round. Per iteration
 the rank vector (one row per NODE, vocabulary-bounded: parts dimension)
 broadcasts to the edge partitions and the contribution sum shuffles on
 dst — the edge stream itself never re-partitions. Beyond ~10M nodes the
@@ -47,6 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.materialize import checkpoint, compact
 from .registry import query, tables
 
 _S = 10**12  # rank mass scale (e12)
@@ -133,25 +131,6 @@ def _cooccurrence_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _pairs_from_baskets(baskets)
 
 
-# A mined graph is usually orders of magnitude smaller than its input
-# (the cooc >= _MIN_COOC filter keeps 3.6k edges from 1.2M candidate
-# pairs at sf0.1), but a CACHED frame pins the mining shuffle's
-# partitioning — AQE cannot re-coalesce InMemoryRelation output
-# (canChangeCachedPlanOutputPartitioning is off by default) — so every
-# downstream stage ran a full shuffle-partition-wide task wave over a
-# few thousand rows, and the iterative/multi-consumer reads multiplied
-# that fixed per-task cost (q78b measured 64-task waves over 3.6k rows;
-# ~0.1 cpu-s per task). _compact_graph materializes the mined frame
-# ONCE (eager localCheckpoint — no columnar cache conversion), counts
-# it (a bounded scalar the callers already need: q78b outputs n_edges,
-# q78 needs the empty-graph exit), and coalesces the checkpointed
-# blocks to a partition count derived from the MEASURED size — 1 task
-# per ~100k edges, capped at cluster width. Scale-adaptive by
-# construction: a 10^9-edge co-occurrence graph keeps defaultParallelism
-# partitions; the bench graph collapses to 1.
-_ROWS_PER_GRAPH_PARTITION = 100_000
-
-
 def _pairs_from_baskets(baskets: DataFrame) -> DataFrame:
     pair_arr = F.flatten(
         F.transform(
@@ -173,71 +152,34 @@ def _pairs_from_baskets(baskets: DataFrame) -> DataFrame:
     )
 
 
-def _compact_graph(df: DataFrame) -> tuple[DataFrame, int]:
-    """Materialize a mined graph frame once and right-size its
-    partitioning to its measured row count (see the note above).
-    Returns (frame, n_rows)."""
-    ck = df.localCheckpoint(eager=True)
-    n = ck.count()
-    sc = df.sparkSession.sparkContext
-    parts = max(1, min(sc.defaultParallelism,
-                       -(-n // _ROWS_PER_GRAPH_PARTITION)))
-    return ck.coalesce(parts), n
-
-
 @query("q78_pagerank", oracle=_pagerank_oracle(),
        description=_Q78_DESCRIPTION, tags=("graph", "analytics"))
 def q78(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r16 iteration shape: each round's rank frame materializes as a
-    # localCheckpoint instead of staying a lazy subtree. The old unroll
-    # was ONE plan whose five nested BroadcastExchanges re-planned and
-    # re-executed the whole iteration chain sequentially inside a single
-    # action (the q47b BroadcastExchange-subtree lesson) — plan size and
-    # codegen grew with the iteration count. Now each round's broadcast
-    # reads the previous round's materialized |nodes| rows, the per-round
-    # plan is constant-size (standard Pregel practice), and n_nodes is a
-    # driver scalar (one bounded count) folded into the integer
-    # expressions as a literal — dropping the per-iteration 1-row
-    # crossJoin broadcasts (the "6 BNLJs" of the r15 plan audit).
-    # Intermediate checkpoint blocks are freed as soon as the next round
-    # materializes; the final round's blocks back the returned frame and
-    # stay until an sc-level sweep (the bench's) frees them — they are
-    # invisible to clearCache/unpersist.
-    sc = spark.sparkContext
-
-    def _ckpt(df: DataFrame) -> tuple[DataFrame, list[int]]:
-        before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
-        out = df.localCheckpoint(eager=True)
-        after = sc._jsc.getPersistentRDDs().keySet().toArray()
-        return out, [i for i in after if i not in before]
-
-    def _free(ids: list[int]) -> None:
-        jmap = sc._jsc.getPersistentRDDs()
-        for i in ids:
-            rdd = jmap.get(i)
-            if rdd is not None:
-                rdd.unpersist(False)
-
-    # r17: the invariant edge/degree frames are _compact_graph
-    # materializations instead of .cache() — the caches pinned the
-    # mining shuffle's partition count, so every one of the 5 iterations
-    # re-ran full-width task waves over a few thousand rows (see the
-    # _compact_graph note); the checkpointed blocks are read narrowly at
-    # the size-derived width every round, and the counts they need were
-    # already part of the algorithm (empty-graph exit / n_nodes scalar).
-    pairs, n_edges = _compact_graph(_cooccurrence_pairs(spark, sf_dir))
+    # Each round's rank frame is a materialize.checkpoint, so a round's
+    # broadcast reads the previous round's |nodes| rows and the per-round
+    # plan stays constant-size (as one lazy unroll, five nested
+    # BroadcastExchanges re-ran the whole chain inside one action), and
+    # n_nodes is a driver scalar folded in as a literal instead of a
+    # per-round 1-row crossJoin. The edge/degree frames are compact()ed
+    # (width note in operators/materialize.py); the counts it measures
+    # are ones the algorithm needs anyway. A round's checkpoint is
+    # released once the next exists, the edge/degree frames once the
+    # last round does; only the final round backs the returned frame.
+    pairs, _, release_pairs = compact(_cooccurrence_pairs(spark, sf_dir))
     edges = pairs.select(
         F.col("pa").alias("src"), F.col("pb").alias("dst")
     ).unionAll(pairs.select(F.col("pb").alias("src"),
                             F.col("pa").alias("dst")))
-    deg, n_nodes = _compact_graph(
+    deg, n_nodes, release_deg = compact(
         edges.groupBy(F.col("src").alias("node"))
         .agg(F.count(F.lit(1)).cast("long").alias("deg"))
     )
     if n_nodes == 0:
+        release_pairs()
+        release_deg()
         return spark.createDataFrame([], "part long, deg long, pr_e12 long")
 
-    ranks, rank_ids = _ckpt(deg.selectExpr(
+    ranks, release_ranks = checkpoint(deg.selectExpr(
         "node", "deg", f"CAST({_S // n_nodes} AS BIGINT) AS r"
     ))
     base = (15 * _S) // (100 * n_nodes)
@@ -252,15 +194,17 @@ def q78(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("dst")
             .agg(F.sum("c").alias("s"))
         )
-        nxt, nxt_ids = _ckpt(
+        nxt, release_nxt = checkpoint(
             deg.join(F.broadcast(contrib), deg.node == contrib.dst, "left")
             .selectExpr(
                 "node", "deg",
                 f"CAST({base} + (85 * coalesce(s, 0)) div 100 AS BIGINT) AS r",
             )
         )
-        _free(rank_ids)
-        ranks, rank_ids = nxt, nxt_ids
+        release_ranks()
+        ranks, release_ranks = nxt, release_nxt
+    release_pairs()
+    release_deg()
     return (
         ranks.select(F.col("node").alias("part"), "deg",
                      F.col("r").alias("pr_e12"))
@@ -302,20 +246,18 @@ _Q78B_DESCRIPTION = (
 @query("q78b_triangle_count", oracle=_Q78B_ORACLE,
        description=_Q78B_DESCRIPTION, tags=("graph", "analytics"))
 def q78b(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r17: _compact_graph materializations replace the caches (the
-    # mining feeds deg, the edge total AND the orientation; the old
-    # cached frames pinned full-width partitioning over a few thousand
-    # rows — see the _compact_graph note), deg is materialized once for
-    # its THREE consumers (du/dv/stats; it was recomputed per consumer
-    # before), and n_edges folds in as the measured driver scalar
-    # instead of a crossJoined 1-row aggregate.
-    und, n_edges = _compact_graph(
+    # compact() sizes the mined edges and deg (width note in
+    # operators/materialize.py); deg is materialized once for its three
+    # consumers (du/dv/stats) and n_edges is the measured driver scalar.
+    # und is released once ordered exists; deg and ordered back the
+    # returned frame.
+    und, n_edges, release_und = compact(
         _cooccurrence_pairs(spark, sf_dir)
         .select(F.col("pa").alias("u"), F.col("pb").alias("v"))
     )
     edges = und.unionAll(und.select(F.col("v").alias("u"),
                                     F.col("u").alias("v")))
-    deg, _ = _compact_graph(
+    deg, _, _ = compact(
         edges.groupBy(F.col("u").alias("node")).agg(
             F.count(F.lit(1)).cast("long").alias("deg")
         )
@@ -323,16 +265,16 @@ def q78b(spark: SparkSession, sf_dir: str) -> DataFrame:
     du = deg.select(F.col("node").alias("u"), F.col("deg").alias("deg_u"))
     dv = deg.select(F.col("node").alias("v"), F.col("deg").alias("deg_v"))
     lower = (F.struct("deg_u", "u") < F.struct("deg_v", "v"))
-    ordered = (
+    # three wedge-join consumers (e1/e2/e3); narrow over the und
+    # checkpoint, so it materializes at the size-derived width
+    ordered, _ = checkpoint(
         und.join(F.broadcast(du), "u").join(F.broadcast(dv), "v")
         .select(
             F.when(lower, F.col("u")).otherwise(F.col("v")).alias("lo"),
             F.when(lower, F.col("v")).otherwise(F.col("u")).alias("hi"),
         )
-        # three wedge-join consumers (e1/e2/e3); narrow over the und
-        # checkpoint, so it materializes at the size-derived width
-        .localCheckpoint(eager=True)
     )
+    release_und()
     e1 = ordered.select(F.col("lo").alias("x"), F.col("hi").alias("y"))
     e2 = ordered.select(F.col("lo").alias("y2"), F.col("hi").alias("z"))
     e3 = ordered.select(F.col("lo").alias("x3"), F.col("hi").alias("z3"))

@@ -52,6 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import shingle_hash, shingles, tokens
+from ..operators.materialize import checkpoint
 from .llm_queries import _SH5_SQL, _TOKS_SQL
 from .registry import query, tables
 
@@ -183,9 +184,10 @@ def _overlap_via_source_sets(spark: SparkSession, docs: DataFrame) -> DataFrame:
     # setc is tiny (≤ 2^|sources| rows) but feeds TWO consumers (pair
     # counts + set sizes) — without a barrier each consumer re-ran the
     # whole corpus-sized shingle pipeline (2 full copies in the plan).
-    # An eager localCheckpoint of the tiny frame runs it ONCE (the old
-    # shape paid a corpus-sized .cache() for the same sharing).
-    setc = setc.localCheckpoint(eager=True)
+    # An eager checkpoint of the tiny frame runs it ONCE (the old shape
+    # paid a corpus-sized .cache() for the same sharing). The returned
+    # plan reads it lazily, so its blocks are left to the session sweep.
+    setc, _ = checkpoint(setc)
     sizes = (
         setc.select(F.explode("srcs").alias("source"), "cnt")
         .groupBy("source")

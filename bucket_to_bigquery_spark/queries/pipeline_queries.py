@@ -25,7 +25,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..operators.dedup import exact_dedup_key, ngram_jaccard_pairs
-from ..operators.graph import _checkpoint, _free, connected_components
+from ..operators.graph import connected_components
+from ..operators.materialize import checkpoint
 from ..operators.substring import (
     repeated_substring_spans,
     substring_scrub,
@@ -374,7 +375,7 @@ def preprocess(
     (both join inputs read the first checkpoint, so the gate chain runs
     exactly once) and the first checkpoint is freed.
     """
-    survivors, ids = _checkpoint(
+    survivors, release = checkpoint(
         docs.select("doc_id", "text", exact_dedup_key("text").alias("h"))
         .groupBy("h")
         .agg(
@@ -385,9 +386,9 @@ def preprocess(
     )
     if gates:
         kept = quality_gates(survivors).where("kept").select("doc_id")
-        gated, gated_ids = _checkpoint(survivors.join(kept, "doc_id"))
-        _free(survivors, ids)  # gated is materialized; nothing else reads it
-        survivors, ids = gated, gated_ids
+        gated, release_gated = checkpoint(survivors.join(kept, "doc_id"))
+        release()  # gated is materialized; nothing else reads it
+        survivors, release = gated, release_gated
     pairs = ngram_jaccard_pairs(
         survivors, "doc_id", "text",
         n=n, threshold=threshold, max_shingle_df=max_shingle_df,
@@ -403,11 +404,11 @@ def preprocess(
         .select(F.col("node").alias("doc_id"))
     )
 
-    def release() -> None:
+    def release_all() -> None:
         comp.unpersist()
-        _free(survivors, ids)
+        release()
 
-    return survivors.join(roots, "doc_id"), release
+    return survivors.join(roots, "doc_id"), release_all
 
 
 @query(

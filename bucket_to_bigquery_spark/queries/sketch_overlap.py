@@ -55,6 +55,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import shingles, tokens
+from ..operators.materialize import checkpoint
 from .llm_queries import _SH5_SQL, _TOKS_SQL
 from .registry import query, tables
 
@@ -146,9 +147,10 @@ def q89b(spark: SparkSession, sf_dir: str) -> DataFrame:
     # comp_wide is |sources| rows × 65 columns but feeds BOTH self-join
     # sides — without a barrier each side re-ran the corpus-sized
     # shingle→md5→64-min aggregate (2 full copies in the plan, the
-    # dominant cost). An eager localCheckpoint of the tiny frame runs
-    # it once (r16; the q54/q89 barrier rationale).
-    comp_wide = comp_wide.localCheckpoint(eager=True)
+    # dominant cost). An eager checkpoint of the tiny frame runs it once
+    # (r16; the q54/q89 barrier rationale). The returned plan reads it
+    # lazily, so its blocks are left to the session sweep.
+    comp_wide, _ = checkpoint(comp_wide)
     comp = comp_wide.select(
         "source",
         F.posexplode(F.array(*[f"m{i}" for i in range(_K)]))

@@ -4,6 +4,8 @@ shapes; this pins arbitrary ones (SURVEY §5.4 property-test strategy)."""
 
 from __future__ import annotations
 
+import logging
+
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -91,3 +93,27 @@ def test_cc_default_retain_is_fully_reclaimable(spark):
             assert "CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND" in str(ex), kwargs
         else:
             assert again == got, kwargs
+
+
+def test_cc_logs_iterations_and_convergence(spark, caplog):
+    """Both CC paths report at INFO how many rounds they ran and whether
+    they converged; an exhausted budget still warns."""
+    e = spark.createDataFrame([(i, i + 1) for i in range(12)], ["src", "dst"])
+    logger = "bucket_to_bigquery_spark.operators.graph"
+    for kwargs in ({}, {"skew_safe": True}):
+        caplog.clear()
+        with caplog.at_level(logging.INFO, logger=logger):
+            connected_components(e, **kwargs).unpersist()
+        info = [r.getMessage() for r in caplog.records
+                if r.levelno == logging.INFO]
+        assert len(info) == 1 and "converged=True" in info[0], kwargs
+        rounds = int(info[0].split(": ")[1].split(" iterations")[0])
+        assert 1 <= rounds <= 25, kwargs
+
+        caplog.clear()
+        with caplog.at_level(logging.INFO, logger=logger):
+            connected_components(e, max_iterations=1, **kwargs).unpersist()
+        info = [r.getMessage() for r in caplog.records
+                if r.levelno == logging.INFO]
+        assert info and "1 iterations, converged=False" in info[0], kwargs
+        assert any(r.levelno == logging.WARNING for r in caplog.records)
