@@ -130,17 +130,6 @@ def sniff_csv_headers(content: bytes | str, max_bytes: int = 4000) -> list[str] 
     return next(csv.reader(io.StringIO(first_line)))
 
 
-def sniff_file_headers(path: str, max_bytes: int = 4000) -> list[str] | None:
-    """Ranged header sniff of a local/posix file — the GCS ranged-read
-    analog (commands/GetStorageToBuffer.js:14-42 reads ``[0, maxBytes]``;
-    at 100 TB the sniff stays O(KB) per file regardless of file size)."""
-    try:
-        with open(path, "rb") as fh:
-            return sniff_csv_headers(fh.read(max_bytes), max_bytes)
-    except OSError:
-        return None
-
-
 def build_struct(fields: list[Field]) -> StructType:
     return StructType([StructField(f.name, spark_type(f.type), True) for f in fields])
 

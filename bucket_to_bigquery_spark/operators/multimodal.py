@@ -21,8 +21,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-MEDIA_SCHEMA = "uri string, mime string, payload binary"
-
 
 def attach_payload(df: DataFrame, id_col: str, text_col: str,
                    source_col: str) -> DataFrame:
@@ -57,14 +55,6 @@ def decode_media(mime: str, payload: bytes):
 
 
 DECODERS: dict[str, object] = {}  # mime prefix -> decoder callable
-
-
-def resize_image(payload: bytes, width: int, height: int) -> bytes:
-    """STUB — image resize needs a codec (Pillow/opencv), absent here.
-    Production: register a decoder in DECODERS and implement as
-    decode → resize → re-encode inside :func:`frame_batches`-style
-    mapInPandas stages (bytes in, bytes out, Arrow-batched)."""
-    raise NotImplementedError("no image codec in this environment")
 
 
 def sample_frame_batches(n_frames: int, frame_bytes: int = 16):

@@ -37,24 +37,18 @@ from .registry import dsum, dsum_sql, query
 # The count is min(defaultParallelism, 8): the cores, capped at 8. It is
 # not derived from state volume; the cap fits these small-state streams,
 # where rows-per-state-partition stays far below the ~1M at which another
-# partition pays for its commit overhead. B2BQS_STREAM_STATE_PARTITIONS
-# overrides it for big-state production topologies.
-_STATE_PARTITIONS_ENV = "B2BQS_STREAM_STATE_PARTITIONS"
+# partition pays for its commit overhead.
 
 
 def _sized_stream_to_memory(sdf: DataFrame, output_mode: str) -> DataFrame:
     """run_stream_to_memory with the stream's state partition count set to
-    ``min(defaultParallelism, 8)`` (or the env override; see the module
-    note above) for the lifetime of the (synchronous, AvailableNow) run,
-    restored after. It sets the session-global
+    ``min(defaultParallelism, 8)`` (see the module note above) for the
+    lifetime of the (synchronous, AvailableNow) run, restored after, also
+    when the run raises. It sets the session-global
     ``spark.sql.shuffle.partitions``, so it assumes single-threaded
     callers: a query planned on another thread meanwhile sees the count."""
-    import os as _os
-
     spark = sdf.sparkSession
-    raw = _os.environ.get(_STATE_PARTITIONS_ENV)
-    parts = (max(1, int(raw)) if raw
-             else min(spark.sparkContext.defaultParallelism, 8))
+    parts = min(spark.sparkContext.defaultParallelism, 8)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(parts))
     try:

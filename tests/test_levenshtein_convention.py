@@ -1,8 +1,9 @@
-"""Cross-engine pin of the edit-distance convention q140's
-similarity join relies on: DuckDB's ``levenshtein`` edits UTF-8
-BYTES while Spark's edits code points, so the two agree only on
-ASCII — 'café'→'cafe' is 2 in DuckDB and 1 in raw Spark. The q140
-builder therefore computes Levenshtein over the UTF-8 BYTE VIEW
+"""Cross-engine pin of the edit-distance convention that
+q79_sorted_neighborhood_linkage (``queries/linkage.py``) relies on:
+DuckDB's ``levenshtein`` edits UTF-8 BYTES while Spark's edits code
+points, so the two agree only on ASCII — 'café'→'cafe' is 2 in DuckDB
+and 1 in raw Spark. The q79 builder therefore computes Levenshtein
+over the UTF-8 BYTE VIEW
 (encode to UTF-8, reinterpret as ISO-8859-1 — one char per byte),
 which equals DuckDB's semantic for arbitrary input.
 

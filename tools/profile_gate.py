@@ -1,6 +1,8 @@
-"""Profile the driver's correctness gate locally: run every registered
-query (sorted, like the driver) at a given sf_dir, timing the Spark side
-and the DuckDB oracle side separately.  Usage:
+"""Time each registered query, in name order, at a given sf_dir: the
+Spark side (build and collect) and its DuckDB oracle side separately,
+one JSON line per query, then the slowest twelve.  The session is
+``session.get_spark()``, so the core count follows ``SPARK_GRAFT_CPUS``.
+Usage:
 
     python tools/profile_gate.py [sf_dir] [only_prefix...]
 """
@@ -14,10 +16,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
-
-from bucket_to_bigquery_spark import session as b2b_session
 from bucket_to_bigquery_spark.queries import all_queries
+from bucket_to_bigquery_spark.session import get_spark
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tests"))
 from oracle import duck_connection  # noqa: E402
@@ -26,12 +26,7 @@ from oracle import duck_connection  # noqa: E402
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = sys.argv[2:]
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
-    )
-    b2b_session.tune(spark)
+    spark = get_spark("profile-gate")
     con = duck_connection(sf_dir)
     registry = all_queries()
     names = sorted(registry)
