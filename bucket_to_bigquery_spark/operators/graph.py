@@ -24,15 +24,7 @@ Scale notes (100 TB):
   SQL-cached frame, so ``clearCache()`` reclaims the whole call;
 - convergence is detected with a SCALAR aggregate per round (count of
   changed labels), never by collecting labels to the driver;
-- pointer jumping keeps rounds logarithmic in the diameter; if label-key
-  skew ever dominates (one giant component funneling the min-aggregate),
-  pass ``skew_safe=True`` to switch to star-contraction (alternating
-  large-star/small-star, Kiveris et al., "Connected Components in
-  MapReduce and Beyond", SoCC'14): O(log² n) rounds with per-round
-  aggregation keys that stay balanced because every operation regroups
-  edges by LOCAL node neighborhoods — the giant component never funnels
-  through its minimum's key until the final (by-then tiny) star. Both
-  paths return identical labels (asserted in tests).
+- pointer jumping keeps rounds logarithmic in the diameter.
 """
 
 from __future__ import annotations
@@ -54,7 +46,6 @@ def connected_components(
     nodes: DataFrame | None = None,
     node_col: str = "node",
     max_iterations: int = 25,
-    skew_safe: bool = False,
     nodes_unique: bool = False,
     edges_unique: bool = False,
 ) -> DataFrame:
@@ -70,10 +61,6 @@ def connected_components(
         Optional node universe (one column ``node_col``). Nodes with no
         edges become singleton clusters. Defaults to the ids appearing
         in ``edges``.
-    skew_safe:
-        ``True`` switches to star-contraction (see module docstring) —
-        same result, balanced aggregation keys when one giant component
-        would otherwise funnel the min-aggregate.
     nodes_unique:
         ``True`` asserts ``nodes`` already has one row per node, skipping
         a distinct shuffle (e.g. a primary-key column).
@@ -92,8 +79,6 @@ def connected_components(
         # still read the edge-set checkpoint blocks the publish step
         # frees — the result would be dead-on-arrival, not "unconverged"
         raise ValueError(f"max_iterations must be >= 1, got {max_iterations}")
-    if skew_safe:
-        return _star_contraction(edges, src, dst, nodes, node_col, max_iterations)
     e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
     sym = e.unionAll(e.select(F.col("d").alias("s"), F.col("s").alias("d")))
     if not edges_unique:
@@ -184,103 +169,3 @@ def connected_components(
     )
     return out
 
-
-def _star_contraction(
-    edges: DataFrame,
-    src: str,
-    dst: str,
-    nodes: DataFrame | None,
-    node_col: str,
-    max_iterations: int,
-) -> DataFrame:
-    """Alternating large-star/small-star contraction (Kiveris et al.,
-    SoCC'14, Algorithm 2 "Two-Phase").
-
-    Each round transforms the edge set (all edges kept oriented
-    ``u > v``):
-
-    - **large-star**: group the SYMMETRIC neighborhood of every node
-      ``s``; with ``m = min(Γ(s) ∪ {s})``, re-attach every larger
-      neighbor ``d > s`` directly to ``m``. Long chains halve; every
-      aggregation key is a single node's (local) neighborhood.
-    - **small-star**: group by the larger endpoint ``u``; with
-      ``m = min`` of its smaller neighbors, re-attach ``u`` and all its
-      smaller neighbors to ``m``.
-
-    The edge set converges to stars centered at each component's minimum
-    in O(log² n) rounds; convergence is detected with a scalar
-    symmetric-difference count, never a driver collect. Labels then read
-    straight off the final stars.
-    """
-    e, release_e = checkpoint(
-        edges.select(
-            F.greatest(F.col(src), F.col(dst)).alias("u"),
-            F.least(F.col(src), F.col(dst)).alias("v"),
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
-
-    converged = False
-    for rounds in range(1, max_iterations + 1):
-        sym = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        sym = sym.select(F.col("u").alias("s"), F.col("v").alias("d"))
-        # large-star: m(s) = min over the full neighborhood (self included)
-        mins = (
-            sym.groupBy("s")
-            .agg(F.min("d").alias("mn"))
-            .select("s", F.least(F.col("s"), F.col("mn")).alias("m"))
-        )
-        large = (
-            sym.join(mins, "s")
-            .where(F.col("d") > F.col("s"))
-            .select(F.col("d").alias("u"), F.col("m").alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # small-star over (u > v) edges: m(u) = min smaller neighbor
-        smins = large.groupBy("u").agg(F.min("v").alias("m"))
-        small, release_small = checkpoint(
-            large.join(smins, "u")
-            .where(F.col("v") != F.col("m"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .unionAll(smins.select(F.col("u"), F.col("m").alias("v")))
-            .distinct()
-        )
-        changed = (
-            small.exceptAll(e).select(F.lit(1)).unionAll(
-                e.exceptAll(small).select(F.lit(1))
-            ).limit(1).count()
-        )
-        release_e()
-        e, release_e = small, release_small
-        if changed == 0:
-            converged = True
-            break
-    logger.info("connected_components(skew_safe=True): %d iterations, "
-                "converged=%s", rounds, converged)
-    if not converged:
-        logger.warning(
-            "connected_components(skew_safe=True): max_iterations=%d "
-            "exhausted before star-contraction converged — labels read off "
-            "a non-star edge set may not be component minima",
-            max_iterations,
-        )
-
-    # final stars: every non-root points at its component minimum
-    non_roots = e.groupBy("u").agg(F.min("v").alias("cluster_id")).select(
-        F.col("u").alias("node"), "cluster_id"
-    )
-    if nodes is None:
-        universe = (
-            edges.select(F.col(src).alias("node"))
-            .unionAll(edges.select(F.col(dst).alias("node")))
-            .distinct()
-        )
-    else:
-        universe = nodes.select(F.col(node_col).alias("node")).distinct()
-    roots = universe.join(non_roots, "node", "left_anti").select(
-        "node", F.col("node").alias("cluster_id")
-    )
-    out, _ = publish(non_roots.unionAll(roots), release_e)
-    return out

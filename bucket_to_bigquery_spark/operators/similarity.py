@@ -199,21 +199,25 @@ def cosine_topk_exact(
     )
 
 
+# sign-band blocking of sign_band_neardup_pairs: 4 bands of 12 sign bits
+# from projections seeded with 7 (collision odds in its docstring)
+_SIGN_BANDS = 4
+_SIGN_BITS = 12
+_SIGN_SEED = 7
+
+
 def sign_band_neardup_pairs(
     df: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     cosine_threshold: float = 0.95,
-    bands: int = 4,
-    bits: int = 12,
-    seed: int = 7,
 ) -> DataFrame:
     """Embedding near-duplicate pairs: sign-band blocking + exact verify.
 
     Candidate generation is SimHash-for-vectors: each vector hashes to
-    ``bands`` band-codes, each the ``bits`` sign bits of fixed seeded
-    random projections; candidates are pairs sharing any (band, code)
-    bucket. For a pair at angle θ a bit agrees with prob 1−θ/π, so
+    ``_SIGN_BANDS`` band-codes, each the ``_SIGN_BITS`` sign bits of fixed
+    seeded random projections; candidates are pairs sharing any (band,
+    code) bucket. For a pair at angle θ a bit agrees with prob 1−θ/π, so
     near-identical pairs (θ≈0) collide in some band with prob ≈1−(bits·θ/π)^bands
     (≈1−1e-9 for planted dups) while orthogonal pairs collide with prob
     ≈ bands·2^−bits (≈1e-3) — the candidate set stays ~linear in N where a
@@ -232,8 +236,8 @@ def sign_band_neardup_pairs(
     code); verification stays JVM-side.
     """
     import numpy as np
-    import pandas as pd
 
+    bands, bits = _SIGN_BANDS, _SIGN_BITS
     weights = (1 << np.arange(bits)).astype("int64")
 
     def codes(batches):
@@ -246,7 +250,7 @@ def sign_band_neardup_pairs(
                 [np.asarray(v, dtype="float64") for v in pdf["__vec"]]
             )  # (n, dim)
             if proj_flat is None:
-                rng = np.random.RandomState(seed)
+                rng = np.random.RandomState(_SIGN_SEED)
                 proj_flat = rng.standard_normal(
                     (bands, bits, x.shape[1])
                 ).reshape(bands * bits, x.shape[1]).T  # (dim, bands*bits)
@@ -488,13 +492,19 @@ def signgrid_ann_topk(
 # (v4 was: corpus-scaled n_lists + recall-calibrated n_probe.)
 IVF_INDEX_VERSION = 5
 
-# recall@k the probe width is calibrated to on the fit sample when the
-# caller does not pin n_probe (VERDICT r8 #2: the fixed 16-list/4-probe
-# point measured recall@5 = 0.48 at sf0.1 and degraded monotonically with
-# corpus size). Recall alone can be bought by probing everything, so the
-# calibrated width and the measured scan cost travel together — see
-# :func:`ivf_scan_stats`, which bench.py records next to the recall.
+# recall@k the probe width is calibrated to on the fit sample (VERDICT r8
+# #2: the fixed 16-list/4-probe point measured recall@5 = 0.48 at sf0.1
+# and degraded monotonically with corpus size). Recall alone can be
+# bought by probing everything, so the calibrated width and the measured
+# scan cost travel together — see :func:`ivf_scan_stats`, which bench.py
+# records next to the recall.
 IVF_RECALL_TARGET = 0.9
+
+# seed of the quantizer's fit sample, Lloyd init and probe calibration,
+# and the Lloyd iteration count: rebuilding from the same corpus
+# reproduces the same index
+_IVF_SEED = 42
+_IVF_FIT_ITERS = 4
 
 
 def ivf_operating_point(n_corpus: int) -> int:
@@ -568,35 +578,26 @@ def _lloyd(x, n_lists: int, seed: int, iters: int):
     return cent
 
 
-def _fit_quantizer(
-    corpus: DataFrame,
-    vec_col: str,
-    n_lists: int,
-    seed: int,
-    fit_sample_size: int,
-    fit_max_iter: int,
-    n: int | None = None,
-):
+def _fit_quantizer(corpus: DataFrame, vec_col: str, n_lists: int, n: int):
     """Coarse-quantizer fit on a bounded seeded sample; returns
     ``(centroids, sample)`` — the sample array is reused by
     :func:`_calibrate_n_probe` so calibration costs no extra Spark job.
 
     The quantizer needs only a sketch of the distribution, so the fit
-    input is <= ``fit_sample_size`` vectors BY CONSTRUCTION — one bounded
-    driver collect, then numpy Lloyd's iterations that finish in
+    input is <= :func:`_fit_sample_for` vectors BY CONSTRUCTION — one
+    bounded driver collect, then numpy Lloyd's iterations that finish in
     milliseconds-to-seconds where an ml.KMeans fit paid per-iteration job
     scheduling. The ONLY full-corpus pass of an IVF build remains the
     assignment. At warehouse scale the sample would come from a
     maintained sample table; the seam is this function."""
     import numpy as np
 
-    if n is None:
-        n = corpus.count()
+    fit_sample_size = _fit_sample_for(n_lists)
     s = (
         corpus.select(vec_col)
         if n <= fit_sample_size
         else corpus.select(vec_col).sample(
-            fraction=min(1.0, fit_sample_size / n), seed=seed
+            fraction=min(1.0, fit_sample_size / n), seed=_IVF_SEED
         )
     )
     x = np.asarray([r[0] for r in s.collect()], dtype="float64")
@@ -605,7 +606,7 @@ def _fit_quantizer(
             f"IVF quantizer fit: corpus column {vec_col!r} produced an "
             f"empty sample (corpus rows={n}) — cannot fit any centroids"
         )
-    cent = _lloyd(x, n_lists, seed, fit_max_iter)
+    cent = _lloyd(x, n_lists, _IVF_SEED, _IVF_FIT_ITERS)
     return [[float(v) for v in row] for row in cent], x
 
 
@@ -666,17 +667,7 @@ def _calibrate_n_probe(
     return int(ranks[idx])
 
 
-def _resolve_ivf_params(
-    corpus: DataFrame,
-    vec_col: str,
-    n_lists: int | None,
-    n_probe: int | None,
-    recall_target: float,
-    seed: int,
-    fit_sample_size: int | None,
-    fit_max_iter: int,
-    k: int,
-):
+def _resolve_ivf_params(corpus: DataFrame, vec_col: str, k: int):
     """Shared operating-point resolution for the inline query, the offline
     index build, and the scan-cost probe: corpus-scaled ``n_lists``
     (:func:`ivf_operating_point`), quantizer fit, and recall-calibrated
@@ -684,17 +675,10 @@ def _resolve_ivf_params(
     the same corpus (q48d's prebuilt == q48c's inline is pytest-pinned).
     Returns ``(centroids, n_probe, n_corpus)``."""
     n = corpus.count()
-    if n_lists is None:
-        n_lists = ivf_operating_point(n)
-    if fit_sample_size is None:
-        fit_sample_size = _fit_sample_for(n_lists)
-    centroids, x = _fit_quantizer(
-        corpus, vec_col, n_lists, seed, fit_sample_size, fit_max_iter, n=n
+    centroids, x = _fit_quantizer(corpus, vec_col, ivf_operating_point(n), n)
+    n_probe = _calibrate_n_probe(
+        x, centroids, target=IVF_RECALL_TARGET, k=k, seed=_IVF_SEED
     )
-    if n_probe is None:
-        n_probe = _calibrate_n_probe(
-            x, centroids, target=recall_target, k=k, seed=seed
-        )
     return centroids, min(n_probe, len(centroids)), n
 
 
@@ -800,13 +784,7 @@ def ivf_build_index(
     path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_lists: int | None = None,
-    n_probe: int | None = None,
-    recall_target: float = IVF_RECALL_TARGET,
     k: int = 5,
-    seed: int = 42,
-    fit_sample_size: int | None = None,
-    fit_max_iter: int = 4,
 ) -> dict:
     """Build and persist an IVF index: ``<path>/centroids`` (n_lists rows),
     ``<path>/assigned`` (one row per corpus vector with its list id,
@@ -816,15 +794,12 @@ def ivf_build_index(
 
     This is the 100 TB deployment shape: the quantizer fit + full-corpus
     assignment pass runs ONCE (per corpus version) as an offline job; the
-    online path (:func:`ivf_probe_prebuilt`) only reads the index. By
-    default the operating point is corpus-scaled and recall-calibrated
-    (see :func:`ivf_operating_point` / :func:`_calibrate_n_probe`); the
-    seeded fit ⇒ rebuilding from the same corpus reproduces the index.
+    online path (:func:`ivf_probe_prebuilt`) only reads the index. The
+    operating point is corpus-scaled and recall-calibrated (see
+    :func:`ivf_operating_point` / :func:`_calibrate_n_probe`); the seeded
+    fit ⇒ rebuilding from the same corpus reproduces the index.
     Returns the persisted params row as a dict."""
-    centroids, n_probe, n = _resolve_ivf_params(
-        corpus, vec_col, n_lists, n_probe, recall_target, seed,
-        fit_sample_size, fit_max_iter, k,
-    )
+    centroids, n_probe, n = _resolve_ivf_params(corpus, vec_col, k)
     feats = _featurize(corpus, id_col, vec_col).select(
         F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec"),
         F.col("nrm").alias("n_norm"),
@@ -846,7 +821,7 @@ def ivf_build_index(
         "n_corpus": n,
         "n_lists": len(centroids),
         "n_probe": n_probe,
-        "recall_target": float(recall_target),
+        "recall_target": float(IVF_RECALL_TARGET),
     }
     spark.createDataFrame(
         [tuple(params.values())], list(params.keys())
@@ -861,29 +836,23 @@ def ivf_probe_prebuilt(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    n_probe: int | None = None,
 ) -> DataFrame:
     """ANN top-k against a prebuilt :func:`ivf_build_index` index — the
     online serving path: centroids broadcast from a tiny parquet, probed
     lists read via partition pruning, exact cosine re-rank. No fit, no
-    full-corpus pass in the query. ``n_probe`` defaults to the width the
-    BUILD calibrated for its recall target (persisted in
-    ``<path>/params``); pass it explicitly to trade recall for scan cost
-    at query time without rebuilding."""
-    if n_probe is None:
-        try:
-            n_probe = int(
-                spark.read.parquet(f"{path}/params").head()["n_probe"]
-            )
-        except Exception as e:  # noqa: BLE001 — pre-v4 index layouts
-            # version 4 INTRODUCED the params table (calibrated n_probe);
-            # name it, not the current IVF_INDEX_VERSION — ADVICE r12 #1
-            raise ValueError(
-                f"IVF index at {path!r} has no readable params table — "
-                f"it predates index version 4 (calibrated n_probe; "
-                f"current IVF_INDEX_VERSION={IVF_INDEX_VERSION}). Rebuild "
-                f"with ivf_build_index or pass n_probe explicitly."
-            ) from e
+    full-corpus pass in the query. It probes at the width the BUILD
+    calibrated for its recall target (persisted in ``<path>/params``)."""
+    try:
+        n_probe = int(spark.read.parquet(f"{path}/params").head()["n_probe"])
+    except Exception as e:  # noqa: BLE001 — pre-v4 index layouts
+        # version 4 INTRODUCED the params table (calibrated n_probe);
+        # name it, not the current IVF_INDEX_VERSION — ADVICE r12 #1
+        raise ValueError(
+            f"IVF index at {path!r} has no readable params table — "
+            f"it predates index version 4 (calibrated n_probe; "
+            f"current IVF_INDEX_VERSION={IVF_INDEX_VERSION}). Rebuild "
+            f"it with ivf_build_index."
+        ) from e
     assigned = spark.read.parquet(f"{path}/assigned")
     centroids = spark.read.parquet(f"{path}/centroids")
     return _ivf_probe(assigned, centroids, queries, id_col, vec_col, k, n_probe)
@@ -895,12 +864,6 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    n_lists: int | None = None,
-    n_probe: int | None = None,
-    recall_target: float = IVF_RECALL_TARGET,
-    seed: int = 42,
-    fit_sample_size: int | None = None,
-    fit_max_iter: int = 4,
 ) -> DataFrame:
     """IVF-style ANN: k-means coarse quantization + n-probe bucket search.
 
@@ -913,18 +876,15 @@ def ivf_topk(
 
     Operating point (v4): ``n_lists`` scales as √N with the corpus
     (:func:`ivf_operating_point`) and ``n_probe`` is calibrated on the
-    fit sample to hold ``recall_target`` (:func:`_calibrate_n_probe`) —
-    the r8 driver record showed the previous fixed 16/4 point degrading
-    monotonically with corpus size (recall@5 0.64 → 0.48). Both remain
-    overridable for an explicit cost ceiling. Index-build cost is
+    fit sample to hold :data:`IVF_RECALL_TARGET`
+    (:func:`_calibrate_n_probe`) — the r8 driver record showed the
+    previous fixed 16/4 point degrading monotonically with corpus size
+    (recall@5 0.64 → 0.48). Index-build cost is
     amortized the way a 100 TB deployment must: the quantizer fits on a
     seeded bounded sample driver-side in numpy (:func:`_fit_quantizer`),
     calibration reuses that sample for free, and only the cheap
     Arrow-batched assignment pass touches the full corpus."""
-    centroids, n_probe, _ = _resolve_ivf_params(
-        corpus, vec_col, n_lists, n_probe, recall_target, seed,
-        fit_sample_size, fit_max_iter, k,
-    )
+    centroids, n_probe, _ = _resolve_ivf_params(corpus, vec_col, k)
     feats = _featurize(corpus, id_col, vec_col).select(
         F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec"),
         F.col("nrm").alias("n_norm"),
@@ -942,12 +902,6 @@ def ivf_scan_stats(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    n_lists: int | None = None,
-    n_probe: int | None = None,
-    recall_target: float = IVF_RECALL_TARGET,
-    seed: int = 42,
-    fit_sample_size: int | None = None,
-    fit_max_iter: int = 4,
 ) -> dict:
     """Measured scan cost of the IVF operating point :func:`ivf_topk`
     would use on this corpus: resolves the SAME seeded params, then sums
@@ -960,10 +914,7 @@ def ivf_scan_stats(
     records this next to the driver-visible recall so the (recall, cost)
     pair is judged together — recall alone can be bought by probing
     every list."""
-    centroids, n_probe, n = _resolve_ivf_params(
-        corpus, vec_col, n_lists, n_probe, recall_target, seed,
-        fit_sample_size, fit_max_iter, k,
-    )
+    centroids, n_probe, n = _resolve_ivf_params(corpus, vec_col, k)
     feats = _featurize(corpus, id_col, vec_col).select(
         F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec"),
         F.col("nrm").alias("n_norm"),
@@ -1215,14 +1166,11 @@ def ann_topk_lsh(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    bucket_length: float = 0.5,
-    num_hash_tables: int = 8,
-    seed: int = 42,
 ) -> DataFrame:
     """Approximate top-k cosine neighbors via euclidean LSH on normalized
-    vectors. Deterministic for a fixed seed; recall is checked against
-    `cosine_topk_exact` in tests (driver records a rows-only check —
-    bucketing is not SQL-expressible)."""
+    vectors (8 hash tables, bucket length 0.5, seed 42). Deterministic;
+    recall is checked against `cosine_topk_exact` in tests (driver
+    records a rows-only check — bucketing is not SQL-expressible)."""
     from pyspark.ml.feature import BucketedRandomProjectionLSH, Normalizer
     from pyspark.ml.functions import array_to_vector
 
@@ -1239,7 +1187,7 @@ def ann_topk_lsh(
     q = prep(queries, "q")
     lsh = BucketedRandomProjectionLSH(
         inputCol="features", outputCol="hashes",
-        bucketLength=bucket_length, numHashTables=num_hash_tables, seed=seed,
+        bucketLength=0.5, numHashTables=8, seed=42,
     )
     model = lsh.fit(c)
     # candidate pairs from bucket joins only; 2.0 covers the whole unit

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import shingle_hash, shingles, tokens
 from ..scratch import _DONE, materialize_once, scratch_path
+from .llm_queries import _SHINGLE_HASH_SQL, _TOKS_SQL
 from .registry import query, tables
 
 _NEAR_TAIL = " zz9 qq8 vv7"  # the q47 planted-near literal (llm_queries)
@@ -186,20 +187,16 @@ def _matches(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Oracles (DuckDB recomputes both sides from first principles)
 # ---------------------------------------------------------------------------
 
-_TOKS_SQL = "string_split(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), ' ')"
 _FRESH_SQL = (
     "substr(md5(text), 1, 8) || ' ' || substr(md5(text), 9, 8) || ' ' || "
     "substr(md5(text), 17, 8) || ' ' || substr(md5(text), 25, 8)"
-)
-_SHINGLE_SQL = (
-    "CAST(('0x' || substr(md5(array_to_string(t[i:i+2], ' ')), 1, 15)) AS BIGINT)"
 )
 
 
 def _shingle_cte(rel: str, out: str) -> str:
     return (
         f"{out}_tok AS (SELECT doc_id, {_TOKS_SQL} AS t FROM {rel}), "
-        f"{out} AS (SELECT DISTINCT doc_id, {_SHINGLE_SQL} AS shingle "
+        f"{out} AS (SELECT DISTINCT doc_id, {_SHINGLE_HASH_SQL} AS shingle "
         f"FROM {out}_tok, LATERAL unnest(range(1, len(t) - 1)) AS u(i) "
         "WHERE len(t) >= 3)"
     )

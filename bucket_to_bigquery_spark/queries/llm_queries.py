@@ -43,6 +43,12 @@ _NEAR_TAIL = " zz9 qq8 vv7"
 
 _NORM_SQL = "lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))"
 _TOKS_SQL = f"string_split({_NORM_SQL}, ' ')"
+# 60-bit md5-prefix hash of the 3-gram starting at token ``i`` of the
+# token list ``t`` — the oracle twin of operators/dedup.shingle_hash over
+# 3-token shingles; q47, q47b and the q55 incremental oracles share it.
+_SHINGLE_HASH_SQL = (
+    "CAST(('0x' || substr(md5(array_to_string(t[i:i+2], ' ')), 1, 15)) AS BIGINT)"
+)
 _TOKHASH_SQL = "CAST(('0x' || substr(md5({t}), 1, 8)) AS BIGINT)"
 # The 32-bit SimHash fold over a token-hash list column ``hs`` — the
 # oracle twin of operators/dedup.simhash_col(bits=32). ONE definition:
@@ -197,9 +203,7 @@ def q47_index_ctes(corpus_rel: str) -> str:
     SAME literals over its filtered corpus instead of duplicating them."""
     return (
         f"tok AS (SELECT doc_id, {_TOKS_SQL} AS t FROM {corpus_rel}), "
-        "sh AS (SELECT DISTINCT doc_id, "
-        "CAST(('0x' || substr(md5(array_to_string(t[i:i+2], ' ')), 1, 15)) AS BIGINT) "
-        "AS shingle "
+        f"sh AS (SELECT DISTINCT doc_id, {_SHINGLE_HASH_SQL} AS shingle "
         "FROM tok, LATERAL unnest(range(1, len(t) - 1)) AS u(i) WHERE len(t) >= 3), "
         "hot AS (SELECT shingle FROM sh GROUP BY shingle HAVING COUNT(*) > 100), "
         "idx AS (SELECT * FROM sh WHERE shingle NOT IN (SELECT shingle FROM hot)), "
@@ -406,8 +410,7 @@ _MH_PARAMS_SQL = ", ".join(
     f"({i}, {a}, {b})" for i, (a, b) in enumerate(minhash_params(6, 42))
 )
 _MH_SH_SQL = (
-    "sh AS (SELECT DISTINCT doc_id, "
-    "CAST(('0x' || substr(md5(array_to_string(t[i:i+2], ' ')), 1, 15)) AS BIGINT)"
+    f"sh AS (SELECT DISTINCT doc_id, {_SHINGLE_HASH_SQL}"
     f" % {MINHASH_PRIME} AS shingle "
     "FROM tok, LATERAL unnest(range(1, len(t) - 1)) AS u(i) WHERE len(t) >= 3)"
 )

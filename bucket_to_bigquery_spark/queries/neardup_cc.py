@@ -35,9 +35,8 @@ fingerprints|), never documents; edges are the q115 banded adjacency
 (never all-pairs); each builder folds the corpus ONCE (the cached
 fingerprint frame feeds the cluster aggregation, the adjacency, and —
 for q133 — the doc-level label join). connected_components is the
-log-diameter pointer-jumping operator with the skew-safe
-star-contraction seam and block-released checkpoints (the r7 leak
-fix). The recursive-CTE closure is ORACLE-side only (DuckDB, test
+log-diameter pointer-jumping operator with block-released
+checkpoints (the r7 leak fix). The recursive-CTE closure is ORACLE-side only (DuckDB, test
 scale) — its worst case is Σ|component|² rows, fine at gate scale and
 irrelevant to the engine plan.
 """
@@ -101,7 +100,7 @@ _Q132_DESCRIPTION = (
     "q115 simhash cluster adjacency, per component: min-doc_id "
     "representative, cluster count, document mass (the transitive "
     "grouping a near-dedup apply keys on). Spark runs the iterative "
-    "pointer-jumping CC operator (log-diameter, skew-safe seam); the "
+    "pointer-jumping CC operator (log-diameter); the "
     "oracle recomputes the same labels with a recursive-CTE min-label "
     "closure — an iterative distributed algorithm hash-pinned against "
     "a recursive SQL fixpoint. Nodes are fingerprint clusters, edges "

@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import tokens
+from .llm_queries import _TOKS_SQL
 from .registry import query, tables
 
 CMS_DEPTH = 4       # d: independent hash rows (disjoint md5 hex windows)
@@ -77,7 +78,6 @@ def _cms_grid(stream: DataFrame) -> DataFrame:
     )
 
 
-_TOKS_SQL = "string_split(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), ' ')"
 _CELL_SQL = (
     f"CAST(('0x' || substr(md5(term), r * 8 + 1, 7)) AS BIGINT) % {CMS_WIDTH}"
 )

@@ -269,31 +269,6 @@ def test_connected_components_multihop_chain(spark):
     assert got[999] == 999, "singleton lost"
 
 
-def test_star_contraction_matches_min_label(spark):
-    """skew_safe=True (large-star/small-star contraction) must produce
-    exactly the labels of the default min-label path — on the multi-hop
-    chain + ring + singleton universe AND on the skew case it exists for:
-    a giant star (one hub, 500 spokes) plus a long chain."""
-    from bucket_to_bigquery_spark.operators.graph import connected_components
-
-    chain = [(i, i + 1) for i in range(100, 130)]
-    ring = [(200 + i, 200 + (i + 1) % 8) for i in range(8)]
-    star = [(1000, 2000 + i) for i in range(500)]  # hub-skewed component
-    edges = spark.createDataFrame(chain + ring + star, ["src", "dst"])
-    nodes = spark.createDataFrame(
-        [(n,) for n in list(range(100, 131)) + list(range(200, 208))
-         + [999, 1000] + list(range(2000, 2500))], ["node"]
-    )
-    base = {r["node"]: r["cluster_id"]
-            for r in connected_components(edges, nodes=nodes).collect()}
-    safe = {r["node"]: r["cluster_id"]
-            for r in connected_components(
-                edges, nodes=nodes, skew_safe=True).collect()}
-    assert safe == base
-    assert safe[999] == 999                      # singleton preserved
-    assert all(safe[2000 + i] == 1000 for i in range(500))  # star → hub min
-
-
 def test_q48d_prebuilt_index_matches_inline_ivf(spark, sf_dir):
     """The prebuilt-index probe must reproduce the inline-built IVF result
     exactly: same seed + same sample-fit ⇒ same centroids ⇒ same lists ⇒

@@ -86,7 +86,7 @@ def test_graph_queries_release_dead_checkpoints(spark, sf_dir, name, most):
 def test_only_materialize_checkpoints():
     offenders = []
     for root, dirs, files in os.walk(_PKG):
-        dirs[:] = [d for d in dirs if d not in ("staged", "__pycache__")]
+        dirs[:] = [d for d in dirs if d != "__pycache__"]
         for f in files:
             path = os.path.join(root, f)
             if not f.endswith(".py") or path.endswith(

@@ -6,9 +6,7 @@ Checked here:
 
 1. **Registration** — the modules register exactly these entries, each
    with its oracle and description.
-2. **Oracle parity** — each builder matches its DuckDB oracle through
-   the same compare harness the driver mirrors.
-3. **Per-entry semantics** beyond the hash: PIT version lookup replays
+2. **Per-entry semantics** beyond the hash: PIT version lookup replays
    brute-force (inclusive at-boundary rule), the A/B readout replays
    from an independent md5 assignment + attribution walk, the path
    top-10 replays from raw sequences.
@@ -23,7 +21,7 @@ from collections import defaultdict
 from bucket_to_bigquery_spark.queries import ab, paths, pit, sketch_overlap
 from bucket_to_bigquery_spark.queries.registry import tables
 
-from .oracle import compare, duck_connection, module_entries
+from .oracle import module_entries
 
 ENTRIES = module_entries(pit, ab, paths, sketch_overlap)
 
@@ -51,22 +49,7 @@ def test_staged_entries_are_registered():
 
 
 # ---------------------------------------------------------------------------
-# 2. Oracle parity, pre-registration
-# ---------------------------------------------------------------------------
-
-
-def test_staged_oracle_parity(spark, sf_dir):
-    duck = duck_connection(sf_dir)
-    try:
-        for name in sorted(ENTRIES):
-            problems = compare(name, spark, duck, sf_dir, ENTRIES)
-            assert not problems, f"{name}: " + "; ".join(problems)
-    finally:
-        duck.close()
-
-
-# ---------------------------------------------------------------------------
-# 3. q90 — PIT enrichment semantics
+# 2. q90 — PIT enrichment semantics
 # ---------------------------------------------------------------------------
 
 
@@ -105,7 +88,7 @@ def test_q90_matches_bruteforce(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# 3. q91 — A/B lift semantics
+# 2. q91 — A/B lift semantics
 # ---------------------------------------------------------------------------
 
 
@@ -160,7 +143,7 @@ def test_q91_matches_bruteforce(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# 3. q92 — top paths semantics
+# 2. q92 — top paths semantics
 # ---------------------------------------------------------------------------
 
 

@@ -5,9 +5,7 @@ Checked here:
 
 1. **Registration** — the modules register exactly these entries, each
    with its oracle and description.
-2. **Oracle parity** — each builder matches its DuckDB oracle through
-   the same compare harness the driver mirrors.
-3. **Per-entry semantics** beyond the hash: full Python replays (PMI
+2. **Per-entry semantics** beyond the hash: full Python replays (PMI
    ranking, modal-FD compliance, first-seen novelty, smoothed PSI) and
    plan-shape pins (cached single tokenization, no cartesian products,
    broadcast marginals).
@@ -26,7 +24,7 @@ from bucket_to_bigquery_spark.queries import (
 )
 from bucket_to_bigquery_spark.queries.registry import tables
 
-from .oracle import compare, duck_connection, module_entries
+from .oracle import module_entries
 
 ENTRIES = module_entries(collocations, fd, novelty, psi)
 
@@ -63,22 +61,7 @@ def test_staged_entries_are_registered():
 
 
 # ---------------------------------------------------------------------------
-# 2. Oracle parity
-# ---------------------------------------------------------------------------
-
-
-def test_staged_oracle_parity(spark, sf_dir):
-    duck = duck_connection(sf_dir)
-    try:
-        for name in sorted(ENTRIES):
-            problems = compare(name, spark, duck, sf_dir, ENTRIES)
-            assert not problems, f"{name}: " + "; ".join(problems)
-    finally:
-        duck.close()
-
-
-# ---------------------------------------------------------------------------
-# 3. q93 — PMI collocations
+# 2. q93 — PMI collocations
 # ---------------------------------------------------------------------------
 
 
@@ -129,7 +112,7 @@ def test_q93_single_tokenization_and_broadcast_marginals(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# 3. q94 — FD audit
+# 2. q94 — FD audit
 # ---------------------------------------------------------------------------
 
 
@@ -161,7 +144,7 @@ def test_q94_matches_bruteforce(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# 3. q95 — shingle novelty
+# 2. q95 — shingle novelty
 # ---------------------------------------------------------------------------
 
 
@@ -219,7 +202,7 @@ def test_q95_narrow_join_no_pairs_no_hof_filters(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# 3. q96 — PSI drift
+# 2. q96 — PSI drift
 # ---------------------------------------------------------------------------
 
 

@@ -2,9 +2,8 @@
 inter-arrival burstiness (arrivals.py), q100 embedding class separation
 (separation.py).
 
-Same three checks as tests/test_staged_r13.py: registration, oracle
-parity through the driver-mirror harness, and full Python brute-force
-replays + plan pins per entry.
+Same checks as tests/test_staged_r13.py: registration and full Python
+brute-force replays + plan pins per entry.
 """
 
 from __future__ import annotations
@@ -20,7 +19,7 @@ from bucket_to_bigquery_spark.queries import (
 )
 from bucket_to_bigquery_spark.queries.registry import tables
 
-from .oracle import compare, duck_connection, module_entries
+from .oracle import module_entries
 
 ENTRIES = module_entries(rules, zipf, arrivals, separation)
 
@@ -61,22 +60,7 @@ def test_staged_entries_are_registered():
 
 
 # ---------------------------------------------------------------------------
-# 2. Oracle parity
-# ---------------------------------------------------------------------------
-
-
-def test_staged_oracle_parity(spark, sf_dir):
-    duck = duck_connection(sf_dir)
-    try:
-        for name in sorted(ENTRIES):
-            problems = compare(name, spark, duck, sf_dir, ENTRIES)
-            assert not problems, f"{name}: " + "; ".join(problems)
-    finally:
-        duck.close()
-
-
-# ---------------------------------------------------------------------------
-# 3. q97 — association rules
+# 2. q97 — association rules
 # ---------------------------------------------------------------------------
 
 
@@ -129,7 +113,7 @@ def test_q97_single_distinct_exchange_broadcast_supports(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# 3. q98 — Zipf slope
+# 2. q98 — Zipf slope
 # ---------------------------------------------------------------------------
 
 
@@ -174,7 +158,7 @@ def test_q98_rank_window_on_count_frame(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# 3. q99 — inter-arrival burstiness
+# 2. q99 — inter-arrival burstiness
 # ---------------------------------------------------------------------------
 
 
@@ -227,7 +211,7 @@ def test_q99_single_type_exchange(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# 3. q100 — class separation
+# 2. q100 — class separation
 # ---------------------------------------------------------------------------
 
 

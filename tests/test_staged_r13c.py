@@ -1,9 +1,8 @@
 """q101 k-anonymity audit (anonymity.py), q102 per-source quality
 scorecard (scorecard.py), q103 weekly new-vs-returning mix (growth.py).
 
-Same three checks as tests/test_staged_r13.py: registration, oracle
-parity through the driver-mirror harness, and full Python brute-force
-replays + plan pins per entry.
+Same checks as tests/test_staged_r13.py: registration and full Python
+brute-force replays + plan pins per entry.
 """
 
 from __future__ import annotations
@@ -18,7 +17,7 @@ from bucket_to_bigquery_spark.queries import (
 )
 from bucket_to_bigquery_spark.queries.registry import tables
 
-from .oracle import compare, duck_connection, module_entries
+from .oracle import module_entries
 
 ENTRIES = module_entries(anonymity, scorecard, growth)
 
@@ -54,22 +53,7 @@ def test_staged_entries_are_registered():
 
 
 # ---------------------------------------------------------------------------
-# 2. Oracle parity
-# ---------------------------------------------------------------------------
-
-
-def test_staged_oracle_parity(spark, sf_dir):
-    duck = duck_connection(sf_dir)
-    try:
-        for name in sorted(ENTRIES):
-            problems = compare(name, spark, duck, sf_dir, ENTRIES)
-            assert not problems, f"{name}: " + "; ".join(problems)
-    finally:
-        duck.close()
-
-
-# ---------------------------------------------------------------------------
-# 3. q101 — k-anonymity audit
+# 2. q101 — k-anonymity audit
 # ---------------------------------------------------------------------------
 
 
@@ -105,7 +89,7 @@ def test_q101_single_scan_cached_groups(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# 3. q102 — source scorecard
+# 2. q102 — source scorecard
 # ---------------------------------------------------------------------------
 
 
@@ -151,7 +135,7 @@ def test_q102_branches_scan_pruned_columns(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# 3. q103 — new vs returning
+# 2. q103 — new vs returning
 # ---------------------------------------------------------------------------
 
 

@@ -7,9 +7,7 @@ Checked here:
 
 1. **Registration** — the modules register exactly these entries, each
    with its oracle and description.
-2. **Oracle parity** — each builder matches its DuckDB oracle through
-   the same compare harness the driver mirrors.
-3. **Per-entry semantics** beyond the hash: full Python replays
+2. **Per-entry semantics** beyond the hash: full Python replays
    (decimal-exact revenue folds, the profile formatter, the α-mixture
    math) and plan-shape pins (dim broadcasts, TakeOrdered top-k, no
    cartesian products).
@@ -28,7 +26,7 @@ from bucket_to_bigquery_spark.queries import (
 )
 from bucket_to_bigquery_spark.queries.registry import tables
 
-from .oracle import compare, duck_connection, module_entries
+from .oracle import module_entries
 
 ENTRIES = module_entries(tpch_ext, profiling, temperature)
 
@@ -76,21 +74,6 @@ def test_staged_entries_are_registered():
     ]
     for q in ENTRIES.values():
         assert q.oracle and q.description, q.name
-
-
-# ---------------------------------------------------------------------------
-# 2. Oracle parity through the driver-mirror harness
-# ---------------------------------------------------------------------------
-
-
-def test_staged_oracle_parity(spark, sf_dir):
-    duck = duck_connection(sf_dir)
-    try:
-        for name in sorted(ENTRIES):
-            problems = compare(name, spark, duck, sf_dir, ENTRIES)
-            assert not problems, f"{name}: " + "; ".join(problems)
-    finally:
-        duck.close()
 
 
 # ---------------------------------------------------------------------------

@@ -2,11 +2,10 @@
 report (inflation.py), q117 vocabulary coverage curve (coverage.py),
 q118 trailing-7-day active users (actives.py).
 
-Same three checks as tests/test_staged_r14.py: registration, oracle
-parity through the driver-mirror harness, and full Python brute-force
-replays + plan pins per entry. The simhash replays here recompute the
-q46b fingerprint from raw md5 — an independent pin of the shared
-contract, not a call into operators/dedup.
+Same checks as tests/test_staged_r14.py: registration and full Python
+brute-force replays + plan pins per entry. The simhash replays here
+recompute the q46b fingerprint from raw md5 — an independent pin of the
+shared contract, not a call into operators/dedup.
 """
 
 from __future__ import annotations
@@ -24,7 +23,7 @@ from bucket_to_bigquery_spark.queries import (
 )
 from bucket_to_bigquery_spark.queries.registry import tables
 
-from .oracle import compare, duck_connection, module_entries
+from .oracle import module_entries
 
 ENTRIES = module_entries(hamming, inflation, coverage, actives)
 
@@ -77,21 +76,6 @@ def test_registration_split_matches_gate_accounting():
     ]
     for q in ENTRIES.values():
         assert q.oracle and q.description, q.name
-
-
-# ---------------------------------------------------------------------------
-# 2. Oracle parity through the driver-mirror harness
-# ---------------------------------------------------------------------------
-
-
-def test_staged_oracle_parity(spark, sf_dir):
-    duck = duck_connection(sf_dir)
-    try:
-        for name in sorted(ENTRIES):
-            problems = compare(name, spark, duck, sf_dir, ENTRIES)
-            assert not problems, f"{name}: " + "; ".join(problems)
-    finally:
-        duck.close()
 
 
 # ---------------------------------------------------------------------------

@@ -3,10 +3,10 @@ Q7-nation-pair / q121 Q13-distribution / q122 Q17-correlated-average /
 q123 Q18-having / q124 Q19-disjunction / q125 Q15-equality-with-max /
 q126 Q22-anti-join (tpch_ext2.py).
 
-Same three checks as tests/test_staged_r14.py: registration, oracle
-parity through the driver-mirror harness, and full Python brute-force
-replays + plan pins per entry (semi/anti joins must stay equi-joins,
-the Q18 top-k must be TakeOrdered, no cartesian products anywhere).
+Same checks as tests/test_staged_r14.py: registration and full Python
+brute-force replays + plan pins per entry (semi/anti joins must stay
+equi-joins, the Q18 top-k must be TakeOrdered, no cartesian products
+anywhere).
 """
 
 from __future__ import annotations
@@ -18,7 +18,7 @@ from decimal import ROUND_HALF_UP, Decimal
 from bucket_to_bigquery_spark.queries import tpch_ext2
 from bucket_to_bigquery_spark.queries.registry import tables
 
-from .oracle import compare, duck_connection, module_entries
+from .oracle import module_entries
 
 ENTRIES = module_entries(tpch_ext2)
 
@@ -73,21 +73,6 @@ def test_staged_entries_are_registered():
     ]
     for q in ENTRIES.values():
         assert q.oracle and q.description, q.name
-
-
-# ---------------------------------------------------------------------------
-# 2. Oracle parity through the driver-mirror harness
-# ---------------------------------------------------------------------------
-
-
-def test_staged_oracle_parity(spark, sf_dir):
-    duck = duck_connection(sf_dir)
-    try:
-        for name in sorted(ENTRIES):
-            problems = compare(name, spark, duck, sf_dir, ENTRIES)
-            assert not problems, f"{name}: " + "; ".join(problems)
-    finally:
-        duck.close()
 
 
 # ---------------------------------------------------------------------------

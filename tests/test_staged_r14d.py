@@ -2,11 +2,10 @@
 seasonality profile (seasonality.py), q129 ship-latency percentiles
 (latency.py).
 
-Same three checks as tests/test_staged_r14.py: registration, oracle
-parity through the driver-mirror harness, and full Python brute-force
-replays + plan pins per entry. The q127 replay recomputes the
-scaled-int centroid/distance math from raw floats — an independent pin
-of the q69/q62 + q98 contracts, not a call into the builder's
+Same checks as tests/test_staged_r14.py: registration and full Python
+brute-force replays + plan pins per entry. The q127 replay recomputes
+the scaled-int centroid/distance math from raw floats — an independent
+pin of the q69/q62 + q98 contracts, not a call into the builder's
 expressions.
 """
 
@@ -22,7 +21,7 @@ from bucket_to_bigquery_spark.queries import (
 )
 from bucket_to_bigquery_spark.queries.registry import tables
 
-from .oracle import compare, duck_connection, module_entries
+from .oracle import module_entries
 
 ENTRIES = module_entries(embed_outliers, seasonality, latency)
 
@@ -66,21 +65,6 @@ def test_staged_entries_are_registered():
     ]
     for q in ENTRIES.values():
         assert q.oracle and q.description, q.name
-
-
-# ---------------------------------------------------------------------------
-# 2. Oracle parity through the driver-mirror harness
-# ---------------------------------------------------------------------------
-
-
-def test_staged_oracle_parity(spark, sf_dir):
-    duck = duck_connection(sf_dir)
-    try:
-        for name in sorted(ENTRIES):
-            problems = compare(name, spark, duck, sf_dir, ENTRIES)
-            assert not problems, f"{name}: " + "; ".join(problems)
-    finally:
-        duck.close()
 
 
 # ---------------------------------------------------------------------------

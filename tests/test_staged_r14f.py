@@ -5,11 +5,10 @@ cross-day carry) — and q132/q133 near-duplicate components
 (neardup_cc.py) — the iterative pointer-jumping CC operator hash-pinned
 against a recursive-CTE min-label closure.
 
-Same three checks as tests/test_staged_r14.py: registration, oracle
-parity through the driver-mirror harness, and full Python brute-force
-replays + plan pins. The q131 replay runs the NAIVE global sweep (sort
-every boundary, running sum, per-day max); the q132 replay runs
-union-find over an independently recomputed simhash adjacency — the
+Same checks as tests/test_staged_r14.py: registration and full Python
+brute-force replays + plan pins. The q131 replay runs the NAIVE global
+sweep (sort every boundary, running sum, per-day max); the q132 replay
+runs union-find over an independently recomputed simhash adjacency — the
 decomposed/iterative builders must equal both exactly.
 """
 
@@ -26,7 +25,7 @@ from bucket_to_bigquery_spark.queries import (
 )
 from bucket_to_bigquery_spark.queries.registry import tables
 
-from .oracle import compare, duck_connection, module_entries
+from .oracle import module_entries
 
 ENTRIES = module_entries(concurrency, neardup_cc)
 
@@ -96,16 +95,6 @@ def test_registration_split_matches_gate_accounting():
     ]
     for q in ENTRIES.values():
         assert q.oracle and q.description, q.name
-
-
-def test_staged_oracle_parity(spark, sf_dir):
-    duck = duck_connection(sf_dir)
-    try:
-        for name in sorted(ENTRIES):
-            problems = compare(name, spark, duck, sf_dir, ENTRIES)
-            assert not problems, f"{name}: " + "; ".join(problems)
-    finally:
-        duck.close()
 
 
 def test_q131_matches_naive_global_sweep(spark, sf_dir):
