@@ -15,7 +15,7 @@ reference option         Spark mapping
 sourceFormat CSV         ``spark.read.csv``
 skipLeadingRows 1        ``header=True`` (with explicit schema: skip line 1)
 allowJaggedRows          PERMISSIVE null-fills missing trailing columns
-allowQuotedNewlines      ``multiLine=True``
+allowQuotedNewlines      not supported (see below)
 ignoreUnknownValues      extra trailing tokens dropped, row kept (see below)
 maxBadRecords 0          corrupt-record count must be 0 or the load raises
 explicit schema          widest sniffed headers, manifest-typed prefix +
@@ -31,6 +31,14 @@ during the staging write and checked before publish, the way a BigQuery
 load job checks it while it loads (BucketToBigQuery.js:334-365). The
 ``_imported`` anti-join is a predicate-pushed scan of the audit table
 filtered to the batch's URIs — never a full-table collect.
+
+Quoted newlines are not supported. The reference hardcodes
+``allowQuotedNewlines: true`` (BucketToBigQuery.js:337), but Spark's
+equivalent (``multiLine=True``) is not split-safe: it reads every CSV file
+as one task regardless of size, and it locks onto the first line
+separator it sees, breaking the mixed CRLF/CR/LF files the reference
+tolerates (js:128). The loader reads newline-delimited records, so a
+newline inside a quoted value ends the row there.
 """
 
 from __future__ import annotations
@@ -112,9 +120,9 @@ class LoadReport:
     partition_field: str | None = None
     metrics: dict[str, float] = dc_field(default_factory=dict)
 
-    def log_metrics(self, logger=None) -> None:
+    def log_metrics(self) -> None:
         """Emit ``METRIC b2bqs.<name> <value>`` lines (reference parity)."""
-        log = logger or logging.getLogger("b2bqs.metrics")
+        log = logging.getLogger("b2bqs.metrics")
         for name, value in sorted(self.metrics.items()):
             log.info("METRIC b2bqs.%s.%s %s", self.table, name, value)
 
@@ -128,7 +136,6 @@ class BatchLoader:
 
     def __init__(self, spark: SparkSession, warehouse: str,
                  job_id_seed: str | None = None,
-                 allow_quoted_newlines: bool = False,
                  import_ts: str | None = None,
                  audit_rebase: tuple[str, str] | None = None):
         self.spark = tune(spark)
@@ -160,15 +167,6 @@ class BatchLoader:
         if import_ts is not None:
             time.strptime(import_ts, "%Y-%m-%d %H:%M:%S")
         self._import_ts = import_ts
-        # The reference hardcodes allowQuotedNewlines:true (js:337). Spark's
-        # equivalent (multiLine=True) makes every CSV file single-split —
-        # one task per file regardless of size, a 100 TB parallelism killer —
-        # and locks univocity onto the first line separator it sees, breaking
-        # the mixed \r\n|\r|\n files the reference tolerates (js:128). We
-        # default to splittable newline-delimited reads and expose the exact
-        # reference behavior as an opt-in for data that truly embeds
-        # newlines inside quotes.
-        self.allow_quoted_newlines = allow_quoted_newlines
 
     # -- filesystem ---------------------------------------------------------
 
@@ -360,7 +358,6 @@ class BatchLoader:
         return (
             self.spark.read.schema(raw_schema)
             .option("header", True)          # skipLeadingRows: 1
-            .option("multiLine", self.allow_quoted_newlines)
             .option("mode", "PERMISSIVE")    # allowJaggedRows → null-fill
             .csv(files)
         )

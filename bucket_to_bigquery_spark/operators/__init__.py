@@ -15,7 +15,7 @@ from .dedup import (
     simhash_col,
     tokens,
 )
-from .multimodal import attach_payload, decode_media, extract_byte_features
+from .multimodal import attach_payload, extract_byte_features
 from .range_join import range_join_bucketed
 from .similarity import ann_topk_lsh, cosine_topk_exact, dot_e12, norm_e12
 
@@ -36,5 +36,4 @@ __all__ = [
     "norm_e12",
     "attach_payload",
     "extract_byte_features",
-    "decode_media",
 ]

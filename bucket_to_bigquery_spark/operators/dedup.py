@@ -313,15 +313,20 @@ def simhash_col(tokens_col: Column, bits: int = 32) -> Column:
     return _simhash(tokens_col)
 
 
-def rolling_fingerprint(tokens_col: Column, base: int = 31,
-                        mod: int = 2_147_483_647) -> Column:
+# base and modulus of rolling_fingerprint; q49d's oracle embeds both
+ROLLING_BASE = 31
+ROLLING_MOD = (1 << 31) - 1
+
+
+def rolling_fingerprint(tokens_col: Column) -> Column:
     """Order-sensitive polynomial rolling hash over the token sequence:
-    ``fold(acc*base + token_hash mod m)`` — the document fingerprint for
-    shift-detection (unlike SimHash it changes when order changes)."""
+    ``fold(acc*ROLLING_BASE + token_hash mod ROLLING_MOD)`` — the document
+    fingerprint for shift-detection (unlike SimHash it changes when order
+    changes)."""
     return F.aggregate(
         F.transform(tokens_col, token_hash),
         F.lit(0).cast("long"),
-        lambda acc, h: (acc * base + h) % mod,
+        lambda acc, h: (acc * ROLLING_BASE + h) % ROLLING_MOD,
     )
 
 
@@ -333,6 +338,10 @@ def rolling_fingerprint(tokens_col: Column, base: int = 31,
 # mod p (< 2^31) so a*h+b stays under 2^62 — no int64 overflow in either
 # engine, which is what makes the DuckDB oracle bit-exact.
 MINHASH_PRIME = (1 << 31) - 1
+# band count and coefficient seed of minhash_candidate_pairs; q47b's
+# oracle embeds the same minhash_params(MINHASH_BANDS, MINHASH_SEED)
+MINHASH_BANDS = 6
+MINHASH_SEED = 42
 
 
 def minhash_params(num_hashes: int = 6, seed: int = 42) -> list[tuple[int, int]]:
@@ -355,8 +364,6 @@ def minhash_candidate_pairs(
     text_col: str,
     n: int = 3,
     jaccard_distance_threshold: float = 0.4,
-    num_hash_tables: int = 6,
-    seed: int = 42,
 ) -> DataFrame:
     """Near-dup pairs via explicit banded MinHash + exact Jaccard verify.
 
@@ -444,7 +451,7 @@ def minhash_candidate_pairs(
                             F.transform(F.col("sh"), lambda h: (h * a + b) % p)
                         ).alias("sig"),
                     )
-                    for i, (a, b) in enumerate(minhash_params(num_hash_tables, seed))
+                    for i, (a, b) in enumerate(minhash_params(MINHASH_BANDS, MINHASH_SEED))
                 ]
             )
         ).alias("bs"),

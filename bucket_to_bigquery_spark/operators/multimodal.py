@@ -7,10 +7,10 @@ every decode/feature step is a ``mapInPandas`` stage so bytes cross the
 JVM↔Python boundary in Arrow batches, never row by row. Partitioning is by
 the metadata (date/source), so media operators inherit pruning for free.
 
-Real media codecs aren't available in this environment, so ``decode_media``
-is an explicit stub (NotImplementedError) — the Spark-side plumbing
-(schema, batch shape, byte stats) is real and tested via the deterministic
-byte-level feature extractor.
+No media codec ships with the engine: the byte-level feature extractor,
+frame sampler and content-defined chunker stand in for a decode step, so
+the Spark-side plumbing (schema, batch shape, byte stats) is real and
+oracle-checked.
 """
 
 from __future__ import annotations
@@ -39,22 +39,12 @@ def attach_payload(df: DataFrame, id_col: str, text_col: str,
     )
 
 
-def payload_magic(payload: Column, n: int = 4) -> Column:
-    """Hex of the first ``n`` bytes — the format-sniff ('magic number')."""
-    return F.hex(F.substring(payload, 1, n))
+_MAGIC_BYTES = 4
 
 
-def decode_media(mime: str, payload: bytes):
-    """STUB — media decoding (image/audio/video) requires codec libraries
-    not present in this environment. The call signature and dispatch are
-    the real surface; plug Pillow/torchaudio/pyav here in production."""
-    raise NotImplementedError(
-        f"no codec available for {mime!r}; install a decoder and register "
-        "it in DECODERS"
-    )
-
-
-DECODERS: dict[str, object] = {}  # mime prefix -> decoder callable
+def payload_magic(payload: Column) -> Column:
+    """Hex of the first four bytes — the format-sniff ('magic number')."""
+    return F.hex(F.substring(payload, 1, _MAGIC_BYTES))
 
 
 def sample_frame_batches(n_frames: int, frame_bytes: int = 16):

@@ -30,8 +30,6 @@ def range_join_bucketed(
     lower_seconds: float,
     upper_seconds: float,
     bucket_seconds: int | None = None,
-    inclusive_lower: bool = False,
-    inclusive_upper: bool = True,
 ) -> DataFrame:
     """Join rows where right.ts − left.ts ∈ (lower, upper] seconds.
 
@@ -54,12 +52,8 @@ def range_join_bucketed(
     )
     r2 = right.withColumn("__bucket", bucket_of(rcol))
 
-    lo_op = (rcol >= _ts_add(lcol, lower_seconds)) if inclusive_lower else (
-        rcol > _ts_add(lcol, lower_seconds)
-    )
-    hi_op = (rcol <= _ts_add(lcol, upper_seconds)) if inclusive_upper else (
-        rcol < _ts_add(lcol, upper_seconds)
-    )
+    lo_op = rcol > _ts_add(lcol, lower_seconds)
+    hi_op = rcol <= _ts_add(lcol, upper_seconds)
     return l2.join(r2, "__bucket").where(lo_op & hi_op).drop("__bucket")
 
 

@@ -1,6 +1,6 @@
 """Similarity search over embedding columns (SURVEY §2.C Q48).
 
-Two paths, as the north star prescribes:
+One exact path and three approximate ones:
 
 - **Exact brute-force top-k** (`cosine_topk_exact`): O(N·Q) — each corpus
   row meets each of the (few, broadcast) query vectors once; no shuffle
@@ -9,6 +9,15 @@ Two paths, as the north star prescribes:
   scaled integers (round(x·y·1e12) as int64 — identical IEEE multiply +
   half-away-from-zero round in Spark and DuckDB), so the cosine doubles
   are bit-identical and ties can't flip.
+- **Sign-grid ANN** (`signgrid_ann_topk`) and sign-band near-duplicate
+  pairs (`sign_band_neardup_pairs`): closed-form sign-bit blocking, then
+  the same exact scaled-int cosine.
+- **IVF ANN** (`ivf_topk`, `ivf_build_index` / `ivf_probe_prebuilt`,
+  `ivf_scan_stats`): a seeded coarse quantizer, corpus-scaled list count
+  and recall-calibrated probe width. Each IVF step — list build,
+  injected-centroid audit fit, exact probe order — has one definition
+  here; the injected-centroid verifiers (`ivf_scan_stats_exact`,
+  queries/ann_exact.py, queries/lloyd_step.py) reuse it.
 - **LSH ANN** (`ann_topk_lsh`): BucketedRandomProjectionLSH over
   L2-normalized vectors — on the unit sphere, euclidean distance is
   monotone in cosine (d² = 2 − 2cos), so nearest-by-euclidean IS
@@ -72,6 +81,11 @@ def _round_nearest_ties_away_e12(p):
     return np.where(ties, t + np.copysign(1.0, p), r).astype("int64")
 
 
+def _norm_e12_rows(x):
+    """numpy :func:`norm_e12` per row of ``x``: Σ round(xᵢ²·1e12) as int64."""
+    return _round_nearest_ties_away_e12(x * x * 1e12).sum(axis=1)
+
+
 _MAX_EXACT_QUERIES = 4096  # same bounded-collect contract as the IVF fit
 
 
@@ -79,15 +93,16 @@ def _spread_small_input(df: DataFrame) -> DataFrame:
     """Round-robin a narrow input out to ``defaultParallelism`` when the
     scan produced fewer splits than the cluster has cores.
 
-    The Arrow scoring passes downstream are CPU-heavy numpy; a small
-    parquet input (one ~1 MB split at sf0.1) would otherwise run the
-    whole pass on a single core while the other 31 idle (r16
-    measurement: q48h 43.9 s / q130 28.3 s isolated medians with the
-    pass single-task). At warehouse scale the scan already has ≥ cores
-    splits and this is a no-op — scale-adaptive, not a local tuning
-    constant (the dedup._inverted_index_common precedent). Results are
-    unchanged: every downstream aggregate/score is row-local or
-    order-independent by the exact-integer contract."""
+    The Arrow scoring passes downstream are CPU-heavy numpy, and so are
+    the tokenize→shingle projections of q89/q89b/q95; a small parquet
+    input (one ~1 MB split at sf0.1) would otherwise run the whole pass
+    on a single core while the other 31 idle (r16 measurement: q48h
+    43.9 s / q130 28.3 s isolated medians with the pass single-task).
+    At warehouse scale the scan already has ≥ cores splits and this is
+    a no-op — scale-adaptive, not a local tuning constant (the
+    dedup._inverted_index_common precedent). Results are unchanged:
+    every downstream aggregate/score is row-local or order-independent
+    by the exact-integer contract."""
     sc = df.sparkSession.sparkContext
     if df.rdd.getNumPartitions() < sc.defaultParallelism:
         return df.repartition(sc.defaultParallelism)
@@ -142,7 +157,7 @@ def cosine_topk_exact(
     q_mat = np.asarray(
         [np.asarray(r["q_vec"], dtype="float64") for r in qrows]
     )  # (Q, dim)
-    q_norm = _round_nearest_ties_away_e12(q_mat * q_mat * 1e12).sum(axis=1)  # (Q,)
+    q_norm = _norm_e12_rows(q_mat)  # (Q,)
     q_sqrt = np.sqrt(q_norm.astype("float64"))
 
     # per-element round BEFORE the sum is the integer contract, so the
@@ -164,7 +179,7 @@ def cosine_topk_exact(
             for rs in range(0, len(all_x), _ROW_CHUNK):
                 x = all_x[rs:rs + _ROW_CHUNK]
                 n_ids = all_ids[rs:rs + _ROW_CHUNK]
-                n_norm = _round_nearest_ties_away_e12(x * x * 1e12).sum(axis=1)
+                n_norm = _norm_e12_rows(x)
                 dots = np.empty((len(x), nq), dtype="int64")
                 for qs in range(0, nq, _Q_CHUNK):
                     qe = min(qs + _Q_CHUNK, nq)
@@ -448,8 +463,8 @@ def signgrid_ann_topk(
             qv = np.asarray(
                 [np.asarray(v, dtype="float64") for v in pdf["q_vec"]]
             )
-            nn = _round_nearest_ties_away_e12(x * x * 1e12).sum(axis=1)
-            qn = _round_nearest_ties_away_e12(qv * qv * 1e12).sum(axis=1)
+            nn = _norm_e12_rows(x)
+            qn = _norm_e12_rows(qv)
             dots = _round_nearest_ties_away_e12(x * qv * 1e12).sum(axis=1)
             cos = dots.astype("float64") / (
                 np.sqrt(nn.astype("float64")) * np.sqrt(qn.astype("float64"))
@@ -667,21 +682,6 @@ def _calibrate_n_probe(
     return int(ranks[idx])
 
 
-def _resolve_ivf_params(corpus: DataFrame, vec_col: str, k: int):
-    """Shared operating-point resolution for the inline query, the offline
-    index build, and the scan-cost probe: corpus-scaled ``n_lists``
-    (:func:`ivf_operating_point`), quantizer fit, and recall-calibrated
-    ``n_probe`` — all seeded, so every caller derives the SAME point from
-    the same corpus (q48d's prebuilt == q48c's inline is pytest-pinned).
-    Returns ``(centroids, n_probe, n_corpus)``."""
-    n = corpus.count()
-    centroids, x = _fit_quantizer(corpus, vec_col, ivf_operating_point(n), n)
-    n_probe = _calibrate_n_probe(
-        x, centroids, target=IVF_RECALL_TARGET, k=k, seed=_IVF_SEED
-    )
-    return centroids, min(n_probe, len(centroids)), n
-
-
 def _assign_lists(feats: DataFrame, centroids: list[list[float]]) -> DataFrame:
     """Append ``list_id`` = nearest-centroid index to a (n_id, n_vec,
     n_norm) frame: Arrow-batched argmin via one matmul per batch
@@ -712,6 +712,33 @@ def _assign_lists(feats: DataFrame, centroids: list[list[float]]) -> DataFrame:
     return feats.mapInPandas(
         assign, "n_id long, n_vec array<float>, n_norm long, list_id int"
     )
+
+
+def _build_lists(corpus: DataFrame, id_col: str, vec_col: str, k: int):
+    """The float IVF list build shared by the inline query
+    (:func:`ivf_topk`), the offline index (:func:`ivf_build_index`) and
+    the scan-cost probe (:func:`ivf_scan_stats`): corpus-scaled
+    ``n_lists`` (:func:`ivf_operating_point`), quantizer fit,
+    recall-calibrated ``n_probe``, the corpus assignment pass, and the
+    ``(list_id, centroid)`` frame. All seeded, so every caller derives
+    the SAME point from the same corpus (q48d's prebuilt == q48c's
+    inline is pytest-pinned). Returns ``(assigned, centroid_frame,
+    n_lists, n_probe, n_corpus)``."""
+    n = corpus.count()
+    centroids, x = _fit_quantizer(corpus, vec_col, ivf_operating_point(n), n)
+    n_probe = _calibrate_n_probe(
+        x, centroids, target=IVF_RECALL_TARGET, k=k, seed=_IVF_SEED
+    )
+    feats = _featurize(corpus, id_col, vec_col).select(
+        F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec"),
+        F.col("nrm").alias("n_norm"),
+    )
+    cdf = corpus.sparkSession.createDataFrame(
+        list(enumerate(centroids)), ["list_id", "centroid"]
+    )
+    n_lists = len(centroids)
+    return (_assign_lists(feats, centroids), cdf, n_lists,
+            min(n_probe, n_lists), n)
 
 
 def _probe_lists(q: DataFrame, centroids: DataFrame, n_probe: int) -> DataFrame:
@@ -799,31 +826,24 @@ def ivf_build_index(
     :func:`ivf_operating_point` / :func:`_calibrate_n_probe`); the seeded
     fit ⇒ rebuilding from the same corpus reproduces the index.
     Returns the persisted params row as a dict."""
-    centroids, n_probe, n = _resolve_ivf_params(corpus, vec_col, k)
-    feats = _featurize(corpus, id_col, vec_col).select(
-        F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec"),
-        F.col("nrm").alias("n_norm"),
-    )
+    assigned, cdf, n_lists, n_probe, n = _build_lists(corpus, id_col, vec_col, k)
     (
-        _assign_lists(feats, centroids)
+        assigned
         # one file per inverted list (lists ≈ balanced by the quantizer):
         # probing p of L lists scans p/L of the data via partition pruning
         .repartition("list_id")
         .write.mode("overwrite").partitionBy("list_id")
         .parquet(f"{path}/assigned")
     )
-    spark = corpus.sparkSession
-    spark.createDataFrame(
-        list(enumerate(centroids)), ["list_id", "centroid"]
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
+    cdf.coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
     params = {
         "index_version": IVF_INDEX_VERSION,
         "n_corpus": n,
-        "n_lists": len(centroids),
+        "n_lists": n_lists,
         "n_probe": n_probe,
         "recall_target": float(IVF_RECALL_TARGET),
     }
-    spark.createDataFrame(
+    corpus.sparkSession.createDataFrame(
         [tuple(params.values())], list(params.keys())
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/params")
     return params
@@ -884,15 +904,7 @@ def ivf_topk(
     seeded bounded sample driver-side in numpy (:func:`_fit_quantizer`),
     calibration reuses that sample for free, and only the cheap
     Arrow-batched assignment pass touches the full corpus."""
-    centroids, n_probe, _ = _resolve_ivf_params(corpus, vec_col, k)
-    feats = _featurize(corpus, id_col, vec_col).select(
-        F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec"),
-        F.col("nrm").alias("n_norm"),
-    )
-    assigned = _assign_lists(feats, centroids)
-    cdf = corpus.sparkSession.createDataFrame(
-        list(enumerate(centroids)), ["list_id", "centroid"]
-    )
+    assigned, cdf, _, n_probe, _ = _build_lists(corpus, id_col, vec_col, k)
     return _ivf_probe(assigned, cdf, queries, id_col, vec_col, k, n_probe)
 
 
@@ -914,15 +926,8 @@ def ivf_scan_stats(
     records this next to the driver-visible recall so the (recall, cost)
     pair is judged together — recall alone can be bought by probing
     every list."""
-    centroids, n_probe, n = _resolve_ivf_params(corpus, vec_col, k)
-    feats = _featurize(corpus, id_col, vec_col).select(
-        F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec"),
-        F.col("nrm").alias("n_norm"),
-    )
-    sizes = _assign_lists(feats, centroids).groupBy("list_id").count()
-    cdf = corpus.sparkSession.createDataFrame(
-        list(enumerate(centroids)), ["list_id", "centroid"]
-    )
+    assigned, cdf, n_lists, n_probe, n = _build_lists(corpus, id_col, vec_col, k)
+    sizes = assigned.groupBy("list_id").count()
     q = _featurize(queries, id_col, vec_col).select(
         F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"),
     )
@@ -940,7 +945,7 @@ def ivf_scan_stats(
     return {
         "n_corpus": n,
         "n_queries": n_queries,
-        "n_lists": len(centroids),
+        "n_lists": n_lists,
         "n_probe": n_probe,
         "candidates": candidates,
         "exhaustive": exhaustive,
@@ -1016,12 +1021,65 @@ def assign_lists_e12(
             )
             out["list_id"] = _d2_e12_rows(x, cent).argmin(axis=1)
             if norm_col:
-                out[norm_col] = _round_nearest_ties_away_e12(
-                    x * x * 1e12
-                ).sum(axis=1)
+                out[norm_col] = _norm_e12_rows(x)
             yield out
 
     return _spread_small_input(frame).mapInPandas(assign, ddl)
+
+
+def _injected_centroids(corpus: DataFrame, id_col: str, vec_col: str):
+    """The audit fit of the injected-centroid verifiers (q48g's
+    :func:`ivf_scan_stats_exact`, q48h, q130): the
+    ``ivf_operating_point(N)`` lowest-``id_col`` corpus vectors stand in
+    for the k-means centroids, so a plain-SQL oracle can rebuild them.
+    Returns ``(n_corpus, cent)`` with ``cent`` the (L, d) float64 matrix;
+    a corpus smaller than the operating point's floor of 8 yields fewer
+    rows, and an empty corpus yields shape ``(0,)``."""
+    import numpy as np
+
+    n = corpus.count()
+    rows = (
+        corpus.select(id_col, vec_col)
+        .orderBy(F.col(id_col).asc())
+        .limit(ivf_operating_point(n))
+        .collect()
+    )
+    return n, np.asarray([np.asarray(r[vec_col], dtype="float64") for r in rows])
+
+
+def _exact_queries(queries: DataFrame, id_col: str, vec_col: str, caller: str):
+    """The bounded query collect of the exact IVF verifiers: one row per
+    distinct id (a duplicated id would double-count candidates and
+    interleave probe ranks), at most :data:`_MAX_EXACT_QUERIES` of them.
+    Returns ``(rows, q_mat)``: rows carry ``q_id``/``q_vec``, ``q_mat``
+    is their (Q, d) float64 matrix."""
+    import numpy as np
+
+    qrows = (
+        queries.dropDuplicates([id_col])
+        .select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
+        .collect()
+    )
+    if len(qrows) > _MAX_EXACT_QUERIES:
+        raise ValueError(
+            f"{caller}: {len(qrows)} query vectors exceed the "
+            f"small-by-contract bound {_MAX_EXACT_QUERIES}"
+        )
+    return qrows, np.asarray(
+        [np.asarray(r["q_vec"], dtype="float64") for r in qrows]
+    )
+
+
+def _probe_order_e12(q_mat, cent, n_probe: int):
+    """Each query's first ``min(n_probe, L)`` list ids in probe order:
+    exact e12 d² ascending, ties → lowest list id (lexsort's last key is
+    primary) — the order the q48g/q48h oracles' ``row_number() OVER
+    (PARTITION BY q_id ORDER BY d2, list_id)`` produces."""
+    import numpy as np
+
+    ids = np.arange(len(cent))
+    width = min(n_probe, len(cent))
+    return [np.lexsort((ids, d2))[:width] for d2 in _d2_e12_rows(q_mat, cent)]
 
 
 def ivf_scan_stats_exact(
@@ -1059,12 +1117,10 @@ def ivf_scan_stats_exact(
     they carry identical vectors (the q48g corpus, where queries are a
     slice of the keyed embeddings table, satisfies this by
     construction; tests/test_scan_stats.py pins that case). The
-    ``dropDuplicates([id_col])`` below keeps an arbitrary row, so
-    duplicate ids with DIFFERENT vectors would be nondeterministic and
-    could diverge from the SQL oracle (which never dedups) — that input
-    is out of contract, not handled."""
-    import numpy as np
-
+    ``dropDuplicates([id_col])`` in :func:`_exact_queries` keeps an
+    arbitrary row, so duplicate ids with DIFFERENT vectors would be
+    nondeterministic and could diverge from the SQL oracle (which never
+    dedups) — that input is out of contract, not handled."""
     _EMPTY_SCHEMA = (
         "q_id long, n_corpus long, n_lists long, n_probe long, "
         "probed_lists string, candidates long, scan_frac double"
@@ -1072,37 +1128,17 @@ def ivf_scan_stats_exact(
     spark = corpus.sparkSession
     # bound-check the query set FIRST (like cosine_topk_exact) — an
     # oversized caller should not pay the corpus count + centroid
-    # collect before being rejected. Duplicate query ids dedup like the
-    # sibling ANN paths (they would silently double-count candidates
-    # and interleave probe ranks in probed_lists).
-    qrows = (
-        queries.dropDuplicates([id_col])
-        .select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
-        .collect()
+    # collect before being rejected
+    qrows, q_mat = _exact_queries(
+        queries, id_col, vec_col, "ivf_scan_stats_exact"
     )
-    if len(qrows) > _MAX_EXACT_QUERIES:
-        raise ValueError(
-            f"ivf_scan_stats_exact: {len(qrows)} query vectors exceed the "
-            f"small-by-contract bound {_MAX_EXACT_QUERIES}"
-        )
     if not qrows:
         return spark.createDataFrame([], _EMPTY_SCHEMA)
-    n = corpus.count()
-    cent_rows = (
-        corpus.select(id_col, vec_col)
-        .orderBy(F.col(id_col).asc())
-        .limit(ivf_operating_point(n))
-        .collect()
-    )
-    if not cent_rows:
+    n, cent = _injected_centroids(corpus, id_col, vec_col)
+    if not len(cent):
         # empty corpus: no lists to probe — mirror the SQL twin, whose
         # empty cent CTE yields an empty result
         return spark.createDataFrame([], _EMPTY_SCHEMA)
-    cent = np.asarray(
-        [np.asarray(r[vec_col], dtype="float64") for r in cent_rows]
-    )
-    # the operating point clamps at 8 but a tiny corpus may not HAVE 8
-    # vectors — every downstream shape follows the actual centroid count
     n_lists = len(cent)
     feats = corpus.select(
         F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec")
@@ -1114,20 +1150,13 @@ def ivf_scan_stats_exact(
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
 
-    q_mat = np.asarray(
-        [np.asarray(r["q_vec"], dtype="float64") for r in qrows]
-    )
-    qd2 = _d2_e12_rows(q_mat, cent)
-    # probe order = (d2 asc, list_id asc); lexsort's last key is primary
-    probe_rows = []
-    for row, r in enumerate(qrows):
-        order = np.lexsort((np.arange(n_lists), qd2[row]))
-        probe_rows.extend(
-            (int(r["q_id"]), rank + 1, int(order[rank]))
-            for rank in range(min(n_probe, n_lists))
-        )
     probes = spark.createDataFrame(
-        probe_rows, "q_id long, probe_rank long, list_id long"
+        [
+            (int(r["q_id"]), rank + 1, int(list_id))
+            for r, lists in zip(qrows, _probe_order_e12(q_mat, cent, n_probe))
+            for rank, list_id in enumerate(lists)
+        ],
+        "q_id long, probe_rank long, list_id long",
     )
     joined = (
         # LEFT: a probed list with no assigned vectors must count 0, not

@@ -15,11 +15,12 @@ contract — so a plain-SQL oracle reproduces every output bit, including
 rank ties (cosine DESC, n_id ASC). After this entry, rows-only covers
 ONLY the Lloyd fit on the q48c/q48d default path.
 
-Lives in its own module (not operators/similarity.py) and reuses the
-operator's primitives READ-ONLY (`_d2_e12_rows`, `dot_e12`, `norm_e12`,
-`cosine_from_e12`, `ivf_operating_point`, `_MAX_EXACT_QUERIES`); the
-builder-local assignment generator mirrors
-``similarity.ivf_scan_stats_exact``'s and could fold into the operator.
+Lives in its own module (not operators/similarity.py) and builds on
+the operator's shared verifier steps — the bounded query collect, the
+centroid injection, the exact-e12 assignment pass and probe order, and
+the e12 cosine — which ``similarity.ivf_scan_stats_exact`` (q48g) and
+q130 run too. Its oracle shares their SQL twins and injected-centroid
+CTEs from llm_queries.
 
 Reference parity: n/a — no analytics surface in the reference; declared
 engine surface (SURVEY §2.C Q48 extension, registered r13).
@@ -40,45 +41,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .llm_queries import (
+    _D2_E12_SQL,
+    _DOT_E12_SQL,
+    _INJECTED_ASSIGN_CTES,
+    _INJECTED_CENT_CTES,
+    _NORM_E12_SQL,
+)
 from .registry import query, tables
 
 _K = 5
 _N_PROBE = 8
 _N_QUERIES = 10  # mirrors q48c/q48d's audited query slice (vec_id < 10)
 
-# SQL twins of the e12 contracts (same text shape as llm_queries' / the
-# q48g module's, re-derived here).
-_D2_E12_SQL = (
-    "CAST(list_sum(list_transform(range(1, len({a}) + 1), i -> "
-    "CAST(round((CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE)) * "
-    "(CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE)) * 1e12) AS BIGINT)))"
-    " AS BIGINT)"
-)
-_NORM_E12_SQL = (
-    "CAST(list_sum(list_transform({v}, x -> "
-    "CAST(round(CAST(x AS DOUBLE) * CAST(x AS DOUBLE) * 1e12) AS BIGINT))) AS BIGINT)"
-)
-_DOT_E12_SQL = (
-    "CAST(list_sum(list_transform(range(1, len({a}) + 1), i -> "
-    "CAST(round(CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE) * 1e12) AS BIGINT)))"
-    " AS BIGINT)"
-)
-
 _Q48H_ORACLE = (
-    "WITH nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM embeddings), "
-    "ll AS (SELECT LEAST(GREATEST(CAST(round(sqrt(CAST(n AS DOUBLE))) "
-    "AS BIGINT), 8), 4096) AS n_lists FROM nn), "
-    "cent AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) AS BIGINT) "
-    "- 1 AS list_id, embedding AS c_vec FROM embeddings "
-    "QUALIFY row_number() OVER (ORDER BY vec_id) <= "
-    "(SELECT n_lists FROM ll)), "
-    # corpus -> nearest injected centroid, exact e12 d2, ties -> lowest list
-    "asg AS (SELECT e.vec_id AS n_id, c.list_id, "
-    + _D2_E12_SQL.format(a="e.embedding", b="c.c_vec")
-    + " AS d2 FROM embeddings e CROSS JOIN cent c), "
-    "amin AS (SELECT n_id, list_id FROM asg QUALIFY row_number() OVER "
-    "(PARTITION BY n_id ORDER BY d2 ASC, list_id ASC) = 1), "
-    f"q AS (SELECT vec_id AS q_id, embedding AS q_vec, "
+    _INJECTED_CENT_CTES
+    + _INJECTED_ASSIGN_CTES
+    + "q AS (SELECT vec_id AS q_id, embedding AS q_vec, "
     + _NORM_E12_SQL.format(v="embedding")
     + f" AS q_norm FROM embeddings WHERE vec_id < {_N_QUERIES}), "
     # per-query probe selection: n_probe nearest lists by exact e12 d2
@@ -145,46 +124,27 @@ def ivf_topk_injected_centroids(
     every stage is then bit-reproducible in SQL. Input contract: unique
     ``id_col`` per (id, vec) pair, as in the sibling ANN paths.
     """
-    import numpy as np
-
     from ..operators.similarity import (
-        _MAX_EXACT_QUERIES,
-        _d2_e12_rows,
-        _round_nearest_ties_away_e12,
+        _exact_queries,
+        _injected_centroids,
+        _norm_e12_rows,
+        _probe_order_e12,
         assign_lists_e12,
         cosine_from_e12,
         dot_e12,
-        ivf_operating_point,
     )
 
     spark = corpus.sparkSession
     out_schema = "q_id long, rank long, n_id long, cosine double"
 
-    qrows = (
-        queries.dropDuplicates([id_col])
-        .select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
-        .collect()
+    qrows, q_mat = _exact_queries(
+        queries, id_col, vec_col, "ivf_topk_injected_centroids"
     )
-    if len(qrows) > _MAX_EXACT_QUERIES:
-        raise ValueError(
-            f"ivf_topk_injected_centroids: {len(qrows)} query vectors "
-            f"exceed the small-by-contract bound {_MAX_EXACT_QUERIES}"
-        )
     if not qrows:
         return spark.createDataFrame([], out_schema)
-    n = corpus.count()
-    cent_rows = (
-        corpus.select(id_col, vec_col)
-        .orderBy(F.col(id_col).asc())
-        .limit(ivf_operating_point(n))
-        .collect()
-    )
-    if not cent_rows:
+    _, cent = _injected_centroids(corpus, id_col, vec_col)
+    if not len(cent):
         return spark.createDataFrame([], out_schema)
-    cent = np.asarray(
-        [np.asarray(r[vec_col], dtype="float64") for r in cent_rows]
-    )
-    n_lists = len(cent)
 
     # corpus assignment: one Arrow pass, exact e12 d2 argmin (ties ->
     # lowest list id); n_vec rides through so scoring needs no join back
@@ -199,23 +159,16 @@ def ivf_topk_injected_centroids(
         feats, cent, keep_cols=("n_id", "n_vec"), norm_col="n_norm"
     )
 
-    # probe selection: driver-side on the bounded query set (Q x n_lists
-    # exact e12 d2; lexsort's last key is primary -> d2 asc, list_id asc).
-    # Each probe row carries the query's e12 norm — a per-query constant
-    # the old plan re-folded per candidate row.
-    q_mat = np.asarray(
-        [np.asarray(r["q_vec"], dtype="float64") for r in qrows]
-    )
-    qd2 = _d2_e12_rows(q_mat, cent)
-    q_norm = _round_nearest_ties_away_e12(q_mat * q_mat * 1e12).sum(axis=1)
-    probe_rows = []
-    for row, r in enumerate(qrows):
-        order = np.lexsort((np.arange(n_lists), qd2[row]))
-        probe_rows.extend(
-            (int(r["q_id"]), list(map(float, r["q_vec"])),
-             int(q_norm[row]), int(order[rank]))
-            for rank in range(min(n_probe, n_lists))
+    # probe selection: driver-side on the bounded query set. Each probe
+    # row carries the query's e12 norm — a per-query constant the old
+    # plan re-folded per candidate row.
+    probe_rows = [
+        (int(r["q_id"]), list(map(float, r["q_vec"])), int(norm), int(list_id))
+        for r, norm, lists in zip(
+            qrows, _norm_e12_rows(q_mat), _probe_order_e12(q_mat, cent, n_probe)
         )
+        for list_id in lists
+    ]
     probes = spark.createDataFrame(
         probe_rows, "q_id long, q_vec array<float>, q_norm long, list_id long"
     )

@@ -33,10 +33,9 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import shingle_hash, shingles, tokens
 from ..scratch import _DONE, materialize_once, scratch_path
-from .llm_queries import _SHINGLE_HASH_SQL, _TOKS_SQL
+from .llm_queries import _NEAR_TAIL, _SHINGLE_HASH_SQL, _TOKS_SQL
 from .registry import query, tables
 
-_NEAR_TAIL = " zz9 qq8 vv7"  # the q47 planted-near literal (llm_queries)
 _MAX_SHINGLE_DF = 100
 _JACCARD = 0.6
 _N = 3

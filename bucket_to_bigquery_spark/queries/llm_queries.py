@@ -20,7 +20,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import (
+    MINHASH_BANDS,
     MINHASH_PRIME,
+    MINHASH_SEED,
+    ROLLING_BASE,
+    ROLLING_MOD,
     exact_dedup_groups,
     minhash_candidate_pairs,
     minhash_params,
@@ -33,7 +37,7 @@ from ..operators.dedup import (
 )
 from ..operators.multimodal import attach_payload, extract_byte_features, payload_magic
 from ..operators.similarity import ann_topk_lsh, cosine_topk_exact
-from .registry import davg_sql, query, tables
+from .registry import _NORM_SQL, davg_sql, query, tables
 
 # ---------------------------------------------------------------------------
 # Shared corpus-with-planted-duplicates (both engines, literally)
@@ -41,7 +45,6 @@ from .registry import davg_sql, query, tables
 
 _NEAR_TAIL = " zz9 qq8 vv7"
 
-_NORM_SQL = "lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))"
 _TOKS_SQL = f"string_split({_NORM_SQL}, ' ')"
 # 60-bit md5-prefix hash of the 3-gram starting at token ``i`` of the
 # token list ``t`` — the oracle twin of operators/dedup.shingle_hash over
@@ -407,7 +410,7 @@ def q47e(spark: SparkSession, sf_dir: str) -> DataFrame:
 # expressions embed (dedup.minhash_params is the single source of truth),
 # over shingle hashes reduced mod the same Mersenne prime.
 _MH_PARAMS_SQL = ", ".join(
-    f"({i}, {a}, {b})" for i, (a, b) in enumerate(minhash_params(6, 42))
+    f"({i}, {a}, {b})" for i, (a, b) in enumerate(minhash_params(MINHASH_BANDS, MINHASH_SEED))
 )
 _MH_SH_SQL = (
     f"sh AS (SELECT DISTINCT doc_id, {_SHINGLE_HASH_SQL}"
@@ -466,6 +469,10 @@ def q47b(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Q48 — similarity search
 # ---------------------------------------------------------------------------
 
+# SQL twins of the exact e12 integer contract in operators/similarity.py
+# (norm_e12, dot_e12, _d2_e12_rows): per-element round, then an integer
+# sum. The only definitions; q48g (scan_stats), q48h (ann_exact) and
+# q130 (lloyd_step) import them from here.
 _NORM_E12_SQL = (
     "CAST(list_sum(list_transform({v}, x -> "
     "CAST(round(CAST(x AS DOUBLE) * CAST(x AS DOUBLE) * 1e12) AS BIGINT))) AS BIGINT)"
@@ -474,6 +481,34 @@ _DOT_E12_SQL = (
     "CAST(list_sum(list_transform(range(1, len({a}) + 1), i -> "
     "CAST(round(CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE) * 1e12) AS BIGINT)))"
     " AS BIGINT)"
+)
+_D2_E12_SQL = (
+    "CAST(list_sum(list_transform(range(1, len({a}) + 1), i -> "
+    "CAST(round((CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE)) * "
+    "(CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE)) * 1e12) AS BIGINT)))"
+    " AS BIGINT)"
+)
+# The injected-centroid oracles' opening CTEs, the SQL twin of
+# similarity._injected_centroids: corpus size ``nn``, the operating point
+# ``ll`` (ivf_operating_point) and the ``cent`` table of the n_lists
+# lowest-vec_id embeddings as list ids 0..L-1.
+_INJECTED_CENT_CTES = (
+    "WITH nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM embeddings), "
+    "ll AS (SELECT LEAST(GREATEST(CAST(round(sqrt(CAST(n AS DOUBLE))) "
+    "AS BIGINT), 8), 4096) AS n_lists FROM nn), "
+    "cent AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) AS BIGINT) "
+    "- 1 AS list_id, embedding AS c_vec FROM embeddings "
+    "QUALIFY row_number() OVER (ORDER BY vec_id) <= "
+    "(SELECT n_lists FROM ll)), "
+)
+# corpus -> nearest injected centroid by exact e12 d2, ties -> lowest
+# list: ``amin(n_id, list_id)``, the twin of similarity.assign_lists_e12
+_INJECTED_ASSIGN_CTES = (
+    "asg AS (SELECT e.vec_id AS n_id, c.list_id, "
+    + _D2_E12_SQL.format(a="e.embedding", b="c.c_vec")
+    + " AS d2 FROM embeddings e CROSS JOIN cent c), "
+    "amin AS (SELECT n_id, list_id FROM asg QUALIFY row_number() OVER "
+    "(PARTITION BY n_id ORDER BY d2 ASC, list_id ASC) = 1), "
 )
 
 
@@ -1193,7 +1228,8 @@ def q49c(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"WITH t AS (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents) "
         "SELECT doc_id, CAST(list_reduce(list_prepend(CAST(0 AS BIGINT), "
         "list_transform(toks, t -> " + _TOKHASH_SQL.format(t="t") + ")), "
-        "(acc, h) -> (acc * 31 + h) % 2147483647) AS BIGINT) AS fingerprint "
+        f"(acc, h) -> (acc * {ROLLING_BASE} + h) % {ROLLING_MOD}) AS BIGINT) "
+        "AS fingerprint "
         "FROM t ORDER BY doc_id"
     ),
     description=(
@@ -1798,8 +1834,7 @@ def q49m(spark: SparkSession, sf_dir: str) -> DataFrame:
         "Q50: multimodal column pattern — opaque binary payloads with "
         "typed metadata (uri/mime), format sniff (magic bytes), and an "
         "Arrow-batched mapInPandas feature extractor over the raw bytes "
-        "(the real-decoder seam; codecs plug into operators/multimodal."
-        "DECODERS — decode_media is an explicit stub in this environment). "
+        "(the seam where a real media decoder would run). "
         "The oracle recomputes byte stats from the ASCII source text."
     ),
     tags=("llm",),

@@ -25,9 +25,11 @@ attract no vectors keep their centroid (shift 0, n 0 — mirroring
 operators/similarity._lloyd's nonzero-count guard). Ordered by
 list_id.
 
-Lives in its own module (the q48h precedent): operators/similarity.py
-primitives (`_d2_e12_rows`, `ivf_operating_point`) are reused
-READ-ONLY.
+Lives in its own module (the q48h precedent) and reuses
+operators/similarity.py's verifier steps: the centroid injection
+(`_injected_centroids`), the exact d² (`_d2_e12_rows`) and the
+small-input spread. Its oracle shares the injected-centroid CTEs and
+the e12 d² SQL twin from llm_queries.
 
 Scale design (100 TB): the fit auditor mirrors the fit's own shape —
 ONE Arrow-batched corpus assignment pass against the broadcast
@@ -45,28 +47,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .llm_queries import _D2_E12_SQL, _INJECTED_CENT_CTES
 from .registry import query, tables
 
 _DIM = 64
 
-# SQL twin of the e12 d² contract — q48h's restatement
-_D2_E12_SQL = (
-    "CAST(list_sum(list_transform(range(1, len({a}) + 1), i -> "
-    "CAST(round((CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE)) * "
-    "(CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE)) * 1e12) AS BIGINT)))"
-    " AS BIGINT)"
-)
-
 _Q130_ORACLE = (
-    "WITH nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM embeddings), "
-    "ll AS (SELECT LEAST(GREATEST(CAST(round(sqrt(CAST(n AS DOUBLE))) "
-    "AS BIGINT), 8), 4096) AS n_lists FROM nn), "
-    "cent AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) AS BIGINT) "
-    "- 1 AS list_id, embedding AS c_vec FROM embeddings "
-    "QUALIFY row_number() OVER (ORDER BY vec_id) <= "
-    "(SELECT n_lists FROM ll)), "
+    _INJECTED_CENT_CTES
     # exact-e12 assignment, ties -> lowest list (the q48g contract)
-    "asg AS (SELECT e.vec_id AS n_id, e.embedding AS n_vec, c.list_id, "
+    + "asg AS (SELECT e.vec_id AS n_id, e.embedding AS n_vec, c.list_id, "
     + _D2_E12_SQL.format(a="e.embedding", b="c.c_vec")
     + " AS d2 FROM embeddings e CROSS JOIN cent c), "
     "amin AS (SELECT n_id, n_vec, list_id FROM asg QUALIFY row_number() "
@@ -114,21 +103,13 @@ def q130(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.similarity import (
         _d2_e12_rows,
+        _injected_centroids,
         _round_nearest_ties_away_e12,
-        ivf_operating_point,
+        _spread_small_input,
     )
 
     emb = tables(spark, sf_dir)["embeddings"]
-    n = emb.count()
-    cent_rows = (
-        emb.select("vec_id", "embedding")
-        .orderBy(F.col("vec_id").asc())
-        .limit(ivf_operating_point(n))
-        .collect()
-    )
-    cent = np.asarray(
-        [np.asarray(r["embedding"], dtype="float64") for r in cent_rows]
-    )
+    _, cent = _injected_centroids(emb, "vec_id", "embedding")
     n_lists, dim = cent.shape
     # engine-exact old-centroid e6 rendering, computed ONCE on the
     # driver with the pinned ROUND replica (rint + ties-away — the same
@@ -173,15 +154,9 @@ def q130(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    vecs = emb.select(F.col("embedding").alias("n_vec"))
-    sc = spark.sparkContext
-    if vecs.rdd.getNumPartitions() < sc.defaultParallelism:
-        # the corpus pass is CPU-heavy numpy; a small input (one parquet
-        # split at sf0.1) would otherwise run it on a single core. At
-        # warehouse scale the scan already has >= cores splits and this
-        # branch is a no-op — the repartition is scale-adaptive, not a
-        # local tuning constant (the _inverted_index_common precedent).
-        vecs = vecs.repartition(sc.defaultParallelism)
+    # the corpus pass is CPU-heavy numpy: spread a small input to the
+    # cluster width (a no-op at warehouse scale)
+    vecs = _spread_small_input(emb.select(F.col("embedding").alias("n_vec")))
     per = (
         vecs.mapInPandas(
             partials, "list_id long, j long, old_e6 double, s long, cnt long"

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import shingles, tokens
+from ..operators.similarity import _spread_small_input
 from .llm_queries import _SH5_SQL, _TOKS_SQL
 from .registry import query, tables
 
@@ -82,11 +83,8 @@ def q95(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explode/partial-agg on one core). Round-robin the narrow raw rows
     # out to the cluster width BEFORE the CPU-heavy projection — at
     # warehouse scale the scan already has >= cores splits and this is
-    # a no-op (the operators/similarity._spread_small_input recipe,
-    # inlined to keep this module's dependency set unchanged).
-    sc = spark.sparkContext
-    if docs.rdd.getNumPartitions() < sc.defaultParallelism:
-        docs = docs.repartition(sc.defaultParallelism)
+    # a no-op.
+    docs = _spread_small_input(docs)
     # r16 (guide §2.4, remove shuffles outright): the (doc_id, shingle)
     # distinctness this query needs is PER-DOCUMENT only — a row-local
     # array_distinct replaces the old global `.distinct()` exchange over

@@ -53,6 +53,7 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import shingle_hash, shingles, tokens
 from ..operators.materialize import checkpoint
+from ..operators.similarity import _spread_small_input
 from .llm_queries import _SH5_SQL, _TOKS_SQL
 from .registry import query, tables
 
@@ -278,9 +279,7 @@ def q89(spark: SparkSession, sf_dir: str) -> DataFrame:
     # q95's pre-spread lesson applies to both shapes (novelty.py r16):
     # round-robin the single-row-group test-scale scan to cluster width
     # BEFORE the tokenize-heavy projection (no-op at warehouse scale).
-    sc = spark.sparkContext
-    if docs.rdd.getNumPartitions() < sc.defaultParallelism:
-        docs = docs.repartition(sc.defaultParallelism)
+    docs = _spread_small_input(docs)
     if n_sources <= _SET_SHAPE_MAX_SOURCES:
         return _overlap_via_source_sets(spark, docs)
     return _overlap_via_shingle_join(docs)

@@ -33,7 +33,7 @@ from ..operators.substring import (
     substring_scrub_counts,
 )
 from .llm_queries import CORPUS_SQL, _TOKS_SQL, _dedup_corpus, quality_gates
-from .registry import query, tables
+from .registry import _NORM_SQL, query, tables
 
 # ---------------------------------------------------------------------------
 # Q51 — repeated-substring spans (substring-granular exact dedup)
@@ -295,7 +295,7 @@ def q52(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Q54 — full pipeline (clean -> dedup -> survivors -> pack), one plan
 # ---------------------------------------------------------------------------
 
-from .llm_queries import _Q47_PAIRS_FRAGMENT, _NORM_SQL, gates_ctes, q47_index_ctes  # noqa: E402
+from .llm_queries import _Q47_PAIRS_FRAGMENT, gates_ctes, q47_index_ctes  # noqa: E402
 
 _Q54_SQL = (
     f"WITH RECURSIVE corpus AS ({CORPUS_SQL}), "

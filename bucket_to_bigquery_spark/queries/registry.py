@@ -94,6 +94,13 @@ def davg(col: Column | str, alias: str) -> Column:
     return (F.sum(c.cast(_DEC)).cast("double") / F.count(c)).alias(alias)
 
 
+# The oracle twin of operators/dedup.normalize_text (collapse whitespace
+# runs, trim, lowercase) over a ``text`` column. Defined here, not in
+# llm_queries, so udf_queries (registered first) can share it without
+# importing llm_queries ahead of its own entries.
+_NORM_SQL = "lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))"
+
+
 def dsum_sql(expr: str, alias: str) -> str:
     return f"CAST(SUM(CAST({expr} AS DECIMAL(30,6))) AS DOUBLE) AS {alias}"
 

@@ -31,34 +31,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .llm_queries import _D2_E12_SQL, _INJECTED_ASSIGN_CTES, _INJECTED_CENT_CTES
 from .registry import query, tables
 
 _N_PROBE = 8
 _N_QUERIES = 32  # audited query slice: vec_id < 32 (bounded by contract)
 
-# Exact scaled-int squared distance — the SQL twin of
-# operators.similarity._d2_e12_rows (per-element round, then sum).
-_D2_E12_SQL = (
-    "CAST(list_sum(list_transform(range(1, len({a}) + 1), i -> "
-    "CAST(round((CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE)) * "
-    "(CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE)) * 1e12) AS BIGINT)))"
-    " AS BIGINT)"
-)
-
 _Q48G_ORACLE = (
-    "WITH nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM embeddings), "
-    "ll AS (SELECT LEAST(GREATEST(CAST(round(sqrt(CAST(n AS DOUBLE))) "
-    "AS BIGINT), 8), 4096) AS n_lists FROM nn), "
-    "cent AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) AS BIGINT) "
-    "- 1 AS list_id, embedding AS c_vec FROM embeddings "
-    "QUALIFY row_number() OVER (ORDER BY vec_id) <= "
-    "(SELECT n_lists FROM ll)), "
-    "asg AS (SELECT e.vec_id AS n_id, c.list_id, "
-    + _D2_E12_SQL.format(a="e.embedding", b="c.c_vec")
-    + " AS d2 FROM embeddings e CROSS JOIN cent c), "
-    "amin AS (SELECT n_id, list_id FROM asg QUALIFY row_number() OVER "
-    "(PARTITION BY n_id ORDER BY d2 ASC, list_id ASC) = 1), "
-    "sizes AS (SELECT list_id, CAST(count(*) AS BIGINT) AS cnt "
+    _INJECTED_CENT_CTES
+    + _INJECTED_ASSIGN_CTES
+    + "sizes AS (SELECT list_id, CAST(count(*) AS BIGINT) AS cnt "
     "FROM amin GROUP BY list_id), "
     "q AS (SELECT vec_id AS q_id, embedding AS q_vec FROM embeddings "
     f"WHERE vec_id < {_N_QUERIES}), "

@@ -7,7 +7,7 @@ concentration, one row per source.
 Reference parity: n/a — no analytics surface in the reference; declared
 engine surface (SURVEY §2.C extension). Normalization
 is the q46-family contract (``operators.dedup.normalize_text`` /
-``llm_queries._NORM_SQL``).
+``registry._NORM_SQL``).
 
 Columns: n_docs; n_distinct_texts (distinct normalized text);
 dup_excess = n_docs − n_distinct_texts (copies beyond each group's
@@ -34,8 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.dedup import normalize_text
-from .llm_queries import _NORM_SQL
-from .registry import query, tables
+from .registry import _NORM_SQL, query, tables
 
 _Q102_ORACLE = (
     f"WITH base AS (SELECT source, {_NORM_SQL} AS norm, lang, n_chars "

@@ -56,6 +56,7 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import shingles, tokens
 from ..operators.materialize import checkpoint
+from ..operators.similarity import _spread_small_input
 from .llm_queries import _SH5_SQL, _TOKS_SQL
 from .registry import query, tables
 
@@ -120,9 +121,7 @@ def q89b(spark: SparkSession, sf_dir: str) -> DataFrame:
     # are concat_ws products (never null), so only the empty-array
     # placeholder rows drop: exactly the inner-explode semantics, and
     # exactly the oracle's unnest([]) behaviour.
-    sc = spark.sparkContext
-    if docs.rdd.getNumPartitions() < sc.defaultParallelism:
-        docs = docs.repartition(sc.defaultParallelism)
+    docs = _spread_small_input(docs)
     base = docs.select(
         "source", shingles(tokens(F.col("text")), 5).alias("shs")
     ).select(

@@ -46,8 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import exact_dedup_key
-from .llm_queries import _NORM_SQL
-from .registry import query, tables
+from .registry import _NORM_SQL, query, tables
 
 _TRAIN_PERMYRIAD = 9000  # 90% train / 10% heldout
 _SALT = "split:"  # decouples the split uniform from other md5 decisions
@@ -60,7 +59,7 @@ _CORPUS_SQL = (
     "WHERE doc_id % 7 = 3"
 )
 
-# _NORM_SQL is imported from llm_queries (one normalizer definition,
+# _NORM_SQL is imported from registry (one normalizer definition,
 # the tokenstats.py discipline): q72's leakage guarantee is that its
 # group key IS q46's dedup key, so the two must not be able to drift.
 _BUCKET_SQL = (

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from .registry import query, tables
+from .registry import _NORM_SQL, query, tables
 
 # ---------------------------------------------------------------------------
 # Q42 — scalar pandas UDF: text normalization
@@ -40,9 +40,8 @@ def _normalize_text_udf():
 @query(
     "q42_pandas_udf_normalize",
     oracle=(
-        "SELECT doc_id, "
-        "lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))) AS norm_text, "
-        "CAST(length(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS BIGINT) AS norm_len "
+        f"SELECT doc_id, {_NORM_SQL} AS norm_text, "
+        f"CAST(length({_NORM_SQL}) AS BIGINT) AS norm_len "
         "FROM documents ORDER BY doc_id"
     ),
     description=(

@@ -58,7 +58,6 @@ def ingest_stream(
     schema,
     sink_dir: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
 ) -> None:
     """Q41: exactly-once file ingest — the reference's pull→load→audit→ack
     loop collapsed into readStream + checkpointed sink.
@@ -69,10 +68,7 @@ def ingest_stream(
     committed file is never re-read). Rerunning after new files arrive
     picks up only the new files.
     """
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    sdf = reader.parquet(source_dir)
+    sdf = spark.readStream.schema(schema).parquet(source_dir)
     q = (
         sdf.writeStream.format("parquet")
         .option("path", sink_dir)

@@ -142,12 +142,12 @@ f32_components = st.floats(
 def test_d2_e12_rows_matches_duckdb_sql_twin(xc):
     """Σ round((xᵢ−cᵢ)²·1e12) must be bit-identical between the numpy
     path (operators.similarity._d2_e12_rows) and the SQL fragment the
-    q48g oracle uses (queries.scan_stats._D2_E12_SQL) — on arbitrary
+    q48g/q48h/q130 oracles use (queries.llm_queries._D2_E12_SQL) — on arbitrary
     float32 inputs including negatives, zeros and subnormal-ish
     magnitudes, not just the synthetic embedding distribution. |x| ≤ 10
     keeps the 64-dim worst case far inside int64."""
     from bucket_to_bigquery_spark.operators.similarity import _d2_e12_rows
-    from bucket_to_bigquery_spark.queries.scan_stats import _D2_E12_SQL
+    from bucket_to_bigquery_spark.queries.llm_queries import _D2_E12_SQL
 
     xs, cs = xc
     x = np.asarray(xs, dtype="float32").astype("float64")

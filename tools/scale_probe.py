@@ -116,7 +116,7 @@ def main() -> int:
         # Arrow-batched simhash projection
         "q47b_minhash_pairs": lambda df, s: _minhash_pairs(
             df, "doc_id", "text", n=3,
-            jaccard_distance_threshold=0.4, num_hash_tables=6,
+            jaccard_distance_threshold=0.4,
         ),
         "q46b_simhash": lambda df, s: df.select(
             "doc_id", _simhash_col(_tokens("text"), bits=32).alias("sh")
