@@ -190,10 +190,12 @@ def main() -> None:
         # must measure the per-batch probe, which is the operation).
         # q108 joined in r13: its one-time socket envelope feed is a
         # scratch-materialized offline artifact (the timed row must
-        # measure the published-sink read, which is the operation)
+        # measure the published-sink read, which is the operation).
+        # q46 and q47c build the dedup and embedding corpora: fixtures
+        # are rebuilt after every package edit, so they belong here too.
         if name.startswith(
-            ("q02", "q04", "q05", "q36", "q38b", "q41", "q48d", "q55",
-             "q108")
+            ("q02", "q04", "q05", "q36", "q38b", "q41", "q46", "q47c",
+             "q48d", "q55", "q108")
         ):
             try:
                 registry[name].builder(spark, sf_dir)

@@ -117,25 +117,9 @@ class BatchLoader:
 
     def __init__(self, spark: SparkSession, warehouse: str,
                  job_id_seed: str | None = None,
-                 import_ts: str | None = None,
-                 audit_rebase: tuple[str, str] | None = None):
+                 import_ts: str | None = None):
         self.spark = tune(spark)
         self.warehouse = warehouse
-        # Audit-URI rebase seam (VERDICT r9 "What's wrong" #1): when a
-        # build runs under an atomic-publish TEMP root that becomes
-        # visible at a different FINAL root via one rename,
-        # ``audit_rebase=(build_root, publish_root)`` makes the
-        # ``_imported`` audit store PUBLISH-rooted URIs — the address the
-        # files actually have once anyone can see them. Without it the
-        # audit embeds the ephemeral ``.tmp.<pid>`` path, and a
-        # post-publish reload would re-import every file: the rebased URI
-        # is what restores the reference's idempotency guarantee
-        # (checkFilesImported, BucketToBigQuery.js:384-388 — GCS URIs are
-        # stable; the temp-dir dance is this port's atomicity addition).
-        # ``files_already_imported`` canonicalizes candidate URIs through
-        # the same mapping, so in-build reloads (still temp-rooted) and
-        # post-publish reloads (final-rooted) both anti-join correctly.
-        self._audit_rebase = audit_rebase
         self._job_id_seed = job_id_seed  # deterministic seam for tests (A18)
         # Deterministic seam for the audit clock (A15): when set (a
         # ``yyyy-MM-dd HH:mm:ss`` string), ``store_as_imported`` stamps it
@@ -262,62 +246,35 @@ class BatchLoader:
 
     # -- idempotency --------------------------------------------------------
 
-    def _canon_uri(self, uri: str) -> str:
-        """The audit-canonical form of ``uri``: rebased onto the publish
-        root when the ``audit_rebase`` seam is active, unchanged otherwise.
-        The match is path-segment-aware (root itself or ``root/``-prefixed)
-        — a bare string prefix would silently mis-rebase a sibling that
-        merely shares the prefix (ADVICE r10 #1: build root ``…/x.tmp.1``
-        vs uri ``…/x.tmp.12/f``)."""
-        if self._audit_rebase is not None:
-            build_root, publish_root = self._audit_rebase
-            root = build_root.rstrip("/")
-            if uri == root or uri.startswith(root + "/"):
-                return publish_root.rstrip("/") + uri[len(root):]
-        return uri
-
     def files_already_imported(self, task: Task, files: list[str]) -> list[str]:
         """``checkFilesImported`` (BucketToBigQuery.js:384-388): DISTINCT
         uri within the candidate batch. The filter is pushed into the audit
-        scan; only the (bounded) batch's matches reach the driver. Matching
-        runs over audit-canonical URIs; returned values are the caller's
-        own (possibly build-rooted) spellings — ALL of them, when a batch
-        contains both the temp-rooted and publish-rooted spelling of the
-        same file (ADVICE r10 #2: a dict keyed by canonical URI silently
-        dropped one spelling)."""
+        scan; only the (bounded) batch's matches reach the driver."""
         path = self._audit_path(task)
         if not self._fs_of(path).is_dir(path):
             return []
-        canon: dict[str, list[str]] = {}
-        for f in files:
-            spellings = canon.setdefault(self._canon_uri(f), [])
-            if f not in spellings:  # DISTINCT per spelling (reference
-                spellings.append(f)  # semantics: one report per uri)
         hit = {
             r["uri"] for r in
             self.spark.read.schema(AUDIT_SCHEMA).parquet(path)
-            .where(F.col("uri").isin(list(canon)))
+            .where(F.col("uri").isin(list(dict.fromkeys(files))))
             .select("uri").collect()
         }  # de-duplicated here: a DISTINCT would add a shuffle stage
-        return sorted(s for u in hit for s in canon[u])
+        return sorted(hit)
 
     def store_as_imported(self, task: Task, files: list[str]) -> None:
         """``storeAsImported`` (BucketToBigQuery.js:390-397). Timestamps are
         second-precision naive UTC — the reference writes
         ``yyyy-MM-dd HH:mm:ss`` strings for Excel compatibility. The
-        ``import_ts`` constructor seam substitutes a fixed stamp; the
-        ``audit_rebase`` seam stores publish-rooted URIs (the stable
-        address, matching the reference's stable-GCS-URI semantics).
-        The URIs become a driver-built local relation
-        (:func:`~..session.local_frame`), so the append runs no Python
-        worker; the stored layout stays ``imported_at timestamp, uri
-        string``."""
+        ``import_ts`` constructor seam substitutes a fixed stamp. The URIs
+        become a driver-built local relation (:func:`~..session.local_frame`),
+        so the append runs no Python worker; the stored layout stays
+        ``imported_at timestamp, uri string``."""
         if self._import_ts is not None:
             now = F.lit(self._import_ts).cast("timestamp")
         else:
             now = F.date_trunc("second", F.current_timestamp())
         df = local_frame(
-            self.spark, [(self._canon_uri(f),) for f in files], "uri string"
+            self.spark, [(f,) for f in files], "uri string"
         ).select(now.alias("imported_at"), "uri")
         df.write.mode("append").parquet(self._audit_path(task))
 

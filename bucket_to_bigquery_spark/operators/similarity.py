@@ -498,16 +498,12 @@ def signgrid_ann_topk(
     )
 
 
-# Bump when the quantizer/index layout changes: consumers key their
-# persisted-index scratch paths on this so a params change can never
-# silently reuse a stale on-disk index.
-# v5: the Lloyd fit + probe calibration compute distances through the
-# row-chunked _argmin_d2 (ADVICE r9 #1). Chunked/subset GEMMs are not
-# guaranteed bit-identical to the previous full-matrix products, so the
-# calibrated operating point can move by an ulp-flip — bumping the
-# version invalidates persisted v4 indexes rather than letting q48d
-# silently reuse one that no longer matches q48c's inline build.
-# (v4 was: corpus-scaled n_lists + recall-calibrated n_probe.)
+# Layout version of an ivf_build_index directory, stored in its ``params``
+# table (``index_version``). It is not a cache key: persisted indexes are
+# keyed by the package's code fingerprint (scratch.py). v4 introduced the
+# params table (corpus-scaled n_lists + recall-calibrated n_probe); v5
+# computes the fit and calibration distances through the row-chunked
+# _argmin_d2.
 IVF_INDEX_VERSION = 5
 
 # recall@k the probe width is calibrated to on the fit sample (VERDICT r8

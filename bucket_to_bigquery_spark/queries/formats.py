@@ -19,8 +19,8 @@ substituting it — a corpus that needs those bytes belongs in
 parquet/ORC, not XML. Tab, newline, DEL and all higher Unicode are
 legal and round-trip exactly.
 
-The scratch write goes through ``scratch.materialize_once`` — atomic
-publish, keyed by source-content fingerprint.
+The scratch write goes through ``scratch.materialize_once`` — written
+once, keyed by source and code fingerprints.
 """
 
 from __future__ import annotations

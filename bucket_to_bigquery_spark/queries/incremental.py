@@ -32,7 +32,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import shingle_hash, shingles, tokens
-from ..scratch import _DONE, materialize_once, scratch_path
+from ..scratch import materialize_once, scratch_path
 from .llm_queries import _NEAR_TAIL, _SHINGLE_HASH_SQL, _TOKS_SQL
 from .registry import query, tables
 
@@ -125,16 +125,7 @@ def _hist_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame,
         )
         hot.write.parquet(f"{p}/hot")
 
-    # observability (the q48d ivf_index_reused pattern): a timed q55 run
-    # must show reused=1 — the index build is the offline path and
-    # belongs to bench warm-up. stderr: stdout is the bench's
-    # one-JSON-line contract.
-    import os
-    import sys
-
-    reused = int(os.path.exists(os.path.join(base, _DONE)))
     materialize_once(base, _build)
-    print(f"METRIC b2bqs.q55_hist_index_reused {reused}", file=sys.stderr)
     idx = spark.read.schema("shingle long, doc_id long").parquet(f"{base}/idx")
     sizes = spark.read.schema("doc_id long, ns long").parquet(f"{base}/sizes")
     hot = spark.read.schema("shingle long").parquet(f"{base}/hot")

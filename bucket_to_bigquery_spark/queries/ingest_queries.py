@@ -55,27 +55,16 @@ def _ingested_loader(spark: SparkSession, sf_dir: str) -> tuple[BatchLoader, obj
     loader + task handle over it. Everything inside the materializer is the
     pipeline under test; repeat builder invocations only read.
 
-    The build runs entirely under the atomic-publish TEMP directory
-    ``materialize_once`` hands it (source CSV batch, warehouse, audit),
-    becoming visible in one rename — so a concurrent reader can never see
-    a half-ingested warehouse. The build-time manifest references
-    temp-rooted paths, but the audit stores PUBLISH-rooted URIs via the
-    loader's ``audit_rebase`` seam (VERDICT r9 #1): a post-publish
-    ``loader.run`` over the published tree anti-joins to a no-op — the
-    reference's core idempotency guarantee (BucketToBigQuery.js:384-388),
-    now holding across the atomic publish, pinned by
-    tests/test_ingest_queries.py::test_post_publish_reload_is_noop.
+    The build runs at the fixture's final path (source CSV batch,
+    warehouse, audit), so the audit stores the URIs every later reader
+    sees: a ``loader.run`` over the finished tree anti-joins to a no-op —
+    the reference's core idempotency guarantee (BucketToBigQuery.js:384-388),
+    pinned by tests/test_ingest_queries.py::test_post_publish_reload_is_noop.
     q04b still projects load-deterministic columns (bucket + seamed
-    timestamp): the scratch base embeds a content fingerprint, so raw
-    URIs remain unknowable to a static oracle string. Post-publish
-    readers (read_table / read_audit / register_catalog_table) address
-    the FINAL base only.
-
-    Scratch key v2: the r10 audit-rebase changed the audit's content
-    (tmp-rooted → publish-rooted URIs), and the scratch NAME is the
-    layout version.
+    timestamp): the scratch base embeds content fingerprints, so raw URIs
+    remain unknowable to a static oracle string.
     """
-    base = scratch_path("q04_ingest_v2", sf_dir)
+    base = scratch_path("q04_ingest", sf_dir)
     task = parse_manifest(_ingest_manifest(base)).tasks[0]
 
     def _build(p: str) -> None:
@@ -98,8 +87,7 @@ def _ingested_loader(spark: SparkSession, sf_dir: str) -> tuple[BatchLoader, obj
             .option("header", True)
             .csv(f"{p}/src")
         )
-        loader = BatchLoader(spark, f"{p}/warehouse", import_ts=_Q04_IMPORT_TS,
-                             audit_rebase=(p, base))
+        loader = BatchLoader(spark, f"{p}/warehouse", import_ts=_Q04_IMPORT_TS)
         r1, = loader.run(manifest)
         assert r1.rows_loaded > 0, "ingest loaded nothing"
         r2, = loader.run(manifest)  # idempotent reload: MUST be a no-op

@@ -109,14 +109,10 @@ def _dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-codegen and re-execute, dominating the family's cold cost (q51
     measured 11.2 s cold in-bench vs 2.0 s warm; the split was compile,
     not compute). Materializing to scratch parquet once per sf_dir
-    (scratch.materialize_once: write to a private temp dir, publish
-    with one atomic rename — a reader can never observe a half-written
-    directory even under a first-writer race) turns every dedup query's
-    input into a plain parquet scan, so the benchmark measures the
-    OPERATOR, not corpus synthesis. Row content is identical; every
-    consumer ends in an explicit ORDER BY, so ordering differences
-    cannot surface. Staleness contract: keyed by sf_dir basename —
-    wipe /tmp/b2bqs after regenerating testdata (scratch.py)."""
+    (scratch.materialize_once) turns every dedup query's input into a
+    plain parquet scan, so the benchmark measures the OPERATOR, not
+    corpus synthesis. Row content is identical; every consumer ends in
+    an explicit ORDER BY, so ordering differences cannot surface."""
     from ..scratch import materialize_once, scratch_path
 
     def _write(path: str) -> None:
@@ -972,36 +968,18 @@ def q48c(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "approx"),
 )
 def q48d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import sys
-
-    from ..operators.similarity import (
-        IVF_INDEX_VERSION,
-        ivf_build_index,
-        ivf_probe_prebuilt,
-    )
-    from ..scratch import _DONE, materialize_once, scratch_path
+    from ..operators.similarity import ivf_build_index, ivf_probe_prebuilt
+    from ..scratch import materialize_once, scratch_path
 
     t = tables(spark, sf_dir)
     emb = t["embeddings"]
-    # the scratch key embeds the index-format/params version: a change to
-    # the quantizer would otherwise silently reuse a stale on-disk index
-    # (the done-marker persists across processes) and diverge from q48c.
-    # scratch.materialize_once (atomic rename publish) rather than the
-    # relational.py writer: a crashed build can never leave a half-written
-    # index a later probe treats as complete — and retiring this, the one
-    # llm->relational import, unkeys the 32-entry llm surface from
-    # relational.py in the gate dep map (GATE_r07.md).
-    scratch = scratch_path(f"q48d_ivf_index_{IVF_INDEX_VERSION}", sf_dir)
-
-    reused = int(os.path.exists(os.path.join(scratch, _DONE)))
+    # the scratch key carries the package's code fingerprint, so an index
+    # built by other quantizer code is never reused (it would diverge
+    # from q48c)
     path = materialize_once(
-        scratch, lambda p: ivf_build_index(emb, f"{p}/index")
-    ) + "/index"
-    # observability: a timed q48d run must show reused=1 (the build belongs
-    # to the offline path / bench warm-up). stderr: stdout is the bench's
-    # one-JSON-line contract.
-    print(f"METRIC b2bqs.ivf_index_reused {reused}", file=sys.stderr)
+        scratch_path("q48d_ivf_index", sf_dir),
+        lambda p: ivf_build_index(emb, p),
+    )
     return (
         ivf_probe_prebuilt(spark, path, emb.where(F.col("vec_id") < 10), k=5)
         .select("q_id", "rank", "n_id")

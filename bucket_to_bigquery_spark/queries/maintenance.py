@@ -10,12 +10,10 @@ makes compaction safe to run anywhere: **content is invariant** (bit-equal
 rows before/after). The file-count reduction itself is asserted at build
 time and re-checked by pytest via the stats the build records.
 
-Scratch isolation: this materialization uses
-its OWN scratch key (``q04e_compact_v2``, bumped alongside the q04
-family's audit-rebase layout change), never the shared
-``q04_ingest_v2`` tree — compact rewrites the data directory in place,
-and q04/q04b/q04c/q04d rely on that tree staying bit-stable. The
-scratch NAME is the layout version.
+Scratch isolation: this materialization uses its OWN scratch key
+(``q04e_compact``), never the shared ``q04_ingest`` tree — compact
+rewrites the data directory in place, and q04/q04b/q04c/q04d rely on
+that tree staying bit-stable.
 """
 
 from __future__ import annotations
@@ -76,9 +74,7 @@ def _compacted_loader(spark: SparkSession, sf_dir: str) -> tuple[BatchLoader, ob
     records pre/post parquet file counts in ``compact_stats.json`` inside
     the published tree — asserting the reduction here AND letting pytest
     re-check it against the published artifact."""
-    # Scratch key v2: the r10 audit-rebase seam changed the audit's
-    # content (publish-rooted URIs); the scratch NAME is the layout version.
-    base = scratch_path("q04e_compact_v2", sf_dir)
+    base = scratch_path("q04e_compact", sf_dir)
     task = parse_manifest(_manifest(base)).tasks[0]
 
     def _build(p: str) -> None:
@@ -88,8 +84,7 @@ def _compacted_loader(spark: SparkSession, sf_dir: str) -> tuple[BatchLoader, ob
             (F.col("o_orderdate") >= F.lit(_LO).cast("timestamp"))
             & (F.col("o_orderdate") < F.lit(_HI).cast("timestamp"))
         )
-        loader = BatchLoader(spark, f"{p}/warehouse", import_ts=_Q04E_IMPORT_TS,
-                             audit_rebase=(p, base))
+        loader = BatchLoader(spark, f"{p}/warehouse", import_ts=_Q04E_IMPORT_TS)
         for i, batch in enumerate(
             (scoped.where(F.col("o_orderkey") % 2 == 0),
              scoped.where(F.col("o_orderkey") % 2 == 1))
@@ -115,7 +110,7 @@ def _compacted_loader(spark: SparkSession, sf_dir: str) -> tuple[BatchLoader, ob
 def compact_stats(spark: SparkSession, sf_dir: str) -> dict:
     """The build's recorded pre/post file counts (pytest assertion seam)."""
     _compacted_loader(spark, sf_dir)
-    base = scratch_path("q04e_compact_v2", sf_dir)
+    base = scratch_path("q04e_compact", sf_dir)
     with open(os.path.join(base, "compact_stats.json")) as fh:
         return json.load(fh)
 

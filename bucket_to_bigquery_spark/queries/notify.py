@@ -44,7 +44,6 @@ from __future__ import annotations
 
 import base64
 import json
-import shutil
 import socket
 import threading
 import time
@@ -226,9 +225,9 @@ def q108(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, _envelope_lines(ids), expected=len(ids),
             sink=f"{p}/sink", ckpt=f"{p}/ckpt",
         )
-        # exactly-once audit before publish (the q41 discipline): the
-        # committed URI set must equal the derivation — no loss, no
-        # duplicate that survived dedup
+        # exactly-once audit before the done marker: the committed URI
+        # set must equal the derivation — no loss, no duplicate that
+        # survived dedup
         got = sorted(
             r["uri"]
             for r in spark.read.option("recursiveFileLookup", "true")
@@ -240,11 +239,6 @@ def q108(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"q108 sink/derivation mismatch: {len(got)} committed vs "
                 f"{len(want)} expected"
             )
-        # the checkpoint served its ack purpose during the feed; the
-        # published artifact is the sink alone (the q41 discipline —
-        # its offset log records absolute temp paths the atomic publish
-        # is about to rename away)
-        shutil.rmtree(f"{p}/ckpt", ignore_errors=True)
 
     materialize_once(base, _build)
     return (

@@ -17,21 +17,6 @@ from ..operators.range_join import range_join_bucketed
 from ..scratch import materialize_once, scratch_path
 from .registry import davg, davg_sql, dsum, dsum_sql, query, tables
 
-# Scratch inputs (q02/q02b/q05 write their own source data once per sf_dir)
-# go through scratch.materialize_once: atomic temp-dir publish — a reader
-# can never observe a half-written directory — with keys fingerprinted on
-# the source dir's content, so an in-place testdata regeneration can never
-# serve a stale materialized copy. This retired the module's original
-# non-atomic _materialize_once/_scratch pair (r8, GATE_r07.md plan #1).
-#
-# The fingerprint tracks SOURCE content only, not builder layout: the
-# scratch NAME doubles as the layout version. When a builder's output
-# layout or parameters change, RENAME its key (``q02_csv`` →
-# ``q02_csv2``) — persisted done-markers on a warm host would otherwise
-# serve the old layout. (q48d's ``q48d_ivf_index_{VERSION}`` key is the
-# same rule parameterized.) This applies to every materialize_once
-# caller: q04's ingest tree, the streaming source, q41's staged sink.
-
 
 # ---------------------------------------------------------------------------
 # Scans / sources / sinks

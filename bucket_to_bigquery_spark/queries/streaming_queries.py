@@ -11,7 +11,6 @@ append-mode watermark query the oracle mirrors Spark's emission rule
 
 from __future__ import annotations
 
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -342,32 +341,6 @@ def q41(spark: SparkSession, sf_dir: str) -> DataFrame:
         ingest_stream(spark, f"{p}/src", schema, f"{p}/sink", f"{p}/ckpt")
         # re-run with nothing new: MUST be a no-op (exactly-once across runs)
         ingest_stream(spark, f"{p}/src", schema, f"{p}/sink", f"{p}/ckpt")
-        # The file sink's _spark_metadata log and the checkpoint's source
-        # log both record ABSOLUTE paths, which the atomic publish is
-        # about to rename out from under them — a post-publish
-        # spark.read.parquet(sink) would resolve the log's dangling
-        # temp-dir entries instead of listing the directory. The staged
-        # ingest is complete (all three runs committed above), so the
-        # logs have served their exactly-once purpose: drop them and let
-        # the published sink read as a plain parquet directory. The
-        # write-once marker guarantees no ingest ever resumes against
-        # the published copy.
-        shutil.rmtree(f"{p}/sink/_spark_metadata")
-        shutil.rmtree(f"{p}/ckpt")
-        # Without the log, the read trusts the raw listing — which would
-        # also surface any orphan part file a crashed-then-retried write
-        # task left behind (the log existed to hide those). Verify the
-        # log-free sink equals the source COUNT before publishing; a
-        # mismatch fails the build loudly (temp dir discarded) instead
-        # of publishing silent duplicates.
-        n_src = ev.count()
-        n_sink = spark.read.parquet(f"{p}/sink").count()
-        if n_src != n_sink:
-            raise RuntimeError(
-                f"q41 sink/source mismatch after metadata-log drop: "
-                f"{n_sink} sink rows vs {n_src} source rows "
-                f"(orphan or missing part files)"
-            )
 
     materialize_once(base, _build)
     return spark.read.parquet(f"{base}/sink").select(*cols).orderBy("event_id")

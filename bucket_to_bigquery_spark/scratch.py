@@ -1,54 +1,54 @@
-"""Atomic write-once scratch materialization for derived bench inputs.
+"""Write-once scratch fixtures for the queries that derive their own input.
 
-The single scratch layer for every query that writes its own input data:
-the q46-q54 planted-corpus builders, q48d's prebuilt IVF index, the
-q02c XML round-trip, and — since the r8 migration retired
-relational.py's non-atomic ``_materialize_once``/``_scratch`` pair —
-the q02/q02b/q05 scratch sources, the q04 ingest warehouse, the shared
-streaming source, and q41's staged ingest tree. Data is written to a
-process-private temp directory and published with one ``os.rename`` —
-a reader can never observe a half-written directory, even if two
-processes race to be first writer (the loser's rename fails and its
-temp dir is discarded).
+Every query that writes its own input data builds it here: the dedup and
+embedding corpora, q48d's prebuilt IVF index, q55's history index, the
+q02/q02b/q02c/q05 format round trips, the q04/q04e ingest warehouses,
+the shared streaming source, q41's staged sink and q108's sink.
 
-The key fingerprints SOURCE content only, not builder layout: the
-``name`` argument doubles as the layout version — rename the key when a
-builder's output layout changes (see the caller-side note in
-queries/relational.py).
+A fixture lives at ``<_ROOT>/<name>/<sf basename>/<source fp>-<code fp>``.
+The source fingerprint hashes the sf_dir's absolute path and the
+(entry, size, mtime_ns) listing of its children, so regenerating the
+testdata in place gives a new key. The code fingerprint hashes this
+package's ``.py`` files, so any change to a builder gives a new key too.
 
-Staleness contract (r7, ADVICE r6 #2): the scratch key embeds a
-CONTENT fingerprint of the source directory (sorted (entry, size,
-mtime_ns) of its immediate children) alongside the sf_dir basename —
-regenerating the testdata in place changes the fingerprint, so a
-derived corpus can never be served stale against a refreshed source
-(pre-r7 the key was the basename alone, and an in-place regeneration
-surfaced as confusing gate failures: Spark read the stale materialized
-corpus while the DuckDB oracle recomputed fresh). Paths remain
-deterministic for an unchanged source and safe to wipe.
+A fixture is built in place, at its final path, under an exclusive
+``flock`` on ``<path>.lock``; the done marker is written last. Every
+process that uses the fixture then holds a shared lock on it until it
+exits, and the kernel drops a dead process's locks. So a directory
+without a marker whose lock is free is a dead builder's leftover, and
+is rebuilt; and the sweep removes the other fingerprints of the same
+``<name>/<sf basename>`` whose lock no live process holds. Fixtures are
+safe to wipe while no engine process runs.
 """
 
 from __future__ import annotations
 
+import fcntl
 import hashlib
+import logging
 import os
 import shutil
+import time
 from collections.abc import Callable
 
-_ROOT = "/tmp/b2bqs/v3"
+_ROOT = "/tmp/b2bqs/v4"
 _DONE = ".b2bqs_done"
-_PUBLISHED: set[str] = set()
+_PKG = os.path.dirname(os.path.abspath(__file__))
+_CODE_FP: str | None = None
+# fixture path -> fd of the shared lock this process holds until it exits
+_HELD: dict[str, int] = {}
 
 
 def _source_fingerprint(sf_dir: str) -> str:
-    """8-hex digest of the source dir's (name, size, mtime_ns) listing.
+    """8-hex digest of the source dir's absolute path and its (name,
+    size, mtime_ns) listing.
 
-    Non-recursive: the testdata layout is flat files (driver-written
-    parquet), and even for directory-valued entries a regeneration
-    rewrites children, bumping the directory mtime. A missing/unreadable
-    source hashes to a constant so error surfacing stays with the reader
-    that actually opens it.
+    Non-recursive: the testdata layout is flat files, and even for
+    directory-valued entries a regeneration rewrites children, bumping
+    the directory mtime. A missing/unreadable source hashes to a
+    constant so error surfacing stays with the reader that opens it.
     """
-    h = hashlib.md5()
+    h = hashlib.md5(os.path.abspath(sf_dir).encode())
     try:
         for entry in sorted(os.listdir(sf_dir)):
             st = os.stat(os.path.join(sf_dir, entry))
@@ -58,116 +58,132 @@ def _source_fingerprint(sf_dir: str) -> str:
     return h.hexdigest()[:8]
 
 
+def _code_fingerprint() -> str:
+    """8-hex digest of this package's ``.py`` files (relative path and
+    content), computed once per process."""
+    global _CODE_FP
+    if _CODE_FP is None:
+        h = hashlib.md5()
+        for root, dirs, files in os.walk(_PKG):
+            dirs[:] = sorted(d for d in dirs if d != "__pycache__")
+            for f in sorted(files):
+                if f.endswith(".py"):
+                    path = os.path.join(root, f)
+                    h.update(os.path.relpath(path, _PKG).encode() + b"\0")
+                    with open(path, "rb") as fh:
+                        h.update(fh.read())
+        _CODE_FP = h.hexdigest()[:8]
+    return _CODE_FP
+
+
 def scratch_path(name: str, sf_dir: str) -> str:
     tag = os.path.basename(os.path.normpath(sf_dir))
-    return f"{_ROOT}/{name}/{tag}-{_source_fingerprint(sf_dir)}"
+    fp = f"{_source_fingerprint(sf_dir)}-{_code_fingerprint()}"
+    return f"{_ROOT}/{name}/{tag}/{fp}"
 
 
-def _owner_alive(pid_suffix: str) -> bool:
-    """True when the ``.tmp.<pid>`` owner still runs (or the suffix is
-    unparseable — never delete what might be a live racer's build). A
-    pid we cannot signal but that exists (EPERM) counts as alive."""
+def _is_current(fd: int, lock: str) -> bool:
+    """True while ``fd`` is still the file at ``lock`` (the sweep unlinks
+    a lock file it has removed the fixture of)."""
     try:
-        pid = int(pid_suffix)
-    except ValueError:
-        return True
-    try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
+        return os.stat(lock).st_ino == os.fstat(fd).st_ino
+    except FileNotFoundError:
         return False
-    except OSError:
-        return True  # EPERM etc.: exists, just not ours to signal
-    return True
+
+
+def _lock(path: str, how: int) -> int | None:
+    """An fd holding ``flock(how)`` on ``<path>.lock``; None when ``how``
+    carries ``LOCK_NB`` and another process holds a conflicting lock."""
+    lock = f"{path}.lock"
+    while True:
+        fd = os.open(lock, os.O_RDWR | os.O_CREAT, 0o644)
+        try:
+            fcntl.flock(fd, how)
+        except BlockingIOError:
+            os.close(fd)
+            return None
+        except BaseException:
+            os.close(fd)
+            raise
+        if _is_current(fd, lock):
+            return fd
+        os.close(fd)  # swept between open and flock: lock the new file
 
 
 def _prune_stale_siblings(path: str) -> None:
-    """Remove same-tag siblings of ``path`` carrying a DIFFERENT
-    fingerprint (plus their crashed ``.tmp.*`` leftovers).
+    """Remove the other fingerprints in ``path``'s ``<name>/<sf
+    basename>`` directory whose lock no live process holds.
 
-    The fingerprinted keys mean every in-place source regeneration mints
-    a fresh ``{tag}-{fp}`` directory; without pruning, the old ones —
-    each a multi-hundred-MB materialized corpus at bench scale — pile up
-    under ``/tmp/b2bqs`` forever. Anything with a different fingerprint
-    describes a source state that no longer exists, so removal is safe
-    by construction; a LIVE racer materializing the same (current) key
-    writes under ``{path}.tmp.<pid>``, which is spared while its owner
-    process is alive (a dead owner's leftover is reclaimed — see
-    ``_owner_alive``). Only prunes under the scratch root: callers may hand
-    ``materialize_once`` foreign paths whose siblings are not ours to
-    manage.
+    Each describes a source or code state other than this process's;
+    every process using one holds its shared lock, so a free lock means
+    nobody reads it. Only prunes under the scratch root: callers may
+    hand ``materialize_once`` foreign paths whose siblings are not ours
+    to manage.
     """
     parent = os.path.dirname(path)
-    root = os.path.realpath(_ROOT)
-    if not os.path.realpath(parent).startswith(root + os.sep):
+    if not os.path.realpath(parent).startswith(os.path.realpath(_ROOT) + os.sep):
         return
-    base = os.path.basename(path)
-    tag = base.rsplit("-", 1)[0]
+    keys = {e.removesuffix(".lock") for e in os.listdir(parent)}
+    for key in sorted(keys - {os.path.basename(path)}):
+        stale = os.path.join(parent, key)
+        fd = _lock(stale, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        if fd is None:
+            continue
+        shutil.rmtree(stale, ignore_errors=True)
+        os.unlink(f"{stale}.lock")
+        os.close(fd)
+
+
+def _build(path: str, write: Callable[[str], None]) -> None:
+    """Run ``write(path)`` in place and write the done marker last; the
+    caller holds the exclusive lock. A failed build leaves nothing."""
+    shutil.rmtree(path, ignore_errors=True)  # a dead builder's leftover
+    t0 = time.perf_counter()
     try:
-        entries = os.listdir(parent)
-    except OSError:
-        return
-    for entry in entries:
-        if entry == base:
-            continue
-        if entry.startswith(f"{base}.tmp."):
-            # Same-key temp: a LIVE racer's work-in-progress must be
-            # spared, but a dead owner's leftover (a writer killed
-            # before its cleanup handler ran — the SIGKILL edge of
-            # ADVICE r8 #3) is reclaimed here, on the next materialize
-            # of the same key. Unparseable suffixes are spared
-            # (conservative: never delete what might be live).
-            if not _owner_alive(entry.rsplit(".", 1)[-1]):
-                shutil.rmtree(os.path.join(parent, entry),
-                              ignore_errors=True)
-            continue
-        if entry.startswith(f"{tag}-"):
-            shutil.rmtree(os.path.join(parent, entry), ignore_errors=True)
+        write(path)
+        with open(os.path.join(path, _DONE), "w") as fh:
+            fh.write("ok")
+    except BaseException:
+        shutil.rmtree(path, ignore_errors=True)
+        os.unlink(f"{path}.lock")
+        raise
+    logging.getLogger("b2bqs.metrics").info(
+        "METRIC b2bqs.fixture_build_s.%s %s",
+        os.path.basename(os.path.dirname(os.path.dirname(path))),
+        round(time.perf_counter() - t0, 3),
+    )
 
 
 def materialize_once(path: str, write: Callable[[str], None]) -> str:
-    """Write derived data exactly once per path, atomically published.
+    """Build ``path`` with ``write(path)`` unless a finished build is
+    there, and hold a shared lock on it for the rest of the process.
 
-    First writer: writes to ``<path>.tmp.<pid>``, drops the done-marker
-    inside, then renames into place — one atomic publish, no observable
-    half-written state. Losing racers (rename fails because the winner's
-    directory exists) discard their temp copy. A leftover UN-marked
-    ``path`` from a crashed pre-atomic writer is removed before the
-    rename attempt.
-
-    Crash hygiene (ADVICE r8 #3): a ``write`` callback that raises has
-    its temp dir removed before the exception propagates, and a writer
-    killed too hard for that handler (SIGKILL) leaves a temp whose
-    owner pid is dead — the sibling sweep reclaims it on the next
-    materialize of the same key. Either way nothing is published and
-    nothing is stranded.
+    The first caller builds under the exclusive lock; a racing caller
+    waits on that lock and then finds the marker. A ``write`` that
+    raises has its directory removed before the exception propagates,
+    and a builder killed too hard for that leaves an unmarked directory
+    that the next caller rebuilds. Callers are one thread per process:
+    two threads of one process building the same path would each wait
+    on the other's lock.
     """
+    if path in _HELD:
+        return path
+    os.makedirs(os.path.dirname(path), exist_ok=True)
     marker = os.path.join(path, _DONE)
-    if path not in _PUBLISHED:
-        if not os.path.exists(marker):
-            tmp = f"{path}.tmp.{os.getpid()}"
-            shutil.rmtree(tmp, ignore_errors=True)
-            try:
-                write(tmp)
-                with open(os.path.join(tmp, _DONE), "w") as fh:
-                    fh.write("ok")
-            except BaseException:
-                # ADVICE r8 #3: a writer that dies mid-build must not
-                # strand its temp dir — at bench scale each is a
-                # multi-hundred-MB half-built corpus. Remove and
-                # re-raise; the caller sees the original failure and the
-                # next materialize starts clean. (A SIGKILL that skips
-                # this handler is reclaimed by the dead-owner sweep in
-                # _prune_stale_siblings on the next materialize.)
-                shutil.rmtree(tmp, ignore_errors=True)
-                raise
-            if os.path.exists(path) and not os.path.exists(marker):
-                # crashed non-atomic writer left debris; safe to clear
-                shutil.rmtree(path, ignore_errors=True)
-            try:
-                os.rename(tmp, path)
-            except OSError:
-                # another process published first; keep theirs
-                shutil.rmtree(tmp, ignore_errors=True)
-        _prune_stale_siblings(path)
-        _PUBLISHED.add(path)
+    while True:
+        fd = _lock(path, fcntl.LOCK_EX)
+        try:
+            if not os.path.exists(marker):
+                _build(path, write)
+            # Not atomic: a sweep may take the lock in between, so check
+            # that the fixture survived the switch before keeping it.
+            fcntl.flock(fd, fcntl.LOCK_SH)
+        except BaseException:
+            os.close(fd)
+            raise
+        if _is_current(fd, f"{path}.lock") and os.path.exists(marker):
+            break
+        os.close(fd)
+    _HELD[path] = fd
+    _prune_stale_siblings(path)
     return path

@@ -245,6 +245,9 @@ def test_golden_load_idempotent_expand(spark, workdir):
     (r2,) = loader.run(manifest)
     assert r2.files_loaded == [] and r2.rows_loaded == 0
     assert sorted(r2.files_already_imported) == sorted(r1.files_loaded)
+    # DISTINCT per candidate uri (the reference's per-uri semantics)
+    f0 = r1.files_loaded[0]
+    assert loader.files_already_imported(task, [f0, f0]) == [f0]
     assert loader.read_table(task).count() == 3
     assert loader.read_audit(task).count() == 2  # one audit row per file
     # the persisted audit layout stays what earlier loads wrote
@@ -491,47 +494,6 @@ def _envelope(event_type, kind, self_link, bucket, name):
         {"kind": kind, "selfLink": self_link, "bucket": bucket, "name": name}
     ).encode()).decode()
     return {"message": {"attributes": {"eventType": event_type}, "data": data}}
-
-
-def test_canon_uri_rebases_only_whole_path_segments(spark, workdir):
-    # ADVICE r10 #1: a bare string-prefix match would mis-rebase a
-    # sibling that merely shares the prefix (build root `…/x.tmp.1` vs
-    # uri `…/x.tmp.12/f`). The match must be segment-aware.
-    loader = BatchLoader(
-        spark, f"{workdir}/warehouse",
-        audit_rebase=(f"{workdir}/x.tmp.1", f"{workdir}/pub"))
-    assert loader._canon_uri(f"{workdir}/x.tmp.1/a.csv") == f"{workdir}/pub/a.csv"
-    assert loader._canon_uri(f"{workdir}/x.tmp.1") == f"{workdir}/pub"
-    # the sibling sharing the prefix must pass through untouched
-    assert loader._canon_uri(f"{workdir}/x.tmp.12/f.csv") == f"{workdir}/x.tmp.12/f.csv"
-    # trailing-slash build root behaves identically
-    loader2 = BatchLoader(
-        spark, f"{workdir}/warehouse",
-        audit_rebase=(f"{workdir}/x.tmp.1/", f"{workdir}/pub"))
-    assert loader2._canon_uri(f"{workdir}/x.tmp.1/a.csv") == f"{workdir}/pub/a.csv"
-    assert loader2._canon_uri(f"{workdir}/x.tmp.12/f.csv") == f"{workdir}/x.tmp.12/f.csv"
-
-
-def test_files_already_imported_reports_every_spelling(spark, workdir):
-    # ADVICE r10 #2: when one batch carries BOTH the temp-rooted and the
-    # publish-rooted spelling of the same file, both must be reported as
-    # already-imported (the old canonical-keyed dict dropped one).
-    from bucket_to_bigquery_spark.ingest.manifest import Task
-
-    build, pub = f"{workdir}/build.tmp.7", f"{workdir}/published"
-    loader = BatchLoader(spark, f"{workdir}/warehouse",
-                         audit_rebase=(build, pub),
-                         import_ts="2024-01-01 00:00:00")
-    task = Task(sources=[], dataset="d", table="t")
-    loader.store_as_imported(task, [f"{build}/a.csv"])  # stored publish-rooted
-    got = loader.files_already_imported(
-        task, [f"{build}/a.csv", f"{pub}/a.csv", f"{pub}/other.csv"])
-    assert got == sorted([f"{build}/a.csv", f"{pub}/a.csv"])
-    # a DUPLICATED candidate spelling reports once (DISTINCT per
-    # spelling — the reference's per-uri semantics)
-    got = loader.files_already_imported(
-        task, [f"{build}/a.csv", f"{build}/a.csv", f"{pub}/a.csv"])
-    assert got == sorted([f"{build}/a.csv", f"{pub}/a.csv"])
 
 
 _EDGE_EVENTS = [

@@ -49,11 +49,10 @@ def test_q04d_catalog_table_visible_to_sql(spark, sf_dir):
 
 def test_post_publish_reload_is_noop(spark, sf_dir):
     """The reference's core idempotency guarantee (checkFilesImported,
-    BucketToBigQuery.js:384-388) must hold ON THE PUBLISHED TREE, not just
-    inside the atomic-publish temp dir: the audit stores publish-rooted
-    URIs (the loader's audit_rebase seam, VERDICT r9 #1), so a fresh
-    loader re-running the manifest against the published warehouse
-    anti-joins every file out and loads nothing."""
+    BucketToBigQuery.js:384-388) must hold on the finished fixture tree:
+    the fixture is built at its final path, so the audit stores the URIs
+    a fresh loader sees, and re-running the manifest against the
+    warehouse anti-joins every file out and loads nothing."""
     from bucket_to_bigquery_spark.ingest import BatchLoader, parse_manifest
     from bucket_to_bigquery_spark.queries.ingest_queries import (
         _ingest_manifest,
@@ -62,7 +61,7 @@ def test_post_publish_reload_is_noop(spark, sf_dir):
     from bucket_to_bigquery_spark.scratch import scratch_path
 
     _ingested_loader(spark, sf_dir)  # materialize + publish
-    base = scratch_path("q04_ingest_v2", sf_dir)
+    base = scratch_path("q04_ingest", sf_dir)
     fresh = BatchLoader(spark, f"{base}/warehouse")
     report, = fresh.run(parse_manifest(_ingest_manifest(base)))
     assert report.files_seen, "published tree lists no source files"
@@ -72,8 +71,8 @@ def test_post_publish_reload_is_noop(spark, sf_dir):
 
 def test_q04e_post_publish_reload_is_noop(spark, sf_dir):
     """Same guarantee for the compacted warehouse tree (q04e): compaction
-    rewrites data files but must not disturb the audit's publish-rooted
-    URIs — a reload after compact still loads nothing."""
+    rewrites data files but must not disturb the audit's URIs — a reload
+    after compact still loads nothing."""
     from bucket_to_bigquery_spark.ingest import BatchLoader, parse_manifest
     from bucket_to_bigquery_spark.queries.maintenance import (
         _compacted_loader,
@@ -82,7 +81,7 @@ def test_q04e_post_publish_reload_is_noop(spark, sf_dir):
     from bucket_to_bigquery_spark.scratch import scratch_path
 
     _compacted_loader(spark, sf_dir)
-    base = scratch_path("q04e_compact_v2", sf_dir)
+    base = scratch_path("q04e_compact", sf_dir)
     fresh = BatchLoader(spark, f"{base}/warehouse")
     report, = fresh.run(parse_manifest(_manifest(base)))
     assert report.files_seen, "published tree lists no source files"

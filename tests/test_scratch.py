@@ -1,26 +1,85 @@
-"""scratch.py staleness contract (ADVICE r6 #2): the scratch key embeds
-a source-content fingerprint, so regenerating testdata in place can
-never serve a stale materialized corpus."""
+"""scratch.py fixture protocol: keys track the source and the code, a
+fixture is built once under an exclusive file lock, every user holds a
+shared lock on it, and the sweep removes only what no live process
+holds."""
 
 from __future__ import annotations
 
+import logging
 import os
+import signal
+import subprocess
+import sys
 
+import pytest
+
+from bucket_to_bigquery_spark import scratch
 from bucket_to_bigquery_spark.scratch import materialize_once, scratch_path
 
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-def test_scratch_key_is_deterministic_for_unchanged_source(tmp_path):
-    src = tmp_path / "sf9"
-    src.mkdir()
-    (src / "documents.parquet").write_bytes(b"v1")
+# A second engine process: materializes <name> over <src> under <root>,
+# appending one line to <log> per build. Modes: "build" exits when done,
+# "slow" takes half a second to build, "hang" stops mid-build, "hold"
+# keeps its shared lock until killed. Prints "building" / "done".
+_CHILD = """
+import os, sys, time
+from bucket_to_bigquery_spark import scratch
+root, src, name, mode, log = sys.argv[1:6]
+scratch._ROOT = root
+
+def write(p):
+    os.makedirs(p)
+    with open(log, "a") as fh:
+        fh.write(p + "\\n")
+    open(os.path.join(p, "built-by-child"), "w").close()
+    print("building", flush=True)
+    time.sleep({"slow": 0.5, "hang": 120}.get(mode, 0))
+
+scratch.materialize_once(scratch.scratch_path(name, src), write)
+print("done", flush=True)
+if mode == "hold":
+    time.sleep(120)
+"""
+
+
+@pytest.fixture
+def root(tmp_path, monkeypatch):
+    r = tmp_path / "root"
+    monkeypatch.setattr(scratch, "_ROOT", str(r))
+    yield r
+    for path in [p for p in scratch._HELD if p.startswith(str(r))]:
+        os.close(scratch._HELD.pop(path))
+
+
+@pytest.fixture
+def src(tmp_path):
+    s = tmp_path / "sf9"
+    s.mkdir()
+    (s / "documents.parquet").write_bytes(b"v1")
+    return s
+
+
+def _child(root, src, name, mode, log):
+    return subprocess.Popen(
+        [sys.executable, "-c", _CHILD, str(root), str(src), name, mode, str(log)],
+        cwd=_REPO, stdout=subprocess.PIPE, text=True,
+    )
+
+
+def _write(calls):
+    def write(p: str) -> None:
+        os.makedirs(p)
+        calls.append(p)
+    return write
+
+
+def test_scratch_key_is_deterministic_for_unchanged_source(src):
     assert scratch_path("x", str(src)) == scratch_path("x", str(src))
 
 
-def test_scratch_key_tracks_source_size_and_mtime(tmp_path):
-    src = tmp_path / "sf9"
-    src.mkdir()
+def test_scratch_key_tracks_source_size_and_mtime(src):
     f = src / "documents.parquet"
-    f.write_bytes(b"v1")
     p1 = scratch_path("x", str(src))
     f.write_bytes(b"v2-longer")  # size change
     p2 = scratch_path("x", str(src))
@@ -31,224 +90,147 @@ def test_scratch_key_tracks_source_size_and_mtime(tmp_path):
     assert p3 not in (p1, p2)
 
 
-def test_regenerated_source_rematerializes(tmp_path):
-    src = tmp_path / "sf9"
-    src.mkdir()
-    f = src / "documents.parquet"
-    f.write_bytes(b"v1")
+def test_scratch_key_tracks_code_fingerprint(root, src, tmp_path, monkeypatch):
+    monkeypatch.setattr(scratch, "_CODE_FP", "aaaaaaaa")
+    p1 = scratch_path("x", str(src))
     calls: list[str] = []
+    materialize_once(p1, _write(calls))
+    monkeypatch.setattr(scratch, "_CODE_FP", "bbbbbbbb")
+    p2 = scratch_path("x", str(src))
+    assert p2 != p1 and os.path.dirname(p2) == os.path.dirname(p1)
+    materialize_once(p2, _write(calls))
+    assert calls == [p1, p2]  # changed code: the next call rebuilds
+    # the fingerprint is computed from the package's .py files
+    pkg = tmp_path / "pkg"
+    pkg.mkdir()
+    (pkg / "mod.py").write_text("A = 1\n")
+    (pkg / "notes.txt").write_text("ignored")
+    monkeypatch.setattr(scratch, "_PKG", str(pkg))
+    monkeypatch.setattr(scratch, "_CODE_FP", None)
+    fp1 = scratch._code_fingerprint()
+    (pkg / "notes.txt").write_text("still ignored")
+    monkeypatch.setattr(scratch, "_CODE_FP", None)
+    assert scratch._code_fingerprint() == fp1
+    (pkg / "mod.py").write_text("A = 2\n")
+    assert scratch._code_fingerprint() == fp1  # computed once per process
+    monkeypatch.setattr(scratch, "_CODE_FP", None)
+    assert scratch._code_fingerprint() != fp1
 
-    def write(tmp: str) -> None:
-        os.makedirs(tmp, exist_ok=True)
-        calls.append(tmp)
 
-    materialize_once(scratch_path("corp", str(src)), write)
-    materialize_once(scratch_path("corp", str(src)), write)
-    assert len(calls) == 1  # unchanged source: published once, reused
-    f.write_bytes(b"v2!")  # in-place regeneration
-    materialize_once(scratch_path("corp", str(src)), write)
+def test_regenerated_source_rematerializes(root, src, caplog):
+    calls: list[str] = []
+    with caplog.at_level(logging.INFO, logger="b2bqs.metrics"):
+        materialize_once(scratch_path("corp", str(src)), _write(calls))
+        materialize_once(scratch_path("corp", str(src)), _write(calls))
+        assert len(calls) == 1  # unchanged source: built once, reused
+        (src / "documents.parquet").write_bytes(b"v2!")  # regeneration
+        materialize_once(scratch_path("corp", str(src)), _write(calls))
     assert len(calls) == 2  # new fingerprint -> fresh materialization
+    builds = [r.getMessage() for r in caplog.records
+              if r.getMessage().startswith("METRIC b2bqs.fixture_build_s.")]
+    assert len(builds) == 2
+    assert all(m.split()[1] == "b2bqs.fixture_build_s.corp" for m in builds)
 
 
-def test_publish_prunes_stale_fingerprint_siblings(tmp_path):
-    import shutil
-
-    from bucket_to_bigquery_spark import scratch
-
-    src = tmp_path / "sf9"
-    src.mkdir()
-    f = src / "documents.parquet"
-    f.write_bytes(b"v1")
-
-    def write(tmp: str) -> None:
-        os.makedirs(tmp, exist_ok=True)
-
-    p1 = materialize_once(scratch_path("prune", str(src)), write)
-    parent = os.path.dirname(p1)
-    # a crashed writer's temp dir for the OLD key must also go
-    stale_tmp = p1 + ".tmp.99999"
-    os.makedirs(stale_tmp, exist_ok=True)
+def test_publish_prunes_stale_fingerprint_siblings(root, src):
+    path = scratch_path("prune", str(src))
+    parent = os.path.dirname(path)
+    stale = os.path.join(parent, "deadbeef-cafebabe")
+    os.makedirs(stale)
+    open(os.path.join(stale, scratch._DONE), "w").close()
+    orphan_lock = os.path.join(parent, "0badf00d-cafebabe.lock")
+    open(orphan_lock, "w").close()
     # a DIFFERENT sf tag under the same name must be spared
-    other_tag = os.path.join(parent, "sfX-deadbeef")
-    os.makedirs(other_tag, exist_ok=True)
+    other_tag = os.path.join(os.path.dirname(parent), "sfX", "deadbeef-cafebabe")
+    os.makedirs(other_tag)
 
-    f.write_bytes(b"v2!")  # in-place regeneration -> new fingerprint
-    p2 = materialize_once(scratch_path("prune", str(src)), write)
-    assert p2 != p1
-    assert not os.path.exists(p1), "stale-fingerprint sibling not pruned"
-    assert not os.path.exists(stale_tmp), "stale temp leftover not pruned"
+    materialize_once(path, _write([]))
+    assert not os.path.exists(stale), "stale-fingerprint sibling not pruned"
+    assert not os.path.exists(orphan_lock)
     assert os.path.exists(other_tag), "different-tag sibling wrongly pruned"
-    assert os.path.exists(p2)
-    # a live racer's temp for the CURRENT key is spared (use a real
-    # live process as the owner — the sweep checks pid liveness)
-    import subprocess
+    assert sorted(os.listdir(parent)) == sorted(
+        [os.path.basename(path), os.path.basename(path) + ".lock"])
 
-    racer = subprocess.Popen(["sleep", "60"])
+
+def test_sweep_skips_fingerprint_held_by_live_process(root, src, tmp_path):
+    holder = _child(root, src, "held", "hold", tmp_path / "log")
     try:
-        live_tmp = f"{p2}.tmp.{racer.pid}"
-        os.makedirs(live_tmp, exist_ok=True)
-        scratch._prune_stale_siblings(p2)
-        assert os.path.exists(live_tmp), (
-            "live same-key racer temp wrongly pruned"
-        )
+        assert holder.stdout.readline() == "building\n"
+        assert holder.stdout.readline() == "done\n"
+        old = scratch_path("held", str(src))
+        (src / "documents.parquet").write_bytes(b"v2!")
+        new = materialize_once(scratch_path("held", str(src)), _write([]))
+        assert new != old
+        assert os.path.exists(os.path.join(old, scratch._DONE)), (
+            "a fixture a live process holds was swept")
     finally:
-        racer.kill()
-        racer.wait()
-    shutil.rmtree(parent, ignore_errors=True)
+        holder.kill()
+        holder.wait(timeout=30)
+    scratch._prune_stale_siblings(new)  # the holder is gone now
+    assert not os.path.exists(old) and not os.path.exists(old + ".lock")
 
 
-def test_crashed_write_publishes_nothing_and_rebuilds(tmp_path):
-    # Atomic-publish contract the r8 migration leans on for the q04/q41
-    # pipeline builds: a write callback that dies mid-build must leave NO
-    # published path (readers can never see the half-built warehouse), and
-    # the next call must rebuild from scratch.
-    import pytest
-
-    src = tmp_path / "sf9"
-    src.mkdir()
-    (src / "documents.parquet").write_bytes(b"v1")
+def test_crashed_write_publishes_nothing_and_rebuilds(root, src):
     path = scratch_path("crash", str(src))
     calls: list[str] = []
 
-    def dying_write(tmp: str) -> None:
-        os.makedirs(tmp, exist_ok=True)
-        open(os.path.join(tmp, "partial"), "w").close()
-        calls.append(tmp)
+    def dying_write(p: str) -> None:
+        os.makedirs(p)
+        open(os.path.join(p, "partial"), "w").close()
+        calls.append(p)
         raise RuntimeError("simulated mid-build crash")
 
     with pytest.raises(RuntimeError):
         materialize_once(path, dying_write)
-    assert not os.path.exists(path), "crashed build must publish nothing"
-    # ADVICE r8 #3: the crash must not strand the temp dir either — the
-    # exception handler removes it before propagating.
-    parent = os.path.dirname(path)
-    leftovers = [e for e in os.listdir(parent) if ".tmp." in e]
-    assert leftovers == [], f"crashed write stranded its temp: {leftovers}"
+    assert os.listdir(os.path.dirname(path)) == [], (
+        "a failed build must leave neither its directory nor its lock")
+    assert path not in scratch._HELD
 
-    def good_write(tmp: str) -> None:
-        os.makedirs(tmp, exist_ok=True)
-        calls.append(tmp)
-
-    out = materialize_once(path, good_write)
-    assert out == path and os.path.exists(os.path.join(path, ".b2bqs_done"))
-    assert len(calls) == 2  # the crash never counted as a publish
-    import shutil
-
-    shutil.rmtree(os.path.dirname(path), ignore_errors=True)
+    out = materialize_once(path, _write(calls))
+    assert out == path and os.path.exists(os.path.join(path, scratch._DONE))
+    assert len(calls) == 2  # the crash never counted as a build
 
 
-def test_marker_on_disk_short_circuits_second_process(tmp_path):
-    # A second process finding the winner's on-disk marker must skip its
-    # own build entirely (the _PUBLISHED memo is process-local; the
-    # marker is the cross-process signal).
-    import shutil
-
-    from bucket_to_bigquery_spark import scratch
-
-    src = tmp_path / "sf9"
-    src.mkdir()
-    (src / "documents.parquet").write_bytes(b"v1")
-    path = scratch_path("race", str(src))
-
-    def winner_write(tmp: str) -> None:
-        os.makedirs(tmp, exist_ok=True)
-        open(os.path.join(tmp, "winner"), "w").close()
-
-    materialize_once(path, winner_write)
-    scratch._PUBLISHED.discard(path)  # forget; simulate a second process
-    calls: list[str] = []
-    materialize_once(path, lambda tmp: calls.append(tmp))
-    assert calls == [], "marker on disk must short-circuit a second build"
-    assert os.path.exists(os.path.join(path, "winner"))
-    shutil.rmtree(os.path.dirname(path), ignore_errors=True)
-
-
-def test_losing_racer_keeps_winner_and_discards_own_temp(tmp_path):
-    # The true rename-collision path: the loser passes the marker check
-    # (nothing published yet), builds its temp copy, and the WINNER
-    # publishes while the loser is still writing — the loser's
-    # os.rename then fails against the winner's non-empty directory, and
-    # the loser must discard its own temp and leave the winner's copy
-    # untouched. The winner is simulated from inside the loser's write
-    # callback (exactly the mid-build interleaving of a real race).
-    import shutil
-
-    from bucket_to_bigquery_spark import scratch
-
-    src = tmp_path / "sf9"
-    src.mkdir()
-    (src / "documents.parquet").write_bytes(b"v1")
-    path = scratch_path("race2", str(src))
-
-    def loser_write(tmp: str) -> None:
-        os.makedirs(tmp, exist_ok=True)
-        open(os.path.join(tmp, "loser"), "w").close()
-        # winner publishes mid-build (marker included)
-        os.makedirs(path, exist_ok=True)
-        open(os.path.join(path, "winner"), "w").close()
-        with open(os.path.join(path, scratch._DONE), "w") as fh:
-            fh.write("ok")
-
-    out = materialize_once(path, loser_write)
-    assert out == path
-    assert os.path.exists(os.path.join(path, "winner")), "winner clobbered"
-    assert not os.path.exists(os.path.join(path, "loser")), (
-        "loser's copy must not replace the winner's"
-    )
-    leftovers = [e for e in os.listdir(os.path.dirname(path))
-                 if ".tmp." in e]
-    assert leftovers == [], f"loser's temp not discarded: {leftovers}"
-    shutil.rmtree(os.path.dirname(path), ignore_errors=True)
-
-
-def test_dead_owner_temp_reclaimed_on_next_materialize(tmp_path):
-    # The SIGKILL edge of ADVICE r8 #3: a writer killed before its
-    # cleanup handler leaves `<path>.tmp.<dead-pid>`. The next
-    # materialize of the same key must reclaim it (the sibling sweep
-    # checks owner-pid liveness), so nothing is stranded forever.
-    import shutil
-    import subprocess
-
-    src = tmp_path / "sf9"
-    src.mkdir()
-    (src / "documents.parquet").write_bytes(b"v1")
+def test_sigkilled_builder_is_rebuilt(root, src, tmp_path):
+    builder = _child(root, src, "killed", "hang", tmp_path / "log")
+    try:
+        assert builder.stdout.readline() == "building\n"
+    finally:
+        builder.send_signal(signal.SIGKILL)
+        builder.wait(timeout=30)
     path = scratch_path("killed", str(src))
+    assert os.path.exists(os.path.join(path, "built-by-child"))
+    assert not os.path.exists(os.path.join(path, scratch._DONE))
 
-    # a genuinely dead pid: a child that has exited and been reaped
-    proc = subprocess.Popen(["true"])
-    proc.wait()
-    dead_tmp = f"{path}.tmp.{proc.pid}"
-    os.makedirs(dead_tmp, exist_ok=True)
-    open(os.path.join(dead_tmp, "half-built"), "w").close()
-
-    def write(tmp: str) -> None:
-        os.makedirs(tmp, exist_ok=True)
-
-    out = materialize_once(path, write)
-    assert out == path and os.path.exists(path)
-    assert not os.path.exists(dead_tmp), (
-        "dead writer's temp not reclaimed on next materialize"
-    )
-    shutil.rmtree(os.path.dirname(path), ignore_errors=True)
+    calls: list[str] = []
+    assert materialize_once(path, _write(calls)) == path
+    assert calls == [path]
+    assert not os.path.exists(os.path.join(path, "built-by-child")), (
+        "the killed builder's half-written directory was kept")
+    assert os.path.exists(os.path.join(path, scratch._DONE))
 
 
-def test_owner_alive_semantics():
-    import subprocess
-
-    from bucket_to_bigquery_spark.scratch import _owner_alive
-
-    assert _owner_alive(str(os.getpid())) is True
-    proc = subprocess.Popen(["true"])
-    proc.wait()
-    assert _owner_alive(str(proc.pid)) is False
-    # unparseable suffixes are conservatively treated as live
-    assert _owner_alive("not-a-pid") is True
-    assert _owner_alive("") is True
+def test_marker_on_disk_short_circuits_second_process(root, src, tmp_path):
+    builder = _child(root, src, "race", "build", tmp_path / "log")
+    assert builder.wait(timeout=60) == 0
+    calls: list[str] = []
+    path = materialize_once(scratch_path("race", str(src)), _write(calls))
+    assert calls == [], "marker on disk must short-circuit a second build"
+    assert os.path.exists(os.path.join(path, "built-by-child"))
 
 
-def test_prune_never_touches_paths_outside_scratch_root(tmp_path):
-    from bucket_to_bigquery_spark import scratch
+def test_two_racing_processes_build_once(root, src, tmp_path):
+    log = tmp_path / "log"
+    racers = [_child(root, src, "race2", "slow", log) for _ in range(2)]
+    outs = [r.communicate(timeout=60)[0] for r in racers]
+    assert [r.returncode for r in racers] == [0, 0]
+    assert all(o.endswith("done\n") for o in outs)
+    assert len(log.read_text().splitlines()) == 1, "both racers built"
+    assert os.path.exists(
+        os.path.join(scratch_path("race2", str(src)), scratch._DONE))
 
+
+def test_prune_never_touches_paths_outside_scratch_root(root, tmp_path):
     foreign = tmp_path / "data" / "sf9-aaaa"
     sibling = tmp_path / "data" / "sf9-bbbb"
     foreign.mkdir(parents=True)

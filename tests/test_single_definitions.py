@@ -1,7 +1,8 @@
 """Shared IVF steps, e12 oracle fragments, text-normalizer SQL, the CC
 oracles' closure, the co-occurrence pair expansion and the driver-side
 frame builder each have one definition: every string below may appear in
-exactly one package file, so a contract change cannot miss a copy."""
+exactly one package file, so a contract change cannot miss a copy. The
+fixture lock protocol lives in scratch.py alone."""
 
 from __future__ import annotations
 
@@ -49,3 +50,15 @@ def _files_containing(needle: str) -> list[str]:
 @pytest.mark.parametrize("needle", _NEEDLES)
 def test_defined_in_exactly_one_file(needle):
     assert len(_files_containing(needle)) == 1, _files_containing(needle)
+
+
+@pytest.mark.parametrize("needle", ["flock(", "_DONE"])
+def test_fixture_protocol_only_in_scratch(needle):
+    assert _files_containing(needle) == ["scratch.py"]
+
+
+# Fixtures are built in place: nothing publishes by rename, and no audit
+# URI is rewritten to a publish root.
+@pytest.mark.parametrize("needle", ["audit_rebase", "os.rename("])
+def test_absent_from_package(needle):
+    assert _files_containing(needle) == []
