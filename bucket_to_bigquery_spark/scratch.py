@@ -17,8 +17,9 @@ process that uses the fixture then holds a shared lock on it until it
 exits, and the kernel drops a dead process's locks. So a directory
 without a marker whose lock is free is a dead builder's leftover, and
 is rebuilt; and the sweep removes the other fingerprints of the same
-``<name>/<sf basename>`` whose lock no live process holds. Fixtures are
-safe to wipe while no engine process runs.
+``<name>/<sf basename>`` whose lock no live process holds. Lock files
+are never removed, so every process that opens one locks the same file.
+Fixtures are safe to wipe while no engine process runs.
 """
 
 from __future__ import annotations
@@ -82,56 +83,32 @@ def scratch_path(name: str, sf_dir: str) -> str:
     return f"{_ROOT}/{name}/{tag}/{fp}"
 
 
-def _is_current(fd: int, lock: str) -> bool:
-    """True while ``fd`` is still the file at ``lock`` (the sweep unlinks
-    a lock file it has removed the fixture of)."""
-    try:
-        return os.stat(lock).st_ino == os.fstat(fd).st_ino
-    except FileNotFoundError:
-        return False
-
-
-def _lock(path: str, how: int) -> int | None:
-    """An fd holding ``flock(how)`` on ``<path>.lock``; None when ``how``
-    carries ``LOCK_NB`` and another process holds a conflicting lock."""
-    lock = f"{path}.lock"
-    while True:
-        fd = os.open(lock, os.O_RDWR | os.O_CREAT, 0o644)
-        try:
-            fcntl.flock(fd, how)
-        except BlockingIOError:
-            os.close(fd)
-            return None
-        except BaseException:
-            os.close(fd)
-            raise
-        if _is_current(fd, lock):
-            return fd
-        os.close(fd)  # swept between open and flock: lock the new file
-
-
 def _prune_stale_siblings(path: str) -> None:
     """Remove the other fingerprints in ``path``'s ``<name>/<sf
     basename>`` directory whose lock no live process holds.
 
     Each describes a source or code state other than this process's;
     every process using one holds its shared lock, so a free lock means
-    nobody reads it. Only prunes under the scratch root: callers may
-    hand ``materialize_once`` foreign paths whose siblings are not ours
-    to manage.
+    nobody reads it. The lock file stays, so a process that opened it
+    still locks the same file. Only prunes under the scratch root:
+    callers may hand ``materialize_once`` foreign paths whose siblings
+    are not ours to manage.
     """
     parent = os.path.dirname(path)
     if not os.path.realpath(parent).startswith(os.path.realpath(_ROOT) + os.sep):
         return
-    keys = {e.removesuffix(".lock") for e in os.listdir(parent)}
-    for key in sorted(keys - {os.path.basename(path)}):
+    for key in sorted(os.listdir(parent)):
         stale = os.path.join(parent, key)
-        fd = _lock(stale, fcntl.LOCK_EX | fcntl.LOCK_NB)
-        if fd is None:
+        if stale == path or not os.path.isdir(stale):
             continue
-        shutil.rmtree(stale, ignore_errors=True)
-        os.unlink(f"{stale}.lock")
-        os.close(fd)
+        fd = os.open(f"{stale}.lock", os.O_RDWR | os.O_CREAT, 0o644)
+        try:
+            fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+            shutil.rmtree(stale, ignore_errors=True)
+        except BlockingIOError:
+            pass  # a live process uses it
+        finally:
+            os.close(fd)
 
 
 def _build(path: str, write: Callable[[str], None]) -> None:
@@ -145,7 +122,6 @@ def _build(path: str, write: Callable[[str], None]) -> None:
             fh.write("ok")
     except BaseException:
         shutil.rmtree(path, ignore_errors=True)
-        os.unlink(f"{path}.lock")
         raise
     logging.getLogger("b2bqs.metrics").info(
         "METRIC b2bqs.fixture_build_s.%s %s",
@@ -158,32 +134,41 @@ def materialize_once(path: str, write: Callable[[str], None]) -> str:
     """Build ``path`` with ``write(path)`` unless a finished build is
     there, and hold a shared lock on it for the rest of the process.
 
-    The first caller builds under the exclusive lock; a racing caller
-    waits on that lock and then finds the marker. A ``write`` that
-    raises has its directory removed before the exception propagates,
-    and a builder killed too hard for that leaves an unmarked directory
-    that the next caller rebuilds. Callers are one thread per process:
-    two threads of one process building the same path would each wait
-    on the other's lock.
+    Only a builder or the sweep holds the exclusive lock, and only for
+    a build or an ``rmtree``, so waiting for the shared lock always
+    ends and any number of live processes share a finished fixture.
+    The exclusive lock is tried, never waited for, since a finished
+    fixture's users keep the shared lock until they exit: the first
+    caller to get it builds, and a racing caller then waits for the
+    shared lock and finds the marker. A ``write`` that raises has its
+    directory removed before the exception propagates, and a builder
+    killed too hard for that leaves an unmarked directory that the next
+    caller rebuilds.
     """
     if path in _HELD:
         return path
     os.makedirs(os.path.dirname(path), exist_ok=True)
     marker = os.path.join(path, _DONE)
-    while True:
-        fd = _lock(path, fcntl.LOCK_EX)
-        try:
+    fd = os.open(f"{path}.lock", os.O_RDWR | os.O_CREAT, 0o644)
+    try:
+        while True:
+            fcntl.flock(fd, fcntl.LOCK_SH)  # waits out a build or a sweep
+            if os.path.exists(marker):
+                break
+            fcntl.flock(fd, fcntl.LOCK_UN)
+            try:
+                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+            except BlockingIOError:
+                time.sleep(0.05)  # another caller is checking or building
+                continue
             if not os.path.exists(marker):
                 _build(path, write)
-            # Not atomic: a sweep may take the lock in between, so check
-            # that the fixture survived the switch before keeping it.
-            fcntl.flock(fd, fcntl.LOCK_SH)
-        except BaseException:
-            os.close(fd)
-            raise
-        if _is_current(fd, f"{path}.lock") and os.path.exists(marker):
-            break
+            # the loop moves down to the shared lock and checks the
+            # marker again: the switch is not atomic, and a sweep may
+            # take the lock in between
+    except BaseException:
         os.close(fd)
+        raise
     _HELD[path] = fd
     _prune_stale_siblings(path)
     return path

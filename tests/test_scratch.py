@@ -5,11 +5,14 @@ holds."""
 
 from __future__ import annotations
 
+import contextlib
+import fcntl
 import logging
 import os
 import signal
 import subprocess
 import sys
+import time
 
 import pytest
 
@@ -20,8 +23,9 @@ _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # A second engine process: materializes <name> over <src> under <root>,
 # appending one line to <log> per build. Modes: "build" exits when done,
-# "slow" takes half a second to build, "hang" stops mid-build, "hold"
-# keeps its shared lock until killed. Prints "building" / "done".
+# "hang" stops mid-build, "hold" keeps its shared lock until killed, and
+# "slow-hold" takes half a second to build, then holds. Prints
+# "building" / "done".
 _CHILD = """
 import os, sys, time
 from bucket_to_bigquery_spark import scratch
@@ -34,11 +38,11 @@ def write(p):
         fh.write(p + "\\n")
     open(os.path.join(p, "built-by-child"), "w").close()
     print("building", flush=True)
-    time.sleep({"slow": 0.5, "hang": 120}.get(mode, 0))
+    time.sleep({"slow-hold": 0.5, "hang": 120}.get(mode, 0))
 
 scratch.materialize_once(scratch.scratch_path(name, src), write)
 print("done", flush=True)
-if mode == "hold":
+if mode.endswith("hold"):
     time.sleep(120)
 """
 
@@ -65,6 +69,26 @@ def _child(root, src, name, mode, log):
         [sys.executable, "-c", _CHILD, str(root), str(src), name, mode, str(log)],
         cwd=_REPO, stdout=subprocess.PIPE, text=True,
     )
+
+
+@contextlib.contextmanager
+def _deadline(seconds):
+    """Fail a step that blocks instead of hanging the suite."""
+    def expire(*_):
+        raise TimeoutError(f"blocked for {seconds}s")
+    old = signal.signal(signal.SIGALRM, expire)
+    signal.alarm(seconds)
+    try:
+        yield
+    finally:
+        signal.alarm(0)
+        signal.signal(signal.SIGALRM, old)
+
+
+def _kill(procs):
+    for p in procs:
+        p.kill()
+        p.wait(timeout=30)
 
 
 def _write(calls):
@@ -146,17 +170,19 @@ def test_publish_prunes_stale_fingerprint_siblings(root, src):
 
     materialize_once(path, _write([]))
     assert not os.path.exists(stale), "stale-fingerprint sibling not pruned"
-    assert not os.path.exists(orphan_lock)
     assert os.path.exists(other_tag), "different-tag sibling wrongly pruned"
+    # lock files stay, so a process that opened one locks the same file
     assert sorted(os.listdir(parent)) == sorted(
-        [os.path.basename(path), os.path.basename(path) + ".lock"])
+        [os.path.basename(path), os.path.basename(path) + ".lock",
+         os.path.basename(stale) + ".lock", os.path.basename(orphan_lock)])
 
 
 def test_sweep_skips_fingerprint_held_by_live_process(root, src, tmp_path):
     holder = _child(root, src, "held", "hold", tmp_path / "log")
     try:
-        assert holder.stdout.readline() == "building\n"
-        assert holder.stdout.readline() == "done\n"
+        with _deadline(60):
+            assert holder.stdout.readline() == "building\n"
+            assert holder.stdout.readline() == "done\n"
         old = scratch_path("held", str(src))
         (src / "documents.parquet").write_bytes(b"v2!")
         new = materialize_once(scratch_path("held", str(src)), _write([]))
@@ -164,10 +190,9 @@ def test_sweep_skips_fingerprint_held_by_live_process(root, src, tmp_path):
         assert os.path.exists(os.path.join(old, scratch._DONE)), (
             "a fixture a live process holds was swept")
     finally:
-        holder.kill()
-        holder.wait(timeout=30)
+        _kill([holder])
     scratch._prune_stale_siblings(new)  # the holder is gone now
-    assert not os.path.exists(old) and not os.path.exists(old + ".lock")
+    assert not os.path.exists(old)
 
 
 def test_crashed_write_publishes_nothing_and_rebuilds(root, src):
@@ -182,8 +207,8 @@ def test_crashed_write_publishes_nothing_and_rebuilds(root, src):
 
     with pytest.raises(RuntimeError):
         materialize_once(path, dying_write)
-    assert os.listdir(os.path.dirname(path)) == [], (
-        "a failed build must leave neither its directory nor its lock")
+    assert os.listdir(os.path.dirname(path)) == [
+        os.path.basename(path) + ".lock"], "a failed build left its directory"
     assert path not in scratch._HELD
 
     out = materialize_once(path, _write(calls))
@@ -219,15 +244,44 @@ def test_marker_on_disk_short_circuits_second_process(root, src, tmp_path):
     assert os.path.exists(os.path.join(path, "built-by-child"))
 
 
+def test_live_holder_shares_finished_fixture(root, src, tmp_path):
+    """A second live process reuses a fixture another live process
+    holds, without waiting for that process to exit."""
+    holder = _child(root, src, "shared", "hold", tmp_path / "log")
+    try:
+        with _deadline(60):
+            assert holder.stdout.readline() == "building\n"
+            assert holder.stdout.readline() == "done\n"
+            calls: list[str] = []
+            path = materialize_once(scratch_path("shared", str(src)),
+                                    _write(calls))
+        assert calls == [], "a held, finished fixture was rebuilt"
+        assert os.path.exists(os.path.join(path, "built-by-child"))
+    finally:
+        _kill([holder])
+
+
 def test_two_racing_processes_build_once(root, src, tmp_path):
+    """The racer that loses waits out the build, not the builder's
+    lifetime: both finish while both stay alive. The test first holds
+    the lock shared, as a caller does while it checks the marker, so
+    both racers find no marker and reach the exclusive step together."""
     log = tmp_path / "log"
-    racers = [_child(root, src, "race2", "slow", log) for _ in range(2)]
-    outs = [r.communicate(timeout=60)[0] for r in racers]
-    assert [r.returncode for r in racers] == [0, 0]
-    assert all(o.endswith("done\n") for o in outs)
-    assert len(log.read_text().splitlines()) == 1, "both racers built"
-    assert os.path.exists(
-        os.path.join(scratch_path("race2", str(src)), scratch._DONE))
+    path = scratch_path("race2", str(src))
+    os.makedirs(os.path.dirname(path))
+    checker = os.open(f"{path}.lock", os.O_RDWR | os.O_CREAT, 0o644)
+    fcntl.flock(checker, fcntl.LOCK_SH)
+    racers = [_child(root, src, "race2", "slow-hold", log) for _ in range(2)]
+    try:
+        time.sleep(1.0)
+        os.close(checker)
+        with _deadline(60):
+            for r in racers:
+                assert "done\n" in iter(r.stdout.readline, "")
+        assert len(log.read_text().splitlines()) == 1, "both racers built"
+        assert os.path.exists(os.path.join(path, scratch._DONE))
+    finally:
+        _kill(racers)
 
 
 def test_prune_never_touches_paths_outside_scratch_root(root, tmp_path):
