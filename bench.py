@@ -1,8 +1,15 @@
 """Benchmark: run every declared query at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE JSON line:
+the run's full record, on stdout.
 
-  {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {"q...": sec, ...}, "sf": ...}
+  {"metric": "declared_query_set_wall_time", "value": <total sec>,
+   "unit": "sec", "queries": {"<registry name>": sec, ...},
+   "query_stats": {"<registry name>": {"gc_s", "heap_mb", "leaked_rdds"}},
+   "calib_s": [pre, post], "ann_recall_at_5": {...}, "ivf_scan": {...},
+   "sf": ..., "errors": {...}}
+
+``errors`` is present only when a query failed; nothing is truncated.
+Advisory ``METRIC`` lines go to stderr.
 
 Each query is timed end-to-end (plan + FULL execution). Materialization is
 a noop-format write — unlike ``count()``, this executes every projection,
@@ -239,20 +246,11 @@ def main() -> None:
 
     total = round(sum(timings.values()), 4)
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    # Calib-banded normalization (VERDICT r12 #8): the sandbox host has two
-    # scheduling regimes and three consecutive rounds of bench reads needed
-    # manual regime adjudication. Each row is also emitted as
-    # wall ÷ calib-midpoint so cross-round comparisons can be made in
-    # calib units directly from the record (the raw rows stay primary).
-    calib_mid = round((calib_pre + calib_post) / 2.0, 4) or 1.0
-    calibnorm = {k: round(v / calib_mid, 2) for k, v in timings.items()}
-    detail = {
+    record = {
         "metric": "declared_query_set_wall_time",
         "value": total,
         "unit": "sec",
         "queries": timings,
-        "queries_calibnorm": calibnorm,
-        "calib_mid": calib_mid,
         "query_stats": stats,
         "calib_s": [calib_pre, calib_post],
         "ann_recall_at_5": recall,
@@ -260,200 +258,8 @@ def main() -> None:
         "sf": sf_val,
     }
     if errors:
-        detail["errors"] = errors
-    # The driver captures only the LAST 2000 chars of stdout and parses the
-    # JSON there — a full-name timings map alone is ~2.5 KB, which is why
-    # every prior round's driver record has ``parsed: null``. So stdout gets
-    # EXACTLY ONE compact line whose query keys are the unique ``q<NN>[v]``
-    # code (the registry name up to the first underscore): ~1.1 KB for 90+
-    # entries, guaranteed to fit the tail whole. The full-detail record
-    # (full names, per-query gc/heap/leak stats, errors) goes to stderr and
-    # is committed as BENCH_local_r{N}.json.
-    print(json.dumps(detail), file=sys.stderr)
-    compact, codes, collided = _build_compact(
-        timings, total, sf_val, [calib_pre, calib_post], recall,
-        ivf.get("scan_frac"), errors,
-    )
-    print(_fit_tail_line(compact, timings, codes, collided))
-
-
-def _build_compact(
-    timings: dict[str, float],
-    total: float,
-    sf_val,
-    calib: list[float],
-    recall,
-    ivf_scan_frac,
-    errors: dict,
-) -> tuple[dict, dict[str, str], set[str]]:
-    """The driver-tail payload + the short-code map, shared with
-    tests/test_bench_tail.py so the tail tests exercise the REAL
-    production shape (a copy-pasted builder would let the two drift).
-
-    Short codes are unique today (q<NN>[v] prefixes); if a future
-    collision appears, disambiguate ONLY the colliding entries with
-    their full names instead of failing or silently merging."""
-    codes: dict[str, str] = {}
-    collided: set[str] = set()
-    seen: set[str] = set()
-    for k in timings:
-        c = k.split("_", 1)[0]
-        if c in seen:
-            collided.add(c)
-        seen.add(c)
-        codes[k] = c
-    compact = {
-        "metric": "declared_query_set_wall_time",
-        "value": total,
-        "unit": "sec",
-        "sf": sf_val,
-        "calib_s": calib,
-        "ann_recall_at_5": recall,
-        "ivf_scan_frac": ivf_scan_frac,
-        "queries": {
-            (k if codes[k] in collided else codes[k]): round(v, 2)
-            for k, v in timings.items()
-        },
-    }
-    if errors:
-        # the per-query map omits failed entries; make that machine-visible
-        compact["errors"] = len(errors)
-    return compact, codes, collided
-
-
-def _fit_tail_line(
-    compact: dict,
-    timings: dict[str, float],
-    codes: dict[str, str],
-    collided: set[str],
-) -> str:
-    """Degrade ``compact`` until it fits the driver's tail capture whole.
-
-    The driver captures the last 2000 chars of combined output and parses
-    the final JSON line — the line must fit WHOLE. At 148 entries the r12
-    line measured 1880 chars; the r13 registry (163+) overflows, and the
-    old single fallback would have dropped every per-query row from the
-    driver record. Degrade gracefully instead, cheapest information
-    first: the advisory scalars (still in the committed detail record
-    AND on stderr METRIC lines) go before row precision, and rows go
-    only as the last resort.
-    """
-
-    def _line() -> str:
-        return json.dumps(compact, separators=(",", ":"))
-
-    line = _line()
-    if len(line) >= 1980:
-        # 1-decimal rows first: adjudication-grade precision lives in the
-        # committed detail record; the driver row only needs magnitude
-        compact["queries"] = {
-            (k if codes[k] in collided else codes[k]): round(v, 1)
-            for k, v in timings.items()
-        }
-        line = _line()
-    advisory = (compact.get("ann_recall_at_5"), compact.get("ivf_scan_frac"))
-    if len(line) >= 1980:
-        # then the advisory scalars (still in the detail record AND on
-        # stderr METRIC lines)
-        compact.pop("ann_recall_at_5", None)
-        compact.pop("ivf_scan_frac", None)
-        compact["advisory_omitted"] = 1
-        line = _line()
-    if len(line) >= 1980:
-        # Full-map stage at integer DECISECONDS (VERDICT r16 #1): at 186+
-        # entries a seconds map cannot fit the 2000-char tail at ANY
-        # decimal precision (191 rows × ~10.6 chars ≈ 2.03 KB — the dot
-        # alone is 191 chars), but integer deciseconds (21 == 2.1 s,
-        # marked unambiguously by "q_unit": "ds") fit with room for the
-        # advisory scalars. This restores the per-query driver
-        # comparability the families fallback lost (PERF_r16.per_query
-        # was empty, geomean null). The committed detail record and the
-        # stderr line keep full-precision SECONDS; the families ladder
-        # below remains for registries too large even for ds rows.
-        trial = dict(compact)
-        trial["queries"] = {
-            (k if codes[k] in collided else codes[k]): int(round(v * 10))
-            for k, v in timings.items()
-        }
-        trial["q_unit"] = "ds"
-        if trial.get("advisory_omitted"):
-            # same restore-without-losing-the-marker discipline as the
-            # families branch below: restore only if it still fits
-            restored = dict(trial)
-            restored.pop("advisory_omitted")
-            restored["ann_recall_at_5"] = advisory[0]
-            restored["ivf_scan_frac"] = advisory[1]
-            if len(json.dumps(restored, separators=(",", ":"))) < 1980:
-                trial = restored
-        tline = json.dumps(trial, separators=(",", ":"))
-        if len(tline) < 1980:
-            # adopted whole; a registry too large even for ds rows falls
-            # through untouched to the bounded families ladder below
-            compact = trial
-            line = tline
-    if len(line) >= 1980:
-        # Bounded per-query footprint (VERDICT r14 #1): at 186+ entries the
-        # full map cannot fit even at 1-decimal precision, and the old
-        # last resort dropped every row — which removed the driver-side
-        # adjudication trigger for perf regressions. Keep magnitude-level
-        # visibility at ANY registry size instead: per-decade subtotals
-        # (complete coverage, ~|registry|/10 keys) plus the top-N slowest
-        # rows (the adjudication candidates), N shrinking until the line
-        # fits. The full row map is always in the committed detail record.
-        def _bucket(code: str, width: int) -> str:
-            # "q4x" = q40-q49; "q1xx" = q100-q199; one x per dropped digit
-            num = "".join(ch for ch in code[1:] if ch.isdigit())
-            xs = "x" * len(str(width)[1:])
-            return f"{code[0]}{int(num) // width if num else 0}{xs}"
-
-        slowest = sorted(timings.items(), key=lambda kv: (-kv[1], kv[0]))
-        # the subtotals must themselves stay bounded: a decade map grows
-        # with registry size (at ~1500 entries it alone overflows the
-        # tail — review catch, r15), so widen the bucket until the
-        # families-only line fits, THEN add as many top rows as fit
-        compact.pop("queries", None)
-        for width in (10, 100, 1000, 10000):
-            fams = {}
-            for k, v in timings.items():
-                f = _bucket(codes[k], width)
-                fams[f] = round(fams.get(f, 0.0) + v, 1)
-            compact["families"] = fams
-            compact.pop("queries_top", None)
-            line = _line()
-            if len(line) < 1800:  # headroom for top rows
-                break
-        n = 64
-        while True:
-            compact["queries_top"] = {
-                (k if codes[k] in collided else codes[k]): round(v, 1)
-                for k, v in slowest[:n]
-            }
-            line = _line()
-            if len(line) < 1980 or n == 0:
-                break
-            n //= 2
-        if compact.get("advisory_omitted") and len(line) < 1900:
-            # the bounded form is far smaller than the full map — restore
-            # the advisory scalars if they fit back in (they usually do).
-            # Check without popping: if the restore doesn't fit, the
-            # omission marker must SURVIVE on the line (review catch, r15)
-            compact.pop("advisory_omitted")
-            compact["ann_recall_at_5"] = advisory[0]
-            compact["ivf_scan_frac"] = advisory[1]
-            line = _line()
-            if len(line) >= 1980:
-                compact.pop("ann_recall_at_5", None)
-                compact.pop("ivf_scan_frac", None)
-                compact["advisory_omitted"] = 1
-                line = _line()
-    if len(line) >= 1980:
-        # never leave the driver's tail parse without a valid final line:
-        # drop the subtotals before dropping the headline metric
-        compact.pop("families", None)
-        compact.pop("queries_top", None)
-        compact["queries_omitted"] = "line exceeded driver tail capture"
-        line = _line()
-    return line
+        record["errors"] = errors
+    print(json.dumps(record))
 
 
 if __name__ == "__main__":
