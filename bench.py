@@ -4,7 +4,8 @@ the run's full record, on stdout.
 
   {"metric": "declared_query_set_wall_time", "value": <total sec>,
    "unit": "sec", "queries": {"<registry name>": sec, ...},
-   "query_stats": {"<registry name>": {"gc_s", "heap_mb", "leaked_rdds"}},
+   "query_stats": {"<registry name>": {"gc_s", "jit_s", "heap_mb",
+                                       "leaked_rdds"}},
    "calib_s": [pre, post], "ann_recall_at_5": {...}, "ivf_scan": {...},
    "sf": ..., "errors": {...}}
 
@@ -165,13 +166,15 @@ def _ivf_scan_stats(spark, sf_dir) -> dict:
         return {}
 
 
-def _jvm_stats(spark) -> tuple[int, int]:
-    """(cumulative GC ms, current heap-used bytes) of the local JVM —
-    driver == executors on local[*], so this covers the whole engine."""
+def _jvm_stats(spark) -> tuple[int, int, int]:
+    """(cumulative GC ms, current heap-used bytes, cumulative JIT compile
+    ms) of the local JVM — driver == executors on local[*], so this covers
+    the whole engine."""
     mf = spark.sparkContext._jvm.java.lang.management.ManagementFactory
     gc_ms = sum(b.getCollectionTime() for b in mf.getGarbageCollectorMXBeans())
     heap = mf.getMemoryMXBean().getHeapMemoryUsage().getUsed()
-    return gc_ms, heap
+    jit_ms = mf.getCompilationMXBean().getTotalCompilationTime()
+    return gc_ms, heap, jit_ms
 
 
 def main() -> None:
@@ -220,7 +223,7 @@ def main() -> None:
     stats: dict[str, dict[str, float]] = {}
     for name in sorted(registry):
         q = registry[name]
-        gc0, _ = _jvm_stats(spark)
+        gc0, _, jit0 = _jvm_stats(spark)
         t0 = time.perf_counter()
         try:
             _execute(q.builder(spark, sf_dir))
@@ -232,10 +235,11 @@ def main() -> None:
         # (outside the timed window) and record what leaked: a nonzero
         # ``leaked_rdds`` fingers the query that would otherwise degrade
         # the rest of the session.
-        gc1, heap = _jvm_stats(spark)
+        gc1, heap, jit1 = _jvm_stats(spark)
         leaked = _sweep_state(spark)
         stats[name] = {
             "gc_s": round((gc1 - gc0) / 1000.0, 3),
+            "jit_s": round((jit1 - jit0) / 1000.0, 3),
             "heap_mb": round(heap / 1048576.0, 1),
             "leaked_rdds": leaked,
         }

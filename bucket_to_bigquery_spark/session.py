@@ -12,6 +12,25 @@ Design notes (100 TB target):
   when it is a count, else every core of the host); on a real cluster this
   is overridden to ~2-3× total cores by the submitter — queries never
   hardcode partition counts.
+- Driver JIT: C2 compiles only code that stays hot. HotSpot's C2 threads
+  were the largest CPU consumer of a short engine call (a quarter of a
+  traced perfbench run at 4 cores, more than the executor task threads),
+  nearly all of it on library code (Java serialization, Janino, Parquet,
+  ASM, class loading) that one call runs a few thousand times. The driver
+  JVM starts with the four tier-4 thresholds at 4x the JDK 17 defaults;
+  C1 still compiles at every tier and hot loops still reach C2, which is
+  what ``-XX:TieredStopAtLevel=1`` lost (sf0.1 ``bench.py`` 50 % slower).
+  Same-session A/B at 4 cores (medians of 10 ingest and 6 analytics
+  perfbench pairs): ingest ``op_cpu_geomean_s`` 3.67 -> 2.63 s and
+  ``pass_cpu_s`` 16.2 -> 11.6 s, analytics ``pass_cpu_s`` 56.0 -> 46.7 s,
+  JIT compile time over a traced ingest pass 29.7 -> 15.9 s; wall times
+  did not move. The cost is on long runs: sf0.1 ``bench.py`` went
+  232 -> 242 s (3 pairs, each slower; the calib probe slower too), likely
+  because code that does get hot reaches C2 later. Keeping the back-edge
+  threshold at its default still lost on ``bench.py`` and saved less on
+  ingest; in a sizing sweep 2x saved less and 8x about the same.
+  Executors are left alone: on a cluster they are long-lived JVMs where
+  the defaults pay off, and in local mode they run inside the driver JVM.
 """
 
 from __future__ import annotations
@@ -75,6 +94,17 @@ def tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
+# The driver JVM's tier-4 (C2) thresholds at 4x the JDK 17 defaults (5000,
+# 600, 15000, 40000); why, and what it saved, is in the design notes above.
+# Passed as ``defaultJavaOptions``, not ``extraJavaOptions``: Spark puts a
+# deployment's own ``spark.driver.extraJavaOptions`` after these, so it
+# still applies and wins.
+DRIVER_JIT_OPTIONS = (
+    "-XX:Tier4InvocationThreshold=20000 -XX:Tier4MinInvocationThreshold=2400 "
+    "-XX:Tier4CompileThreshold=60000 -XX:Tier4BackEdgeThreshold=160000"
+)
+
+
 def get_spark(app_name: str = "bucket-to-bigquery-spark") -> SparkSession:
     """Create (or get) a local SparkSession with engine defaults.
 
@@ -88,6 +118,7 @@ def get_spark(app_name: str = "bucket-to-bigquery-spark") -> SparkSession:
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions()))
         .config("spark.driver.memory", os.environ.get("B2BQS_DRIVER_MEM", "16g"))
         .config("spark.driver.maxResultSize", "4g")
+        .config("spark.driver.defaultJavaOptions", DRIVER_JIT_OPTIONS)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # local mode: shuffle through memory, skip costly disk spill paths

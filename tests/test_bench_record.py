@@ -36,6 +36,10 @@ def test_main_prints_one_full_record(spark, sf_dir, monkeypatch, capsys):
     assert record["ann_recall_at_5"] == {}
     assert len(record["calib_s"]) == 2
     assert "errors" not in record, record.get("errors")
+    for name in NAMES:
+        assert set(record["query_stats"][name]) == {
+            "gc_s", "jit_s", "heap_mb", "leaked_rdds"}
+        assert record["query_stats"][name]["jit_s"] >= 0
     for gone in ("q_unit", "families", "queries_top", "queries_calibnorm",
                  "calib_mid"):
         assert gone not in record, gone

@@ -52,6 +52,11 @@ def _persistent_rdd_ids(spark) -> set[int]:
 
 def test_pipeline_cli_end_to_end(spark, workdir, capsys):
     out = workdir / "out"
+    # Blocks an earlier test leaked can vanish at any JVM GC: the context
+    # holds persisted RDDs weakly, and its cleaner drops collected ones.
+    # A block this test keeps referenced stands in for every foreign one.
+    held = spark.sparkContext.parallelize([0], 1).cache()
+    held.count()
     before = _persistent_rdd_ids(spark)
     rc = run_main([
         "pipeline",
@@ -59,8 +64,12 @@ def test_pipeline_cli_end_to_end(spark, workdir, capsys):
         "--output", str(out),
     ])
     assert rc == 0
-    # every checkpoint and cache block the run made is released
-    assert _persistent_rdd_ids(spark) == before
+    # every checkpoint and cache block the run made is released, and
+    # nobody else's is
+    after = _persistent_rdd_ids(spark)
+    held.unpersist()
+    assert after - before == set()
+    assert held.id() in after
     report = json.loads(capsys.readouterr().out)
     assert report["ok"] is True
     assert report["documentsIn"] == 6

@@ -38,6 +38,29 @@ def test_build_and_tune_both_set_shuffle_partitions(spark, monkeypatch):
         spark.conf.set(key, before)
 
 
+_TIER4 = {"Tier4InvocationThreshold": "20000",
+          "Tier4MinInvocationThreshold": "2400",
+          "Tier4CompileThreshold": "60000",
+          "Tier4BackEdgeThreshold": "160000"}
+
+
+def test_driver_jvm_runs_with_raised_tier4_thresholds(spark, monkeypatch):
+    """The running JVM holds every tier-4 threshold: Spark's launcher
+    passes ``-XX:+IgnoreUnrecognizedVMOptions``, so a misspelled flag
+    would be dropped without a word."""
+    jvm = spark.sparkContext._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName(
+            "com.sun.management.HotSpotDiagnosticMXBean"))
+    assert {k: bean.getVMOption(k).getValue() for k in _TIER4} == _TIER4
+    with monkeypatch.context() as m:  # the startup conf get_spark builds
+        m.setattr(SparkSession.Builder, "getOrCreate", lambda b: b)
+        m.setattr(session, "tune", lambda b: b)
+        opts = session.get_spark()._options["spark.driver.defaultJavaOptions"]
+    assert sorted(opts.split()) == sorted(
+        f"-XX:{k}={v}" for k, v in _TIER4.items())
+
+
 # every DDL a package caller hands session.local_frame
 _LOCAL_FRAME_DDLS = [
     "uri string",
