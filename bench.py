@@ -180,7 +180,7 @@ def _jvm_stats(spark) -> tuple[int, int, int]:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(os.path.normpath(sf_dir)).replace("sf", "")
-    spark = get_spark("b2bqs-bench")
+    spark = get_spark("b2bqs-bench", long_session=True)
     spark.sparkContext.setLogLevel("ERROR")
 
     registry = all_queries()

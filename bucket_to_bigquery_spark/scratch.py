@@ -19,10 +19,7 @@ without a marker whose lock is free is a dead builder's leftover, and
 is rebuilt; and the sweep removes the other fingerprints of the same
 ``<name>/<sf basename>`` whose lock no live process holds. Lock files
 are never removed, so every process that opens one locks the same file.
-When the root is versioned (``.../v<N>``), the sweep also removes the
-retired ``v<M>`` roots beside it (M < N): their layouts predate the lock
-protocol and no code at this version reads them. Fixtures are safe to
-wipe while no engine process runs.
+Fixtures are safe to wipe while no engine process runs.
 """
 
 from __future__ import annotations
@@ -31,7 +28,6 @@ import fcntl
 import hashlib
 import logging
 import os
-import re
 import shutil
 import time
 from collections.abc import Callable
@@ -115,25 +111,6 @@ def _prune_stale_siblings(path: str) -> None:
             os.close(fd)
 
 
-def _remove_retired_roots() -> None:
-    """Remove the ``v<M>`` directories beside a ``v<N>`` root with M < N.
-
-    A root not named ``v<N>`` (perfbench's ``engine-scratch``, a test's
-    temporary root) has no retired layouts, so nothing beside it is
-    touched.
-    """
-    root = os.path.normpath(_ROOT)
-    here = re.fullmatch(r"v(\d+)", os.path.basename(root))
-    if here is None:
-        return
-    parent = os.path.dirname(root)
-    for entry in os.listdir(parent):
-        old = re.fullmatch(r"v(\d+)", entry)
-        path = os.path.join(parent, entry)
-        if old and int(old[1]) < int(here[1]) and os.path.isdir(path):
-            shutil.rmtree(path, ignore_errors=True)
-
-
 def _build(path: str, write: Callable[[str], None]) -> None:
     """Run ``write(path)`` in place and write the done marker last; the
     caller holds the exclusive lock. A failed build leaves nothing."""
@@ -194,5 +171,4 @@ def materialize_once(path: str, write: Callable[[str], None]) -> str:
         raise
     _HELD[path] = fd
     _prune_stale_siblings(path)
-    _remove_retired_roots()
     return path

@@ -12,32 +12,37 @@ Design notes (100 TB target):
   when it is a count, else every core of the host); on a real cluster this
   is overridden to ~2-3× total cores by the submitter — queries never
   hardcode partition counts.
-- Driver JIT: C2 compiles only code that stays hot. HotSpot's C2 threads
-  were the largest CPU consumer of a short engine call (a quarter of a
-  traced perfbench run at 4 cores, more than the executor task threads),
-  nearly all of it on library code (Java serialization, Janino, Parquet,
-  ASM, class loading) that one call runs a few thousand times. The driver
-  JVM starts with the four tier-4 thresholds at 4x the JDK 17 defaults;
-  C1 still compiles at every tier and hot loops still reach C2, which is
-  what ``-XX:TieredStopAtLevel=1`` lost (sf0.1 ``bench.py`` 50 % slower).
-  Same-session A/B at 4 cores (medians of 10 ingest and 6 analytics
-  perfbench pairs): ingest ``op_cpu_geomean_s`` 3.67 -> 2.63 s and
-  ``pass_cpu_s`` 16.2 -> 11.6 s, analytics ``pass_cpu_s`` 56.0 -> 46.7 s,
-  JIT compile time over a traced ingest pass 29.7 -> 15.9 s; wall times
-  did not move. The cost is on long runs: sf0.1 ``bench.py`` went
-  232 -> 242 s (3 pairs, each slower; the calib probe slower too), likely
-  because code that does get hot reaches C2 later. Keeping the back-edge
-  threshold at its default still lost on ``bench.py`` and saved less on
-  ingest; in a sizing sweep 2x saved less and 8x about the same.
-  Executors are left alone: on a cluster they are long-lived JVMs where
-  the defaults pay off, and in local mode they run inside the driver JVM.
+- Driver JIT follows how long the process lives. A short call (one ``run``
+  command, one loader trigger, a perfbench pass) runs most of the engine's
+  library code (Java serialization, Janino, Parquet, ASM, class loading) a
+  few thousand times, and HotSpot's C2 threads spent more CPU compiling it
+  than the executor task threads spent on the work (a quarter of a traced
+  perfbench run at 4 cores). Its driver JVM starts with the four tier-4
+  thresholds at 4x the JDK 17 defaults: C1 still compiles at every tier
+  and hot loops still reach C2, which is what ``-XX:TieredStopAtLevel=1``
+  lost (sf0.1 ``bench.py`` 50 % slower). Same-session A/B at 4 cores
+  (medians of 10 ingest and 6 analytics perfbench pairs): ingest
+  ``op_cpu_geomean_s`` 3.67 -> 2.63 s, analytics ``pass_cpu_s``
+  56.0 -> 46.7 s, JIT seconds over a traced ingest pass 29.7 -> 15.9;
+  wall times did not move. A long session that runs a large query set
+  (``bench.py``: 176 queries at sf0.1) is the other way round: code that
+  turns warm over many queries reaches C2 later or never, and the same
+  flags made it 232 -> 242 s (3 pairs, each slower; keeping the back-edge
+  threshold at its default lost too, and 2x lost its one pair). So
+  ``get_spark`` takes ``long_session`` from the caller that knows it
+  (``bench.py``, ``tools/profile_gate.py``), and such a session keeps
+  the JDK defaults. Executors are left alone: on a cluster they are
+  long-lived JVMs where the defaults pay off, and in local mode they run
+  inside the driver JVM.
 """
 
 from __future__ import annotations
 
 import os
+import re
 from collections.abc import Iterable, Sequence
 
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -94,22 +99,48 @@ def tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
-# The driver JVM's tier-4 (C2) thresholds at 4x the JDK 17 defaults (5000,
-# 600, 15000, 40000); why, and what it saved, is in the design notes above.
-# Passed as ``defaultJavaOptions``, not ``extraJavaOptions``: Spark puts a
-# deployment's own ``spark.driver.extraJavaOptions`` after these, so it
-# still applies and wins.
+# A short call's driver JVM: the tier-4 (C2) thresholds at 4x the JDK 17
+# defaults (5000, 600, 15000, 40000); why, and what it saved, is in the
+# design notes above. Passed as ``defaultJavaOptions``, ahead of the
+# deployment's own ``defaultJavaOptions``, and Spark puts
+# ``spark.driver.extraJavaOptions`` after both, so a deployment's flags
+# still apply and win.
 DRIVER_JIT_OPTIONS = (
     "-XX:Tier4InvocationThreshold=20000 -XX:Tier4MinInvocationThreshold=2400 "
     "-XX:Tier4CompileThreshold=60000 -XX:Tier4BackEdgeThreshold=160000"
 )
 
 
-def get_spark(app_name: str = "bucket-to-bigquery-spark") -> SparkSession:
+def _deployment_conf(key: str) -> str:
+    """``key``'s value in the ``spark-defaults.conf`` spark-submit reads
+    (``$SPARK_CONF_DIR``, else ``<spark home>/conf``), or ``""``.
+
+    A builder conf replaces the file's value instead of adding to it, so
+    a conf the engine extends must first be read from here."""
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(
+        _find_spark_home(), "conf")
+    try:
+        with open(os.path.join(conf_dir, "spark-defaults.conf")) as fh:
+            lines = fh.read().splitlines()
+    except OSError:
+        return ""
+    found = ""
+    for line in lines:  # java.util.Properties: "key value" or "key=value"
+        m = re.match(r"\s*([^\s=:#!]+)\s*[=:\s]\s*(.*)", line)
+        if m and m[1] == key:
+            found = m[2].strip()  # the last one wins
+    return found
+
+
+def get_spark(
+    app_name: str = "bucket-to-bigquery-spark", *, long_session: bool = False
+) -> SparkSession:
     """Create (or get) a local SparkSession with engine defaults.
 
     Core count comes from ``SPARK_GRAFT_CPUS`` (driver contract) or all
     cores. Startup-only confs here; runtime confs via :func:`tune`.
+    ``long_session`` is for a process that runs a large query set (the
+    design notes): its driver JVM keeps the JDK's JIT thresholds.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
@@ -118,13 +149,16 @@ def get_spark(app_name: str = "bucket-to-bigquery-spark") -> SparkSession:
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions()))
         .config("spark.driver.memory", os.environ.get("B2BQS_DRIVER_MEM", "16g"))
         .config("spark.driver.maxResultSize", "4g")
-        .config("spark.driver.defaultJavaOptions", DRIVER_JIT_OPTIONS)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # local mode: shuffle through memory, skip costly disk spill paths
         .config("spark.shuffle.compress", "false")
         .config("spark.shuffle.spill.compress", "false")
     )
+    if not long_session:
+        key = "spark.driver.defaultJavaOptions"
+        builder = builder.config(
+            key, f"{DRIVER_JIT_OPTIONS} {_deployment_conf(key)}".rstrip())
     return tune(builder.getOrCreate())
 
 

@@ -52,11 +52,10 @@ def _persistent_rdd_ids(spark) -> set[int]:
 
 def test_pipeline_cli_end_to_end(spark, workdir, capsys):
     out = workdir / "out"
-    # Blocks an earlier test leaked can vanish at any JVM GC: the context
-    # holds persisted RDDs weakly, and its cleaner drops collected ones.
-    # A block this test keeps referenced stands in for every foreign one.
-    held = spark.sparkContext.parallelize([0], 1).cache()
-    held.count()
+    # The context holds persisted RDDs weakly, so blocks an earlier test
+    # leaked could vanish at any JVM GC; holding their py4j proxies pins
+    # them for the length of the call.
+    pinned = list(spark.sparkContext._jsc.getPersistentRDDs().values())
     before = _persistent_rdd_ids(spark)
     rc = run_main([
         "pipeline",
@@ -66,10 +65,8 @@ def test_pipeline_cli_end_to_end(spark, workdir, capsys):
     assert rc == 0
     # every checkpoint and cache block the run made is released, and
     # nobody else's is
-    after = _persistent_rdd_ids(spark)
-    held.unpersist()
-    assert after - before == set()
-    assert held.id() in after
+    assert _persistent_rdd_ids(spark) == before
+    del pinned
     report = json.loads(capsys.readouterr().out)
     assert report["ok"] is True
     assert report["documentsIn"] == 6

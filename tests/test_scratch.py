@@ -177,27 +177,6 @@ def test_publish_prunes_stale_fingerprint_siblings(root, src):
          os.path.basename(stale) + ".lock", os.path.basename(orphan_lock)])
 
 
-@pytest.mark.parametrize("root_name", ["v4", "engine-scratch"])
-def test_sweep_removes_only_retired_versioned_roots(
-        tmp_path, src, monkeypatch, root_name):
-    base = tmp_path / "b2bqs"
-    for d in ("v1", "v3", "v4", "v5", "v3x", "old", "engine-scratch"):
-        (base / d / "corp").mkdir(parents=True)
-    (base / "v2").write_text("a file, not a layout")
-    root = base / root_name
-    monkeypatch.setattr(scratch, "_ROOT", str(root) + "/")
-    path = scratch_path("corp", str(src))
-    try:
-        materialize_once(path, _write([]))
-    finally:
-        os.close(scratch._HELD.pop(path))
-    kept = {"v2", "v4", "v5", "v3x", "old", "engine-scratch"}
-    if root_name == "engine-scratch":  # not v<N>: no sibling is retired
-        kept |= {"v1", "v3"}
-    assert set(os.listdir(base)) == kept
-    assert os.path.isdir(path)
-
-
 def test_sweep_skips_fingerprint_held_by_live_process(root, src, tmp_path):
     holder = _child(root, src, "held", "hold", tmp_path / "log")
     try:

@@ -44,21 +44,29 @@ _TIER4 = {"Tier4InvocationThreshold": "20000",
           "Tier4BackEdgeThreshold": "160000"}
 
 
-def test_driver_jvm_runs_with_raised_tier4_thresholds(spark, monkeypatch):
+def test_driver_jvm_runs_with_raised_tier4_thresholds(
+        spark, monkeypatch, tmp_path):
     """The running JVM holds every tier-4 threshold: Spark's launcher
     passes ``-XX:+IgnoreUnrecognizedVMOptions``, so a misspelled flag
-    would be dropped without a word."""
+    would be dropped without a word. A deployment's own
+    ``defaultJavaOptions`` follow them, and a long session gets none."""
     jvm = spark.sparkContext._jvm
     bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
         jvm.java.lang.Class.forName(
             "com.sun.management.HotSpotDiagnosticMXBean"))
     assert {k: bean.getVMOption(k).getValue() for k in _TIER4} == _TIER4
+    key = "spark.driver.defaultJavaOptions"
+    (tmp_path / "spark-defaults.conf").write_text(
+        f"# {key} -Xss8m\n{key}   -Xss4m -XX:+UseG1GC\n")
+    monkeypatch.setenv("SPARK_CONF_DIR", str(tmp_path))
     with monkeypatch.context() as m:  # the startup conf get_spark builds
         m.setattr(SparkSession.Builder, "getOrCreate", lambda b: b)
         m.setattr(session, "tune", lambda b: b)
-        opts = session.get_spark()._options["spark.driver.defaultJavaOptions"]
-    assert sorted(opts.split()) == sorted(
+        opts = session.get_spark()._options[key].split()
+        assert key not in session.get_spark(long_session=True)._options
+    assert sorted(opts[:4]) == sorted(
         f"-XX:{k}={v}" for k, v in _TIER4.items())
+    assert opts[4:] == ["-Xss4m", "-XX:+UseG1GC"]
 
 
 # every DDL a package caller hands session.local_frame

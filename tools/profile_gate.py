@@ -1,7 +1,8 @@
 """Time each registered query, in name order, at a given sf_dir: the
 Spark side (build and collect) and its DuckDB oracle side separately,
 one JSON line per query, then the slowest twelve.  The session is
-``session.get_spark()``, so the core count follows ``SPARK_GRAFT_CPUS``.
+``session.get_spark(long_session=True)``, so the core count follows
+``SPARK_GRAFT_CPUS`` and the driver JVM keeps the JDK's JIT thresholds.
 Usage:
 
     python tools/profile_gate.py [sf_dir] [only_prefix...]
@@ -26,7 +27,7 @@ from oracle import duck_connection  # noqa: E402
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = sys.argv[2:]
-    spark = get_spark("profile-gate")
+    spark = get_spark("profile-gate", long_session=True)
     con = duck_connection(sf_dir)
     registry = all_queries()
     names = sorted(registry)
