@@ -67,8 +67,9 @@ def glob_base(pattern: str) -> str:
 
 def glob_match(path: str, pattern: str) -> bool:
     """minimatch-parity glob (BucketToBigQuery.js:240; readme.md:32) — the
-    one matcher behind batch globbing (:meth:`LocalFS.glob`,
-    :meth:`HadoopFS.glob`) and event-driven candidate matching:
+    path matcher behind :func:`source_match`, so behind batch globbing
+    (:meth:`LocalFS.glob`, :meth:`HadoopFS.glob`) and event-driven
+    candidate matching alike:
 
     - ``**`` as a whole segment spans zero or more path segments (so
       ``a/**/b.csv`` matches ``a/b.csv``); ``*``, ``?`` and ``[...]``
@@ -100,22 +101,29 @@ def _match_segments(parts: list[str], pats: list[str]) -> bool:
     )
 
 
+def source_match(uri: str, pattern: str) -> bool:
+    """True iff ``uri`` is one of source ``pattern``'s files: the same
+    scheme and authority, and a path that matches by :func:`glob_match`.
+    Paths are compared as components, so ``file:/x`` and ``file:///x``
+    agree. Batch globbing and event-driven candidate matching both ask
+    this one question."""
+    scheme, auth, path = uri_parts(uri)
+    p_scheme, p_auth, p_path = uri_parts(pattern)
+    return (scheme, auth) == (p_scheme, p_auth) and glob_match(path, p_path)
+
+
 def _glob_files(fs, pattern: str) -> list[str]:
-    """Files under ``pattern``'s deepest non-glob directory whose path
-    matches it by :func:`glob_match`, comparing path components so
-    ``file:/x`` and ``file:///x`` agree; a pattern without glob
-    characters yields itself if it exists."""
-    m = _GLOB_META.search(pattern)
-    if not m:
+    """Files under ``pattern``'s deepest non-glob directory that
+    :func:`source_match` it; a pattern without glob characters yields
+    itself if it exists."""
+    if not _GLOB_META.search(pattern):
         return [pattern] if fs.exists(pattern) else []
-    scheme, auth, pat_path = uri_parts(pattern)
     base = glob_base(pattern)
     out = []
     for f in fs.list_recursive(base):
         if base == "." and not pattern.startswith("./"):
             f = f[2:]  # a bare relative pattern lists "./name"
-        s, a, path = uri_parts(f)
-        if (s, a) == (scheme, auth) and glob_match(path, pat_path):
+        if source_match(f, pattern):
             out.append(f)
     return sorted(out)
 
@@ -170,8 +178,8 @@ class LocalFS:
         os.replace(src, dst)
 
     def glob(self, pattern: str) -> list[str]:
-        """Files matching ``pattern`` by :func:`glob_match` (a walk below
-        its deepest non-glob directory)."""
+        """Files that :func:`source_match` ``pattern`` (a walk below its
+        deepest non-glob directory)."""
         return _glob_files(self, pattern)
 
     def list_recursive(self, root: str) -> list[str]:
@@ -250,7 +258,7 @@ class HadoopFS:
             raise OSError(f"rename failed: {src} -> {dst}")
 
     def glob(self, pattern: str) -> list[str]:
-        """:func:`glob_match` over a remote listing. Hadoop's
+        """:func:`source_match` over a remote listing. Hadoop's
         ``globStatus`` lacks ``**``, so this lists recursively from the
         deepest non-glob directory (names only, like the reference's
         bucket listing) and matches each path."""
@@ -269,5 +277,5 @@ class HadoopFS:
 
 __all__ = [
     "LocalFS", "HadoopFS", "fs_for", "has_scheme", "uri_parts", "rel_path",
-    "glob_base", "glob_match",
+    "glob_base", "glob_match", "source_match",
 ]

@@ -59,7 +59,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType, TimestampType
 
 from ..session import local_frame, tune
-from .fs import fs_for, glob_match, rel_path, uri_parts
+from .fs import fs_for, rel_path, source_match
 from .manifest import Field, Manifest, Task
 from .schema_registry import (
     SchemaCompatError,
@@ -133,15 +133,6 @@ class BatchLoader:
             time.strptime(import_ts, "%Y-%m-%d %H:%M:%S")
         self._import_ts = import_ts
 
-    # -- filesystem ---------------------------------------------------------
-
-    def _fs_of(self, uri: str):
-        """The FS implementation for ``uri`` — POSIX for plain paths, the
-        Hadoop ``FileSystem`` API for any ``scheme:`` URI (``file://``,
-        ``hdfs://``, ``gs://``…), mirroring the reference's direct
-        object-store access (GetStorageToBuffer.js:14-42)."""
-        return fs_for(self.spark, uri)
-
     # -- paths / metadata ---------------------------------------------------
 
     def _root(self, task: Task) -> str:
@@ -158,7 +149,7 @@ class BatchLoader:
 
     def _load_registry(self, task: Task) -> tuple[list[Field], str | None] | None:
         path = self._schema_path(task)
-        fs = self._fs_of(path)
+        fs = fs_for(self.spark, path)
         if not fs.exists(path):
             return None
         raw = json.loads(fs.read_bytes(path).decode("utf-8"))
@@ -171,10 +162,9 @@ class BatchLoader:
             {"fields": [{"name": f.name, "type": f.type} for f in fields],
              "partition_field": partition_field}
         ).encode("utf-8")
-        self._fs_of(self._root(task)).mkdirs(self._root(task))
-        self._fs_of(self._schema_path(task)).write_bytes(
-            self._schema_path(task), payload
-        )
+        fs = fs_for(self.spark, self._root(task))
+        fs.mkdirs(self._root(task))
+        fs.write_bytes(self._schema_path(task), payload)
 
     def _job_id(self, prefix: str, task_index: int) -> str:
         """A18 (BucketToBigQuery.js:225,230):
@@ -191,18 +181,14 @@ class BatchLoader:
         ``minimatch`` over notification URIs, BucketToBigQuery.js:237-240;
         mock seam per index.js:49-50). Globbing goes through the per-URI
         filesystem, so ``file://``/``gs://`` patterns list remotely; the
-        candidate match compares scheme-insensitive path components
-        (``file:/x`` == ``file:///x``). Sorted for determinism."""
+        glob and the candidate match ask the same :func:`~.fs.source_match`
+        question. Sorted for determinism."""
         out: set[str] = set()
         for pattern in task.sources:
             if candidate_files is None:
-                out.update(self._fs_of(pattern).glob(pattern))
+                out.update(fs_for(self.spark, pattern).glob(pattern))
             else:
-                ps, pa, pp = uri_parts(pattern)
-                for f in candidate_files:
-                    cs, ca, cp = uri_parts(f)
-                    if (cs, ca) == (ps, pa) and glob_match(cp, pp):
-                        out.add(f)
+                out.update(f for f in candidate_files if source_match(f, pattern))
         return sorted(out)
 
     # -- schema resolution --------------------------------------------------
@@ -212,7 +198,7 @@ class BatchLoader:
         (BucketToBigQuery.js:256-282 — assumes columns only ever grow, so
         sniffing every file is unnecessary; each sniff reads ≤4 KB)."""
         def sniff(f: str) -> list[str] | None:
-            return sniff_csv_headers(self._fs_of(f).read_head(f, 4000))
+            return sniff_csv_headers(fs_for(self.spark, f).read_head(f, 4000))
 
         first = None
         for f in files:
@@ -251,7 +237,7 @@ class BatchLoader:
         uri within the candidate batch. The filter is pushed into the audit
         scan; only the (bounded) batch's matches reach the driver."""
         path = self._audit_path(task)
-        if not self._fs_of(path).is_dir(path):
+        if not fs_for(self.spark, path).is_dir(path):
             return []
         hit = {
             r["uri"] for r in
@@ -385,7 +371,7 @@ class BatchLoader:
         batch_key = hashlib.sha1("\n".join(to_load).encode()).hexdigest()[:16]
         data_dir = self._data_path(task)
         staging = f"{data_dir}.staging/{batch_key}"
-        self._fs_of(staging).delete(staging)
+        fs_for(self.spark, staging).delete(staging)
         if partition_field:
             # DAY time-partitioning (BucketToBigQuery.js:350-354): an internal
             # date column drives the layout; read_table() hides it, and date
@@ -409,7 +395,7 @@ class BatchLoader:
             # than assume 0; only such batches are read twice.
             n_rows, n_bad = raw.select(*count_exprs).first()
         if n_bad:
-            self._fs_of(staging).delete(staging)
+            fs_for(self.spark, staging).delete(staging)
             sample = raw.where(bad_row).first()
             raise ValueError(
                 f"maxBadRecords=0 exceeded: {n_bad} unparseable row(s); "
@@ -438,7 +424,7 @@ class BatchLoader:
         transactional table format's commit log provides — swap this
         method for a Delta/Iceberg append there.
         """
-        fs = self._fs_of(data_dir)
+        fs = fs_for(self.spark, data_dir)
         fs.mkdirs(data_dir)
         for stale in fs.list_recursive(data_dir):
             if stale.endswith(f"-{batch_key}.parquet"):
@@ -475,17 +461,19 @@ class BatchLoader:
         daily cadence over years that's the small-files problem that slows
         every downstream scan (file listing + footer reads dominate). The
         rewrite repartitions by the partition column (each date → one
-        task → one file), writes beside the live data, then swaps
-        directories. Returns the file count after compaction. At warehouse
-        scale, run per recent-partition instead of whole-table.
+        task → one file; an unpartitioned table is coalesced), writes
+        beside the live data, then swaps directories. It reads through
+        :meth:`_read_data`, so columns a later batch added survive the
+        rewrite, null-filled in the older rows. Returns the file count
+        after compaction. At warehouse scale, run per recent-partition
+        instead of whole-table.
         """
         data = self._data_path(task)
-        fs = self._fs_of(data)
-        reg = self._load_registry(task)
-        df = self.read_table_partitioned(task)
+        fs = fs_for(self.spark, data)
+        df = self._read_data(task)
         tmp, old = data + ".compacting", data + ".old"
         fs.delete(tmp)
-        if reg is not None and reg[1]:
+        if _PDATE in df.columns:
             df.repartition(F.col(_PDATE)).write.partitionBy(_PDATE).parquet(tmp)
         else:
             df.coalesce(max(1, df.rdd.getNumPartitions() // 8)).write.parquet(tmp)
@@ -499,29 +487,36 @@ class BatchLoader:
 
     # -- read side ----------------------------------------------------------
 
+    def _table_struct(self, task: Task) -> StructType:
+        """The table's schema as the registry records it, plus the internal
+        ``__pdate date`` column when the table is DAY-partitioned."""
+        reg = self._load_registry(task)
+        if reg is None:
+            raise ValueError(f"table {task.qualified_table} has no registry")
+        fields, partition_field = reg
+        struct = build_struct(fields)
+        return struct.add(_PDATE, "date", True) if partition_field else struct
+
+    def _read_data(self, task: Task) -> DataFrame:
+        """``data/`` read with :meth:`_table_struct` — the one registry-typed
+        read every read of a loaded table goes through, never footer
+        sampling: files written before a schema expansion lack the new
+        float columns, and the explicit schema null-fills them (the
+        BigQuery behavior) without the cost of ``mergeSchema`` footer
+        unioning. A footer-sampled read would take the columns of one
+        file and silently drop the rest."""
+        return self.spark.read.schema(self._table_struct(task)).parquet(
+            self._data_path(task)
+        )
+
     def read_table(self, task: Task) -> DataFrame:
         """The loaded table as users see it (partition plumbing hidden —
-        BigQuery DAY partitioning adds no visible column).
-
-        Reads with the REGISTRY schema, not footer sampling: after a schema
-        expansion, files written before the expansion lack the new float
-        columns, and the explicit schema null-fills them (the BigQuery
-        behavior) without the cost of ``mergeSchema`` footer unioning.
-        """
-        reg = self._load_registry(task)
-        reader = self.spark.read
-        if reg is not None:
-            reader = reader.schema(build_struct(reg[0]))
-        df = reader.parquet(self._data_path(task))
-        return df.drop(_PDATE) if _PDATE in df.columns else df
+        BigQuery DAY partitioning adds no visible column)."""
+        return self._read_data(task).drop(_PDATE)
 
     def read_table_partitioned(self, task: Task) -> DataFrame:
         """Same, with the partition column exposed (for pruning queries)."""
-        reg = self._load_registry(task)
-        reader = self.spark.read
-        if reg is not None and reg[1]:
-            reader = reader.schema(build_struct(reg[0]).add(_PDATE, "date", True))
-        return reader.parquet(self._data_path(task))
+        return self._read_data(task)
 
     def read_audit(self, task: Task) -> DataFrame:
         return self.spark.read.schema(AUDIT_SCHEMA).parquet(self._audit_path(task))
@@ -532,34 +527,30 @@ class BatchLoader:
         manual view registration.
 
         An EXTERNAL datasource table over the live ``data/`` directory:
-        the registry schema is declared explicitly (so pre-expansion files
-        null-fill new columns exactly like :meth:`read_table`), the DAY
-        partition column is declared PARTITIONED BY and recovered from the
+        it declares :meth:`_table_struct` explicitly (so pre-expansion files
+        null-fill new columns exactly like :meth:`read_table`), with the
+        DAY partition column PARTITIONED BY and recovered from the
         directory layout — date predicates on it prune partitions through
-        the catalog too. Re-run after a load that expanded the schema or
-        added partitions (CREATE OR REPLACE + recover: metadata-only).
-        Returns the qualified identifier.
+        the catalog too. The catalog lists ``data/`` itself, so no
+        DataFrame is read here. Re-run after a load that expanded the
+        schema or added partitions (CREATE OR REPLACE + recover:
+        metadata-only). Returns the qualified identifier.
         """
-        reg = self._load_registry(task)
-        if reg is None:
-            raise ValueError(f"table {task.qualified_table} has no registry")
-        fields, partition_field = reg
+        struct = self._table_struct(task)
         db, tbl = task.dataset, task.table
         ident = f"`{db}`.`{tbl}`"
         cols = ", ".join(
-            f"`{f.name}` {spark_type_of(f.type).simpleString()}" for f in fields
+            f"`{f.name}` {f.dataType.simpleString()}" for f in struct
         )
+        partitioned = _PDATE in struct.fieldNames()
         self.spark.sql(f"CREATE DATABASE IF NOT EXISTS `{db}`")
         self.spark.sql(f"DROP TABLE IF EXISTS {ident}")
-        part = ""
-        if partition_field:
-            cols += f", `{_PDATE}` date"
-            part = f"PARTITIONED BY (`{_PDATE}`)"
+        part = f"PARTITIONED BY (`{_PDATE}`)" if partitioned else ""
         self.spark.sql(
             f"CREATE TABLE {ident} ({cols}) USING parquet {part} "
             f"LOCATION '{self._data_path(task)}'"
         )
-        if partition_field:
+        if partitioned:
             self.spark.catalog.recoverPartitions(f"{db}.{tbl}")
         return f"{db}.{tbl}"
 

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..ingest import BatchLoader, parse_manifest
+from ..ingest.fs import fs_for
 from ..scratch import materialize_once, scratch_path
 from .registry import query, tables
 
@@ -96,7 +97,7 @@ def _compacted_loader(spark: SparkSession, sf_dir: str) -> tuple[BatchLoader, ob
             assert r.rows_loaded > 0, f"batch {i} loaded nothing"
         tk = manifest.tasks[0]
         data = loader._data_path(tk)
-        fs = loader._fs_of(data)
+        fs = fs_for(spark, data)
         pre = sum(1 for f in fs.list_recursive(data) if f.endswith(".parquet"))
         post = loader.compact(tk)
         assert post < pre, f"compaction did not shrink files: {pre} -> {post}"

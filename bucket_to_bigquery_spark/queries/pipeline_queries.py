@@ -332,14 +332,7 @@ _Q54_SQL = (
 )
 
 
-def preprocess(
-    docs: DataFrame,
-    *,
-    gates: bool = True,
-    n: int = 3,
-    threshold: float = 0.6,
-    max_shingle_df: int = 100,
-) -> tuple[DataFrame, Callable[[], None]]:
+def preprocess(docs: DataFrame) -> tuple[DataFrame, Callable[[], None]]:
     """The preprocessing front end shared by q54 and ``run pipeline``:
     exact dedup → quality gates → n-gram-Jaccard near-dup pairs →
     connected-components min-id survivors, over a (doc_id, text) frame.
@@ -369,11 +362,14 @@ def preprocess(
     set, the survivor join, and the scrub's window-index and token-count
     branches — and as one lazy lineage each consumer would re-run the
     dedup chain from the corpus scan. The dedup aggregate is checkpointed
-    once; with gates on, the gated survivors are checkpointed in turn
-    (both join inputs read the first checkpoint, so the gate chain runs
-    exactly once) and the first checkpoint is freed.
+    once; the gated survivors are checkpointed in turn (both join inputs
+    read the first checkpoint, so the gate chain runs exactly once) and
+    the first checkpoint is freed.
+
+    The near-dup settings are q54's (3-gram Jaccard >= 0.6, shingle
+    document-frequency cap 100); ``run pipeline`` exposes none of them.
     """
-    survivors, release = checkpoint(
+    dedup, release_dedup = checkpoint(
         docs.select("doc_id", "text", exact_dedup_key("text").alias("h"))
         .groupBy("h")
         .agg(
@@ -382,14 +378,11 @@ def preprocess(
         )
         .select("doc_id", "text")
     )
-    if gates:
-        kept = quality_gates(survivors).where("kept").select("doc_id")
-        gated, release_gated = checkpoint(survivors.join(kept, "doc_id"))
-        release()  # gated is materialized; nothing else reads it
-        survivors, release = gated, release_gated
+    kept = quality_gates(dedup).where("kept").select("doc_id")
+    survivors, release = checkpoint(dedup.join(kept, "doc_id"))
+    release_dedup()  # survivors is materialized; nothing else reads dedup
     pairs = ngram_jaccard_pairs(
-        survivors, "doc_id", "text",
-        n=n, threshold=threshold, max_shingle_df=max_shingle_df,
+        survivors, "doc_id", "text", n=3, threshold=0.6, max_shingle_df=100,
     )
     comp = connected_components(
         pairs, src="id_a", dst="id_b",

@@ -16,9 +16,9 @@ index.js:49-50). Same surface here::
 ``setup`` validates an installation before any load runs — the analog of
 the reference's ``setupBucket``/``ensureNotification`` provisioning step
 (BucketToBigQuery.js:94-97, 66-78; its PubSub wiring has no Spark
-counterpart, so validation here means: manifest well-formed, every source
-pattern's base directory reachable, warehouse writable, and the resolved
-schema/partition plan printed per task)::
+counterpart, so validation here means: the ``--dry-run`` plan of every
+task, plus checks that the manifest is well-formed, every source
+pattern's base directory is reachable and the warehouse is writable)::
 
     python -m bucket_to_bigquery_spark.run setup --manifest m.json \
         --warehouse /data/wh        # exit 0 iff everything checks out
@@ -35,7 +35,8 @@ readme.md:38-41, assumes well-sized partitions)::
 (exact dedup → quality gates → near-dup clustering → ExactSubstr scrub
 → sequence packing; beyond-reference surface, SURVEY §2.C Q54) over any
 (id, text) parquet and writes the scrubbed corpus plus the packed-chunk
-manifest::
+manifest. It runs q54's settings; the only options map the input's
+columns (``--id-col``, ``--text-col``)::
 
     python -m bucket_to_bigquery_spark.run pipeline \
         --documents /data/docs.parquet --output /data/clean
@@ -67,9 +68,11 @@ def _report_json(r) -> dict:
 
 
 def setup_main(argv: list[str]) -> int:
-    """Validate manifest, source reachability, warehouse writability, and
-    print the resolved schema/partition plan (no data written, nothing
-    audited). Exit 0 iff every check passes.
+    """Validate manifest, source reachability and warehouse writability,
+    and print each task's resolved schema/partition plan — the plan
+    ``--dry-run`` computes (``BatchLoader.load_task(dry_run=True)``), so
+    no data is written and nothing audited. Exit 0 iff every check
+    passes.
 
     Paths may be schemed URIs — e.g. against an object store (connector
     jar + ``spark.hadoop.*`` credentials on the session; README
@@ -81,9 +84,11 @@ def setup_main(argv: list[str]) -> int:
 
     Every check below routes through the per-URI FS seam (ingest/fs.py),
     so the probe write, glob, and header sniff exercise the exact I/O the
-    load would."""
+    load would. A plan that fails (headers incompatible with the table,
+    or no matched file parses) becomes a ``problems`` entry."""
     from .ingest.fs import fs_for, glob_base
-    from .ingest.schema_registry import TYPE_MAP, SchemaCompatError
+    from .ingest.loader import SchemaCompatError
+    from .ingest.schema_registry import TYPE_MAP
 
     ap = argparse.ArgumentParser(prog="bucket_to_bigquery_spark.run setup")
     ap.add_argument("--manifest", required=True, help="manifest JSON file/string")
@@ -132,26 +137,24 @@ def setup_main(argv: list[str]) -> int:
                     problems.append(f"source base not reachable: {base}")
             except Exception as e:  # noqa: BLE001
                 problems.append(f"source {pattern}: {type(e).__name__}: {e}")
-        files = [] if problems else loader.resolve_files(task)
-        plan = {}
-        if files:
-            headers = loader._widest_headers(files)
-            if headers is None:
-                problems.append("no parseable file among matches")
+        n_files, plan = 0, {}
+        if not problems:
+            try:
+                report = loader.load_task(task, dry_run=True)
+            except SchemaCompatError as e:
+                problems.append(str(e))
+                n_files = len(loader.resolve_files(task))
             else:
-                try:
-                    fields, _added, pfield = loader._resolve_schema(task, headers)
-                    plan = {
-                        "schema": [{"name": f.name, "type": f.type}
-                                   for f in fields],
-                        "timePartitioningField": pfield,
-                    }
-                except SchemaCompatError as e:
-                    problems.append(str(e))
+                dry = _report_json(report)
+                n_files = dry["filesSeen"]
+                if dry["schema"]:
+                    plan = {k: dry[k] for k in ("schema", "timePartitioningField")}
+                elif n_files:
+                    problems.append("no parseable file among matches")
         tasks_out.append({
             "table": task.qualified_table,
             "sources": task.sources,
-            "filesMatched": len(files),
+            "filesMatched": n_files,
             **plan,
             "problems": problems,
             "ok": not problems,
@@ -194,7 +197,10 @@ def pipeline_main(argv: list[str]) -> int:
     connected-components min-id cluster survivors (these three are
     ``preprocess``, the front end q54 runs) → ExactSubstr scrub (every
     cross-document duplicated token span excised; fully-scrubbed
-    documents dropped) → sharded concat-and-chunk packing.
+    documents dropped) → sharded concat-and-chunk packing. Every stage
+    runs with q54's settings (3-gram Jaccard ≥ 0.6, shingle df cap 100,
+    scrub window ``_Q51_WINDOW``, spans shared by ≥ 2 documents); there
+    are no tuning flags, so the chunks equal q54's rows on q54's corpus.
 
     Writes ``<output>/corpus`` (id, text = the scrubbed NORMALIZED
     token stream, n_tokens) and ``<output>/chunks`` (the per-chunk
@@ -219,15 +225,6 @@ def pipeline_main(argv: list[str]) -> int:
     ap.add_argument("--output", required=True, help="output root directory")
     ap.add_argument("--id-col", default="doc_id")
     ap.add_argument("--text-col", default="text")
-    ap.add_argument("--ngram", type=int, default=3,
-                    help="shingle size for near-dup mining")
-    ap.add_argument("--jaccard-threshold", type=float, default=0.6)
-    ap.add_argument("--max-shingle-df", type=int, default=100,
-                    help="document-frequency cap bounding hot-shingle fan-out")
-    ap.add_argument("--scrub-window", type=int, default=_Q51_WINDOW,
-                    help="token window for ExactSubstr span mining")
-    ap.add_argument("--no-gates", action="store_true",
-                    help="skip the quality-gate stage")
     args = ap.parse_args(argv)
 
     spark = get_spark("b2bqs-pipeline")
@@ -249,13 +246,10 @@ def pipeline_main(argv: list[str]) -> int:
     )
     n_input = docs.count()
 
-    final, release = preprocess(
-        docs, gates=not args.no_gates, n=args.ngram,
-        threshold=args.jaccard_threshold, max_shingle_df=args.max_shingle_df,
-    )
+    final, release = preprocess(docs)
     scrubbed = (
         substring_scrub(
-            final, "doc_id", "text", window=args.scrub_window, min_doc_freq=2,
+            final, "doc_id", "text", window=_Q51_WINDOW, min_doc_freq=2,
         )
         .where(F.col("n_kept") > 0)
         .select(

@@ -450,6 +450,35 @@ def test_compact_merges_partition_files(spark, workdir):
     assert after == before
 
 
+def test_compact_keeps_expanded_columns_unpartitioned(spark, workdir):
+    # an unpartitioned table whose last batch added a float column: most
+    # files lack it, so a footer-sampled read would drop it. compact()
+    # reads with the registry schema and keeps every value.
+    manifest = parse_manifest({"project": "p", "tasks": [{
+        "sources": [f"{workdir}/src/*.csv"], "dataset": "d", "table": "wide",
+        "fields": [{"name": "k", "type": "string"},
+                   {"name": "x", "type": "float"}],
+        "timePartitioningField": None,
+    }]})
+    loader = BatchLoader(spark, f"{workdir}/warehouse")
+    for batch in range(6):
+        _write_csv(f"{workdir}/src/b{batch}.csv", ["k", "x"],
+                   [[f"narrow{batch}", f"{batch}.5"]])
+        loader.run(manifest)
+    _write_csv(f"{workdir}/src/wide.csv", ["k", "x", "y"],
+               [["wide", "2.0", "42.0"]])
+    (r,) = loader.run(manifest)
+    assert r.partition_field is None and [f.name for f in r.expanded_fields] == ["y"]
+    # precondition: the footer Spark samples is a narrow batch's
+    data = f"{workdir}/warehouse/d.wide/data"
+    assert spark.read.parquet(data).columns == ["k", "x"]
+    task = manifest.tasks[0]
+    before = sorted(map(tuple, loader.read_table(task).collect()))
+    assert ("wide", 2.0, 42.0) in before and len(before) == 7
+    loader.compact(task)
+    assert sorted(map(tuple, loader.read_table(task).collect())) == before
+
+
 def test_load_retry_after_crash_is_exactly_once(spark, workdir):
     """Crash window between data publish and audit append: the retry must
     replace the batch's own staged output (deterministic batch-keyed file

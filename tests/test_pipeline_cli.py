@@ -98,22 +98,6 @@ def test_pipeline_cli_end_to_end(spark, workdir, capsys):
     assert report2 == report
 
 
-def test_pipeline_cli_no_gates(spark, workdir, capsys):
-    out = workdir / "out_ng"
-    rc = run_main([
-        "pipeline",
-        "--documents", str(workdir / "docs.parquet"),
-        "--output", str(out),
-        "--no-gates",
-    ])
-    assert rc == 0
-    report = json.loads(capsys.readouterr().out)
-    # the short doc now passes through: gates were the only stage
-    # dropping it (it is no one's duplicate)
-    assert report["documentsOut"] == 3
-    assert report["tokensOut"] == 22 + 1
-
-
 def test_pipeline_cli_chunks_equal_q54(spark, sf_dir, tmp_path):
     # the CLI and q54 share one preprocessing definition: over q54's own
     # planted-duplicate corpus the CLI's chunk manifest is q54's result

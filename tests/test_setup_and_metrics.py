@@ -85,6 +85,54 @@ def test_setup_happy_path_prints_resolved_plan(spark, workdir, capsys):
     assert not os.path.exists(f"{workdir}/warehouse/d.readings")
 
 
+def test_setup_plan_is_the_dry_run_plan(spark, workdir, capsys):
+    # one plan: setup prints what `--dry-run` computes, here for a table
+    # that already exists (registry fields, an inferred DAY partition
+    # field) and a batch that expands it
+    _write_csv(f"{workdir}/src/a.csv", ["timestamp", "utc_offset", "location"],
+               [["2024-01-01 00:00:00", "1.5", "syd"]])
+    mpath, wh = _manifest_file(workdir), f"{workdir}/warehouse"
+    assert run_main(["--manifest", mpath, "--warehouse", wh]) == 0
+    _write_csv(f"{workdir}/src/b.csv",
+               ["timestamp", "utc_offset", "location", "ch1", "ch2"],
+               [["2024-01-02 00:00:00", "2.5", "nyc", "1.0", "2.0"]])
+    capsys.readouterr()
+    assert run_main(["--manifest", mpath, "--warehouse", wh, "--dry-run"]) == 0
+    (dry,) = json.loads(capsys.readouterr().out)["tasks"]
+    rc, out = _setup(capsys, "--manifest", mpath, "--warehouse", wh)
+    assert rc == 0
+    (t,) = out["tasks"]
+    assert t["schema"] == dry["schema"]
+    assert t["timePartitioningField"] == dry["timePartitioningField"]
+    assert t["filesMatched"] == dry["filesSeen"] == 2
+    assert [f["name"] for f in t["schema"]][-2:] == ["ch1", "ch2"]
+
+
+def test_setup_flags_unparseable_matches(spark, workdir, capsys):
+    os.makedirs(f"{workdir}/src")
+    open(f"{workdir}/src/empty.csv", "w").close()  # no header line to sniff
+    rc, out = _setup(capsys, "--manifest", _manifest_file(workdir),
+                     "--warehouse", f"{workdir}/warehouse")
+    assert rc == 1 and out["ok"] is False
+    (t,) = out["tasks"]
+    assert t["filesMatched"] == 1 and "schema" not in t
+    assert t["problems"] == ["no parseable file among matches"]
+
+
+def test_setup_flags_incompatible_headers(spark, workdir, capsys):
+    _write_csv(f"{workdir}/src/x.csv", ["utc_offset", "timestamp"],
+               [["1.0", "2024-01-01 00:00:00"]])
+    rc, out = _setup(capsys, "--manifest", _manifest_file(workdir),
+                     "--warehouse", f"{workdir}/warehouse")
+    assert rc == 1 and out["ok"] is False
+    (t,) = out["tasks"]
+    assert t["filesMatched"] == 1 and "schema" not in t
+    assert t["problems"] == [
+        "The incoming fields are not a superset of the manifest fields: "
+        "['utc_offset', 'timestamp'] vs ['timestamp', 'utc_offset', 'location']"
+    ]
+
+
 def test_setup_flags_unreachable_source_base(spark, workdir, capsys):
     rc, out = _setup(
         capsys,

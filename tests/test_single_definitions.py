@@ -1,8 +1,9 @@
 """Shared IVF steps, e12 oracle fragments, text-normalizer SQL, the CC
-oracles' closure, the co-occurrence pair expansion and the driver-side
-frame builder each have one definition: every string below may appear in
-exactly one package file, so a contract change cannot miss a copy. The
-fixture lock protocol lives in scratch.py alone."""
+oracles' closure, the co-occurrence pair expansion, the driver-side
+frame builder and the source-pattern match each have one definition:
+every string below may appear in exactly one package file, so a contract
+change cannot miss a copy. The fixture lock protocol lives in scratch.py
+alone."""
 
 from __future__ import annotations
 
@@ -30,6 +31,8 @@ _NEEDLES = [
     'F.slice(F.col("items"), F.col("i") + 2',
     # frames built from driver values (session.local_frame)
     "createDataFrame(",
+    # "is this URI one of this source pattern's files" (fs.source_match)
+    "(scheme, auth) == (p_scheme, p_auth)",
 ]
 
 
@@ -58,7 +61,11 @@ def test_fixture_protocol_only_in_scratch(needle):
 
 
 # Fixtures are built in place: nothing publishes by rename, and no audit
-# URI is rewritten to a publish root.
-@pytest.mark.parametrize("needle", ["audit_rebase", "os.rename("])
+# URI is rewritten to a publish root. `run setup` plans through
+# BatchLoader.load_task, not through the loader's private steps.
+@pytest.mark.parametrize("needle", [
+    "audit_rebase", "os.rename(",
+    "loader._widest_headers", "loader._resolve_schema",
+])
 def test_absent_from_package(needle):
     assert _files_containing(needle) == []
