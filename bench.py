@@ -145,7 +145,7 @@ def _ivf_scan_stats(spark, sf_dir) -> dict:
     NEXT TO the recall (VERDICT r8 #2: recall alone can be bought by
     probing everything — the record carries the (recall, cost) pair).
     Mirrors the q48c/q48d inputs (embeddings corpus, vec_id < 10 query
-    set, k = 5); same seeded resolution ⇒ the params here are exactly the
+    set, k = similarity.TOP_K); same seeded resolution ⇒ the params here are exactly the
     ones the timed queries ran."""
     try:
         from pyspark.sql import functions as F
@@ -154,7 +154,7 @@ def _ivf_scan_stats(spark, sf_dir) -> dict:
         from bucket_to_bigquery_spark.queries.registry import tables
 
         emb = tables(spark, sf_dir)["embeddings"]
-        st = ivf_scan_stats(emb, emb.where(F.col("vec_id") < 10), k=5)
+        st = ivf_scan_stats(emb, emb.where(F.col("vec_id") < 10))
         print(f"METRIC b2bqs.ivf_scan_frac {st['scan_frac']} "
               f"(n_lists={st['n_lists']} n_probe={st['n_probe']} "
               f"candidates={st['candidates']}/{st['exhaustive']})",

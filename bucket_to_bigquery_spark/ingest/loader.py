@@ -62,6 +62,7 @@ from ..session import local_frame, tune
 from .fs import fs_for, rel_path, source_match
 from .manifest import Field, Manifest, Task
 from .schema_registry import (
+    SNIFF_BYTES,
     SchemaCompatError,
     build_struct,
     expand_schema,
@@ -196,9 +197,10 @@ class BatchLoader:
     def _widest_headers(self, files: list[str]) -> list[str] | None:
         """First parseable + last parseable file; LONGER header list wins
         (BucketToBigQuery.js:256-282 — assumes columns only ever grow, so
-        sniffing every file is unnecessary; each sniff reads ≤4 KB)."""
+        sniffing every file is unnecessary; each sniff reads at most
+        ``SNIFF_BYTES``)."""
         def sniff(f: str) -> list[str] | None:
-            return sniff_csv_headers(fs_for(self.spark, f).read_head(f, 4000))
+            return sniff_csv_headers(fs_for(self.spark, f).read_head(f, SNIFF_BYTES))
 
         first = None
         for f in files:
@@ -463,14 +465,14 @@ class BatchLoader:
         rewrite repartitions by the partition column (each date → one
         task → one file; an unpartitioned table is coalesced), writes
         beside the live data, then swaps directories. It reads through
-        :meth:`_read_data`, so columns a later batch added survive the
-        rewrite, null-filled in the older rows. Returns the file count
-        after compaction. At warehouse scale, run per recent-partition
-        instead of whole-table.
+        :meth:`read_table_partitioned`, so columns a later batch added
+        survive the rewrite, null-filled in the older rows. Returns the
+        file count after compaction (:meth:`data_files`). At warehouse
+        scale, run per recent-partition instead of whole-table.
         """
         data = self._data_path(task)
         fs = fs_for(self.spark, data)
-        df = self._read_data(task)
+        df = self.read_table_partitioned(task)
         tmp, old = data + ".compacting", data + ".old"
         fs.delete(tmp)
         if _PDATE in df.columns:
@@ -481,9 +483,13 @@ class BatchLoader:
         fs.rename_overwrite(data, old)
         fs.rename_overwrite(tmp, data)
         fs.delete(old)
-        return sum(
-            1 for f in fs.list_recursive(data) if f.endswith(".parquet")
-        )
+        return len(self.data_files(task))
+
+    def data_files(self, task: Task) -> list[str]:
+        """The parquet files of the table's live ``data/`` directory."""
+        data = self._data_path(task)
+        return [f for f in fs_for(self.spark, data).list_recursive(data)
+                if f.endswith(".parquet")]
 
     # -- read side ----------------------------------------------------------
 
@@ -497,14 +503,15 @@ class BatchLoader:
         struct = build_struct(fields)
         return struct.add(_PDATE, "date", True) if partition_field else struct
 
-    def _read_data(self, task: Task) -> DataFrame:
-        """``data/`` read with :meth:`_table_struct` — the one registry-typed
-        read every read of a loaded table goes through, never footer
-        sampling: files written before a schema expansion lack the new
-        float columns, and the explicit schema null-fills them (the
-        BigQuery behavior) without the cost of ``mergeSchema`` footer
-        unioning. A footer-sampled read would take the columns of one
-        file and silently drop the rest."""
+    def read_table_partitioned(self, task: Task) -> DataFrame:
+        """The loaded table with its internal partition column exposed
+        (for pruning queries): ``data/`` read with :meth:`_table_struct`
+        — the one registry-typed read every read of a loaded table goes
+        through, never footer sampling: files written before a schema
+        expansion lack the new float columns, and the explicit schema
+        null-fills them (the BigQuery behavior) without the cost of
+        ``mergeSchema`` footer unioning. A footer-sampled read would take
+        the columns of one file and silently drop the rest."""
         return self.spark.read.schema(self._table_struct(task)).parquet(
             self._data_path(task)
         )
@@ -512,11 +519,7 @@ class BatchLoader:
     def read_table(self, task: Task) -> DataFrame:
         """The loaded table as users see it (partition plumbing hidden —
         BigQuery DAY partitioning adds no visible column)."""
-        return self._read_data(task).drop(_PDATE)
-
-    def read_table_partitioned(self, task: Task) -> DataFrame:
-        """Same, with the partition column exposed (for pruning queries)."""
-        return self._read_data(task)
+        return self.read_table_partitioned(task).drop(_PDATE)
 
     def read_audit(self, task: Task) -> DataFrame:
         return self.spark.read.schema(AUDIT_SCHEMA).parquet(self._audit_path(task))

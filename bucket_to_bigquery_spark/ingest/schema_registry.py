@@ -17,7 +17,7 @@ The signature semantics (SURVEY §1.3), reproduced exactly:
   *objects* via ``_.find(fields, likelyTimestamp)`` at :317, which lodash
   string-coerces so it can never match — we implement the documented
   intent, matching on field NAMES, per readme.md:72.)
-- **Header sniff** — first ~4000 bytes, first line, comma split
+- **Header sniff** — first ``SNIFF_BYTES`` bytes, first line, comma split
   (BucketToBigQuery.js:124-140). The reference's bare ``split(',')``
   breaks on quoted embedded commas; we parse with :mod:`csv` (the fix
   SURVEY §1.3.2 prescribes) while keeping the strip-wrapping-quotes
@@ -108,7 +108,12 @@ def infer_partition_field(fields: list[Field]) -> str | None:
     return None
 
 
-def sniff_csv_headers(content: bytes | str, max_bytes: int = 4000) -> list[str] | None:
+# the header-sniff budget: bytes read from the head of each sniffed file
+SNIFF_BYTES = 4000
+
+
+def sniff_csv_headers(content: bytes | str,
+                      max_bytes: int = SNIFF_BYTES) -> list[str] | None:
     """Sniff the header row from the first ``max_bytes`` of a CSV file.
 
     Mirrors ``getLines`` + ``sniffCsvHeaders`` (BucketToBigQuery.js:124-140):

@@ -35,6 +35,18 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+# The near-dup operating point. The operator defaults, every engine call
+# site and the DuckDB oracle fragments (queries/llm_queries.py and the
+# modules that import them) read these constants instead of restating
+# the literals.
+NGRAM_N = 3                  # word n-gram of the near-dup shingles
+JACCARD_THRESHOLD = 0.6      # ngram_jaccard_pairs keeps Jaccard >= this
+MAX_SHINGLE_DF = 100         # shingles in more docs than this are dropped
+CONTAINMENT_THRESHOLD = 0.9  # ngram_containment_pairs keeps >= this
+MINHASH_MAX_DISTANCE = 0.4   # minhash_candidate_pairs keeps distance <= this
+DECONTAM_N = 5               # word n-gram of decontamination and overlap
+SIMHASH_BITS = 32            # simhash_col width (token_hash is 32-bit)
+
 # ---------------------------------------------------------------------------
 # Normalization + shingling (shared by every method)
 # ---------------------------------------------------------------------------
@@ -50,7 +62,7 @@ def tokens(col) -> Column:
     return F.split(normalize_text(col), " ")
 
 
-def shingles(tokens_col: Column, n: int = 3) -> Column:
+def shingles(tokens_col: Column, n: int = NGRAM_N) -> Column:
     """Word n-gram shingles as strings; empty array when len(tokens) < n."""
     return F.when(
         F.size(tokens_col) < n, F.array().cast("array<string>")
@@ -182,9 +194,9 @@ def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 3,
-    threshold: float = 0.6,
-    max_shingle_df: int = 100,
+    n: int = NGRAM_N,
+    threshold: float = JACCARD_THRESHOLD,
+    max_shingle_df: int = MAX_SHINGLE_DF,
 ) -> DataFrame:
     """All pairs with Jaccard(shingle sets) >= threshold — exact Jaccard
     over the document-frequency-filtered shingle universe: shingles in more
@@ -222,9 +234,9 @@ def ngram_containment_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 3,
-    threshold: float = 0.9,
-    max_shingle_df: int = 100,
+    n: int = NGRAM_N,
+    threshold: float = CONTAINMENT_THRESHOLD,
+    max_shingle_df: int = MAX_SHINGLE_DF,
 ) -> DataFrame:
     """All pairs with containment ``|A∩B| / min(|A|,|B|)`` >= threshold —
     one-sided overlap over the same DF-capped shingle universe as
@@ -273,26 +285,27 @@ def shingle_hash(shingle: Column) -> Column:
     return F.conv(F.substring(F.md5(shingle), 1, 15), 16, 10).cast("long")
 
 
-def simhash_col(tokens_col: Column, bits: int = 32) -> Column:
-    """SimHash over DISTINCT tokens: bit j of the fingerprint is set iff
-    Σ_tokens (±1 by bit j of md5-prefix token_hash) > 0; ties (0) clear
-    the bit. Arrow-batched since r15: the previous Catalyst HOF fold
-    (aggregate + zip_with carrying ``bits`` vote counters) never enters
-    codegen — HOF lambdas evaluate interpreted, allocating a bits-wide
-    accumulator per token (isolated 3-rep at sf0.1: 2.2 s HOF vs 0.7 s
-    Arrow for the q46b projection, bit-identical results). The pandas_udf
+def simhash_col(tokens_col: Column) -> Column:
+    """``SIMHASH_BITS``-bit SimHash over DISTINCT tokens: bit j of the
+    fingerprint is set iff Σ_tokens (±1 by bit j of md5-prefix
+    token_hash) > 0; ties (0) clear the bit. Arrow-batched since r15:
+    the previous Catalyst HOF fold (aggregate + zip_with carrying one
+    vote counter per bit) never enters codegen — HOF lambdas evaluate
+    interpreted, allocating a bits-wide accumulator per token (isolated
+    3-rep at sf0.1: 2.2 s HOF vs 0.7 s Arrow for the q46b projection,
+    bit-identical results). The pandas_udf
     computes the same md5-prefix hashes (per-batch token→hash cache —
     Zipf reuse makes the cache hit rate high) and the majority vote as
     one numpy pass per Arrow batch; row-local, so it composes under any
     partitioning, and the DuckDB oracle (llm_queries._SIMHASH_SQL) is
-    unchanged. All callers use bits=32 (token_hash is 32-bit; the
-    widening seam documented in queries/hamming.py pairs bits=64 with a
-    wider token hash)."""
+    unchanged. The width is the module constant (token_hash is 32-bit;
+    the widening seam documented in queries/hamming.py pairs 64 bits
+    with a wider token hash)."""
 
     @pandas_udf("long")
     def _simhash(tok_lists: pd.Series) -> pd.Series:
         cache: dict = {}
-        jrange = np.arange(bits, dtype=np.int64)
+        jrange = np.arange(SIMHASH_BITS, dtype=np.int64)
         out = []
         for toks in tok_lists:
             if toks is None:
@@ -339,22 +352,23 @@ def rolling_fingerprint(tokens_col: Column) -> Column:
 # engine, which is what makes the DuckDB oracle bit-exact.
 MINHASH_PRIME = (1 << 31) - 1
 # band count and coefficient seed of minhash_candidate_pairs; q47b's
-# oracle embeds the same minhash_params(MINHASH_BANDS, MINHASH_SEED)
+# oracle embeds the same minhash_params()
 MINHASH_BANDS = 6
 MINHASH_SEED = 42
 
 
-def minhash_params(num_hashes: int = 6, seed: int = 42) -> list[tuple[int, int]]:
-    """The (a, b) coefficients of the ``num_hashes`` universal hash
-    functions ``h_i(x) = (a_i·x + b_i) mod p`` — generated from a seeded
-    PRNG so the Spark expressions and the DuckDB oracle embed the SAME
-    literals (single source of truth for cross-engine parity)."""
+def minhash_params() -> list[tuple[int, int]]:
+    """The (a, b) coefficients of the ``MINHASH_BANDS`` universal hash
+    functions ``h_i(x) = (a_i·x + b_i) mod p`` — generated from a PRNG
+    seeded with ``MINHASH_SEED`` so the Spark expressions and the DuckDB
+    oracle embed the SAME literals (single source of truth for
+    cross-engine parity)."""
     import random
 
-    rng = random.Random(seed)
+    rng = random.Random(MINHASH_SEED)
     return [
         (rng.randrange(1, MINHASH_PRIME), rng.randrange(0, MINHASH_PRIME))
-        for _ in range(num_hashes)
+        for _ in range(MINHASH_BANDS)
     ]
 
 
@@ -362,10 +376,9 @@ def minhash_candidate_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 3,
-    jaccard_distance_threshold: float = 0.4,
 ) -> DataFrame:
-    """Near-dup pairs via explicit banded MinHash + exact Jaccard verify.
+    """Near-dup pairs via explicit banded MinHash + exact Jaccard verify,
+    over ``NGRAM_N``-gram shingles.
 
     Per doc: the distinct 60-bit shingle hashes (one row-local projection —
     no fit stage, nothing to persist); per hash function i, the signature
@@ -374,7 +387,8 @@ def minhash_candidate_pairs(
     signature) bucket — one equi-join on an 8-byte composite key, never a
     cross join — then EXACT Jaccard over the hashed shingle sets
     (``array_intersect``, row-local on the joined arrays) decides
-    membership: output = candidate pairs with jaccard_dist <= threshold.
+    membership: output = candidate pairs with
+    jaccard_dist <= ``MINHASH_MAX_DISTANCE``.
 
     vs pyspark.ml's MinHashLSH (the r4 implementation): same banded-bucket
     asymptotics, but deterministic closed-form hashing (the "fit" of
@@ -403,7 +417,7 @@ def minhash_candidate_pairs(
     bench.py's ``_sweep_state`` is the in-repo example). MEMORY_AND_DISK
     means an unswept entry degrades to disk spill, not an OOM.
     """
-    p = MINHASH_PRIME
+    p, n = MINHASH_PRIME, NGRAM_N
     feats = (
         # The emptiness filter runs BEFORE the signature projection, as a
         # predicate on the token count alone: ``sh`` is non-empty iff the
@@ -451,7 +465,7 @@ def minhash_candidate_pairs(
                             F.transform(F.col("sh"), lambda h: (h * a + b) % p)
                         ).alias("sig"),
                     )
-                    for i, (a, b) in enumerate(minhash_params(MINHASH_BANDS, MINHASH_SEED))
+                    for i, (a, b) in enumerate(minhash_params())
                 ]
             )
         ).alias("bs"),
@@ -482,5 +496,5 @@ def minhash_candidate_pairs(
                 / (F.col("n_a") + F.col("n_b") - n_common)
             ).alias("jaccard_dist"),
         )
-        .where(F.col("jaccard_dist") <= jaccard_distance_threshold)
+        .where(F.col("jaccard_dist") <= MINHASH_MAX_DISTANCE)
     )

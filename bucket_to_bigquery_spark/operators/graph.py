@@ -38,6 +38,12 @@ from .materialize import checkpoint, publish
 
 logger = logging.getLogger(__name__)
 
+# Round budget of connected_components. Near-dup clusters converge in 2-3
+# rounds and pointer jumping keeps a chain logarithmic, so the budget is
+# only a stop for a pathological input; an exhausted budget logs a
+# WARNING.
+CC_MAX_ITERATIONS = 25
+
 
 def connected_components(
     edges: DataFrame,
@@ -45,7 +51,6 @@ def connected_components(
     dst: str = "dst",
     nodes: DataFrame | None = None,
     node_col: str = "node",
-    max_iterations: int = 25,
     nodes_unique: bool = False,
     edges_unique: bool = False,
 ) -> DataFrame:
@@ -74,11 +79,6 @@ def connected_components(
     ``clearCache()`` fully reclaim the call (see
     :func:`~.materialize.publish`).
     """
-    if max_iterations < 1:
-        # below 1 the seed labels are never re-checkpointed, so they
-        # still read the edge-set checkpoint blocks the publish step
-        # frees — the result would be dead-on-arrival, not "unconverged"
-        raise ValueError(f"max_iterations must be >= 1, got {max_iterations}")
     e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
     sym = e.unionAll(e.select(F.col("d").alias("s"), F.col("s").alias("d")))
     if not edges_unique:
@@ -112,7 +112,7 @@ def connected_components(
         pass
 
     converged = False
-    for rounds in range(1, max_iterations + 1):
+    for rounds in range(1, CC_MAX_ITERATIONS + 1):
         # neighbor messages: every node hears its neighbors' current labels
         msgs = (
             sym.join(labels, sym["d"] == labels["node"])
@@ -158,9 +158,9 @@ def connected_components(
                 rounds, converged)
     if not converged:
         logger.warning(
-            "connected_components: max_iterations=%d exhausted before "
+            "connected_components: CC_MAX_ITERATIONS=%d exhausted before "
             "convergence — labels may not be component minima",
-            max_iterations,
+            CC_MAX_ITERATIONS,
         )
     release_sym()
     out, _ = publish(

@@ -34,6 +34,10 @@ from pyspark.sql import functions as F
 
 from ..session import local_frame
 
+# The q48-family k: neighbours per query of every top-k operator below
+# (q48, q48b-q48f, q48h and bench.py's recall@5 / scan-cost record).
+TOP_K = 5
+
 
 def norm_e12(vec: Column) -> Column:
     """Σ round(x²·1e12) as an exact int64 (order-independent)."""
@@ -116,7 +120,7 @@ def cosine_topk_exact(
     queries: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    k: int = 5,
+    k: int = TOP_K,
 ) -> DataFrame:
     """Exact top-k cosine neighbors per query vector.
 
@@ -218,19 +222,21 @@ def cosine_topk_exact(
 
 
 # sign-band blocking of sign_band_neardup_pairs: 4 bands of 12 sign bits
-# from projections seeded with 7 (collision odds in its docstring)
+# from projections seeded with 7 (collision odds in its docstring); pairs
+# at cosine >= SIGN_BAND_COSINE are near-duplicates (q47c/q47f)
 _SIGN_BANDS = 4
 _SIGN_BITS = 12
 _SIGN_SEED = 7
+SIGN_BAND_COSINE = 0.95
 
 
 def sign_band_neardup_pairs(
     df: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cosine_threshold: float = 0.95,
 ) -> DataFrame:
-    """Embedding near-duplicate pairs: sign-band blocking + exact verify.
+    """Embedding near-duplicate pairs at cosine >= ``SIGN_BAND_COSINE``:
+    sign-band blocking + exact verify.
 
     Candidate generation is SimHash-for-vectors: each vector hashes to
     ``_SIGN_BANDS`` band-codes, each the ``_SIGN_BITS`` sign bits of fixed
@@ -307,7 +313,7 @@ def sign_band_neardup_pairs(
         cosine_from_e12(
             dot_e12(F.col("va"), F.col("vb")), F.col("na"), F.col("nb")
         ).alias("cosine"),
-    ).where(F.col("cosine") >= cosine_threshold)
+    ).where(F.col("cosine") >= SIGN_BAND_COSINE)
 
 
 # q48e's sign-grid operating point: 9 bands of 7 sign bits, with the
@@ -321,7 +327,7 @@ def signgrid_ann_topk(
     queries: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    k: int = 5,
+    k: int = TOP_K,
 ) -> DataFrame:
     """Deterministic sign-grid ANN: band ``j``'s bucket code is the sign
     bits of coordinates ``j·bits .. j·bits+bits-1``; candidates are pairs
@@ -335,7 +341,8 @@ def signgrid_ann_topk(
 
     Operating points measured on the testdata embeddings at
     sf0.001/0.01/0.1 (recall@5 vs brute force @ candidate fraction of
-    all query-corpus pairs; ``tools/sweep_signgrid.py``):
+    all query-corpus pairs, by a numpy + DuckDB replay of the blocking;
+    the shipped point's recall is pinned by the test named below):
 
     ==========================  =====================  ==================
     config (bands × bits)       recall@5 (3 SFs)       candidate fraction
@@ -628,7 +635,7 @@ def _calibrate_n_probe(
     x,
     centroids,
     target: float = IVF_RECALL_TARGET,
-    k: int = 5,
+    k: int = TOP_K,
     n_cal: int = 64,
     seed: int = 42,
 ) -> int:
@@ -811,7 +818,7 @@ def ivf_build_index(
     path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    k: int = 5,
+    k: int = TOP_K,
 ) -> dict:
     """Build and persist an IVF index: ``<path>/centroids`` (n_lists rows),
     ``<path>/assigned`` (one row per corpus vector with its list id,
@@ -857,7 +864,7 @@ def ivf_probe_prebuilt(
     queries: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    k: int = 5,
+    k: int = TOP_K,
 ) -> DataFrame:
     """ANN top-k against a prebuilt :func:`ivf_build_index` index — the
     online serving path: centroids broadcast from a tiny parquet, probed
@@ -885,7 +892,7 @@ def ivf_topk(
     queries: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    k: int = 5,
+    k: int = TOP_K,
 ) -> DataFrame:
     """IVF-style ANN: k-means coarse quantization + n-probe bucket search.
 
@@ -915,7 +922,7 @@ def ivf_scan_stats(
     queries: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    k: int = 5,
+    k: int = TOP_K,
 ) -> dict:
     """Measured scan cost of the IVF operating point :func:`ivf_topk`
     would use on this corpus: resolves the SAME seeded params, then sums
@@ -1072,15 +1079,20 @@ def _exact_queries(queries: DataFrame, id_col: str, vec_col: str, caller: str):
     )
 
 
-def _probe_order_e12(q_mat, cent, n_probe: int):
-    """Each query's first ``min(n_probe, L)`` list ids in probe order:
-    exact e12 d² ascending, ties → lowest list id (lexsort's last key is
-    primary) — the order the q48g/q48h oracles' ``row_number() OVER
-    (PARTITION BY q_id ORDER BY d2, list_id)`` produces."""
+# probe width of the injected-centroid verifiers (q48g's
+# ivf_scan_stats_exact, q48h); their SQL oracles read the same constant
+INJECTED_N_PROBE = 8
+
+
+def _probe_order_e12(q_mat, cent):
+    """Each query's first ``min(INJECTED_N_PROBE, L)`` list ids in probe
+    order: exact e12 d² ascending, ties → lowest list id (lexsort's last
+    key is primary) — the order the q48g/q48h oracles' ``row_number()
+    OVER (PARTITION BY q_id ORDER BY d2, list_id)`` produces."""
     import numpy as np
 
     ids = np.arange(len(cent))
-    width = min(n_probe, len(cent))
+    width = min(INJECTED_N_PROBE, len(cent))
     return [np.lexsort((ids, d2))[:width] for d2 in _d2_e12_rows(q_mat, cent)]
 
 
@@ -1089,7 +1101,6 @@ def ivf_scan_stats_exact(
     queries: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_probe: int = 8,
 ) -> DataFrame:
     """Value-oracled scan-stats twin of :func:`ivf_scan_stats` — the
     side-channel that gives the IVF machinery a FULL cross-engine value
@@ -1099,10 +1110,11 @@ def ivf_scan_stats_exact(
     list handling, size aggregation, and the scan-fraction arithmetic —
     computed under the exact e12 integer contract with INJECTED
     deterministic centroids (the ``n_lists`` lowest-``id_col`` corpus
-    vectors, ``n_lists`` = :func:`ivf_operating_point`), so a plain-SQL
-    oracle reproduces every output bit. What remains outside the oracle
-    is exactly the seeded k-means fit and the float argmin — covered by
-    the q48c/q48d recall and prebuilt==inline pins.
+    vectors, ``n_lists`` = :func:`ivf_operating_point`, probed
+    ``INJECTED_N_PROBE`` lists wide), so a plain-SQL oracle reproduces
+    every output bit. What remains outside the oracle is exactly the
+    seeded k-means fit and the float argmin — covered by the q48c/q48d
+    recall and prebuilt==inline pins.
 
     This is a VERIFIER, not the serving path (the q89→q89b split): the
     elementwise-rounded d² costs d× a matmul, which is fine for the
@@ -1156,7 +1168,7 @@ def ivf_scan_stats_exact(
         spark,
         [
             (int(r["q_id"]), rank + 1, int(list_id))
-            for r, lists in zip(qrows, _probe_order_e12(q_mat, cent, n_probe))
+            for r, lists in zip(qrows, _probe_order_e12(q_mat, cent))
             for rank, list_id in enumerate(lists)
         ],
         "q_id long, probe_rank long, list_id long",
@@ -1184,7 +1196,7 @@ def ivf_scan_stats_exact(
         "q_id",
         F.lit(n).cast("long").alias("n_corpus"),
         F.lit(n_lists).cast("long").alias("n_lists"),
-        F.lit(min(n_probe, n_lists)).cast("long").alias("n_probe"),
+        F.lit(min(INJECTED_N_PROBE, n_lists)).cast("long").alias("n_probe"),
         "probed_lists",
         "candidates",
         (F.col("candidates").cast("double") / F.lit(float(n)))
@@ -1197,7 +1209,7 @@ def ann_topk_lsh(
     queries: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    k: int = 5,
+    k: int = TOP_K,
 ) -> DataFrame:
     """Approximate top-k cosine neighbors via euclidean LSH on normalized
     vectors (8 hash tables, bucket length 0.5, seed 42). Deterministic;

@@ -39,14 +39,21 @@ from pyspark.sql.window import Window
 
 from .dedup import shingle_hash, tokens
 
+# The scrub operating point: windows of SCRUB_WINDOW tokens whose content
+# occurs in at least SCRUB_MIN_DOC_FREQ distinct documents. q51/q53/q54,
+# `run pipeline` and the span oracle (queries/pipeline_queries.span_ctes)
+# read these constants.
+SCRUB_WINDOW = 8  # docs are 10-99 tokens at every SF
+SCRUB_MIN_DOC_FREQ = 2
+
 
 def repeated_substring_ranges(
     df: DataFrame,
     id_col: str,
     text_col: str,
     *,
-    window: int = 8,
-    min_doc_freq: int = 2,
+    window: int = SCRUB_WINDOW,
+    min_doc_freq: int = SCRUB_MIN_DOC_FREQ,
 ) -> DataFrame:
     """Maximal duplicated token spans per document, as 1-based ranges.
 
@@ -153,8 +160,8 @@ def repeated_substring_spans(
     id_col: str,
     text_col: str,
     *,
-    window: int = 8,
-    min_doc_freq: int = 2,
+    window: int = SCRUB_WINDOW,
+    min_doc_freq: int = SCRUB_MIN_DOC_FREQ,
 ) -> DataFrame:
     """Per-document rollup of :func:`repeated_substring_ranges`.
 
@@ -191,8 +198,8 @@ def substring_scrub_counts(
     id_col: str,
     text_col: str,
     *,
-    window: int = 8,
-    min_doc_freq: int = 2,
+    window: int = SCRUB_WINDOW,
+    min_doc_freq: int = SCRUB_MIN_DOC_FREQ,
 ) -> DataFrame:
     """The token ACCOUNTING of :func:`substring_scrub`, without the text.
 
@@ -238,8 +245,8 @@ def substring_scrub(
     id_col: str,
     text_col: str,
     *,
-    window: int = 8,
-    min_doc_freq: int = 2,
+    window: int = SCRUB_WINDOW,
+    min_doc_freq: int = SCRUB_MIN_DOC_FREQ,
 ) -> DataFrame:
     """ExactSubstr REMEDIATION: the corpus with duplicated spans excised.
 

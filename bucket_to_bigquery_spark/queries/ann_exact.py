@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.similarity import INJECTED_N_PROBE, TOP_K
 from ..session import local_frame
 from .llm_queries import (
     _D2_E12_SQL,
@@ -51,8 +52,6 @@ from .llm_queries import (
 )
 from .registry import query, tables
 
-_K = 5
-_N_PROBE = 8
 _N_QUERIES = 10  # mirrors q48c/q48d's audited query slice (vec_id < 10)
 
 _Q48H_ORACLE = (
@@ -66,7 +65,7 @@ _Q48H_ORACLE = (
     + _D2_E12_SQL.format(a="q.q_vec", b="c.c_vec")
     + " AS d2 FROM q CROSS JOIN cent c), "
     "probes AS (SELECT q_id, list_id FROM pd QUALIFY row_number() OVER "
-    f"(PARTITION BY q_id ORDER BY d2 ASC, list_id ASC) <= {_N_PROBE}), "
+    f"(PARTITION BY q_id ORDER BY d2 ASC, list_id ASC) <= {INJECTED_N_PROBE}), "
     # the IVF candidate join: probed lists x assignments, self excluded
     "cand AS (SELECT p.q_id, a.n_id FROM probes p JOIN amin a "
     "USING (list_id) WHERE a.n_id != p.q_id), "
@@ -79,7 +78,7 @@ _Q48H_ORACLE = (
     "JOIN embeddings e ON cand.n_id = e.vec_id) "
     "SELECT q_id, CAST(row_number() OVER "
     "(PARTITION BY q_id ORDER BY cosine DESC, n_id ASC) AS BIGINT) AS rank, "
-    f"n_id, cosine FROM scored QUALIFY rank <= {_K} ORDER BY q_id, rank"
+    f"n_id, cosine FROM scored QUALIFY rank <= {TOP_K} ORDER BY q_id, rank"
 )
 
 _Q48H_DESCRIPTION = (
@@ -103,8 +102,7 @@ _Q48H_DESCRIPTION = (
 def q48h(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = tables(spark, sf_dir)["embeddings"]
     return ivf_topk_injected_centroids(
-        emb, emb.where(F.col("vec_id") < _N_QUERIES),
-        k=_K, n_probe=_N_PROBE,
+        emb, emb.where(F.col("vec_id") < _N_QUERIES)
     )
 
 
@@ -113,17 +111,17 @@ def ivf_topk_injected_centroids(
     queries: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    k: int = 5,
-    n_probe: int = 8,
+    k: int = TOP_K,
 ) -> DataFrame:
     """IVF top-k with injected deterministic centroids (q48h's engine).
 
     Same structure as ``similarity.ivf_topk`` with the fit replaced by
     the q48g centroid injection (``n_lists`` lowest-``id_col`` corpus
-    vectors at ``ivf_operating_point(N)``) and assignment/probe
-    selection on the exact e12 integer d² instead of the float argmin —
-    every stage is then bit-reproducible in SQL. Input contract: unique
-    ``id_col`` per (id, vec) pair, as in the sibling ANN paths.
+    vectors at ``ivf_operating_point(N)``, probed ``INJECTED_N_PROBE``
+    lists wide) and assignment/probe selection on the exact e12 integer
+    d² instead of the float argmin — every stage is then bit-reproducible
+    in SQL. Input contract: unique ``id_col`` per (id, vec) pair, as in
+    the sibling ANN paths.
     """
     from ..operators.similarity import (
         _exact_queries,
@@ -166,7 +164,7 @@ def ivf_topk_injected_centroids(
     probe_rows = [
         (int(r["q_id"]), list(map(float, r["q_vec"])), int(norm), int(list_id))
         for r, norm, lists in zip(
-            qrows, _norm_e12_rows(q_mat), _probe_order_e12(q_mat, cent, n_probe)
+            qrows, _norm_e12_rows(q_mat), _probe_order_e12(q_mat, cent)
         )
         for list_id in lists
     ]

@@ -29,8 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.dedup import shingles, tokens
-from .llm_queries import _SH5_SQL, _TOKS_SQL
+from ..operators.dedup import DECONTAM_N, shingles, tokens
+from .llm_queries import _DECONTAM_SH_SQL, _TOKS_SQL
 from .registry import query, tables
 
 # m = 2^16 bit positions, k = 4 salted hashes. At the gate corpus
@@ -44,7 +44,7 @@ _BLOOM_K = 4
 # the two gates independently evolvable)
 _BENCH_MOD, _BENCH_REM = 19, 7
 
-# _TOKS_SQL/_SH5_SQL come from llm_queries: q57's oracle MUST tokenize
+# _TOKS_SQL/_DECONTAM_SH_SQL come from llm_queries: q57's oracle MUST tokenize
 # and shingle exactly like q47d's (both mirror operators/dedup.tokens/
 # shingles) — one definition, no third private copy to desynchronize.
 # position of shingle s under salt j — identical expression both engines:
@@ -70,7 +70,7 @@ def _pos(salt, shingle) -> F.Column:
 
 _Q57_ORACLE = (
     f"WITH tok AS (SELECT doc_id, {_TOKS_SQL} AS t FROM documents), "
-    f"sh AS (SELECT doc_id, {_SH5_SQL} AS shs FROM tok), "
+    f"sh AS (SELECT doc_id, {_DECONTAM_SH_SQL} AS shs FROM tok), "
     "bench AS (SELECT DISTINCT u.shingle FROM sh, "
     f"LATERAL unnest(shs) AS u(shingle) WHERE doc_id % {_BENCH_MOD} = {_BENCH_REM}), "
     f"salts AS (SELECT unnest(range(0, {_BLOOM_K})) AS j), "
@@ -137,7 +137,7 @@ def q57(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (q47d's measured 10×-at-sf0.1 lesson).
         docs.select("doc_id", tokens("text").alias("toks"))
         .select(
-            "doc_id", F.array_distinct(shingles(F.col("toks"), 5)).alias("shs")
+            "doc_id", F.array_distinct(shingles(F.col("toks"), DECONTAM_N)).alias("shs")
         )
     )
     bench = (

@@ -38,7 +38,7 @@ fingerprints + 3 BIGINTs shuffle, documents never do. Honest bound:
 each 8-bit band partitions F fingerprints over 256 values, so
 candidate volume grows ~F²/1024 once F ≫ 256 — the 32-bit fingerprint
 is the q46b compatibility contract, and the documented widening seam
-(simhash_col(bits=64) + 16-bit bands, domain 65,536) restores
+(64-bit dedup.SIMHASH_BITS + 16-bit bands, domain 65,536) restores
 sparse buckets at warehouse scale without touching this plan shape.
 """
 
@@ -47,7 +47,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.dedup import simhash_col, tokens
+from ..operators.dedup import SIMHASH_BITS, simhash_col, tokens
 from .llm_queries import _SIMHASH_SQL, _TOKHASH_SQL, _TOKS_SQL
 from .registry import query, tables
 
@@ -61,7 +61,7 @@ _MAX_HAMMING = 3
 # ≤ _MAX_HAMMING differing bits must be unable to touch every band,
 # and the bands must tile the whole fingerprint.
 assert _MAX_HAMMING <= _N_BANDS - 1, "banding misses true pairs"
-assert _N_BANDS * _BAND_BITS == 32, "bands must tile the fingerprint"
+assert _N_BANDS * _BAND_BITS == SIMHASH_BITS, "bands must tile the fingerprint"
 
 # q46b's fingerprint SQL: the token/normalize twins AND the 32-bit fold
 # are IMPORTED from llm_queries (one definition each); the q46b oracle
@@ -112,7 +112,7 @@ def cluster_frame(docs: DataFrame) -> DataFrame:
     cache it when they consume it more than once)."""
     return (
         docs.select(
-            "doc_id", simhash_col(tokens("text"), bits=32).alias("sh")
+            "doc_id", simhash_col(tokens("text")).alias("sh")
         )
         .groupBy("sh")
         .agg(

@@ -13,11 +13,12 @@ from first principles (it may re-derive the historical side — the
 asymmetry is a Spark-plan property, not a semantics change), so the
 entry carries a FULL value oracle.
 
-Semantics match the q47 family exactly: word-3-gram shingles as 60-bit
-md5 hashes, document-frequency cap >100 excluding hot/boilerplate
-shingles from BOTH intersection and sizes, Jaccard >= 0.6 over the
-capped universe. A new doc is a duplicate iff it matches ANY historical
-doc at that gate.
+Semantics match the q47 family exactly, at the same operating point
+(the ``operators.dedup`` constants): word ``NGRAM_N``-gram shingles as
+60-bit md5 hashes, a document-frequency cap ``MAX_SHINGLE_DF`` excluding
+hot/boilerplate shingles from BOTH intersection and sizes, Jaccard >=
+``JACCARD_THRESHOLD`` over the capped universe. A new doc is a duplicate
+iff it matches ANY historical doc at that gate.
 
 Planted structure (both engines literally): exact copies (+500000,
 jaccard 1.0 vs the source), near copies with a 3-token tail (+600000,
@@ -31,14 +32,16 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.dedup import shingle_hash, shingles, tokens
+from ..operators.dedup import (
+    JACCARD_THRESHOLD,
+    MAX_SHINGLE_DF,
+    shingle_hash,
+    shingles,
+    tokens,
+)
 from ..scratch import materialize_once, scratch_path
-from .llm_queries import _NEAR_TAIL, _SHINGLE_HASH_SQL, _TOKS_SQL
+from .llm_queries import _NEAR_TAIL, _SHINGLE_HASH_SQL, _SHINGLE_ROWS_SQL, _TOKS_SQL
 from .registry import query, tables
-
-_MAX_SHINGLE_DF = 100
-_JACCARD = 0.6
-_N = 3
 
 
 # ---------------------------------------------------------------------------
@@ -81,14 +84,14 @@ def _new_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _doc_shingles(df: DataFrame) -> DataFrame:
-    """(doc_id, shingle) — distinct 60-bit hashed word-3-gram shingles,
+    """(doc_id, shingle) — distinct 60-bit hashed near-dup shingles,
     hashed INSIDE the array before the explode (8-byte longs in every
     downstream exchange — the dedup-operator discipline)."""
     return df.select(
         "doc_id",
         F.explode(
             F.array_distinct(
-                F.transform(shingles(tokens("text"), _N), shingle_hash)
+                F.transform(shingles(tokens("text")), shingle_hash)
             )
         ).alias("shingle"),
     )
@@ -115,7 +118,7 @@ def _hist_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame,
         hot = (
             sh.groupBy("shingle")
             .agg(F.count(F.lit(1)).alias("df_count"))
-            .where(F.col("df_count") > _MAX_SHINGLE_DF)
+            .where(F.col("df_count") > MAX_SHINGLE_DF)
             .select("shingle")
         )
         idx = sh.join(F.broadcast(hot), "shingle", "left_anti")
@@ -139,9 +142,9 @@ def _hist_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame,
 
 def _matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(new_id, hist_id, jaccard) for every new-doc × historical-doc pair
-    at jaccard >= 0.6 over the DF-capped universe. Cost is probe-shaped:
-    the historical side is only ever READ (index scan + equi-join); no
-    historical pair is re-mined."""
+    at jaccard >= JACCARD_THRESHOLD over the DF-capped universe. Cost is
+    probe-shaped: the historical side is only ever READ (index scan +
+    equi-join); no historical pair is re-mined."""
     idx, sizes, hot = _hist_index(spark, sf_dir)
     nsh = (
         _doc_shingles(_new_batch(spark, sf_dir))
@@ -169,7 +172,7 @@ def _matches(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / (F.col("n_new") + F.col("ns") - F.col("n_common"))
             ).alias("jaccard"),
         )
-        .where(F.col("jaccard") >= _JACCARD)
+        .where(F.col("jaccard") >= JACCARD_THRESHOLD)
     )
 
 
@@ -187,8 +190,7 @@ def _shingle_cte(rel: str, out: str) -> str:
     return (
         f"{out}_tok AS (SELECT doc_id, {_TOKS_SQL} AS t FROM {rel}), "
         f"{out} AS (SELECT DISTINCT doc_id, {_SHINGLE_HASH_SQL} AS shingle "
-        f"FROM {out}_tok, LATERAL unnest(range(1, len(t) - 1)) AS u(i) "
-        "WHERE len(t) >= 3)"
+        f"FROM {out}_tok, {_SHINGLE_ROWS_SQL})"
     )
 
 
@@ -203,7 +205,7 @@ _Q55_BASE_CTES = (
     + _shingle_cte("hist", "hsh") + ", "
     + _shingle_cte("newb", "nsh") + ", "
     "hot AS (SELECT shingle FROM hsh GROUP BY shingle "
-    f"HAVING COUNT(*) > {_MAX_SHINGLE_DF}), "
+    f"HAVING COUNT(*) > {MAX_SHINGLE_DF}), "
     "hidx AS (SELECT * FROM hsh WHERE shingle NOT IN (SELECT shingle FROM hot)), "
     "hsizes AS (SELECT doc_id, COUNT(*) AS ns FROM hidx GROUP BY doc_id), "
     "nidx AS (SELECT * FROM nsh WHERE shingle NOT IN (SELECT shingle FROM hot)), "
@@ -214,7 +216,8 @@ _Q55_BASE_CTES = (
     "CAST(n_common AS DOUBLE) / (sn.ns + sh2.ns - n_common) AS jaccard "
     "FROM common JOIN nsizes sn ON sn.doc_id = new_id "
     "JOIN hsizes sh2 ON sh2.doc_id = hist_id "
-    f"WHERE CAST(n_common AS DOUBLE) / (sn.ns + sh2.ns - n_common) >= {_JACCARD})"
+    "WHERE CAST(n_common AS DOUBLE) / (sn.ns + sh2.ns - n_common) "
+    f">= {JACCARD_THRESHOLD})"
 )
 
 _Q55_ORACLE = (

@@ -87,7 +87,7 @@ _Q116_DESCRIPTION = (
 def q116(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = tables(spark, sf_dir)["documents"]
     cl = (
-        docs.select(simhash_col(tokens("text"), bits=32).alias("sh"))
+        docs.select(simhash_col(tokens("text")).alias("sh"))
         .groupBy("sh")
         .agg(F.count(F.lit(1)).cast("long").alias("sz"))
     )

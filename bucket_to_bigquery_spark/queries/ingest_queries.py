@@ -19,9 +19,10 @@ from ..ingest import BatchLoader, parse_manifest
 from ..scratch import materialize_once, scratch_path
 from .registry import dsum, dsum_sql, query, tables
 
-# Fixed audit clock for the materialized ingest (the loader's import_ts
-# seam, A15): the `_imported` timestamps become deterministic, which is
-# what gives q04b a full value oracle instead of a rows-only check.
+# Fixed audit clock for the materialized ingests of q04-q04e (the
+# loader's import_ts seam, A15): the `_imported` timestamps become
+# deterministic, which is what gives q04b a full value oracle instead of
+# a rows-only check.
 _Q04_IMPORT_TS = "2000-01-01 00:00:00"
 
 _ORDERS_FIELDS = [
@@ -34,15 +35,19 @@ _ORDERS_FIELDS = [
 ]
 
 
-def _ingest_manifest(base: str) -> dict:
+def _ingest_manifest(base: str, table: str = "orders_ing",
+                     job_prefix: str = "q04__") -> dict:
+    """The q04 warehouse manifest: the orders CSVs under ``<base>/src``
+    into DAY-partitioned ``wh.<table>``. q04e's compaction fixture loads
+    its own table through the same definition."""
     return {
         "project": "b2bqs",
-        "jobIdPrefix": "q04__",
+        "jobIdPrefix": job_prefix,
         "tasks": [
             {
                 "sources": [f"{base}/src/**/*.csv"],
                 "dataset": "wh",
-                "table": "orders_ing",
+                "table": table,
                 "fields": _ORDERS_FIELDS,
                 "timePartitioningField": "o_orderdate",
             }
@@ -99,9 +104,8 @@ def _ingested_loader(spark: SparkSession, sf_dir: str) -> tuple[BatchLoader, obj
     return BatchLoader(spark, f"{base}/warehouse"), task
 
 
-_Q04_ORACLE_COLS = (
-    "o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderdate, o_orderpriority"
-)
+_Q04_COLS = [f["name"] for f in _ORDERS_FIELDS]
+_Q04_ORACLE_COLS = ", ".join(_Q04_COLS)
 
 
 @query(
@@ -122,7 +126,7 @@ def q04(spark: SparkSession, sf_dir: str) -> DataFrame:
     loader, task = _ingested_loader(spark, sf_dir)
     return (
         loader.read_table(task)
-        .select(*[c.strip() for c in _Q04_ORACLE_COLS.split(",")])
+        .select(*_Q04_COLS)
         .orderBy("o_orderkey")
     )
 

@@ -20,11 +20,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import (
-    MINHASH_BANDS,
+    CONTAINMENT_THRESHOLD,
+    DECONTAM_N,
+    JACCARD_THRESHOLD,
+    MAX_SHINGLE_DF,
+    MINHASH_MAX_DISTANCE,
     MINHASH_PRIME,
-    MINHASH_SEED,
+    NGRAM_N,
     ROLLING_BASE,
     ROLLING_MOD,
+    SIMHASH_BITS,
     exact_dedup_groups,
     minhash_candidate_pairs,
     minhash_params,
@@ -36,7 +41,12 @@ from ..operators.dedup import (
     tokens,
 )
 from ..operators.multimodal import attach_payload, extract_byte_features, payload_magic
-from ..operators.similarity import ann_topk_lsh, cosine_topk_exact
+from ..operators.similarity import (
+    SIGN_BAND_COSINE,
+    TOP_K,
+    ann_topk_lsh,
+    cosine_topk_exact,
+)
 from .registry import _NORM_SQL, davg_sql, query, tables
 
 # ---------------------------------------------------------------------------
@@ -46,19 +56,25 @@ from .registry import _NORM_SQL, davg_sql, query, tables
 _NEAR_TAIL = " zz9 qq8 vv7"
 
 _TOKS_SQL = f"string_split({_NORM_SQL}, ' ')"
-# 60-bit md5-prefix hash of the 3-gram starting at token ``i`` of the
-# token list ``t`` — the oracle twin of operators/dedup.shingle_hash over
-# 3-token shingles; q47, q47b and the q55 incremental oracles share it.
+# 60-bit md5-prefix hash of the NGRAM_N-gram starting at token ``i`` of
+# the token list ``t`` — the oracle twin of operators/dedup.shingle_hash
+# over near-dup shingles; q47, q47b and the q55 incremental oracles share
+# it, each over the rows of _SHINGLE_ROWS_SQL (one per shingle start).
 _SHINGLE_HASH_SQL = (
-    "CAST(('0x' || substr(md5(array_to_string(t[i:i+2], ' ')), 1, 15)) AS BIGINT)"
+    "CAST(('0x' || substr(md5(array_to_string("
+    f"t[i:i+{NGRAM_N - 1}], ' ')), 1, 15)) AS BIGINT)"
+)
+_SHINGLE_ROWS_SQL = (
+    f"LATERAL unnest(range(1, len(t) - {NGRAM_N - 2})) AS u(i) "
+    f"WHERE len(t) >= {NGRAM_N}"
 )
 _TOKHASH_SQL = "CAST(('0x' || substr(md5({t}), 1, 8)) AS BIGINT)"
-# The 32-bit SimHash fold over a token-hash list column ``hs`` — the
-# oracle twin of operators/dedup.simhash_col(bits=32). ONE definition:
+# The SIMHASH_BITS-bit SimHash fold over a token-hash list column ``hs``
+# — the oracle twin of operators/dedup.simhash_col. ONE definition:
 # q46b interpolates it and hamming/neardup_cc import it,
 # so the fingerprint contract cannot desync across consumers.
 _SIMHASH_SQL = (
-    "CAST(list_sum(list_transform(range(0, 32), j -> "
+    f"CAST(list_sum(list_transform(range(0, {SIMHASH_BITS}), j -> "
     "CASE WHEN list_sum(list_transform(hs, h -> ((h >> j) & 1) * 2 - 1)) > 0 "
     "THEN (CAST(1 AS BIGINT) << j) ELSE 0 END)) AS BIGINT)"
 )
@@ -186,7 +202,7 @@ def q46b(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = tables(spark, sf_dir)
     return (
         t["documents"]
-        .select("doc_id", simhash_col(tokens("text"), bits=32).alias("simhash"))
+        .select("doc_id", simhash_col(tokens("text")).alias("simhash"))
         .orderBy("doc_id")
     )
 
@@ -203,8 +219,9 @@ def q47_index_ctes(corpus_rel: str) -> str:
     return (
         f"tok AS (SELECT doc_id, {_TOKS_SQL} AS t FROM {corpus_rel}), "
         f"sh AS (SELECT DISTINCT doc_id, {_SHINGLE_HASH_SQL} AS shingle "
-        "FROM tok, LATERAL unnest(range(1, len(t) - 1)) AS u(i) WHERE len(t) >= 3), "
-        "hot AS (SELECT shingle FROM sh GROUP BY shingle HAVING COUNT(*) > 100), "
+        f"FROM tok, {_SHINGLE_ROWS_SQL}), "
+        "hot AS (SELECT shingle FROM sh GROUP BY shingle "
+        f"HAVING COUNT(*) > {MAX_SHINGLE_DF}), "
         "idx AS (SELECT * FROM sh WHERE shingle NOT IN (SELECT shingle FROM hot)), "
         "sizes AS (SELECT doc_id, COUNT(*) AS ns FROM idx GROUP BY doc_id), "
         "common AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_common "
@@ -218,7 +235,8 @@ _Q47_PAIRS_FRAGMENT = (
     "CAST(n_common AS DOUBLE) / (sa.ns + sb.ns - n_common) AS jaccard "
     "FROM common "
     "JOIN sizes sa ON sa.doc_id = id_a JOIN sizes sb ON sb.doc_id = id_b "
-    "WHERE CAST(n_common AS DOUBLE) / (sa.ns + sb.ns - n_common) >= 0.6)"
+    "WHERE CAST(n_common AS DOUBLE) / (sa.ns + sb.ns - n_common) "
+    f">= {JACCARD_THRESHOLD})"
 )
 
 _Q47_BASE_CTES = f"corpus AS ({CORPUS_SQL}), " + q47_index_ctes("corpus")
@@ -243,16 +261,14 @@ _Q47_PAIR_CTES = f"{_Q47_BASE_CTES}, {_Q47_PAIRS_FRAGMENT}"
 
 def _dedup_components(spark: SparkSession, sf_dir: str):
     """Shared q46c/q46d pipeline: (corpus, components) for the planted-dup
-    corpus, with THE canonical pair-mining parameters (n=3, jaccard>=0.6,
-    DF cap 100 — the same literals `_Q47_PAIR_CTES` states for the
-    oracles). One definition so the cluster view cannot drift between the
-    assignment query and the apply query."""
+    corpus, mined at the operator's near-dup operating point (the
+    constants `_Q47_PAIR_CTES` reads for the oracles). One definition so
+    the cluster view cannot drift between the assignment query and the
+    apply query."""
     from ..operators.graph import connected_components
 
     corpus = _dedup_corpus(spark, sf_dir)
-    pairs = ngram_jaccard_pairs(
-        corpus, "doc_id", "text", n=3, threshold=0.6, max_shingle_df=100
-    )
+    pairs = ngram_jaccard_pairs(corpus, "doc_id", "text")
     comp = connected_components(
         pairs, src="id_a", dst="id_b",
         nodes=corpus.select("doc_id"), node_col="doc_id",
@@ -368,10 +384,7 @@ def q46d(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q47(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        ngram_jaccard_pairs(
-            _dedup_corpus(spark, sf_dir), "doc_id", "text",
-            n=3, threshold=0.6, max_shingle_df=100,
-        )
+        ngram_jaccard_pairs(_dedup_corpus(spark, sf_dir), "doc_id", "text")
         .orderBy("id_a", "id_b")
     )
 
@@ -384,7 +397,8 @@ def q47(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CAST(n_common AS DOUBLE) / least(sa.ns, sb.ns) AS containment "
         "FROM common "
         "JOIN sizes sa ON sa.doc_id = id_a JOIN sizes sb ON sb.doc_id = id_b "
-        "WHERE CAST(n_common AS DOUBLE) / least(sa.ns, sb.ns) >= 0.9) "
+        "WHERE CAST(n_common AS DOUBLE) / least(sa.ns, sb.ns) "
+        f">= {CONTAINMENT_THRESHOLD}) "
         "SELECT id_a, id_b, containment FROM cpairs ORDER BY id_a, id_b"
     ),
     description=(
@@ -402,10 +416,7 @@ def q47e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import ngram_containment_pairs
 
     return (
-        ngram_containment_pairs(
-            _dedup_corpus(spark, sf_dir), "doc_id", "text",
-            n=3, threshold=0.9, max_shingle_df=100,
-        )
+        ngram_containment_pairs(_dedup_corpus(spark, sf_dir), "doc_id", "text")
         .orderBy("id_a", "id_b")
     )
 
@@ -414,12 +425,11 @@ def q47e(spark: SparkSession, sf_dir: str) -> DataFrame:
 # expressions embed (dedup.minhash_params is the single source of truth),
 # over shingle hashes reduced mod the same Mersenne prime.
 _MH_PARAMS_SQL = ", ".join(
-    f"({i}, {a}, {b})" for i, (a, b) in enumerate(minhash_params(MINHASH_BANDS, MINHASH_SEED))
+    f"({i}, {a}, {b})" for i, (a, b) in enumerate(minhash_params())
 )
 _MH_SH_SQL = (
     f"sh AS (SELECT DISTINCT doc_id, {_SHINGLE_HASH_SQL}"
-    f" % {MINHASH_PRIME} AS shingle "
-    "FROM tok, LATERAL unnest(range(1, len(t) - 1)) AS u(i) WHERE len(t) >= 3)"
+    f" % {MINHASH_PRIME} AS shingle FROM tok, {_SHINGLE_ROWS_SQL})"
 )
 
 
@@ -442,7 +452,8 @@ _MH_SH_SQL = (
         "(pa.ns + pb.ns - len(list_intersect(pa.ls, pb.ls))) AS dist "
         "FROM cand JOIN lists pa ON pa.doc_id = id_a "
         "JOIN lists pb ON pb.doc_id = id_b) "
-        "SELECT id_a, id_b FROM pairs WHERE dist <= 0.4 ORDER BY id_a, id_b"
+        f"SELECT id_a, id_b FROM pairs WHERE dist <= {MINHASH_MAX_DISTANCE} "
+        "ORDER BY id_a, id_b"
     ),
     description=(
         "Q47b: near-dup candidates via explicit banded MinHash — per-doc "
@@ -460,10 +471,7 @@ _MH_SH_SQL = (
 )
 def q47b(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        minhash_candidate_pairs(
-            _dedup_corpus(spark, sf_dir), "doc_id", "text",
-            n=3, jaccard_distance_threshold=0.4,
-        )
+        minhash_candidate_pairs(_dedup_corpus(spark, sf_dir), "doc_id", "text")
         .select("id_a", "id_b")
         .orderBy("id_a", "id_b")
     )
@@ -532,7 +540,7 @@ _INJECTED_ASSIGN_CTES = (
         "SELECT q_id, CAST(row_number() OVER "
         "(PARTITION BY q_id ORDER BY cosine DESC, n_id ASC) AS BIGINT) AS rank, "
         "n_id, cosine FROM scored "
-        "QUALIFY rank <= 5 ORDER BY q_id, rank"
+        f"QUALIFY rank <= {TOP_K} ORDER BY q_id, rank"
     ),
     description=(
         "Q48: exact top-5 cosine neighbors for 10 query vectors — the "
@@ -549,7 +557,7 @@ def q48(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = tables(spark, sf_dir)
     emb = t["embeddings"]
     return (
-        cosine_topk_exact(emb, emb.where(F.col("vec_id") < 10), k=5)
+        cosine_topk_exact(emb, emb.where(F.col("vec_id") < 10))
         .orderBy("q_id", "rank")
     )
 
@@ -568,7 +576,7 @@ def q48(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(sqrt(CAST(q_norm AS DOUBLE)) * sqrt(CAST(n_norm AS DOUBLE))) AS cosine "
         "FROM c, q WHERE n_id != q_id), "
         "topk AS (SELECT q_id, n_id FROM scored QUALIFY row_number() OVER "
-        "(PARTITION BY q_id ORDER BY cosine DESC, n_id ASC) <= 5), "
+        f"(PARTITION BY q_id ORDER BY cosine DESC, n_id ASC) <= {TOP_K}), "
         "votes AS (SELECT t.q_id, e.label AS n_label FROM topk t "
         "JOIN embeddings e ON e.vec_id = t.n_id), "
         "own AS (SELECT vec_id AS q_id, label AS own_label FROM embeddings "
@@ -610,9 +618,9 @@ def q48f(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = tables(spark, sf_dir)["embeddings"]
     labels = emb.select("vec_id", "label")
-    nb = cosine_topk_exact(
-        emb, emb.where(F.col("vec_id") < 100), k=5
-    ).select("q_id", "n_id")
+    nb = cosine_topk_exact(emb, emb.where(F.col("vec_id") < 100)).select(
+        "q_id", "n_id"
+    )
     votes = nb.join(
         labels.select(
             F.col("vec_id").alias("n_id"), F.col("label").alias("n_label")
@@ -663,9 +671,9 @@ def q48f(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _embedding_dedup_pairs(spark: SparkSession, sf_dir: str):
     """Shared q47c/q47f pipeline: (corpus, near-dup pairs) over the
     embeddings table with planted perturbed copies — one definition of
-    the corpus construction, blocking params, and the 0.95 cosine gate
-    so the pair view cannot drift between the pair query and the apply
-    query."""
+    the corpus construction and the sign-band operator (its blocking and
+    ``SIGN_BAND_COSINE`` gate) so the pair view cannot drift between the
+    pair query and the apply query."""
     from ..operators.similarity import sign_band_neardup_pairs
     from ..scratch import materialize_once, scratch_path
 
@@ -687,7 +695,7 @@ def _embedding_dedup_pairs(spark: SparkSession, sf_dir: str):
     # arrays round-trip bit-exactly, so oracle parity is unaffected)
     path = materialize_once(scratch_path("embedding_corpus", sf_dir), _write)
     corpus = spark.read.parquet(path)
-    pairs = sign_band_neardup_pairs(corpus, "vec_id", "embedding", 0.95)
+    pairs = sign_band_neardup_pairs(corpus, "vec_id", "embedding")
     return corpus, pairs
 
 
@@ -706,7 +714,7 @@ _Q47C_PAIR_CTES = (
     "AS cosine FROM n a, n b WHERE a.vec_id < b.vec_id "
     "AND CAST(" + _DOT_E12_SQL.format(a="a.embedding", b="b.embedding")
     + " AS DOUBLE) / (sqrt(CAST(a.nrm AS DOUBLE)) * sqrt(CAST(b.nrm AS DOUBLE))) "
-    ">= 0.95)"
+    f">= {SIGN_BAND_COSINE})"
 )
 
 
@@ -795,10 +803,13 @@ def q47f(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SH5_SQL = (
-    "CASE WHEN len(t) >= 5 THEN list_distinct(list_transform("
-    "range(1, len(t) - 3), i -> array_to_string(t[i:i+4], ' '))) "
-    "ELSE [] END"
+# the distinct DECONTAM_N-gram shingle strings of the token list ``t`` —
+# the oracle twin of dedup.shingles(tokens, DECONTAM_N) for q47d and the
+# q57/q58/q89/q120 overlap family
+_DECONTAM_SH_SQL = (
+    f"CASE WHEN len(t) >= {DECONTAM_N} THEN list_distinct(list_transform("
+    f"range(1, len(t) - {DECONTAM_N - 2}), i -> "
+    f"array_to_string(t[i:i+{DECONTAM_N - 1}], ' '))) ELSE [] END"
 )
 
 
@@ -806,7 +817,7 @@ _SH5_SQL = (
     "q47d_benchmark_decontamination",
     oracle=(
         f"WITH tok AS (SELECT doc_id, {_TOKS_SQL} AS t FROM documents), "
-        f"sh AS (SELECT doc_id, {_SH5_SQL} AS shs FROM tok), "
+        f"sh AS (SELECT doc_id, {_DECONTAM_SH_SQL} AS shs FROM tok), "
         "bench AS (SELECT DISTINCT u.shingle FROM sh, "
         "LATERAL unnest(shs) AS u(shingle) WHERE doc_id % 20 = 0), "
         "corpus AS (SELECT * FROM sh WHERE doc_id % 20 <> 0), "
@@ -851,7 +862,7 @@ def q47d(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", tokens("text").alias("toks")
     ).select(
         "doc_id",
-        F.array_distinct(shingles(F.col("toks"), 5)).alias("shs"),
+        F.array_distinct(shingles(F.col("toks"), DECONTAM_N)).alias("shs"),
     ).persist()
     bench = (
         d.where(F.col("doc_id") % 20 == 0)
@@ -903,7 +914,7 @@ def q48b(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = tables(spark, sf_dir)
     emb = t["embeddings"]
     return (
-        ann_topk_lsh(emb, emb.where(F.col("vec_id") < 10), k=5)
+        ann_topk_lsh(emb, emb.where(F.col("vec_id") < 10))
         .select("q_id", "rank", "n_id")
         .orderBy("q_id", "rank")
     )
@@ -941,7 +952,7 @@ def q48c(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = tables(spark, sf_dir)
     emb = t["embeddings"]
     return (
-        ivf_topk(emb, emb.where(F.col("vec_id") < 10), k=5)
+        ivf_topk(emb, emb.where(F.col("vec_id") < 10))
         .select("q_id", "rank", "n_id")
         .orderBy("q_id", "rank")
     )
@@ -981,7 +992,7 @@ def q48d(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda p: ivf_build_index(emb, p),
     )
     return (
-        ivf_probe_prebuilt(spark, path, emb.where(F.col("vec_id") < 10), k=5)
+        ivf_probe_prebuilt(spark, path, emb.where(F.col("vec_id") < 10))
         .select("q_id", "rank", "n_id")
         .orderBy("q_id", "rank")
     )
@@ -1018,7 +1029,7 @@ def q48d(spark: SparkSession, sf_dir: str) -> DataFrame:
         "AND n.vec_id != q.vec_id) "
         "SELECT q_id, CAST(row_number() OVER "
         "(PARTITION BY q_id ORDER BY cosine DESC, n_id ASC) AS BIGINT) AS rank, "
-        "n_id, cosine FROM scored QUALIFY rank <= 5 ORDER BY q_id, rank"
+        f"n_id, cosine FROM scored QUALIFY rank <= {TOP_K} ORDER BY q_id, rank"
     ),
     description=(
         "Q48e: sign-grid ANN at the 9-band × 7-bit Hamming-1 multi-probe "
@@ -1043,7 +1054,7 @@ def q48e(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = tables(spark, sf_dir)
     emb = t["embeddings"]
     return (
-        signgrid_ann_topk(emb, emb.where(F.col("vec_id") < 10), k=5)
+        signgrid_ann_topk(emb, emb.where(F.col("vec_id") < 10))
         .orderBy("q_id", "rank")
     )
 

@@ -25,27 +25,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..ingest import BatchLoader, parse_manifest
-from ..ingest.fs import fs_for
 from ..scratch import materialize_once, scratch_path
+from .ingest_queries import (
+    _Q04_COLS,
+    _Q04_IMPORT_TS,
+    _Q04_ORACLE_COLS,
+    _ingest_manifest,
+)
 from .registry import query, tables
-
-# Same audit-clock seam as the q04 family (ingest_queries._Q04_IMPORT_TS):
-# deterministic `_imported` stamps.
-_Q04E_IMPORT_TS = "2000-01-01 00:00:00"
-
-# Manifest field spec: the q04 positional-CSV schema (ingest_queries
-# declares the same shape for the shared warehouse; restated here so
-# this module does not import a sibling query module).
-_FIELDS = [
-    {"name": "o_orderkey", "type": "integer"},
-    {"name": "o_custkey", "type": "integer"},
-    {"name": "o_orderstatus", "type": "string"},
-    {"name": "o_totalprice", "type": "float"},
-    {"name": "o_orderdate", "type": "timestamp"},
-    {"name": "o_orderpriority", "type": "string"},
-]
-
-_COLS = "o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderdate, o_orderpriority"
 
 # Half a year of the DAY-partitioned key: enough partitions to make the
 # small-files problem real, cheap enough to rebuild per sf_dir.
@@ -53,19 +40,9 @@ _LO, _HI = "1995-01-01", "1995-07-01"
 
 
 def _manifest(base: str) -> dict:
-    return {
-        "project": "b2bqs",
-        "jobIdPrefix": "q04e__",
-        "tasks": [
-            {
-                "sources": [f"{base}/src/**/*.csv"],
-                "dataset": "wh",
-                "table": "orders_cmp",
-                "fields": _FIELDS,
-                "timePartitioningField": "o_orderdate",
-            }
-        ],
-    }
+    """The q04 warehouse manifest (schema, DAY partitioning) for q04e's
+    own table."""
+    return _ingest_manifest(base, table="orders_cmp", job_prefix="q04e__")
 
 
 def _compacted_loader(spark: SparkSession, sf_dir: str) -> tuple[BatchLoader, object]:
@@ -85,7 +62,7 @@ def _compacted_loader(spark: SparkSession, sf_dir: str) -> tuple[BatchLoader, ob
             (F.col("o_orderdate") >= F.lit(_LO).cast("timestamp"))
             & (F.col("o_orderdate") < F.lit(_HI).cast("timestamp"))
         )
-        loader = BatchLoader(spark, f"{p}/warehouse", import_ts=_Q04E_IMPORT_TS)
+        loader = BatchLoader(spark, f"{p}/warehouse", import_ts=_Q04_IMPORT_TS)
         for i, batch in enumerate(
             (scoped.where(F.col("o_orderkey") % 2 == 0),
              scoped.where(F.col("o_orderkey") % 2 == 1))
@@ -96,9 +73,7 @@ def _compacted_loader(spark: SparkSession, sf_dir: str) -> tuple[BatchLoader, ob
             r, = loader.run(parse_manifest(_manifest(p)))
             assert r.rows_loaded > 0, f"batch {i} loaded nothing"
         tk = manifest.tasks[0]
-        data = loader._data_path(tk)
-        fs = fs_for(spark, data)
-        pre = sum(1 for f in fs.list_recursive(data) if f.endswith(".parquet"))
+        pre = len(loader.data_files(tk))
         post = loader.compact(tk)
         assert post < pre, f"compaction did not shrink files: {pre} -> {post}"
         with open(os.path.join(p, "compact_stats.json"), "w") as fh:
@@ -117,7 +92,7 @@ def compact_stats(spark: SparkSession, sf_dir: str) -> dict:
 
 
 _Q04E_ORACLE = (
-    f"SELECT {_COLS} FROM orders "
+    f"SELECT {_Q04_ORACLE_COLS} FROM orders "
     f"WHERE o_orderdate >= TIMESTAMP '{_LO}' AND o_orderdate < TIMESTAMP '{_HI}' "
     "ORDER BY o_orderkey"
 )
@@ -139,7 +114,7 @@ def q04e(spark: SparkSession, sf_dir: str) -> DataFrame:
     loader, task = _compacted_loader(spark, sf_dir)
     return (
         loader.read_table(task)
-        .select(*[c.strip() for c in _COLS.split(",")])
+        .select(*_Q04_COLS)
         .orderBy("o_orderkey")
     )
 

@@ -174,7 +174,7 @@ def q133(spark: SparkSession, sf_dir: str) -> DataFrame:
     # first cut folded the corpus three times)
     fp = docs.select(
         "doc_id", "source",
-        simhash_col(tokens("text"), bits=32).alias("sh"),
+        simhash_col(tokens("text")).alias("sh"),
     ).cache()
     cl = (
         fp.groupBy("sh")

@@ -10,10 +10,11 @@ replacement is file-source streaming (q41: checkpoint commit ≡ ack),
 which is the right Spark-native call where file listing exists; THIS
 entry completes the story for users who can't turn on listing — a
 notification-driven path where A5-shaped envelopes arrive over a LIVE
-TCP socket, flow through the same executor-side decode the batch path
-uses (``ingest.events.finalize_object_uris``: eventType filter,
-base64→JSON, kind filter, selfLink dedup — BucketToBigQuery.js:213-236
-semantics), and land in a checkpointed idempotent sink where the
+TCP socket, flow through the executor-side decode
+``ingest.events.finalize_object_uris`` (eventType filter, base64→JSON,
+kind filter, selfLink dedup — BucketToBigQuery.js:213-236 semantics; the
+batch path applies the same filters on the driver in
+``events_to_candidates``), and land in a checkpointed idempotent sink where the
 micro-batch commit is the ack (a committed batch is never re-served;
 an uncommitted one is re-processed — the reference's redelivery-
 before-ack, minus its mark-after-launch hazard).
@@ -74,8 +75,9 @@ _Q108_DESCRIPTION = (
     "(OBJECT_FINALIZE / storage#object / base64 JSON payloads, derived "
     "deterministically from the events table with redelivered "
     "duplicates and four classes of filterable noise) are served over a "
-    "LIVE local TCP socket, decoded executor-side by the same "
-    "ingest.events pipeline the batch path uses, redelivery-collapsed "
+    "LIVE local TCP socket, decoded executor-side by "
+    "ingest.events.finalize_object_uris (the batch path applies the same "
+    "filters on the driver in events_to_candidates), redelivery-collapsed "
     "by stateful selfLink dedup, and committed through a checkpointed "
     "batch-id-keyed idempotent sink where the micro-batch commit is the "
     "ack (BucketToBigQuery.js:99-121/213-236 semantics, minus the "
@@ -122,11 +124,10 @@ def _envelope_lines(ids: list[int]) -> list[str]:
         bad = json.loads(_envelope(ids[0]))
         # payload-decode noise: VALID base64 of bytes that are not JSON
         # (from_json -> null -> kind filter). Deliberately NOT malformed
-        # base64: Spark's unbase64 throws on truncated groups where the
-        # reference's Node Buffer.from(data,'base64') decodes leniently —
-        # a declared parity gap deferred until ingest/events.py can
-        # rotate in-window (try_to_binary(col,'base64') is the fix;
-        # GATE_r13.md deferred items).
+        # base64: Spark 4.1's unbase64 decodes some of it ('abc') but
+        # raises on the rest ('a', a misplaced '=') where the reference's
+        # Node Buffer.from(data,'base64') decodes leniently — a declared
+        # parity gap (try_to_binary(col,'base64') is the fix).
         bad["message"]["data"] = base64.b64encode(
             b"\x00\xffnot json bytes"
         ).decode("ascii")

@@ -7,8 +7,8 @@ high-novelty-first ordering is the classic data-curriculum heuristic.
 
 Reference parity: n/a — no analytics surface in the reference; declared
 engine surface (SURVEY §2.C extension). Shingling is
-the shared q47 contract (``operators.dedup.shingles(tokens, 5)`` /
-``llm_queries._SH5_SQL``).
+the shared q47 contract (``operators.dedup.shingles(tokens, DECONTAM_N)``
+/ ``llm_queries._DECONTAM_SH_SQL``).
 
 A shingle is novel FOR its first document only: novelty(d) =
 |{s ∈ shingles(d) : min_corpus_doc(s) = d}| / |shingles(d)| — so the
@@ -35,14 +35,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.dedup import shingles, tokens
+from ..operators.dedup import DECONTAM_N, shingles, tokens
 from ..operators.similarity import _spread_small_input
-from .llm_queries import _SH5_SQL, _TOKS_SQL
+from .llm_queries import _DECONTAM_SH_SQL, _TOKS_SQL
 from .registry import query, tables
 
 _Q95_ORACLE = (
     f"WITH tok AS (SELECT doc_id, {_TOKS_SQL} AS t FROM documents), "
-    f"sh AS (SELECT doc_id, {_SH5_SQL} AS shs FROM tok), "
+    f"sh AS (SELECT doc_id, {_DECONTAM_SH_SQL} AS shs FROM tok), "
     "x AS (SELECT DISTINCT doc_id, u.shingle FROM sh, "
     "LATERAL unnest(shs) AS u(shingle)), "
     "ns AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM x "
@@ -98,7 +98,7 @@ def q95(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shingle through the doc_id exchange and tripled the query).
     # 4 exchanges + a cache -> 2 aggregation exchanges + 1 narrow join.
     sh = docs.select(
-        "doc_id", shingles(tokens(F.col("text")), 5).alias("shs")
+        "doc_id", shingles(tokens(F.col("text")), DECONTAM_N).alias("shs")
     )
     ns = sh.select(
         "doc_id",

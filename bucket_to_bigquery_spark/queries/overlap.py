@@ -12,9 +12,10 @@ while sharing plenty of phrasing).
 
 Reference parity: n/a — no analytics surface in the reference; declared
 engine surface (SURVEY §2.C extension, registered r10). Shingling is
-the q47-family contract — ``operators.dedup.shingles(tokens, 5)`` on
-the Spark side and ``llm_queries._SH5_SQL`` in the oracle, the same
-shared definition q47d's decontamination gate keys on.
+the q47-family contract — ``operators.dedup.shingles(tokens,
+DECONTAM_N)`` on the Spark side and ``llm_queries._DECONTAM_SH_SQL`` in
+the oracle, the same shared definition q47d's decontamination gate keys
+on.
 
     J(a,b) = |Sₐ ∩ S_b| / (|Sₐ| + |S_b| − |Sₐ ∩ S_b|)
 
@@ -46,11 +47,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.dedup import shingle_hash, shingles, tokens
+from ..operators.dedup import DECONTAM_N, shingle_hash, shingles, tokens
 from ..operators.materialize import checkpoint
 from ..operators.pairs import item_counts, item_sets, pair_counts
 from ..operators.similarity import _spread_small_input
-from .llm_queries import _SH5_SQL, _TOKS_SQL
+from .llm_queries import _DECONTAM_SH_SQL, _TOKS_SQL
 from .registry import query, tables
 
 _J_FMT = (
@@ -69,7 +70,7 @@ _SHKEY_SQL = "CAST(('0x' || substr(md5(sh), 1, 15)) AS BIGINT)"
 # → folded DISTINCT (source, key) sets → set sizes).
 _SRC_SHINGLE_CTES = (
     f"tok AS (SELECT source, {_TOKS_SQL} AS t FROM documents), "
-    f"raw AS (SELECT source, unnest({_SH5_SQL}) AS sh FROM tok), "
+    f"raw AS (SELECT source, unnest({_DECONTAM_SH_SQL}) AS sh FROM tok), "
     f"h AS (SELECT DISTINCT source, {_SHKEY_SQL} AS sh FROM raw), "
     "sizes AS (SELECT source, CAST(count(*) AS BIGINT) AS n FROM h "
     "GROUP BY source)"
@@ -122,7 +123,7 @@ def q89(spark: SparkSession, sf_dir: str) -> DataFrame:
     # placeholder rows drop, which is exactly inner-explode semantics).
     docs = _spread_small_input(tables(spark, sf_dir)["documents"])
     sh_arr = docs.select(
-        "source", shingles(tokens(F.col("text")), 5).alias("shs")
+        "source", shingles(tokens(F.col("text")), DECONTAM_N).alias("shs")
     )
     keyed = (
         sh_arr.select("source", F.explode_outer("shs").alias("raw_sh"))

@@ -28,6 +28,8 @@ from ..operators.dedup import exact_dedup_key, ngram_jaccard_pairs
 from ..operators.graph import connected_components
 from ..operators.materialize import checkpoint
 from ..operators.substring import (
+    SCRUB_MIN_DOC_FREQ,
+    SCRUB_WINDOW,
     repeated_substring_spans,
     substring_scrub,
     substring_scrub_counts,
@@ -39,7 +41,6 @@ from .registry import _NORM_SQL, query, tables
 # Q51 — repeated-substring spans (substring-granular exact dedup)
 # ---------------------------------------------------------------------------
 
-_Q51_WINDOW = 8  # tokens per window; docs are 10-99 tokens at every SF
 
 def span_ctes(rel: str, p: str = "") -> str:
     """The repeated-substring span CTE chain over relation ``rel``
@@ -47,9 +48,11 @@ def span_ctes(rel: str, p: str = "") -> str:
     positions -> gaps-and-islands spans. CTE names are prefixed with
     ``p`` so the chain composes into a larger oracle (q54 runs it over
     the pipeline's survivor corpus as ``s``-prefixed CTEs) without name
-    collisions — the q47_index_ctes/gates_ctes no-drift pattern.
+    collisions — the q47_index_ctes/gates_ctes no-drift pattern. Windows
+    and the duplicate-document bar are the scrub operator's
+    (``SCRUB_WINDOW``, ``SCRUB_MIN_DOC_FREQ``).
     """
-    W = _Q51_WINDOW
+    W = SCRUB_WINDOW
     return (
         f"{p}tok AS (SELECT doc_id, {_TOKS_SQL} AS t FROM {rel}), "
         # 1-based window starts 1 .. len-W+1; t[i:i+W-1] is W elements
@@ -61,7 +64,7 @@ def span_ctes(rel: str, p: str = "") -> str:
         f"FROM {p}tok, LATERAL unnest(range(1, len(t) - {W - 2})) AS u(i) "
         f"WHERE len(t) >= {W}), "
         f"{p}dup AS (SELECT whash FROM {p}wins GROUP BY whash "
-        "HAVING COUNT(DISTINCT doc_id) >= 2), "
+        f"HAVING COUNT(DISTINCT doc_id) >= {SCRUB_MIN_DOC_FREQ}), "
         f"{p}m AS (SELECT doc_id, n_tokens, pos FROM {p}wins "
         f"WHERE whash IN (SELECT whash FROM {p}dup)), "
         # gaps-and-islands: new island when the start gap exceeds the
@@ -117,10 +120,7 @@ _Q51_SQL = (
 )
 def q51(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        repeated_substring_spans(
-            _dedup_corpus(spark, sf_dir), "doc_id", "text",
-            window=_Q51_WINDOW, min_doc_freq=2,
-        )
+        repeated_substring_spans(_dedup_corpus(spark, sf_dir), "doc_id", "text")
         .orderBy("doc_id")
     )
 
@@ -172,10 +172,7 @@ _Q53_SQL = (
 )
 def q53(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        substring_scrub(
-            _dedup_corpus(spark, sf_dir), "doc_id", "text",
-            window=_Q51_WINDOW, min_doc_freq=2,
-        )
+        substring_scrub(_dedup_corpus(spark, sf_dir), "doc_id", "text")
         .select(
             "doc_id",
             F.md5("clean_text").alias("clean_md5"),
@@ -366,8 +363,9 @@ def preprocess(docs: DataFrame) -> tuple[DataFrame, Callable[[], None]]:
     read the first checkpoint, so the gate chain runs exactly once) and
     the first checkpoint is freed.
 
-    The near-dup settings are q54's (3-gram Jaccard >= 0.6, shingle
-    document-frequency cap 100); ``run pipeline`` exposes none of them.
+    The near-dup settings are the operator's (``operators.dedup``
+    ``NGRAM_N``, ``JACCARD_THRESHOLD``, ``MAX_SHINGLE_DF``), the ones the
+    q54 oracle reads; ``run pipeline`` exposes none of them.
     """
     dedup, release_dedup = checkpoint(
         docs.select("doc_id", "text", exact_dedup_key("text").alias("h"))
@@ -381,9 +379,7 @@ def preprocess(docs: DataFrame) -> tuple[DataFrame, Callable[[], None]]:
     kept = quality_gates(dedup).where("kept").select("doc_id")
     survivors, release = checkpoint(dedup.join(kept, "doc_id"))
     release_dedup()  # survivors is materialized; nothing else reads dedup
-    pairs = ngram_jaccard_pairs(
-        survivors, "doc_id", "text", n=3, threshold=0.6, max_shingle_df=100,
-    )
+    pairs = ngram_jaccard_pairs(survivors, "doc_id", "text")
     comp = connected_components(
         pairs, src="id_a", dst="id_b",
         nodes=survivors.select("doc_id"), node_col="doc_id",
@@ -440,9 +436,7 @@ def q54(spark: SparkSession, sf_dir: str) -> DataFrame:
     # prune the full scrub's unused clean-text AGGREGATE but not its
     # position explosion, which cost q54 a second corpus-sized
     # posexplode + anti-join. Fully-scrubbed docs (n_kept = 0) drop.
-    scrubbed = substring_scrub_counts(
-        final, "doc_id", "text", window=_Q51_WINDOW, min_doc_freq=2
-    )
+    scrubbed = substring_scrub_counts(final, "doc_id", "text")
     return pack_chunks_counts(
         scrubbed.where(F.col("n_kept") > 0)
         .select("doc_id", F.col("n_kept").alias("n_tok"))

@@ -31,10 +31,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.similarity import INJECTED_N_PROBE, ivf_scan_stats_exact
 from .llm_queries import _D2_E12_SQL, _INJECTED_ASSIGN_CTES, _INJECTED_CENT_CTES
 from .registry import query, tables
 
-_N_PROBE = 8
 _N_QUERIES = 32  # audited query slice: vec_id < 32 (bounded by contract)
 
 _Q48G_ORACLE = (
@@ -49,14 +49,14 @@ _Q48G_ORACLE = (
     + " AS d2 FROM q CROSS JOIN cent c), "
     "probes AS (SELECT q_id, list_id, row_number() OVER "
     "(PARTITION BY q_id ORDER BY d2 ASC, list_id ASC) AS rnk FROM pd "
-    f"QUALIFY rnk <= {_N_PROBE}) "
+    f"QUALIFY rnk <= {INJECTED_N_PROBE}) "
     # n_lists/n_probe report the ACTUAL centroid count / effective probe
     # width (a corpus smaller than the clamp floor has fewer lists than
     # the operating point requests — the builder emits len(cent) and
     # min(n_probe, len(cent)), so the oracle must too; review r12)
     "SELECT p.q_id, (SELECT n FROM nn) AS n_corpus, "
     "(SELECT CAST(count(*) AS BIGINT) FROM cent) AS n_lists, "
-    f"LEAST(CAST({_N_PROBE} AS BIGINT), "
+    f"LEAST(CAST({INJECTED_N_PROBE} AS BIGINT), "
     "(SELECT CAST(count(*) AS BIGINT) FROM cent)) AS n_probe, "
     "array_to_string(list(p.list_id ORDER BY p.rnk), ',') AS probed_lists, "
     "CAST(sum(COALESCE(s.cnt, 0)) AS BIGINT) AS candidates, "
@@ -82,12 +82,8 @@ _Q48G_DESCRIPTION = (
 @query("q48g_ivf_scan_stats", oracle=_Q48G_ORACLE,
        description=_Q48G_DESCRIPTION, tags=("llm", "governance"))
 def q48g(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import ivf_scan_stats_exact
-
     emb = tables(spark, sf_dir)["embeddings"]
-    return ivf_scan_stats_exact(
-        emb, emb.where(F.col("vec_id") < _N_QUERIES), n_probe=_N_PROBE
-    )
+    return ivf_scan_stats_exact(emb, emb.where(F.col("vec_id") < _N_QUERIES))
 
 
 __all__ = ["q48g"]

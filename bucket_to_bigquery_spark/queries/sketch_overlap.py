@@ -10,7 +10,8 @@ stays the exact gate, this is the scale instrument.
 
 Reference parity: n/a — no analytics surface in the reference; declared
 engine surface (SURVEY §2.C extension). Shingling is
-the q47-family contract (``shingles(tokens, 5)`` / ``_SH5_SQL``).
+the q47-family contract (``shingles(tokens, DECONTAM_N)`` /
+``_DECONTAM_SH_SQL``).
 
     h_i(sh) = ((2i+1)·b₁ + (i+3)·b₂ + (i+1)·1000003) mod p,
               b₁/b₂ = md5 hex halves (chars 1-8 / 9-16) as BIGINT mod p,
@@ -54,10 +55,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.dedup import shingles, tokens
+from ..operators.dedup import DECONTAM_N, shingles, tokens
 from ..operators.materialize import checkpoint
 from ..operators.similarity import _spread_small_input
-from .llm_queries import _SH5_SQL, _TOKS_SQL
+from .llm_queries import _DECONTAM_SH_SQL, _TOKS_SQL
 from .registry import query, tables
 
 _K = 64              # signature components; stderr <= 1/(2*sqrt(k)) = 0.0625
@@ -71,7 +72,7 @@ _EST_FMT = (
 
 _Q89B_ORACLE = (
     f"WITH tok AS (SELECT source, {_TOKS_SQL} AS t FROM documents), "
-    f"sh AS (SELECT source, unnest({_SH5_SQL}) AS sh FROM tok), "
+    f"sh AS (SELECT source, unnest({_DECONTAM_SH_SQL}) AS sh FROM tok), "
     "base AS (SELECT source, CAST(('0x' || substr(md5(sh), 1, 8)) "
     f"AS BIGINT) % {_P} AS h1, CAST(('0x' || substr(md5(sh), 9, 8)) "
     f"AS BIGINT) % {_P} AS h2 FROM sh), "
@@ -123,7 +124,7 @@ def q89b(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exactly the oracle's unnest([]) behaviour.
     docs = _spread_small_input(docs)
     base = docs.select(
-        "source", shingles(tokens(F.col("text")), 5).alias("shs")
+        "source", shingles(tokens(F.col("text")), DECONTAM_N).alias("shs")
     ).select(
         "source", F.explode_outer("shs").alias("sh")
     ).where(F.col("sh").isNotNull()).select(

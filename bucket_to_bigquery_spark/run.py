@@ -198,9 +198,10 @@ def pipeline_main(argv: list[str]) -> int:
     ``preprocess``, the front end q54 runs) → ExactSubstr scrub (every
     cross-document duplicated token span excised; fully-scrubbed
     documents dropped) → sharded concat-and-chunk packing. Every stage
-    runs with q54's settings (3-gram Jaccard ≥ 0.6, shingle df cap 100,
-    scrub window ``_Q51_WINDOW``, spans shared by ≥ 2 documents); there
-    are no tuning flags, so the chunks equal q54's rows on q54's corpus.
+    runs at its operator's operating point, the one q54 runs
+    (``operators.dedup`` n-gram Jaccard settings, ``operators.substring``
+    ``SCRUB_WINDOW`` / ``SCRUB_MIN_DOC_FREQ``); there are no tuning
+    flags, so the chunks equal q54's rows on q54's corpus.
 
     Writes ``<output>/corpus`` (id, text = the scrubbed NORMALIZED
     token stream, n_tokens) and ``<output>/chunks`` (the per-chunk
@@ -213,11 +214,7 @@ def pipeline_main(argv: list[str]) -> int:
     from pyspark.sql import functions as F  # noqa: PLC0415
 
     from .operators.substring import substring_scrub
-    from .queries.pipeline_queries import (
-        _Q51_WINDOW,
-        pack_chunks_counts,
-        preprocess,
-    )
+    from .queries.pipeline_queries import pack_chunks_counts, preprocess
 
     ap = argparse.ArgumentParser(prog="bucket_to_bigquery_spark.run pipeline")
     ap.add_argument("--documents", required=True,
@@ -248,9 +245,7 @@ def pipeline_main(argv: list[str]) -> int:
 
     final, release = preprocess(docs)
     scrubbed = (
-        substring_scrub(
-            final, "doc_id", "text", window=_Q51_WINDOW, min_doc_freq=2,
-        )
+        substring_scrub(final, "doc_id", "text")
         .where(F.col("n_kept") > 0)
         .select(
             "doc_id",

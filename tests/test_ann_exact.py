@@ -27,13 +27,13 @@ import numpy as np
 import pytest
 
 from bucket_to_bigquery_spark.operators.similarity import (
+    INJECTED_N_PROBE,
+    TOP_K,
     _round_nearest_ties_away_e12,
     ivf_operating_point,
 )
 from bucket_to_bigquery_spark.queries import all_queries
 from bucket_to_bigquery_spark.queries.ann_exact import (
-    _K,
-    _N_PROBE,
     _N_QUERIES,
     ivf_topk_injected_centroids,
 )
@@ -93,7 +93,7 @@ def test_q48h_matches_numpy_bruteforce(spark, sf_dir, emb_rows):
         for r in all_queries()["q48h_ivf_topk_exact_centroids"]
         .builder(spark, sf_dir).collect()
     ]
-    want = _replay(emb_rows, _K, _N_PROBE, list(range(_N_QUERIES)))
+    want = _replay(emb_rows, TOP_K, INJECTED_N_PROBE, list(range(_N_QUERIES)))
     assert len(got) == len(want)
     for g, w in zip(got, want):
         assert g[:3] == w[:3], (g, w)
@@ -119,7 +119,7 @@ def test_q48h_candidates_come_from_probed_lists(spark, sf_dir, emb_rows):
     for qid, rs in by_q.items():
         d2 = _e12_d2(emb_rows[qid][None, :], cent)[0]
         probed = set(
-            int(x) for x in np.lexsort((np.arange(n_lists), d2))[:_N_PROBE]
+            int(x) for x in np.lexsort((np.arange(n_lists), d2))[:INJECTED_N_PROBE]
         )
         assert [r["rank"] for r in sorted(rs, key=lambda r: r["rank"])] == \
             list(range(1, len(rs) + 1))
@@ -148,7 +148,7 @@ def test_q48h_empty_and_duplicate_queries(spark, sf_dir):
         emb,
         emb.where(F.col("vec_id") < 2).unionAll(
             emb.where(F.col("vec_id") < 2)),
-        k=3, n_probe=4,
+        k=3,
     ).collect()
     assert sorted({r["q_id"] for r in dup}) == [0, 1]
     assert len(dup) == len({(r["q_id"], r["rank"]) for r in dup})

@@ -11,6 +11,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from bucket_to_bigquery_spark.operators.dedup import (
+    MINHASH_BANDS,
     MINHASH_PRIME,
     minhash_candidate_pairs,
     minhash_params,
@@ -102,9 +103,20 @@ def test_jaccard_leq_containment_and_thresholds(spark, texts):
 
 
 def test_minhash_params_are_stable():
-    # the oracle SQL embeds these literals; silent drift = hash mismatch
-    assert minhash_params(2, 42) == minhash_params(2, 42)
-    assert len(set(minhash_params(6, 42))) == 6
+    # q47b's oracle SQL embeds these literals (one (band, a, b) row per
+    # hash function); silent drift = hash mismatch. Pinned at the shipped
+    # (MINHASH_BANDS, MINHASH_SEED) = (6, 42).
+    from bucket_to_bigquery_spark.queries.llm_queries import _MH_PARAMS_SQL
+
+    shipped = [
+        (1373158607, 239081663), (53710185, 1592467581),
+        (590620972, 525901256), (479341424, 299655412),
+        (1581559893, 220106707), (1453201079, 1590571865),
+    ]
+    assert MINHASH_BANDS == len(shipped)
+    assert minhash_params() == shipped
+    assert _MH_PARAMS_SQL == ", ".join(
+        f"({i}, {a}, {b})" for i, (a, b) in enumerate(shipped))
 
 
 # ---------------------------------------------------------------------------
@@ -194,7 +206,7 @@ def test_simhash_col_matches_reference_and_handles_nulls(spark):
     got = {
         r.doc_id: r.sh
         for r in df.select(
-            "doc_id", simhash_col(tokens("text"), bits=32).alias("sh")
+            "doc_id", simhash_col(tokens("text")).alias("sh")
         ).collect()
     }
     for doc_id, text in rows:
@@ -275,7 +287,7 @@ def test_simhash_col_utf8_parity_on_arbitrary_tokens(spark, token_pool):
     text = " ".join(token_pool)
     df = spark.createDataFrame([(0, text)], "doc_id long, text string")
     got = df.select(
-        simhash_col(tokens("text"), bits=32).alias("sh")
+        simhash_col(tokens("text")).alias("sh")
     ).collect()[0].sh
     assert got == _simhash32_ref(text)
     con = duckdb.connect()

@@ -111,9 +111,11 @@ def test_cc_default_retain_is_fully_reclaimable(spark):
         assert again == got
 
 
-def test_cc_logs_iterations_and_convergence(spark, caplog):
+def test_cc_logs_iterations_and_convergence(spark, caplog, monkeypatch):
     """CC reports at INFO how many rounds it ran and whether it
     converged; an exhausted budget still warns."""
+    from bucket_to_bigquery_spark.operators import graph
+
     e = spark.createDataFrame([(i, i + 1) for i in range(12)], ["src", "dst"])
     logger = "bucket_to_bigquery_spark.operators.graph"
     caplog.clear()
@@ -123,11 +125,12 @@ def test_cc_logs_iterations_and_convergence(spark, caplog):
             if r.levelno == logging.INFO]
     assert len(info) == 1 and "converged=True" in info[0]
     rounds = int(info[0].split(": ")[1].split(" iterations")[0])
-    assert 1 <= rounds <= 25
+    assert 1 <= rounds <= graph.CC_MAX_ITERATIONS
 
     caplog.clear()
+    monkeypatch.setattr(graph, "CC_MAX_ITERATIONS", 1)
     with caplog.at_level(logging.INFO, logger=logger):
-        connected_components(e, max_iterations=1).unpersist()
+        connected_components(e).unpersist()
     info = [r.getMessage() for r in caplog.records
             if r.levelno == logging.INFO]
     assert info and "1 iterations, converged=False" in info[0]

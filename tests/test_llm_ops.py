@@ -52,10 +52,10 @@ def test_q48e_signgrid_recall_vs_exact(spark, sf_dir):
     # r16 (VERDICT r15 #4): 0.84-at-sf0.1 is the DECLARED floor, pinned
     # with the q48c/d-gate prominence — the corner sweep showed >=0.95
     # costs 0.65-0.69 candidate fraction (near-brute-force; the
-    # frontier table + rationale live in signgrid_ann_topk's docstring
-    # and tools/sweep_signgrid.py). The assert below is SF-aware so the
-    # declared number is what an sf0.1 run actually enforces (review
-    # finding r16: a flat 0.78 floor left the 0.84 pin unenforced);
+    # frontier table + rationale live in signgrid_ann_topk's docstring).
+    # The assert below is SF-aware so the declared number is what an
+    # sf0.1 run actually enforces (review finding r16: a flat 0.78 floor
+    # left the 0.84 pin unenforced);
     # q48e is RNG-free, so the per-SF recall is a deterministic
     # constant, safe to pin exactly (r16 sweep: 0.82/0.78/0.84 at
     # sf0.001/0.01/0.1).
@@ -302,15 +302,3 @@ def test_signgrid_preserves_non_long_id_types(spark):
     rows = out.collect()
     assert rows and all(r["q_id"] == "docA" for r in rows)
     assert {r["n_id"] for r in rows} <= {"docB", "docC"}
-
-
-def test_connected_components_rejects_zero_iterations(spark):
-    # below 1 the seed labels still read the freed edge checkpoint
-    # blocks: fail before the computation, not after it
-    import pytest as _pytest
-
-    from bucket_to_bigquery_spark.operators.graph import connected_components
-
-    edges = spark.createDataFrame([(1, 2)], ["src", "dst"])
-    with _pytest.raises(ValueError, match="max_iterations"):
-        connected_components(edges, max_iterations=0)

@@ -271,6 +271,7 @@ def test_hadoop_fs_over_real_network_scheme(spark, workdir):
     import threading
 
     from bucket_to_bigquery_spark.ingest.schema_registry import (
+        SNIFF_BYTES,
         sniff_csv_headers,
     )
 
@@ -293,8 +294,9 @@ def test_hadoop_fs_over_real_network_scheme(spark, workdir):
             # bytes no matter the object size
             assert fs.read_head(uri, 16) == b"timestamp,utc_of"
             # the loader's actual sniff composition (loader.py sniff():
-            # read_head(f, 4000) -> sniff_csv_headers) over the network
-            assert sniff_csv_headers(fs.read_head(uri, 4000)) == [
+            # read_head(f, SNIFF_BYTES) -> sniff_csv_headers) over the
+            # network
+            assert sniff_csv_headers(fs.read_head(uri, SNIFF_BYTES)) == [
                 "timestamp", "utc_offset", "location",
             ]
             # full-object buffer read (GetStorageToBuffer's whole-object

@@ -82,9 +82,7 @@ def test_exact_scan_stats_counts_empty_probed_lists(spark):
     it (candidates == the full corpus). An inner size join would drop
     list 3 from probed_lists."""
     corpus = _dup_corpus(spark)  # n=12 -> n_lists = 8 (the clamp floor)
-    out = ivf_scan_stats_exact(
-        corpus, corpus.where("vec_id < 1"), n_probe=8
-    ).collect()
+    out = ivf_scan_stats_exact(corpus, corpus.where("vec_id < 1")).collect()
     assert len(out) == 1
     r = out[0]
     probed = r["probed_lists"].split(",")
@@ -141,7 +139,7 @@ def test_exact_scan_stats_dedups_query_ids(spark):
     dropDuplicates the same way; r12 review)."""
     corpus = _dup_corpus(spark, n=12)
     q = corpus.where("vec_id < 1")
-    out = ivf_scan_stats_exact(corpus, q.unionAll(q), n_probe=8).collect()
+    out = ivf_scan_stats_exact(corpus, q.unionAll(q)).collect()
     assert len(out) == 1
     r = out[0]
     assert len(r["probed_lists"].split(",")) == 8

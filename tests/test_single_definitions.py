@@ -1,9 +1,10 @@
 """Shared IVF steps, e12 oracle fragments, text-normalizer SQL, the CC
 oracles' closure, the co-occurrence pair expansion, the driver-side
-frame builder and the source-pattern match each have one definition:
-every string below may appear in exactly one package file, so a contract
-change cannot miss a copy. The fixture lock protocol lives in scratch.py
-alone."""
+frame builder, the source-pattern match and each LLM-operator operating
+point have one definition: every string below may appear in exactly one
+package file, so a contract change cannot miss a copy. The fixture lock
+protocol lives in scratch.py alone, and no call site, oracle fragment or
+``run pipeline`` restates an operating-point literal."""
 
 from __future__ import annotations
 
@@ -33,6 +34,16 @@ _NEEDLES = [
     "createDataFrame(",
     # "is this URI one of this source pattern's files" (fs.source_match)
     "(scheme, auth) == (p_scheme, p_auth)",
+    # the LLM-operator operating points, each a constant beside its
+    # operator (dedup, substring, similarity, graph)
+    *(f"\n{name} = " for name in (
+        "NGRAM_N", "JACCARD_THRESHOLD", "MAX_SHINGLE_DF",
+        "CONTAINMENT_THRESHOLD", "MINHASH_MAX_DISTANCE", "DECONTAM_N",
+        "SIMHASH_BITS", "SCRUB_WINDOW", "SCRUB_MIN_DOC_FREQ",
+        "SIGN_BAND_COSINE", "TOP_K", "INJECTED_N_PROBE", "CC_MAX_ITERATIONS",
+    )),
+    # the near-dup shingle rows of the q47/q47b/q55 oracles
+    "_SHINGLE_ROWS_SQL = (",
 ]
 
 
@@ -68,4 +79,32 @@ def test_fixture_protocol_only_in_scratch(needle):
     "loader._widest_headers", "loader._resolve_schema",
 ])
 def test_absent_from_package(needle):
+    assert _files_containing(needle) == []
+
+
+# Query modules use the loader's public surface only, so a change to the
+# warehouse layout stays inside ingest/.
+def test_queries_use_no_private_loader_member():
+    assert [f for f in _files_containing("loader._")
+            if f.startswith("queries")] == []
+
+
+# Operating-point literals restated at a call site, in an oracle
+# fragment or in `run pipeline`: each constant above is read instead.
+@pytest.mark.parametrize("needle", [
+    # keyword restatements at engine call sites
+    "n=3,", "threshold=0.6", "threshold=0.9", "max_shingle_df=100",
+    "window=8", "min_doc_freq=2", "bits=32", "k=5", "n_probe=",
+    "jaccard_distance_threshold", "max_iterations", '"embedding", 0.95',
+    'shingles(tokens(F.col("text")), 5)', 'shingles(F.col("toks"), 5)',
+    # module-private copies of the constants
+    "\n_MAX_SHINGLE_DF = ", "\n_JACCARD = ", "\n_N = ", "\n_N_PROBE = ",
+    "\n_K = 5", "_Q51_WINDOW",
+    # oracle fragments
+    "t[i:i+2]", "t[i:i+4]", "len(t) >= 3", "len(t) >= 5",
+    "HAVING COUNT(*) > 100", ">= 0.6)", ">= 0.9)", '">= 0.95)"',
+    "dist <= 0.4", "range(0, 32)", "HAVING COUNT(DISTINCT doc_id) >= 2",
+    "rank <= 5 ORDER BY q_id", "n_id ASC) <= 5)",
+])
+def test_operating_point_not_restated(needle):
     assert _files_containing(needle) == []

@@ -92,34 +92,29 @@ def main() -> int:
         # DF cap stays CONSTANT across scales: replicas share no
         # shingles (per-token suffix), so every shingle's global
         # document frequency equals its within-replica frequency and is
-        # scale-invariant — a constant cap excludes the same shingles at
-        # every S, which is what keeps candidate volume linear by
-        # construction (scaling the cap with S would instead re-admit
-        # df∈(100, 100·S] shingles at larger S and grow pairs
-        # super-linearly, breaking the probe's own premise)
+        # scale-invariant — the shipped cap (dedup.MAX_SHINGLE_DF)
+        # excludes the same shingles at every S, which is what keeps
+        # candidate volume linear by construction (scaling the cap C
+        # with S would instead re-admit df∈(C, C·S] shingles at larger S
+        # and grow pairs super-linearly, breaking the probe's own premise)
         "q47_ngram_jaccard": lambda df, s: ngram_jaccard_pairs(
-            df, "doc_id", "text", n=3, threshold=0.6, max_shingle_df=100
+            df, "doc_id", "text"
         ),
         # the q54 scrub stage's shape (r7): span mining + per-doc count
         # arithmetic — output exactly one row per doc, wall bounded by
         # the same windowed-hash index as q51
-        "q54_scrub_counts": lambda df, s: _scrub_counts(
-            df, "doc_id", "text", window=8, min_doc_freq=2
-        ),
+        "q54_scrub_counts": lambda df, s: _scrub_counts(df, "doc_id", "text"),
         "q51_repeated_substrings": lambda df, s: repeated_substring_spans(
-            df, "doc_id", "text", window=8, min_doc_freq=2
+            df, "doc_id", "text"
         ),
         "q46_exact_dedup": lambda df, s: exact_dedup_groups(df, "doc_id", "text"),
         # the two r15-changed paths, probed at replica scale: the
         # persisted minhash feature frame (memory-resident footprint
         # grows with S — MEMORY_AND_DISK must degrade, not die) and the
         # Arrow-batched simhash projection
-        "q47b_minhash_pairs": lambda df, s: _minhash_pairs(
-            df, "doc_id", "text", n=3,
-            jaccard_distance_threshold=0.4,
-        ),
+        "q47b_minhash_pairs": lambda df, s: _minhash_pairs(df, "doc_id", "text"),
         "q46b_simhash": lambda df, s: df.select(
-            "doc_id", _simhash_col(_tokens("text"), bits=32).alias("sh")
+            "doc_id", _simhash_col(_tokens("text")).alias("sh")
         ),
     }
 
